@@ -150,7 +150,7 @@ def check_taar(exp: dict, out: str) -> list[str]:
     return bad
 
 
-# -- corpus_build -----------------------------------------------------------
+# -- taar_nightly: the training set -----------------------------------------
 
 def check_corpus(inputs: str, injected: dict, manifest: dict, out: str,
                  seq_len: int) -> list[str]:
@@ -185,8 +185,8 @@ def check_corpus(inputs: str, injected: dict, manifest: dict, out: str,
 # -- cdc_merge --------------------------------------------------------------
 
 class CdcReplay:
-    """DuckDB replay of the MERGE batches: matched + is_del deletes,
-    other matched rows take the source row, unmatched non-deletes insert."""
+    """DuckDB replay of the MERGE batch: matched + is_del deletes, other
+    matched rows take the source row, unmatched non-deletes insert."""
 
     COLS = "id, segment, score, rev, country, note"
 
@@ -197,8 +197,8 @@ class CdcReplay:
                          f"read_parquet('{inputs}/base.parquet')")
         self.con.execute("CREATE TABLE start AS SELECT * FROM t")
 
-    def apply(self, batch: int) -> None:
-        src = f"read_parquet('{self.inputs}/batch_{batch:02d}.parquet')"
+    def apply(self) -> None:
+        src = f"read_parquet('{self.inputs}/batch.parquet')"
         self.con.execute(f"DELETE FROM t WHERE id IN (SELECT id FROM {src})")
         self.con.execute(f"INSERT INTO t SELECT {self.COLS} FROM {src} "
                          "WHERE NOT is_del")

@@ -1,4 +1,4 @@
-"""Seeded input generators for the three benchmark workloads.
+"""Seeded input generators for the benchmark workloads.
 
 Every generator is pure numpy + pyarrow: the program under test receives
 only the parquet files written here, never a Spark object built by the
@@ -266,7 +266,7 @@ def _gen_editorial(rng: np.random.Generator, n_catalog: int) -> pa.Table:
                                 schema=EDITORIAL_SCHEMA)
 
 
-# -- corpus_build -----------------------------------------------------------
+# -- taar_nightly: the training corpus --------------------------------------
 
 # Per-stage drop shares of the sf0.1 `documents` fixture (5000 docs:
 # language 446, quality 315, exact_dup 7, near_dup 195, kept 4037). The
@@ -355,41 +355,39 @@ def gen_corpus(out: str, seed: int, n_docs: int) -> dict:
         "near_dup": n_near}}
 
 
+def gen_nightly(out: str, seed: int, clients_per_day: int, n_docs: int,
+                **taar_sizes) -> dict:
+    """Every taar_nightly input: the TAAR tables and the corpus."""
+    return (gen_taar(out, seed, clients_per_day, **taar_sizes)
+            | gen_corpus(out, seed, n_docs))
+
+
 # -- cdc_merge --------------------------------------------------------------
 
-def gen_cdc(out: str, seed: int, base_rows: int, n_batches: int = 2,
-            hot_keys: int = 12, bulk_share: float = 0.03) -> dict:
-    """Base CDC extract (inserts) plus MERGE source batches. Even batches
-    are hot-key batches (a dozen keys, so only those buckets are touched);
-    odd batches are bulk batches spread over every bucket. A batch holds
-    one row per key: updates, deletes (is_del) and brand-new inserts."""
+HOT_KEYS = 12  # keys a MERGE batch updates or deletes
+
+
+def gen_cdc(out: str, seed: int, base_rows: int) -> dict:
+    """Base CDC extract (inserts) plus one MERGE source batch. The batch
+    is a hot-key batch: a dozen of the lowest keys, so only their buckets
+    are read and rewritten, each updated or deleted (is_del), plus a few
+    brand-new inserts; one row per key."""
     rng = _rng(seed, "cdc")
     keys = np.arange(1, base_rows + 1, dtype=np.int64)
     base = _cdc_rows(rng, keys, rev=0)
     base = base.append_column("seq", pa.array(np.ones(base_rows, np.int64)))
     base = base.append_column("op", pa.array(["I"] * base_rows))
     _write(base, f"{out}/base.parquet")
-    next_key = base_rows + 1
-    live = set(keys.tolist())
-    batch_rows = 0
-    for b in range(n_batches):
-        n = hot_keys if b % 2 == 0 else int(base_rows * bulk_share)
-        existing = np.array(sorted(live), dtype=np.int64)
-        pool = existing[:hot_keys * 4] if b % 2 == 0 else existing
-        chosen = rng.choice(pool, min(n, len(pool)), replace=False)
-        is_del = rng.random(len(chosen)) < 0.2
-        n_new = max(1, n // 5)
-        new_keys = np.arange(next_key, next_key + n_new, dtype=np.int64)
-        next_key += n_new
-        batch_keys = np.concatenate([chosen, new_keys])
-        flags = np.concatenate([is_del, np.zeros(n_new, bool)])
-        tbl = _cdc_rows(rng, batch_keys, rev=b + 1)
-        tbl = tbl.append_column("is_del", pa.array(flags))
-        _write(tbl, f"{out}/batch_{b:02d}.parquet")
-        batch_rows += tbl.num_rows
-        live -= set(chosen[is_del].tolist())
-        live |= set(new_keys.tolist())
-    return {"base": base_rows, "batch_rows": batch_rows}
+    chosen = rng.choice(keys[:HOT_KEYS * 4], HOT_KEYS, replace=False)
+    is_del = rng.random(HOT_KEYS) < 0.2
+    n_new = HOT_KEYS // 5
+    new_keys = np.arange(base_rows + 1, base_rows + 1 + n_new,
+                         dtype=np.int64)
+    batch = _cdc_rows(rng, np.concatenate([chosen, new_keys]), rev=1)
+    batch = batch.append_column(
+        "is_del", pa.array(np.concatenate([is_del, np.zeros(n_new, bool)])))
+    _write(batch, f"{out}/batch.parquet")
+    return {"base": base_rows, "batch_rows": batch.num_rows}
 
 
 def _cdc_rows(rng: np.random.Generator, keys: np.ndarray, rev: int
@@ -409,8 +407,7 @@ def _cdc_rows(rng: np.random.Generator, keys: np.ndarray, rev: int
 
 # -- shared -----------------------------------------------------------------
 
-GENERATORS = {"taar_nightly": gen_taar, "corpus_build": gen_corpus,
-              "cdc_merge": gen_cdc}
+GENERATORS = {"taar_nightly": gen_nightly, "cdc_merge": gen_cdc}
 
 
 def fingerprint(root: str) -> str:

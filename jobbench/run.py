@@ -4,12 +4,11 @@
     python3 jobbench/run.py --workload taar_nightly --seed 1 --seconds 5 --trace 0
 
 Runs one workload in this process on `local[nproc]`: generate seeded
-inputs, set up three times (session start plus the workload's initial
-state; the median is reported), one cold pass, then warm passes until
-`--seconds` have passed (at least the workload's `warm_passes`). Every
-pass is checked against DuckDB. The last stdout line is one JSON object:
-with `--trace 0` the end-to-end metrics, with `--trace 1` the per-layer
-span counters. Work files live under `.jobbench_work/` in the checkout
+inputs, set up once (session start plus the workload's initial state),
+one cold pass, then warm passes until `--seconds` have passed (at least
+one). Every pass is checked against DuckDB. The last stdout line is one
+JSON object: with `--trace 0` the end-to-end metrics, with `--trace 1`
+the per-layer span counters. Work files live under `.jobbench_work/` in the checkout
 and are removed at exit; traced runs leave their span log in
 `.jobbench_work/traces/`.
 """
@@ -31,7 +30,6 @@ from jobbench import trace  # noqa: E402
 from jobbench.workloads import WORKLOADS  # noqa: E402
 
 DRIVER_MEM = "2g"  # the package default (48g) does not fit a 15 GiB box
-SETUPS = 3  # set-ups per run; setup_s is their median
 SPANS = (
     "session.get_spark",
     "jobs.amowhitelist.run",
@@ -55,7 +53,6 @@ END_TO_END = {
 PER_LAYER = {
     f"{s}.{c}": unit for s in SPANS for c, unit in trace.COUNTERS.items()
 } | {
-    "session.get_spark.first_wall_s": "s",
     "tracing.overhead_ratio": "ratio",
     "tracing.collect_s": "s",
 }
@@ -64,8 +61,8 @@ PER_LAYER = {
 def step_stats(passes: list[list[float]]) -> tuple[float, float]:
     """(p50, tail) of the step latencies: each step's median over the
     passes, then the median and the maximum over the steps. A pass has
-    four to six steps, so no percentile has ten samples beyond it and the
-    tail is the slowest step."""
+    four to seven steps, so no percentile has ten samples beyond it and
+    the tail is the slowest step."""
     per_step = [statistics.median(ts) for ts in zip(*passes)]
     return statistics.median(per_step), max(per_step)
 
@@ -80,9 +77,7 @@ def start_session(work: str, cores: int):
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": f"{work}/spark-local",
             "spark.sql.warehouse.dir": f"{work}/warehouse",
-            # a fixed heap size: no run-to-run heap resizing in peak RSS
-            "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={work}/tmp -Xms{DRIVER_MEM}",
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp",
         },
     )
 
@@ -130,20 +125,20 @@ class Runner:
         self.attempted = 0
         self.failed = 0
 
-    def setup(self, attempt: int, traced: bool):
-        """One set-up: session start plus the workload's initial state.
-        Returns (session, seconds)."""
-        self.tracer.enabled, self.tracer.group = traced, -1 - attempt
+    def setup(self, traced: bool) -> float:
+        """The set-up: session start plus the workload's initial state.
+        Returns its seconds."""
+        self.tracer.enabled, self.tracer.group = traced, 0
         t0 = time.perf_counter()
         with self.tracer.span("setup"):
             with self.tracer.span("session.get_spark"):
                 spark = start_session(self.work, self.cores)
             self.tracer.spark = spark
-            self.wl.setup(spark, attempt, self.tracer)
+            self.wl.setup(spark, self.tracer)
         elapsed = time.perf_counter() - t0
         self.tracer.enabled = False
         self.tracer.collect()
-        return spark, elapsed
+        return elapsed
 
     def run_pass(self, traced: bool, group: int) -> tuple[float, list[float]]:
         """One pass: reset (untimed), the timed steps, then the check.
@@ -181,7 +176,7 @@ class Runner:
 
 
 def layer_metrics(spans: list[dict], cores: int) -> dict[str, float]:
-    """Each span's counters summed per group (a warm traced pass, or one
+    """Each span's counters summed per group (a warm traced pass, or the
     set-up), then the median over groups. Spans the workload never calls
     report 0."""
     out = {}
@@ -209,48 +204,38 @@ def cpu_steal() -> tuple[int, int]:
 
 
 def bench(args, work: str) -> dict:
-    from pyspark import SparkContext
-
     traced = bool(args.trace)
     steal0 = cpu_steal()
     t_start = time.perf_counter()
     r = Runner(args.workload, args.seed, work)
     t_inputs = time.perf_counter() - t_start
-    spark, first_setup = r.setup(0, traced)
-    setup_times = [first_setup]
-    cold, _ = r.run_pass(traced=False, group=0)
-    # (pass seconds, step seconds, traced); traced runs alternate untraced
-    # and traced passes so the tracing overhead is measured in one process
+    setup = r.setup(traced)
+    r.tracer.collect_s = 0.0  # the collector's time per warm traced pass
+    cold, _ = r.run_pass(traced=False, group=-1)
+    # (pass seconds, step seconds, traced). A traced run measures the
+    # tracing overhead in one process: traced and untraced warm passes
+    # alternate, T U T ..., starting and ending with a traced one, so a
+    # steady drift in pass time weighs on both sides. The JVM is still
+    # warming up in the first warm pass; it is a traced one, so the
+    # overhead errs high rather than low.
     warm: list[tuple[float, list[float], bool]] = []
     t_end = time.perf_counter() + args.seconds
-    while (len(warm) < r.wl.warm_passes + 2 * traced
-           or time.perf_counter() < t_end):
-        on = traced and len(warm) % 2 == 1
+    while (len(warm) < (3 if traced else 1) or time.perf_counter() < t_end
+           or (traced and len(warm) % 2 == 0)):
+        on = traced and len(warm) % 2 == 0
         wall, times = r.run_pass(traced=on, group=len(warm) + 1)
         warm.append((wall, times, on))
-    stored = r.stored
     rss = jvm_peak_rss_mb()
-    for attempt in range(1, SETUPS):
-        if r.wl.fresh_jvm_setups:
-            stop_jvm()
-        else:
-            spark.stop()
-            SparkContext._jvm.System.gc()  # start from a collected heap
-        spark, elapsed = r.setup(attempt, traced)
-        setup_times.append(elapsed)
     stop_jvm()
     steal = [b - a for a, b in zip(steal0, cpu_steal())]
-    print(f"phases: inputs {t_inputs:.1f}s, set-ups "
-          f"{[round(t, 2) for t in setup_times]}, cold pass {cold:.1f}s, "
+    print(f"phases: inputs {t_inputs:.1f}s, set-up {setup:.1f}s, "
+          f"cold pass {cold:.1f}s, "
           f"{len(warm)} warm passes {sum(w for w, _, _ in warm):.1f}s, "
           f"total {time.perf_counter() - t_start:.1f}s, cpu steal "
           f"{100 * steal[0] / max(1, steal[1]):.0f}%", file=sys.stderr)
 
     if traced:
         metrics = layer_metrics(r.tracer.spans, r.cores)
-        metrics["session.get_spark.first_wall_s"] = next(
-            s["wall_s"] for s in r.tracer.spans
-            if s["name"] == "session.get_spark")
         on = [w for w, _, t in warm if t]
         off = [w for w, _, t in warm if not t]
         metrics["tracing.overhead_ratio"] = (
@@ -263,23 +248,21 @@ def bench(args, work: str) -> dict:
         units = PER_LAYER
     else:
         run_s = statistics.median(w for w, _, _ in warm)
-        # the first passes only, so every run has the same sample count
-        step_p50, step_tail = step_stats(
-            [ts for _, ts, _ in warm[:r.wl.warm_passes]])
+        step_p50, step_tail = step_stats([ts for _, ts, _ in warm])
         metrics = {
             "run_s": run_s,
             "cold_run_s": cold,
             "rows_per_s": r.wl.input_rows / run_s,
             "step_p50_s": step_p50,
             "step_tail_s": step_tail,
-            "setup_s": statistics.median(setup_times),
-            "stored_bytes_per_input_byte": stored / r.wl.input_bytes,
+            "setup_s": setup,
+            "stored_bytes_per_input_byte": r.stored / r.wl.input_bytes,
             "peak_rss_mb": rss,
         }
         units = END_TO_END
         print(f"{args.workload}: step_tail_s is the slowest of "
               f"{len(warm[0][1])} steps (p100), each the median of "
-              f"{r.wl.warm_passes} warm passes; input {r.wl.input_rows} rows, "
+              f"{len(warm)} warm passes; input {r.wl.input_rows} rows, "
               f"{r.wl.input_bytes} bytes; {r.failed} of {r.attempted} "
               f"steps failed")
     return {

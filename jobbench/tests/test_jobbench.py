@@ -25,9 +25,8 @@ sys.path.insert(0, ROOT)
 from jobbench import check, gen, run, trace  # noqa: E402
 
 SMALL = {
-    "taar_nightly": {"clients_per_day": 400, "n_addons": 300,
+    "taar_nightly": {"clients_per_day": 400, "n_docs": 400, "n_addons": 300,
                      "n_catalog": 400},
-    "corpus_build": {"n_docs": 400},
     "cdc_merge": {"base_rows": 500},
 }
 
@@ -124,8 +123,7 @@ def test_taar_checker_rejects_a_changed_ranking(taar, tmp_path):
 def replay(tmp_path):
     _gen("cdc_merge", tmp_path, 5)
     r = check.CdcReplay(str(tmp_path))
-    for b in range(2):
-        r.apply(b)
+    r.apply()
     return r
 
 
@@ -145,7 +143,7 @@ def test_cdc_replay_rejects_an_altered_row(replay):
     assert replay.diff(live.slice(1))
 
 
-# -- corpus_build -----------------------------------------------------------
+# -- taar_nightly: the training set -----------------------------------------
 
 def _corpus_outputs(inputs: str, injected: dict, out: str) -> dict:
     """A packed output keeping every doc but the injected exact copies."""
@@ -170,7 +168,7 @@ def _corpus_outputs(inputs: str, injected: dict, out: str) -> dict:
 
 def test_corpus_checker(tmp_path):
     inputs, out = str(tmp_path / "in"), str(tmp_path / "out")
-    injected = _gen("corpus_build", inputs, 9)["injected"]
+    injected = gen.gen_corpus(inputs, 9, n_docs=400)["injected"]
     manifest = _corpus_outputs(inputs, injected, out)
     assert check.check_corpus(inputs, injected, manifest, out, 2048) == []
     wrong = dict(manifest, n_tokens=manifest["n_tokens"] - 1)

@@ -1,4 +1,4 @@
-"""The three benchmark workloads.
+"""The benchmark workloads.
 
 A workload generates its inputs, builds its initial state through the
 program (`setup`), and describes one pass as an ordered list of steps.
@@ -30,11 +30,6 @@ def dir_bytes(path: str) -> int:
 class Workload:
     name = ""
     sizes: dict = {}
-    # Set-ups after the first restart the JVM when the initial state is
-    # cheap; otherwise they restart the session in the same JVM, since a
-    # cold state build in a fresh JVM costs more than a run can spend.
-    fresh_jvm_setups = False
-    warm_passes = 1  # at least this many per run; more when time allows
 
     def __init__(self, root: str, seed: int):
         self.inputs = f"{root}/inputs"
@@ -46,7 +41,7 @@ class Workload:
         self.input_bytes = gen.input_bytes(self.inputs)
         self.spark = None
 
-    def setup(self, spark, attempt: int, tracer) -> None:
+    def setup(self, spark, tracer) -> None:
         """Initial state built through the program (timed as set-up)."""
         self.spark = spark
 
@@ -69,12 +64,14 @@ class Workload:
 
 
 class TaarNightly(Workload):
-    """The reference DAG in one pass: whitelist artifacts, install
-    ranking, locale top-10, serving-table write and opt-out rewrite."""
+    """The nightly DAG in one pass: whitelist artifacts, install ranking,
+    locale top-10, serving-table write, opt-out rewrite, then the
+    training-set build (clean → tokenize → pack → range-sharded write +
+    manifest) over a corpus with injected drop classes."""
 
     name = "taar_nightly"
-    sizes = {"clients_per_day": 5_000}
-    fresh_jvm_setups = True  # no initial state: a set-up is a JVM start
+    sizes = {"clients_per_day": 5_000, "n_docs": 2_000}
+    SEQ_LEN = 2048
 
     def __init__(self, root, seed):
         super().__init__(root, seed)
@@ -83,6 +80,7 @@ class TaarNightly(Workload):
     def steps(self) -> list[Step]:
         from taar_gcp_etl_spark.jobs import (
             amowhitelist,
+            build_training_set,
             guid_ranking,
             locale_top,
             profile_serving,
@@ -91,6 +89,13 @@ class TaarNightly(Workload):
 
         o, day, date = self.out, gen.SERVING_DATE, gen.ARTIFACT_DATE
         art = f"{o}/artifacts"
+
+        def train():
+            self.manifest = build_training_set.run(
+                self.spark, self.inputs, f"{o}/train", f"{o}/manifest.json",
+                seq_len=self.SEQ_LEN)
+
+        self.manifest = {}
         return [
             ("jobs.amowhitelist.run", lambda: amowhitelist.run(
                 self.read("amo_catalog"), art, date=date), [art]),
@@ -113,39 +118,15 @@ class TaarNightly(Workload):
                  self.spark, f"{o}/serving", self.read("deletion_request"),
                  day, gen.LOOKBACK_DAYS, out_path=f"{o}/serving_clean"),
              [f"{o}/serving_clean"]),
+            ("jobs.build_training_set.run", train, [f"{o}/train"]),
         ]
 
     def check(self) -> list[str]:
-        return check.check_taar(self.expected, self.out)
-
-
-class CorpusBuild(Workload):
-    """clean → tokenize → pack → range-sharded write + manifest."""
-
-    name = "corpus_build"
-    sizes = {"n_docs": 5_000}
-    SEQ_LEN = 2048
-
-    def __init__(self, root, seed):
-        super().__init__(root, seed)
-        self.input_rows = self.counts["documents"]
-
-    def steps(self) -> list[Step]:
-        from taar_gcp_etl_spark.jobs import build_training_set
-
-        def run():
-            self.manifest = build_training_set.run(
-                self.spark, self.inputs, f"{self.out}/train",
-                f"{self.out}/manifest.json", seq_len=self.SEQ_LEN)
-
-        self.manifest = {}
-        return [("jobs.build_training_set.run", run, [self.out])]
-
-    def check(self) -> list[str]:
+        bad = check.check_taar(self.expected, self.out)
         with open(f"{self.out}/manifest.json") as fh:
             on_disk = json.load(fh)
-        bad = [] if on_disk == self.manifest else [
-            "manifest.json differs from the returned manifest"]
+        if on_disk != self.manifest:
+            bad.append("manifest.json differs from the returned manifest")
         return bad + check.check_corpus(
             self.inputs, self.counts["injected"], on_disk,
             f"{self.out}/train", self.SEQ_LEN)
@@ -156,8 +137,7 @@ class CdcMerge(Workload):
     change feed since the pass began and one maintenance pass."""
 
     name = "cdc_merge"
-    sizes = {"base_rows": 20_000, "n_batches": 1}
-    warm_passes = 2  # its pass is short: a second one steadies the steps
+    sizes = {"base_rows": 20_000}
     N_BUCKETS = 64
     FILTER = ("segment", "<", 4)
 
@@ -165,27 +145,19 @@ class CdcMerge(Workload):
         super().__init__(root, seed)
         self.table = f"{self.out}/table"
         self.pristine = f"{root}/pristine_table"
-        replay = check.CdcReplay(self.inputs)
-        self.expected_counts = []
-        for b in range(self.sizes["n_batches"]):
-            replay.apply(b)
-            self.expected_counts.append(replay.count_where(*self.FILTER))
-        self.expected_changes = replay.n_changes()
-        self.replay = replay
+        self.replay = check.CdcReplay(self.inputs)
+        self.replay.apply()
+        self.expected_count = self.replay.count_where(*self.FILTER)
+        self.expected_changes = self.replay.n_changes()
 
-    def setup(self, spark, attempt: int, tracer) -> None:
+    def setup(self, spark, tracer) -> None:
         from taar_gcp_etl_spark import txn
 
-        super().setup(spark, attempt, tracer)
-        target = self.table if attempt == 0 else f"{self.out}_setup{attempt}"
-        shutil.rmtree(target, ignore_errors=True)
-        with tracer.span("txn.apply_cdc_batch_bucketed", [target]):
-            txn.apply_cdc_batch_bucketed(self.read("base"), target,
+        super().setup(spark, tracer)
+        with tracer.span("txn.apply_cdc_batch_bucketed", [self.table]):
+            txn.apply_cdc_batch_bucketed(self.read("base"), self.table,
                                          n_buckets=self.N_BUCKETS)
-        if attempt == 0:
-            shutil.copytree(target, self.pristine)
-        else:
-            shutil.rmtree(target)
+        shutil.copytree(self.table, self.pristine)
 
     def reset(self) -> None:
         from taar_gcp_etl_spark import txn
@@ -194,47 +166,41 @@ class CdcMerge(Workload):
         shutil.copytree(self.pristine, self.table)
         self.start_version = txn.latest_manifest(
             self.spark, self.table)["version"]
-        self.counts_seen: list[int] = []
-        self.changes_seen = None
+        self.count_seen = self.changes_seen = None
 
     def steps(self) -> list[Step]:
         from taar_gcp_etl_spark import txn
 
         s, t = self.spark, self.table
 
-        def merge(b):
-            return lambda: txn.merge_into(
-                s, t, self.read(f"batch_{b:02d}"),
-                matched_delete_condition="is_del",
-                not_matched_condition="NOT is_del")
-
         def read():
-            self.counts_seen.append(
-                txn.read_cdc_table(s, t, filters=[self.FILTER]).count())
+            self.count_seen = txn.read_cdc_table(
+                s, t, filters=[self.FILTER]).count()
 
         def changes():
             self.changes_seen = txn.read_changes(
                 s, t, self.start_version).count()
 
-        out: list[Step] = []
-        for b in range(self.sizes["n_batches"]):
-            out.append(("txn.merge_into", merge(b), [t]))
-            out.append(("txn.read_cdc_table", read, []))
-        out.append(("txn.read_changes", changes, []))
-        # retire every tombstone (single writer, no stream to protect):
-        # the one full rewrite of the pass, then vacuum
-        out.append(("txn.maintain_cdc_table", lambda: txn.maintain_cdc_table(
-            s, t, tombstone_min_live_seq=2**62, vacuum_keep_last=1,
-            vacuum_grace_seconds=0.0), [t]))
-        return out
+        return [
+            ("txn.merge_into", lambda: txn.merge_into(
+                s, t, self.read("batch"), matched_delete_condition="is_del",
+                not_matched_condition="NOT is_del"), [t]),
+            ("txn.read_cdc_table", read, []),
+            ("txn.read_changes", changes, []),
+            # retire every tombstone (single writer, no stream to protect):
+            # the one full rewrite of the pass, then vacuum
+            ("txn.maintain_cdc_table", lambda: txn.maintain_cdc_table(
+                s, t, tombstone_min_live_seq=2**62, vacuum_keep_last=1,
+                vacuum_grace_seconds=0.0), [t]),
+        ]
 
     def check(self) -> list[str]:
         from taar_gcp_etl_spark import txn
 
         bad = []
-        if self.counts_seen != self.expected_counts:
-            bad.append(f"filtered counts {self.counts_seen} != replay "
-                       f"{self.expected_counts}")
+        if self.count_seen != self.expected_count:
+            bad.append(f"filtered count {self.count_seen} != replay "
+                       f"{self.expected_count}")
         if self.changes_seen != self.expected_changes:
             bad.append(f"read_changes {self.changes_seen} rows != "
                        f"{self.expected_changes} changed keys")
@@ -243,4 +209,4 @@ class CdcMerge(Workload):
         return bad + self.replay.diff(live)
 
 
-WORKLOADS = {w.name: w for w in (TaarNightly, CorpusBuild, CdcMerge)}
+WORKLOADS = {w.name: w for w in (TaarNightly, CdcMerge)}
