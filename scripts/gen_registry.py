@@ -12,7 +12,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from taar_gcp_etl_spark.queries import (  # noqa: E402
     ORACLE_SQL,
-    SHARED_COST,
     SPARK_QUERIES,
 )
 
@@ -29,12 +28,6 @@ def main() -> None:
         "The first 50 entries are all oracle-paired (the driver's",
         "artifact budget).",
         "",
-        "`shared-cost: <family>` marks queries whose IN-SUITE bench",
-        "timing measures a session, not a query: the family shares one",
-        "memoized relation/model, so whichever member runs first pays",
-        "the materialization. Per-query position-independent costs live",
-        "in docs/bench_isolated.json (fresh JVM per query).",
-        "",
         "| # | query | oracle | what it computes |",
         "|---|---|---|---|",
     ]
@@ -45,8 +38,6 @@ def main() -> None:
             first = first[:107] + "..."
         first = first.replace("|", "/")
         oracle = "yes" if name in ORACLE_SQL else "rows-only"
-        if name in SHARED_COST:
-            first = f"[shared-cost: {SHARED_COST[name]}] {first}"
         lines.append(f"| {i} | `{name}` | {oracle} | {first} |")
     lines.append("")
     out = os.path.join(

@@ -15,6 +15,7 @@ semantics (SURVEY.md §3) are identical.
 from __future__ import annotations
 
 import argparse
+import datetime as dt
 import sys
 
 
@@ -149,13 +150,20 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     pre_existing = SparkSession.getActiveSession() is not None
+    # the one clock read: every job takes its run date as a value, so tests
+    # and backfills can pass any other day
+    today = dt.date.today()
     spark = get_spark(app_name=f"taar-{args.job}")
     try:
         if args.job == "guid_ranking":
             from taar_gcp_etl_spark.jobs import guid_ranking
 
             guid_ranking.run(
-                spark.read.parquet(args.input), args.date, args.out, k=args.top_k
+                spark.read.parquet(args.input),
+                args.date,
+                args.out,
+                artifact_date=today,
+                k=args.top_k,
             )
         elif args.job == "amowhitelist":
             from taar_gcp_etl_spark.jobs import amowhitelist
@@ -165,13 +173,14 @@ def main(argv: list[str] | None = None) -> int:
                 if args.catalog.endswith(".parquet")
                 else spark.read.json
             )
-            amowhitelist.run(reader(args.catalog), args.out)
+            amowhitelist.run(reader(args.catalog), args.out, date=today)
         elif args.job == "update_whitelist":
             from taar_gcp_etl_spark.jobs import update_whitelist
 
             update_whitelist.run(
                 spark.read.json(args.editorial),
                 args.out,
+                date=today,
                 allow_shortlist=args.allow_shortlist,
             )
         elif args.job == "profile_serving":
@@ -188,7 +197,10 @@ def main(argv: list[str] | None = None) -> int:
             from taar_gcp_etl_spark.jobs import locale_top
 
             locale_top.run(
-                spark.read.parquet(args.clients), args.out, k=args.top_k
+                spark.read.parquet(args.clients),
+                args.out,
+                k=args.top_k,
+                date=today,
             )
         elif args.job == "clean_corpus":
             import json as _json
@@ -262,7 +274,9 @@ def main(argv: list[str] | None = None) -> int:
                 if args.versions.endswith(".parquet")
                 else spark.read.json
             )
-            amodump.run_end_to_end(raw, reader(args.versions), args.out)
+            amodump.run_end_to_end(
+                raw, reader(args.versions), args.out, date=today
+            )
     finally:
         if not pre_existing:
             spark.stop()

@@ -5,10 +5,7 @@ cites the reference function it reproduces (F1-F21 in SURVEY.md §2.7).
 """
 
 from taar_gcp_etl_spark.functions.scalars import (
-    coalesce_default,
-    hex_to_long,
     sha256_key,
-    stable_hash64,
     tokens,
     try_long,
 )
@@ -16,8 +13,5 @@ from taar_gcp_etl_spark.functions.scalars import (
 __all__ = [
     "sha256_key",
     "try_long",
-    "coalesce_default",
-    "hex_to_long",
-    "stable_hash64",
     "tokens",
 ]

@@ -21,29 +21,6 @@ def try_long(col: Column | str) -> Column:
     return c.try_cast("long")
 
 
-def coalesce_default(col: Column | str, default) -> Column:
-    """F11 — the reference's pervasive `x or default` null-coalescing
-    (reference: taar_etl/taar_profile_bigtable.py:236,244-246,272-290)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(default))
-
-
-def hex_to_long(col: Column, digits: int = 15) -> Column:
-    """Parse the first ``digits`` hex chars of a digest string into a
-    non-negative bigint. 15 hex digits = 60 bits, safely inside int64.
-    Used by the MinHash/SimHash family so the same expression is
-    reproducible in the DuckDB oracle (('0x' || h)::bigint)."""
-    return F.conv(F.substring(col, 1, digits), 16, 10).cast("long")
-
-
-def stable_hash64(col: Column, seed: int = 0) -> Column:
-    """Deterministic 60-bit hash of a string via md5 — engine-portable
-    (identical in Spark and any oracle with md5), unlike xxhash64 whose
-    seeding differs across engines. Slow path vs xxhash64; used only where
-    cross-engine reproducibility matters (dedup sketches)."""
-    return hex_to_long(F.md5(F.concat(F.lit(f"s{seed}:"), col)))
-
-
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization of lowercased text — the shared primitive for
     the text-analysis and dedup operator families. Pure Column expression

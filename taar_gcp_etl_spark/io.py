@@ -14,8 +14,10 @@ Maps the reference's storage surface (SURVEY.md §2.1) onto Spark-native I/O:
 
 from __future__ import annotations
 
+import bz2
 import datetime as dt
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,24 +85,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load the fixture star schema (TESTDATA.md) as DataFrames."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        df = read_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def write_json_artifact(
     df: DataFrame,
     base_path: str,
     name: str,
-    date: dt.date | None = None,
+    date: dt.date,
     key_col: str | None = None,
 ) -> None:
     """Dual-write JSON artifact sink (S11, taar_etl/taar_utils.py:32-63).
@@ -112,10 +101,8 @@ def write_json_artifact(
     is bounded by catalog scale (SURVEY.md §7 hard part 1) — everything else
     streams through `df.write`.
     """
-    date = date or dt.date.today()
-    stamp = date.strftime("%Y%m%d")
     if key_col is None:
-        for sub in ("latest", f"snapshot={stamp}"):
+        for sub in ("latest", f"snapshot={date:%Y%m%d}"):
             (
                 df.coalesce(1)
                 .write.mode("overwrite")
@@ -126,17 +113,19 @@ def write_json_artifact(
     # Map-shaped artifact {key: record}: JSON objects don't round-trip
     # through df.write.json naturally; convert rows→map at the boundary
     # (bounded: AMO-catalog scale, ~100k rows max).
-    import bz2
-
-    rows = df.toJSON().collect()
     obj = {}
-    for r in rows:
+    for r in df.toJSON().collect():
         rec = json.loads(r)
         obj[rec[key_col]] = rec
-    payload = bz2.compress(json.dumps(obj, sort_keys=True).encode("utf-8"))
-    import os
+    write_bz2_json(obj, base_path, name, date)
 
-    for sub in ("latest", f"snapshot={stamp}"):
+
+def write_bz2_json(obj: dict, base_path: str, name: str, date: dt.date) -> None:
+    """Encode ``obj`` once as sorted-key bzip2 JSON and write the same bytes
+    to `{base}/latest/{name}.json.bz2` and
+    `{base}/snapshot={YYYYMMDD}/{name}.json.bz2`."""
+    payload = bz2.compress(json.dumps(obj, sort_keys=True).encode("utf-8"))
+    for sub in ("latest", f"snapshot={date:%Y%m%d}"):
         d = f"{base_path}/{sub}"
         os.makedirs(d, exist_ok=True)
         with open(f"{d}/{name}.json.bz2", "wb") as fh:
@@ -235,7 +224,6 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
 
 def _write_avro_fallback(df: DataFrame, path: str) -> None:
     import glob
-    import os
 
     from taar_gcp_etl_spark.avro_ocf import avro_schema_for, encode_ocf
 

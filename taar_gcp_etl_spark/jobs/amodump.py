@@ -193,7 +193,7 @@ def run(
     raw: DataFrame,
     first_dates: DataFrame,
     out_base: str,
-    date: dt.date | None = None,
+    date: dt.date,
 ) -> DataFrame:
     """parse → enrich → P9 filter (keep only rows whose version fetch
     succeeded, taar_etl/taar_amodump.py:95-99) → map-shaped artifact."""
@@ -207,7 +207,7 @@ def run_end_to_end(
     raw: DataFrame,
     versions_fetched: DataFrame,
     out_base: str,
-    date: dt.date | None = None,
+    date: dt.date,
 ) -> DataFrame:
     """Full S2 amodump from raw bytes: recorded (or live-fetched) versions
     pages → first_dates → catalog artifact. This is the replay path a user

@@ -28,15 +28,15 @@ FEATURED = "featured_addons_database"
 FEATURED_WHITELIST = "featured_whitelist_addons"
 
 
-def transform(catalog: DataFrame) -> dict[str, DataFrame]:
-    """The three filtered views. P7 ≡ P5 ∧ P6; the conjunction form is used
-    (identical to the reference's subclass chaining,
-    taar_etl/taar_amowhitelist.py:100-113) — the semi-join equivalence is
-    asserted in tests."""
-    whitelist = catalog.filter(whitelist_predicate())
+def transform(catalog: DataFrame, as_of: dt.date) -> dict[str, DataFrame]:
+    """The three filtered views as of the run date. P7 ≡ P5 ∧ P6; the
+    conjunction form is used (identical to the reference's subclass
+    chaining, taar_etl/taar_amowhitelist.py:100-113) — the semi-join
+    equivalence is asserted in tests."""
+    whitelist = catalog.filter(whitelist_predicate(as_of))
     featured = catalog.filter(featured_predicate())
     featured_whitelist = catalog.filter(
-        whitelist_predicate() & featured_predicate()
+        whitelist_predicate(as_of) & featured_predicate()
     )
     return {
         WHITELIST: whitelist,
@@ -48,13 +48,14 @@ def transform(catalog: DataFrame) -> dict[str, DataFrame]:
 def run(
     catalog: DataFrame,
     out_base: str,
-    date: dt.date | None = None,
+    date: dt.date,
 ) -> dict[str, DataFrame]:
     """extract → transform → load (3 artifacts, dual-write latest+snapshot,
-    taar_etl/taar_amowhitelist.py:173-178). The empty-whitelist gate (A5)
+    taar_etl/taar_amowhitelist.py:173-178). ``date`` is both the whitelist's
+    as-of date and the snapshot stamp. The empty-whitelist gate (A5)
     guards emission."""
     catalog = catalog.cache()
-    views = transform(catalog)
+    views = transform(catalog, date)
     require_non_empty(views[WHITELIST])
     for name, df in views.items():
         write_json_artifact(df, out_base, name, date=date, key_col="guid")

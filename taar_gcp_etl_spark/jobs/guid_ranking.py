@@ -39,7 +39,7 @@ def run(
     addons: DataFrame,
     date: str,
     out_base: str,
-    artifact_date: dt.date | None = None,
+    artifact_date: dt.date,
     k: int | None = None,
 ) -> DataFrame:
     """rank → (optional explicit top-k, the contract the downstream filename

@@ -11,14 +11,12 @@ allows (SURVEY.md §7 hard part 1).
 
 from __future__ import annotations
 
-import bz2
 import datetime as dt
-import json
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taar_gcp_etl_spark.io import write_bz2_json
 from taar_gcp_etl_spark.operators.ranking import grouped_top_k
 
 ARTIFACT = "top10_dict"
@@ -56,17 +54,12 @@ def run(
     clients: DataFrame,
     out_base: str,
     k: int = 10,
-    date: dt.date | None = None,
+    *,
+    date: dt.date,
 ) -> DataFrame:
     """top-k per locale → {locale: [guid, ...]} dual-write artifact."""
     top = top_addons_per_locale(clients, k)
-    date = date or dt.date.today()
-    stamp = date.strftime("%Y%m%d")
-    obj = {r[0]: list(r[1]) for r in top.collect()}
-    payload = bz2.compress(json.dumps(obj, sort_keys=True).encode("utf-8"))
-    for sub in ("latest", f"snapshot={stamp}"):
-        d = f"{out_base}/{sub}"
-        os.makedirs(d, exist_ok=True)
-        with open(f"{d}/{ARTIFACT}.json.bz2", "wb") as fh:
-            fh.write(payload)
+    write_bz2_json(
+        {r[0]: list(r[1]) for r in top.collect()}, out_base, ARTIFACT, date
+    )
     return top

@@ -45,7 +45,7 @@ def validate_against_catalog(guids: DataFrame, catalog: DataFrame) -> None:
 def run(
     editorial: DataFrame,
     out_base: str,
-    date: dt.date | None = None,
+    date: dt.date,
     allow_shortlist: bool = False,
     catalog: DataFrame | None = None,
 ) -> DataFrame:

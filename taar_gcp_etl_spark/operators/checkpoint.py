@@ -41,43 +41,12 @@ def _persistent_ids(spark: SparkSession) -> set[int]:
     return out
 
 
-def local_checkpoint(
-    df: DataFrame, preserve_partitioning: bool = False
-) -> DataFrame:
-    """Eager localCheckpoint; with ``preserve_partitioning`` the
-    checkpoint is planned with AQE disabled so the resulting LogicalRDD
-    carries the plan's CONCRETE output partitioning instead of
-    ``UnknownPartitioning`` (r13, guide §2.4): under AQE the executed
-    plan is an AdaptiveSparkPlan whose partitioning is undecided at
-    checkpoint-capture time, so every consumer of the checkpoint
-    re-exchanges — which silently defeats key-partitioned iterative
-    loops (measured: a groupBy on the checkpoint's own repartition key
-    re-shuffled under AQE, planned exchange-free with this flag). The
-    cost: that one checkpoint's own execution forgoes AQE coalescing /
-    skew splitting and runs at the session's static shuffle-partition
-    width — the width the session already sizes to the cluster, and the
-    iterative relations here are uniform narrow (long, long) rows, so
-    static width is the right trade for exchange-free rounds."""
-    if not preserve_partitioning:
-        return df.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def checkpoint_tracked(
-    df: DataFrame, preserve_partitioning: bool = False
-) -> tuple[DataFrame, frozenset[int]]:
+def checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, frozenset[int]]:
     """Eager localCheckpoint + the persistent-RDD ids it registered, for
-    a later `release_rdds` once the checkpoint is superseded. See
-    `local_checkpoint` for ``preserve_partitioning``."""
+    a later `release_rdds` once the checkpoint is superseded."""
     spark = df.sparkSession
     before = _persistent_ids(spark)
-    out = local_checkpoint(df, preserve_partitioning)
+    out = df.localCheckpoint(eager=True)
     return out, frozenset(_persistent_ids(spark) - before)
 
 

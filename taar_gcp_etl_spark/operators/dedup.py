@@ -863,8 +863,8 @@ def connected_components_alternating(
         # (v = a), and m(u) ≤ u < v, so the emitted edge (v, m(u)) is
         # already oriented — no greatest/least needed
         e1, e1_ids = checkpoint_tracked(
+            # m ≤ b < a on every row, so no emitted edge is a self-loop
             e.join(m_lg.withColumnRenamed("u", "b"), "b")
-            .filter(F.col("a") != F.col("m"))
             .select("a", F.col("m").alias("b"))
             .distinct()
         )

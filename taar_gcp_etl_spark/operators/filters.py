@@ -7,6 +7,8 @@ the parquet scan, struct-field access prunes to the referenced leaves.
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,6 +64,7 @@ def bernoulli_sample(df: DataFrame, rate: float, seed: int = 42) -> DataFrame:
 
 
 def whitelist_predicate(
+    as_of: dt.date,
     guid: str = "guid",
     current_version: str = "current_version",
     ratings: str = "ratings",
@@ -70,7 +73,9 @@ def whitelist_predicate(
     """P5 — the AMO whitelist conjunction
     (reference: taar_etl/taar_amowhitelist.py:70-97):
       guid != pioneer  AND  len(files) > 0  AND  files[0].is_webextension
-      AND ratings.average >= 3.0  AND  first_create_date <= today - 60d.
+      AND ratings.average >= 3.0  AND  first_create_date <= as_of - 60d.
+    The reference reads today's date here; ``as_of`` is the run date passed
+    in, so a rerun or backfill of a given day classifies the same way.
     NB: files[0] (first element) — distinct from the ANY-file variant P11."""
     files = F.col(f"{current_version}.files")
     return (
@@ -80,7 +85,7 @@ def whitelist_predicate(
         & (F.coalesce(F.col(f"{ratings}.average"), F.lit(0.0)) >= F.lit(MIN_RATING))
         & (
             F.to_timestamp(F.col(first_create_date))
-            <= F.date_sub(F.current_date(), MIN_AGE_DAYS).cast("timestamp")
+            <= F.date_sub(F.lit(as_of), MIN_AGE_DAYS).cast("timestamp")
         )
     )
 
@@ -90,11 +95,6 @@ def featured_predicate(promoted: str = "promoted") -> Column:
     (taar_etl/taar_amowhitelist.py:50-55); struct access null-propagates, so
     null `promoted` rows are dropped without an explicit null check."""
     return F.col(f"{promoted}.category") == F.lit("recommended")
-
-
-def featured_whitelist_predicate() -> Column:
-    """P7 — P5 AND P6 (taar_etl/taar_amowhitelist.py:100-113)."""
-    return whitelist_predicate() & featured_predicate()
 
 
 def valid_guid_predicate(col: str = "addon.guid") -> Column:

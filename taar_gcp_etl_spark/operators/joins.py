@@ -181,42 +181,6 @@ def asof_join_cogroup_pandas(
     )
 
 
-def bucketed_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_lo: str,
-    right_hi: str,
-    bucket_seconds: int,
-    extra_equi: list[str] | None = None,
-) -> DataFrame:
-    """§2.11 — interval join (point-in-range) without a native operator:
-    bucketize time into `bucket_seconds` buckets, explode each interval to
-    the buckets it overlaps, equi-join on bucket (+ any natural keys), then
-    filter exactly. Turns an O(n·m) nested loop into a standard shuffled
-    equi-join whose fan-out is interval_len/bucket_len."""
-    lb = left.withColumn(
-        "_bucket", (F.unix_timestamp(F.col(left_ts)) / bucket_seconds).cast("long")
-    )
-    rb = right.withColumn(
-        "_bucket",
-        F.explode(
-            F.sequence(
-                (F.unix_timestamp(F.col(right_lo)) / bucket_seconds).cast("long"),
-                (F.unix_timestamp(F.col(right_hi)) / bucket_seconds).cast("long"),
-            )
-        ),
-    )
-    keys = ["_bucket"] + (extra_equi or [])
-    return (
-        lb.join(rb, keys)
-        .filter(
-            (F.col(left_ts) >= F.col(right_lo)) & (F.col(left_ts) < F.col(right_hi))
-        )
-        .drop("_bucket")
-    )
-
-
 def phonetic_block(text_col: str | Column) -> Column:
     """Soundex blocking key for `fuzzy_self_join`: the phonetic code of
     the FIRST whitespace token (uppercased) — the classic entity-

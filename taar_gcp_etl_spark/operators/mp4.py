@@ -31,9 +31,6 @@ import struct
 # stsd fourccs whose samples are complete JPEG images we can decode
 JPEG_SAMPLE_CODECS = {"jpeg", "mjpa", "mjpb"}
 
-# boxes that only CONTAIN other boxes (no payload before the children)
-_CONTAINERS = {"moov", "trak", "mdia", "minf", "stbl", "edts", "mvex"}
-
 
 def _u32(buf: bytes, off: int) -> int:
     if off + 4 > len(buf):

@@ -21,11 +21,6 @@ DEFAULT_QUALITY_RULES = {
     "min_stop_ratio": 0.01,
 }
 
-RULEPACK_SCHEMA = (
-    "min_tokens int, min_avg_len double, max_avg_len double, "
-    "min_stop_ratio double"
-)
-
 
 def default_rulepack(spark: SparkSession) -> DataFrame:
     """The quality-filter threshold table (one row). In production this is a

@@ -1889,11 +1889,9 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SESSION-SHARED COST: reads the memoized/persisted signature
     projection the minhash family shares (operators/dedup.py's
-    documented MinHashLSH trade), so its in-suite bench time depends
-    on whether lsh_near_dup already materialized the cache this
-    session (measured 0.05 s after vs ~1 s before — the r11
-    reversed-order experiment). Isolated cost lives in
-    docs/bench_isolated.json, not the suite map."""
+    documented MinHashLSH trade), so its wall time depends on whether
+    lsh_near_dup already materialized the cache this session (measured
+    0.05 s after vs ~1 s before)."""
     return _minhash_signed_cached(spark, sf_dir).select(
         "doc_id", "sig0", "sig1", "sig2", "sig3"
     )
@@ -3363,31 +3361,6 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_ivf": q_ann_ivf,
     "ann_pca": q_ann_pca,
     "semantic_dedup": q_semantic_dedup,
-}
-
-# Queries whose IN-SUITE bench timing measures a SESSION, not a query
-# (VERDICT r11 #6): each family below shares one memoized/persisted
-# relation or model fit, so whichever member runs first this session
-# pays the materialization and the rest read the cache (e.g.
-# minhash_signatures: ~1 s before lsh_near_dup materializes the
-# signature cache, 0.05 s after — the r11 reversed-order experiment).
-# bench.py propagates this map into bench_full.json and the stdout
-# payload count; gen_registry.py prints it in REGISTRY.md — so
-# adjudication reviewers stop re-discovering the effect per round.
-# Position-independent per-query costs live in docs/bench_isolated.json
-# (fresh JVM per query: each isolated run pays its family's full
-# materialization itself).
-SHARED_COST: dict[str, str] = {
-    "minhash_signatures": "minhash-signature cache",
-    "lsh_near_dup": "minhash-signature cache",
-    "simhash": "simhash-digest cache",
-    "simhash_hamming": "simhash-digest cache",
-    "donor_clusters": "donor KMeans fit",
-    "donor_curves": "donor KMeans fit",
-    "semantic_dedup": "donor KMeans fit",
-    "ann_ivf": "donor KMeans fit",
-    "als_recs": "ALS factorization",
-    "als_neighbors": "ALS factorization",
 }
 
 # DuckDB building blocks shared by the text/dedup oracle SQL.

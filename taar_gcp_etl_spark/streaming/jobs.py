@@ -107,22 +107,6 @@ def tumbling_counts(
     )
 
 
-def session_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming session windows (inactivity gap) per user."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
 def running_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user running
     totals that persist across micro-batches (the arbitrary-state escape

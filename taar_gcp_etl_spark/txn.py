@@ -2966,29 +2966,6 @@ def refresh_aggregate_store_txn(
     )
 
 
-def stream_refresh_aggregate_txn(
-    events: DataFrame,
-    table_dir: str,
-    checkpoint: str,
-    keys: list[str],
-    measures: dict,
-):
-    """Streaming face of refresh_aggregate_store_txn (see its crash-window
-    contract — this is the production variant of
-    streaming.jobs.stream_refresh_aggregate)."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        refresh_aggregate_store_txn(
-            batch_df, table_dir, keys, measures, epoch_id=epoch_id
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 def read_changes(
     spark: SparkSession,
     table_dir: str,

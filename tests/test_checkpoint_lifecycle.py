@@ -44,33 +44,6 @@ class TestTrackedCheckpoint:
         release_rdds(spark, ids)  # second release: no-op, no error
         release_rdds(spark, {999999})  # unknown id: no-op
 
-    def test_preserve_partitioning_keeps_concrete_partitioning(self, spark):
-        """preserve_partitioning=True plans the checkpoint AQE-off so the
-        LogicalRDD carries concrete hash partitioning (under AQE it is
-        UnknownPartitioning and every consumer re-exchanges); the session
-        conf must be restored afterwards. No registry operator uses the
-        flag — an AQE-off eager checkpoint executes its WHOLE plan
-        without broadcast-join conversion, measured 1.4-4.2x slower at
-        bench scale (OPTIMIZATION_r13.md) — but the helper stays for
-        genuinely SMJ-bound loops."""
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        df = spark.range(100).repartition("id")
-        out, ids = checkpoint_tracked(df, preserve_partitioning=True)
-        part = (
-            out._jdf.queryExecution().executedPlan()
-            .outputPartitioning().toString()
-        )
-        assert "hashpartitioning" in part, part
-        assert spark.conf.get("spark.sql.adaptive.enabled") == prev
-        # and the preserved partitioning is actually REUSED: a groupBy
-        # on the key plans with no new exchange above the RDD scan
-        plan = (
-            out.groupBy("id").count()
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange hashpartitioning" not in plan, plan
-        release_rdds(spark, ids)
-
 
 class TestIterativeOperatorLifecycle:
     """Each operator leaves only O(1) persistent RDDs (its result), not

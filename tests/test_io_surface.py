@@ -3,6 +3,7 @@ parity (F12), serving-table layout, JSON artifact round-trip (S11/S12)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import urllib.parse
 
 import pytest
@@ -171,7 +172,7 @@ def test_serving_table_layout(spark, tmp_path):
 def test_json_artifact_row_roundtrip(spark, tmp_path):
     """S11/S12 — row-shaped artifact dual-write + read-back with schema."""
     df = read_table(spark, SF_SMOKE, "region")
-    write_json_artifact(df, str(tmp_path), "regions")
+    write_json_artifact(df, str(tmp_path), "regions", dt.date(2026, 8, 13))
     back = read_json_artifact(
         spark, str(tmp_path / "latest" / "regions"), schema=df.schema
     )

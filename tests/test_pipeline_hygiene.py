@@ -271,35 +271,28 @@ class TestColumnProfileApprox:
             assert r.n_rows == 0
 
 
-class TestSharedCostAnnotation:
-    """VERDICT r11 #6: the session-shared-cost marker must stay in sync
-    with the registry — bench_full.json and REGISTRY.md both derive
-    from queries.SHARED_COST, so a renamed or dropped query here would
-    silently orphan the annotation."""
+class TestNoClockReads:
+    """A job's output is a function of its inputs and an explicit run
+    date: the CLI (__main__.py) is the one place that reads the clock
+    and passes the date down."""
 
-    def test_keys_are_registry_queries(self):
-        from taar_gcp_etl_spark.queries import SHARED_COST, SPARK_QUERIES
-
-        assert set(SHARED_COST) <= set(SPARK_QUERIES)
-        # the family that motivated the marker is covered
-        assert "minhash_signatures" in SHARED_COST
-        assert (
-            SHARED_COST["minhash_signatures"] == SHARED_COST["lsh_near_dup"]
-        )
-
-    def test_registry_md_carries_the_marker(self):
+    def test_clock_reads_only_in_cli(self):
         import os
+        import re
 
-        from taar_gcp_etl_spark.queries import SHARED_COST
-
-        path = os.path.join(
+        pkg = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "docs", "REGISTRY.md",
+            "taar_gcp_etl_spark",
         )
-        with open(path) as f:
-            text = f.read()
-        for name in SHARED_COST:
-            row = next(
-                ln for ln in text.splitlines() if f"`{name}`" in ln
-            )
-            assert "shared-cost:" in row, name
+        clock = re.compile(r"current_date\(|date\.today\(|datetime\.now\(")
+        hits = []
+        for root, _dirs, files in os.walk(pkg):
+            for name in files:
+                path = os.path.join(root, name)
+                if not name.endswith(".py") or name == "__main__.py":
+                    continue
+                with open(path) as f:
+                    for no, line in enumerate(f, 1):
+                        if clock.search(line):
+                            hits.append(f"{os.path.relpath(path, pkg)}:{no}")
+        assert hits == [], hits

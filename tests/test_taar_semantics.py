@@ -22,14 +22,16 @@ from taar_gcp_etl_spark.operators.filters import (
     webextension_any_predicate,
     whitelist_predicate,
 )
-from taar_gcp_etl_spark.operators.profile import transpose_active_addons
 from taar_gcp_etl_spark.operators.quality import (
     EmptyWhitelistError,
     ShortWhitelistError,
     require_min_rows,
     require_non_empty,
 )
-from taar_gcp_etl_spark.schemas import AMO_ADDON, CLIENTS_PROFILE
+from taar_gcp_etl_spark.schemas import AMO_ADDON
+
+# the run date the fixture's addon ages are measured from
+AS_OF = dt.date(2026, 8, 13)
 
 
 def _addon(
@@ -98,10 +100,26 @@ class TestWhitelistPredicates:
         """P5 (taar_etl/taar_amowhitelist.py:70-97): only fully-conforming
         addons survive; second-file@a fails because files[0] is not a
         webextension even though a later file is."""
-        assert guids(catalog.filter(whitelist_predicate())) == [
+        assert guids(catalog.filter(whitelist_predicate(AS_OF))) == [
             "featured@a",
             "good@a",
             "sponsored@a",
+        ]
+
+    def test_p5_age_gate_follows_as_of(self, catalog):
+        """The 60-day age gate is measured from the as-of date passed in:
+        tooyoung@a (created 10 days before AS_OF) fails one day short of
+        its 60-day mark and passes on it."""
+        short = AS_OF + dt.timedelta(days=49)
+        on_mark = AS_OF + dt.timedelta(days=50)
+        assert "tooyoung@a" not in guids(
+            catalog.filter(whitelist_predicate(short))
+        )
+        assert guids(catalog.filter(whitelist_predicate(on_mark))) == [
+            "featured@a",
+            "good@a",
+            "sponsored@a",
+            "tooyoung@a",
         ]
 
     def test_p11_any_file_differs_from_p5(self, catalog):
@@ -111,7 +129,7 @@ class TestWhitelistPredicates:
         any_ok = catalog.filter(webextension_any_predicate())
         assert "second-file@a" in guids(any_ok)
         assert "second-file@a" not in guids(
-            catalog.filter(whitelist_predicate())
+            catalog.filter(whitelist_predicate(AS_OF))
         )
 
     def test_p6_featured(self, catalog):
@@ -122,8 +140,10 @@ class TestWhitelistPredicates:
     def test_p7_conjunction_equals_semi_join(self, catalog):
         """SET1 (taar_etl/taar_amowhitelist.py:100-113): predicate
         conjunction ≡ semi-join intersection of the two views."""
-        conj = catalog.filter(whitelist_predicate() & featured_predicate())
-        semi = catalog.filter(whitelist_predicate()).join(
+        conj = catalog.filter(
+            whitelist_predicate(AS_OF) & featured_predicate()
+        )
+        semi = catalog.filter(whitelist_predicate(AS_OF)).join(
             catalog.filter(featured_predicate()).select("guid"),
             "guid",
             "left_semi",
@@ -159,51 +179,6 @@ class TestMarshal:
 
 
 class TestProfileTranspose:
-    def test_f19_transpose(self, spark):
-        """F19 (taar_etl/taar_profile_bigtable.py:227-292): array-of-struct →
-        16 parallel addon_* arrays with per-field null defaults."""
-        rows = [
-            Row(
-                client_id="c1",
-                submission_date=dt.date(2024, 1, 1),
-                city=None,
-                subsession_hours_sum=1.5,
-                locale="en-US",
-                os="Linux",
-                places_bookmarks_count_mean=None,
-                scalar_parent_browser_engagement_tab_open_event_count_sum=None,
-                scalar_parent_browser_engagement_total_uri_count_sum=None,
-                scalar_parent_browser_engagement_unique_domains_count_mean=None,
-                active_addons=[
-                    Row(
-                        addon_id="a1",
-                        blocklisted=None,
-                        name=None,
-                        user_disabled=False,
-                        app_disabled=False,
-                        version="1.0",
-                        scope=None,
-                        type="extension",
-                        foreign_install=False,
-                        has_binary_components=False,
-                        install_day=100,
-                        update_day=200,
-                        signed_state=2,
-                        is_system=False,
-                        is_web_extension=True,
-                        multiprocess_compatible=True,
-                    )
-                ],
-            )
-        ]
-        df = spark.createDataFrame(rows, CLIENTS_PROFILE)
-        out = transpose_active_addons(df).collect()[0]
-        assert out.addon_addon_id == ["a1"]
-        assert out.addon_blocklisted == [False]  # null → default False
-        assert out.addon_name == [""]  # null → default ""
-        assert out.addon_scope == [0]  # null → default 0
-        assert out.addon_install_day == [100]
-
     def test_sha256_parity(self, spark):
         """F1 (taar_etl/taar_utils.py:110-116): F.sha2 must be bit-identical
         to hashlib.sha256(utf8).hexdigest()."""
