@@ -6,8 +6,9 @@ Maps the reference's storage surface (SURVEY.md §2.1) onto Spark-native I/O:
   - JSON.bz2 dual-write artifact sink (S11, taar_etl/taar_utils.py:32-63):
     `latest` + dated snapshot, bzip2-compressed
   - keyed serving table (S9 KV upsert sink,
-    taar_etl/taar_profile_bigtable.py:166-191): sha256 row key, key-prefix
-    partitioning to emulate BigTable row-key locality
+    taar_etl/taar_profile_bigtable.py:166-191): sha256 row key, one global
+    sort on the key so each file holds a contiguous key range (BigTable's
+    sorted-tablet locality)
   - Avro source/sink (S7/S8, taar_etl/taar_profile_bigtable.py:112-132,181-184)
     gated behind availability of spark-avro on the classpath.
 """
@@ -123,13 +124,18 @@ def write_json_artifact(
 def write_bz2_json(obj: dict, base_path: str, name: str, date: dt.date) -> None:
     """Encode ``obj`` once as sorted-key bzip2 JSON and write the same bytes
     to `{base}/latest/{name}.json.bz2` and
-    `{base}/snapshot={YYYYMMDD}/{name}.json.bz2`."""
+    `{base}/snapshot={YYYYMMDD}/{name}.json.bz2`. Each copy is published by
+    `os.replace` from a temp file, so readers see the old or the new bytes."""
     payload = bz2.compress(json.dumps(obj, sort_keys=True).encode("utf-8"))
     for sub in ("latest", f"snapshot={date:%Y%m%d}"):
         d = f"{base_path}/{sub}"
         os.makedirs(d, exist_ok=True)
-        with open(f"{d}/{name}.json.bz2", "wb") as fh:
+        # hidden temp name in the target directory (Spark's file listing
+        # skips dot files), then an atomic rename over the published copy
+        tmp = f"{d}/.{name}.json.bz2.tmp"
+        with open(tmp, "wb") as fh:
             fh.write(payload)
+        os.replace(tmp, f"{d}/{name}.json.bz2")
 
 
 def read_json_artifact(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -145,22 +151,19 @@ def read_json_artifact(spark: SparkSession, path: str, schema=None) -> DataFrame
 def write_serving_table(df: DataFrame, path: str, key_col: str = "key") -> None:
     """Keyed serving table (S9, taar_etl/taar_profile_bigtable.py:295-329).
 
-    Partitions by the first 2 hex chars of the sha256 key — 256 balanced
-    buckets emulating BigTable row-key locality, so a point lookup or a
-    delete-by-key touches one partition directory instead of a full scan.
-    zlib cell compression in the reference is a storage codec → Parquet
-    compression here.
+    BigTable stores rows sorted by row key, split into contiguous key-range
+    tablets. The same here: one global sort on the sha256 key, so each
+    parquet file holds one key range, sorted within. The file count follows
+    the shuffle partitioning (range bounds, AQE coalescing), not the key
+    space. `key_prefix` (first 2 hex chars) is a stored column; a point
+    lookup by `key` or `key_prefix` is pushed into the parquet scan and
+    skips row groups by their min/max statistics. zlib cell compression in
+    the reference is a storage codec → Parquet compression.
     """
     (
         df.withColumn("key_prefix", F.substring(F.col(key_col), 1, 2))
-        .repartition("key_prefix")
-        # sort must LEAD with the partition column: the file writer requires
-        # task data ordered by partition cols and re-sorts (non-stably,
-        # destroying any other order) unless the existing ordering already
-        # satisfies that — (key_prefix, key) does, (key) alone does not
-        .sortWithinPartitions("key_prefix", key_col)
+        .orderBy(key_col)
         .write.mode("overwrite")
-        .partitionBy("key_prefix")
         .parquet(path)
     )
 

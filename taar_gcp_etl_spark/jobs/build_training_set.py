@@ -56,8 +56,8 @@ def build(
     cleaned, attrition = clean_corpus.run(
         spark, sf_dir, target_lang=target_lang, near_dup_mode=near_dup_mode
     )
-    # cleaned is consumed three times (vocab fit, tokenize, packing scan)
-    cleaned = cleaned.persist()
+    # cleaned is consumed three times (vocab fit, tokenize, packing scan);
+    # it reads the labeled corpus clean_corpus.run persisted
     vocab = vocab_with_ids(cleaned, vocab_size=vocab_size)
     encoded = tokenize_to_ids(cleaned, vocab)
     # shuffle_docs=True packs in deterministic hash order instead of

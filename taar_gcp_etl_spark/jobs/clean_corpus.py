@@ -14,9 +14,9 @@ Scale design — ONE labeled lineage, not N filtered copies:
     already dropped by a cheap gate never reaches the expensive shingle
     hashing — the gates run in cost order on purpose);
   - the attrition report and the cleaned corpus are two consumers of the
-    same labeled DataFrame: `groupBy(drop_stage).count()` and
+    same persisted labeled DataFrame: `groupBy(drop_stage).count()` and
     `filter(drop_stage IS NULL)`. No per-stage count() actions, no
-    re-execution per stage.
+    re-execution per stage or per consumer.
 """
 
 from __future__ import annotations
@@ -146,7 +146,7 @@ def run(
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (cleaned corpus, attrition report). The report has one row
     per drop stage plus a 'kept' row — counts over the single labeled
-    lineage."""
+    lineage, which is persisted so the two outputs label the corpus once."""
     from taar_gcp_etl_spark.io import read_table
     from taar_gcp_etl_spark.operators.quality import default_rulepack
 
@@ -157,7 +157,7 @@ def run(
         target_lang=target_lang,
         jaccard_threshold=jaccard_threshold,
         near_dup_mode=near_dup_mode,
-    )
+    ).persist()
     cleaned = labeled.filter(F.col("drop_stage").isNull()).select(
         "doc_id", "text"
     )

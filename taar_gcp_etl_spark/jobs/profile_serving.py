@@ -44,8 +44,8 @@ def build_profiles(
 
 
 def write_serving(profiles: DataFrame, path: str) -> None:
-    """gcs-to-bigtable stage: sha256 key + packed JSON payload, key-prefix
-    partitioned parquet (taar_etl/taar_profile_bigtable.py:295-329)."""
+    """gcs-to-bigtable stage: sha256 key + packed JSON payload, written as
+    key-sorted range files (taar_etl/taar_profile_bigtable.py:295-329)."""
     packed = pack_serving_rows(profiles, "client_id")
     write_serving_table(packed, path)
 
@@ -60,8 +60,11 @@ def delete_opt_out(
 ) -> DataFrame:
     """bigtable-delete-opt-out stage: distinct opt-out client_ids over the
     lookback window → sha256 keys → broadcast anti-join rewrite
-    (taar_etl/taar_profile_bigtable.py:193-223). Rewrites to `out_path`
-    (or returns the plan when None, for the caller to write)."""
+    (taar_etl/taar_profile_bigtable.py:193-223). The whole table is scanned
+    and rewritten to `out_path` through the same sink (or the plan is
+    returned when None, for the caller to write). A table in the older
+    `key_prefix=xx/` directory layout reads too: `key_prefix` comes back
+    from the path and is dropped before the rewrite recomputes it."""
     serving = spark.read.parquet(serving_path)
     keys = distinct_optout_keys(
         deletions, "client_id", "deletion_date", end_date, lookback_days

@@ -5,9 +5,8 @@ last-write-wins merge).
 
 The rewrite pattern: a merge is an anti-join (rows the update set does not
 touch) unioned with the update set. At 100 TB the update set is typically
-small → broadcast anti-join, and the store is key-prefix partitioned so the
-rewrite only rewrites touched partitions (partition-pruned read + dynamic
-partition overwrite).
+small → broadcast anti-join. The result is a full rewrite of the store:
+every row is scanned and written again, including the untouched ones.
 """
 
 from __future__ import annotations

@@ -1,9 +1,12 @@
 """I/O surface tests: CTAS/drop (S6/S13), Avro (S7/S8, gated), url decode
-parity (F12), serving-table layout, JSON artifact round-trip (S11/S12)."""
+parity (F12), serving-table layout, JSON artifact round-trip (S11/S12) and
+crash-safe bz2 artifacts."""
 
 from __future__ import annotations
 
+import bz2
 import datetime as dt
+import json
 import urllib.parse
 
 import pytest
@@ -15,6 +18,7 @@ from taar_gcp_etl_spark.io import (
     read_json_artifact,
     read_table,
     write_avro,
+    write_bz2_json,
     write_json_artifact,
     write_serving_table,
 )
@@ -164,9 +168,65 @@ def test_serving_table_layout(spark, tmp_path):
     assert "key_prefix" in back.columns
     prefixes = {r.key_prefix for r in back.select("key_prefix").distinct().collect()}
     assert all(len(p) == 2 for p in prefixes)
-    # partition pruning: a point lookup by prefix reads one directory
+    # a point lookup by prefix is pushed into the scan (row-group min/max)
     one = back.filter(F.col("key_prefix") == sorted(prefixes)[0])
     assert one.count() >= 1
+
+
+def test_serving_table_key_range_files(spark, tmp_path):
+    """S9 — the serving table is BigTable's sorted-tablet model: each file
+    holds one contiguous key range, sorted within; the ranges ascend in
+    file order; `key_prefix` is the stored 2-char string prefix; a point
+    lookup by key is pushed into the parquet scan."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # the whole table: after a limit the rows sit in one partition, which
+    # already satisfies the sort and yields one file
+    ev = read_table(spark, SF_SMOKE, "events")
+    packed = pack_serving_rows(ev, "event_id", ["user_id", "event_type"])
+    path = str(tmp_path / "serving")
+    # AQE would coalesce this small a sort into one file; keep 4 ranges
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "4",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        write_serving_table(packed, path)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    files = sorted(glob.glob(f"{path}/*.parquet"))
+    assert len(files) >= 2
+    assert not glob.glob(f"{path}/key_prefix=*")
+    ranges = []
+    for f in files:
+        pf = pq.ParquetFile(f)
+        assert pf.schema_arrow.field("key_prefix").type == pa.string()
+        t = pf.read(columns=["key", "key_prefix"])
+        keys = t.column("key").to_pylist()
+        assert keys == sorted(keys)
+        assert t.column("key_prefix").to_pylist() == [k[:2] for k in keys]
+        meta = pf.metadata
+        idx = pf.schema_arrow.get_field_index("key")
+        stats = [meta.row_group(i).column(idx).statistics
+                 for i in range(meta.num_row_groups)]
+        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo
+    assert sum(pq.ParquetFile(f).metadata.num_rows for f in files) == ev.count()
+
+    k = ranges[-1][0]
+    hit = spark.read.parquet(path).filter(F.col("key") == k)
+    plan = hit._jdf.queryExecution().sparkPlan().toString()
+    assert f"EqualTo(key,{k})" in plan
+    assert [r.key for r in hit.collect()] == [k]
 
 
 def test_json_artifact_row_roundtrip(spark, tmp_path):
@@ -179,6 +239,48 @@ def test_json_artifact_row_roundtrip(spark, tmp_path):
     assert sorted(r.r_name for r in back.collect()) == sorted(
         r.r_name for r in df.collect()
     )
+
+
+def test_bz2_artifact_survives_a_failed_write(tmp_path, monkeypatch):
+    """A crash mid-write leaves the previous `latest` bytes in place: each
+    copy is written to a temp name and published by `os.replace`."""
+    import builtins
+
+    from taar_gcp_etl_spark import io as io_mod
+
+    day = dt.date(2026, 8, 13)
+    write_bz2_json({"a": 1}, str(tmp_path), "m", day)
+    latest = tmp_path / "latest" / "m.json.bz2"
+    before = latest.read_bytes()
+
+    class Torn:
+        """A file handle that writes half its payload, then fails."""
+
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, data):
+            self.fh.write(data[: len(data) // 2])
+            raise OSError("disk full")
+
+    monkeypatch.setattr(
+        io_mod, "open", lambda *a, **k: Torn(builtins.open(*a, **k)),
+        raising=False,
+    )
+    with pytest.raises(OSError, match="disk full"):
+        write_bz2_json({"b": 2}, str(tmp_path), "m", day + dt.timedelta(1))
+    monkeypatch.undo()
+
+    assert latest.read_bytes() == before
+    assert json.loads(bz2.decompress(before)) == {"a": 1}
+    write_bz2_json({"b": 2}, str(tmp_path), "m", day + dt.timedelta(1))
+    assert json.loads(bz2.decompress(latest.read_bytes())) == {"b": 2}
 
 
 class TestColumnarFormats:
