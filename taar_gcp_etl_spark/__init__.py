@@ -8,7 +8,6 @@ Layout:
   functions/    column-level scalar helpers (sha256 keys, hex→int, tokenize)
   operators/    the operator inventory from SURVEY.md §2 + north-star ops
   sources/      ingestion fan-out (REST scan as mapInPandas) — offline-testable
-  streaming/    Structured Streaming variants of the event-time operators
   plans/        plan-inspection helpers (pushdown / broadcast assertions)
   queries.py    the registry consumed by __spark_entry__.py
 """

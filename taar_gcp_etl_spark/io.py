@@ -325,49 +325,3 @@ def _read_avro_fallback(spark: SparkSession, path: str) -> DataFrame:
         .select("content")
         .mapInArrow(decode, schema=spark_schema)
     )
-
-
-def write_columnar(
-    df: DataFrame, path: str, fmt: str = "parquet", **options: str
-) -> None:
-    """Format-dispatched columnar write — parquet (default), ORC, CSV,
-    JSON(-lines). ORC and CSV/JSON ship in every Spark distribution (no
-    jar probe needed, unlike Avro); ORC carries the same predicate
-    pushdown + column pruning contract as parquet, CSV/JSON are the
-    interchange formats (schema-on-read, no pushdown — fine for edges of
-    the pipeline, wrong for the 100 TB interior, which is why parquet
-    stays the default everywhere else in this engine)."""
-    if fmt not in ("parquet", "orc", "csv", "json"):
-        raise ValueError(f"unsupported columnar format: {fmt}")
-    w = df.write.mode("overwrite").format(fmt)
-    if fmt == "csv":
-        w = w.option("header", "true")
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.save(path)
-
-
-def read_columnar(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema=None,
-    **options: str,
-) -> DataFrame:
-    """Format-dispatched read twin of write_columnar. For CSV/JSON pass
-    an explicit ``schema`` in anything but exploratory code: schema
-    inference costs an extra full pass over the data and quietly
-    widens types (everything-nullable, ints→bigints) — at scale the
-    inference pass alone can dominate the job."""
-    if fmt not in ("parquet", "orc", "csv", "json"):
-        raise ValueError(f"unsupported columnar format: {fmt}")
-    r = spark.read.format(fmt)
-    if schema is not None:
-        r = r.schema(schema)
-    elif fmt in ("csv", "json"):
-        r = r.option("inferSchema", "true")
-    if fmt == "csv":
-        r = r.option("header", "true")
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load(path)

@@ -30,8 +30,8 @@ def equal_width_bin(
     domain land in the edge bins (the comparison stays total), NULL stays
     NULL — the when() guard is load-bearing because greatest/least SKIP
     nulls (greatest(NULL, 0) = 0 would silently file nulls into bin 0).
-    Shared by the batch PSI and the streaming drift bins so the two can
-    never disagree on edge handling."""
+    Both PSI sides bin through it, so they can never disagree on edge
+    handling."""
     span = (hi - lo) or 1.0
     raw = F.floor(
         (col.cast("double") - F.lit(lo)) / F.lit(span) * F.lit(n_bins)

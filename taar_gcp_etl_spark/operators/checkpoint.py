@@ -7,11 +7,12 @@ it does NOT register with the SQL CacheManager, so there is no
 DataFrame-level API to free it. Dropping the Python reference only
 releases the blocks when the JVM's ContextCleaner processes the weak
 reference — which requires an actual JVM GC cycle. On a large heap
-(local[32] / 48 GiB here; any long-lived executor in production) full
-GCs are rare, so every superseded iteration of an iterative operator
-(connected components: up to 3 checkpoints x 30 rounds; pagerank,
-BFS, label propagation: one per round) leaks its MEMORY_AND_DISK
-blocks into the unified memory manager for the rest of the session.
+(a local-mode driver holding half the machine's memory; any long-lived
+executor in production) full GCs are rare, so every superseded
+iteration of an iterative operator (connected components: up to 3
+checkpoints x 30 rounds; pagerank, BFS, label propagation: one per
+round) leaks its MEMORY_AND_DISK blocks into the unified memory
+manager for the rest of the session.
 Across a 135-query suite that storage-state accumulation is exactly
 the late-suite inflation the r12 round measured (als_neighbors 9.05 s
 in-suite vs 1.42 s fresh-JVM, same HEAD); at 100 TB it is an executor

@@ -133,68 +133,6 @@ def asof_join_backward(
     )
 
 
-def asof_join_cogroup_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    right_val: str,
-) -> DataFrame:
-    """As-of join via cogrouped applyInPandas (pd.merge_asof per key group)
-    — the Pandas-UDF escape-hatch formulation of asof_join_backward, kept as
-    the reference point for when semantics outgrow the union+window trick
-    (nearest-direction, tolerance windows, multi-column asof).
-
-    Same single shuffle on the key, plus the Arrow transfer cost — measured
-    slower than the native rewrite at fixture scale; prefer
-    asof_join_backward unless merge_asof-only semantics are needed."""
-    import pandas as pd
-
-    out_fields = left.schema.fields + [right.schema[right_val]]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in out_fields
-    )
-    lcols = list(left.columns)
-
-    def merge(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if ldf.empty:
-            return pd.DataFrame(columns=lcols + [right_val])
-        ldf = ldf.sort_values(left_ts)
-        if rdf.empty:
-            ldf[right_val] = None
-            return ldf
-        rdf = rdf.sort_values(right_ts).drop(columns=[key])
-        merged = pd.merge_asof(
-            ldf,
-            rdf,
-            left_on=left_ts,
-            right_on=right_ts,
-            direction="backward",
-        )
-        return merged[lcols + [right_val]]
-
-    return (
-        left.groupBy(key)
-        .cogroup(right.groupBy(key))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
-def phonetic_block(text_col: str | Column) -> Column:
-    """Soundex blocking key for `fuzzy_self_join`: the phonetic code of
-    the FIRST whitespace token (uppercased) — the classic entity-
-    resolution block for human/product names, catching sound-alike
-    misspellings ("Jon Smith" / "John Smyth") that a prefix or length
-    block misses entirely. Pure Column (JVM soundex, no UDF), so the
-    blocking pass is a zero-shuffle map like every other blocking key.
-    Spark-only: DuckDB has no soundex, so queries built on this block are
-    unit-tested rather than oracle-paired (docs/NEXT.md r4 item)."""
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
-    first = F.element_at(F.split(F.trim(col), r"\s+"), 1)
-    return F.soundex(F.upper(first))
-
-
 def fuzzy_self_join(
     df: DataFrame,
     text_col: str,

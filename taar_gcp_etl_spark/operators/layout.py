@@ -226,20 +226,3 @@ def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
                 * F.lit(1 << (b * ncols + i)).cast("long")
             )
     return out
-
-
-def minmax_scale_to_bits(
-    c: Column | str, lo: float, hi: float, bits: int = 16
-) -> Column:
-    """Map a numeric column onto the 0..2^bits-1 integer domain zorder_key
-    expects (bounds supplied by the caller — at scale they come from table
-    stats, not a per-write scan)."""
-    col = F.col(c) if isinstance(c, str) else c
-    span = (hi - lo) or 1.0
-    scaled = (col.cast("double") - F.lit(lo)) / F.lit(span) * F.lit(
-        float((1 << bits) - 1)
-    )
-    return F.least(
-        F.greatest(F.round(scaled).cast("long"), F.lit(0).cast("long")),
-        F.lit((1 << bits) - 1).cast("long"),
-    )

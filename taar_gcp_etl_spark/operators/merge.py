@@ -1,4 +1,4 @@
-"""Merge / upsert / SCD2 operators — MERGE INTO semantics without a
+"""Merge / upsert operators — MERGE INTO semantics without a
 transactional table format (SURVEY.md §2.11; the engine's v1 image has no
 Delta/Iceberg jars, and the reference's BigTable upsert S9 is exactly a
 last-write-wins merge).
@@ -57,83 +57,6 @@ def upsert(
         right = F.broadcast(right)
     untouched = store.join(right, keys, "left_anti")
     return untouched.unionByName(updates)
-
-
-def scd2_apply(
-    dim: DataFrame,
-    updates: DataFrame,
-    key: str,
-    effective_col: str,
-    tracked_cols: list[str],
-    end_col: str = "valid_to",
-    start_col: str = "valid_from",
-    current_flag: str = "is_current",
-) -> DataFrame:
-    """Slowly-changing-dimension type 2: apply a batch of updates
-    (key, effective timestamp, tracked attributes) to a versioned dimension:
-
-      - rows whose tracked attributes changed are CLOSED (valid_to set to
-        the update's effective time, is_current false) and a new current
-        version is appended;
-      - unchanged and untouched rows carry over;
-      - brand-new keys insert as current.
-
-    One broadcast join against the update batch + a union — no window over
-    the dimension, so the rewrite cost is O(store) scan, not O(store log
-    store). Update batches with several rows per key are pre-collapsed to the
-    latest effective row (window over the small update side only), otherwise
-    the left join would fan each dimension row out per matching update and
-    emit multiple 'current' versions."""
-    updates = _one_row_per_key(
-        updates, [key], F.struct(F.col(effective_col), *[F.col(c) for c in tracked_cols])
-    )
-    upd = F.broadcast(
-        updates.select(
-            F.col(key),
-            F.col(effective_col).alias("_eff"),
-            *[F.col(c).alias(f"_new_{c}") for c in tracked_cols],
-        )
-    )
-    joined = dim.join(upd, key, "left")
-    changed = F.col("_eff").isNotNull() & (
-        F.col(current_flag)
-        & ~F.struct(*[F.col(c) for c in tracked_cols]).eqNullSafe(
-            F.struct(*[F.col(f"_new_{c}").alias(c) for c in tracked_cols])
-        )
-    )
-    # existing rows: close the changed-current ones, carry the rest
-    carried = joined.select(
-        key,
-        *tracked_cols,
-        F.col(start_col),
-        F.when(changed, F.col("_eff")).otherwise(F.col(end_col)).alias(end_col),
-        F.when(changed, F.lit(False)).otherwise(F.col(current_flag)).alias(
-            current_flag
-        ),
-    )
-    # new versions for changed keys
-    new_versions = (
-        joined.filter(changed)
-        .select(
-            key,
-            *[F.col(f"_new_{c}").alias(c) for c in tracked_cols],
-            F.col("_eff").alias(start_col),
-            F.lit(None).cast(dim.schema[end_col].dataType).alias(end_col),
-            F.lit(True).alias(current_flag),
-        )
-    )
-    # brand-new keys
-    inserts = (
-        updates.join(dim.select(key).distinct(), key, "left_anti")
-        .select(
-            key,
-            *tracked_cols,
-            F.col(effective_col).alias(start_col),
-            F.lit(None).cast(dim.schema[end_col].dataType).alias(end_col),
-            F.lit(True).alias(current_flag),
-        )
-    )
-    return carried.unionByName(new_versions).unionByName(inserts)
 
 
 def snapshot_diff(

@@ -1,7 +1,7 @@
 """Distributed ranking-quality metrics: recall@k, MRR@k, NDCG@k.
 
 Every approximate retrieval operator in this engine (ann_bucketed,
-ann_ivf, ann_int8, PQ, tfidf_sim) trades recall for cost; the trade is
+ann_ivf, ann_int8, tfidf_sim) trades recall for cost; the trade is
 only manageable if recall is MEASURED, continuously, at corpus scale —
 not eyeballed on a notebook sample. This operator turns (predictions,
 ground truth) into per-query metrics with plain joins and aggregates, so

@@ -44,11 +44,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURES_SCHEMA = (
-    "media_id long, kind string, n_bytes long, sha256 string, "
-    "feat array<double>"
-)
-
 
 # Everything a malformed blob can raise out of the stdlib decoders:
 # ValueError (explicit format guards), zlib.error (corrupt/truncated
@@ -66,18 +61,6 @@ import zlib as _zlib
 # row would classify the whole corpus as "corrupt blobs" and complete
 # green with an empty feature table. Better a loud first-row crash.
 DECODE_ERRORS = (ValueError, _zlib.error, _struct.error, IndexError)
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Pure-Column metadata pass: byte length + content digest — no Python,
-    runs at scan speed. The cheap pre-filter before any decode."""
-    return df.select(
-        "media_id",
-        "kind",
-        F.length("content").alias("n_bytes"),
-        F.sha2("content", 256).alias("sha256"),
-        F.col("meta.mime").alias("mime"),
-    )
 
 
 def media_container_stats(df: DataFrame) -> DataFrame:
@@ -402,16 +385,6 @@ def decode_media(content: bytes, mime: str | None) -> list[float]:
     return _decode_image_stub(content)
 
 
-def _safe_decode_media(content: bytes, mime: str | None):
-    """decode_media with corrupt-blob containment: a malformed payload
-    (truncated header, garbage deflate stream, bad palette index) yields
-    a null feature vector instead of failing the whole mapInPandas job."""
-    try:
-        return decode_media(content, mime)
-    except DECODE_ERRORS:
-        return None
-
-
 def _decode_image_stub(content: bytes) -> list[float]:
     """STUB — deterministic fake 8-dim feature vector from content bytes.
     Replace with a real decoder (Pillow → resize → embed); the container
@@ -421,46 +394,6 @@ def _decode_image_stub(content: bytes) -> list[float]:
     return [float(b) / 255.0 for b in content[:8]] + [0.0] * max(
         0, 8 - len(content[:8])
     )
-
-
-def extract_features(df: DataFrame, batch_hint: int = 64) -> DataFrame:
-    """Decode + featurize via mapInPandas: Arrow batches of (id, bytes) in,
-    feature rows out. Partition sizing is the caller's lever — media rows
-    are wide, so repartition to keep batches in executor memory
-    (`spark.sql.execution.arrow.maxRecordsPerBatch` bounds batch rows)."""
-
-    def run(batches: Iterator) -> Iterator:
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            content = pdf["content"]
-            # column-at-a-time over the Arrow batch — no row loop; the
-            # decode dispatch is the only per-element work (real numpy
-            # decode for uncompressed formats, stub for codec formats)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": content.map(
-                        lambda c: len(c) if c is not None else 0
-                    ),
-                    "sha256": content.map(
-                        lambda c: hashlib.sha256(c).hexdigest()
-                        if c is not None
-                        else None
-                    ),
-                    "feat": [
-                        _safe_decode_media(c, m) if c is not None else None
-                        for c, m in zip(content, pdf["mime"])
-                    ],
-                }
-            )
-
-    return df.select(
-        "media_id", "kind", "content", F.col("meta.mime").alias("mime")
-    ).mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
 def decode_pixels(content: bytes, mime: str | None):
@@ -558,144 +491,6 @@ def media_near_dup(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     )
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: explode each video row into the frame
-    timestamps a decoder would extract (the decode itself is stubbed — the
-    row fan-out, schema, and partitioning are the Spark-side contract)."""
-    return (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
-def audio_fingerprint64(samples, rate: int, n_bands: int = 64) -> tuple[int, int]:
-    """64-bit spectral-profile fingerprint of decoded PCM: the audio
-    analogue of the image dHash, collapsed to the same (hi, lo) digest
-    shape the text/image SimHash relations use so one banded Hamming
-    engine pairs all three modalities.
-
-    Per 1024-sample half-overlapping Hann frame: rfft magnitude →
-    ``n_bands`` linear FREQUENCY bands over the fixed 40 Hz – 4 kHz
-    analysis range, averaged over frames → bit b = 1 iff band b carries
-    MORE than the uniform 1/n_bands share of total energy. Band edges
-    live in Hz and map to FFT bins through the file's own sample rate,
-    so a RESAMPLED copy (44.1 kHz → 22.05 kHz re-export) lands its
-    energy in the same bands — bin-index bands would shift the whole
-    profile and miss exactly the re-encode duplicates this exists for.
-    Share-vs-uniform is gain-invariant and robust to low-level additive
-    noise (noise spreads roughly evenly); temporal structure is
-    deliberately NOT encoded — the profile is length-invariant, which is
-    what a dedup-grade identity wants (a clip and its re-export at
-    different length still match). Temporal-delta bits
-    (Chromaprint-style) were tried and REJECTED: on steady or sparse
-    spectra the frame-to-frame deltas are numerical noise and the digest
-    decorrelates from its own noisy copy. Deterministic,
-    numpy-vectorized, no codec deps."""
-    import numpy as np
-
-    mono = samples.mean(axis=1) if samples.ndim == 2 else samples
-    frame, hop = 1024, 512
-    if len(mono) < frame * 2:  # need ≥2 frames for a stable profile
-        return 0, 0
-    n_frames = 1 + (len(mono) - frame) // hop
-    idx = np.arange(frame)[None, :] + hop * np.arange(n_frames)[:, None]
-    windows = mono[idx] * np.hanning(frame)[None, :]
-    mags = np.abs(np.fft.rfft(windows, axis=1))
-    # band edges in FREQUENCY (40 Hz – 4 kHz, capped at Nyquist), mapped
-    # to this file's bins via its own rate — rate-invariant identity;
-    # clip/unique guard degenerate low-rate files (too few distinct
-    # bins) and keep reduceat start indices strictly inside the spectrum
-    n_bins = mags.shape[1]
-    f_hi = min(4000.0, rate / 2.0) if rate else 4000.0
-    edges_hz = np.linspace(40.0, f_hi, n_bands + 1)
-    edges = np.unique(
-        np.clip(
-            (edges_hz * frame / rate).astype(int) if rate else
-            np.linspace(1, n_bins - 1, n_bands + 1).astype(int),
-            1,
-            n_bins - 1,
-        )
-    )
-    if len(edges) < 3:  # degenerate rate: no usable band structure
-        return 0, 0
-    band_e = np.add.reduceat(mags**2, edges[:-1], axis=1)[:, :n_bands]
-    n_eff = band_e.shape[1]
-    profile = band_e.mean(axis=0)
-    total = profile.sum()
-    if total <= 0:
-        return 0, 0
-    hot = profile / total > 1.0 / n_eff
-    digest = 0
-    for b, bit in enumerate(hot[:64]):
-        if bit:
-            digest |= 1 << b
-    if digest == 0:
-        return 0, 0
-    return (digest >> 32) & 0xFFFFFFFF, digest & 0xFFFFFFFF
-
-
-def media_audio_dhash(df: DataFrame) -> DataFrame:
-    """Spectral fingerprints for every decodable audio row:
-    (media_id, simhash_hi, simhash_lo) — the same digest relation shape
-    as media_dhash/text SimHash, so dedup.simhash_hamming_pairs pairs
-    near-duplicate AUDIO through the one banded Hamming engine. Rows
-    that aren't PCM WAV (codec formats, nulls, too-short clips) drop
-    here: no samples, no spectral identity."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, his, los = [], [], []
-            for mid, content, mime in zip(
-                pdf["media_id"], pdf["content"], pdf["mime"]
-            ):
-                if content is None or mime not in (
-                    "audio/wav", "audio/x-wav",
-                ):
-                    continue
-                try:
-                    samples, rate = decode_wav(bytes(content))
-                except Exception:  # noqa: BLE001 — undecodable = no identity
-                    continue
-                hi, lo = audio_fingerprint64(samples, rate)
-                if hi == 0 and lo == 0:
-                    continue  # too short for a spectral identity
-                ids.append(mid)
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {"media_id": ids, "simhash_hi": his, "simhash_lo": los}
-            )
-
-    return df.select(
-        "media_id", "content", F.col("meta.mime").alias("mime")
-    ).mapInPandas(
-        run, schema="media_id long, simhash_hi long, simhash_lo long"
-    )
-
-
-def audio_near_dup(df: DataFrame, max_hamming: int = 8) -> DataFrame:
-    """Audio near-duplicate pairs: spectral fingerprints through the
-    shared banded Hamming pairing (dedup.simhash_hamming_pairs) — one
-    dedup engine, three modalities (text SimHash, image dHash, audio
-    spectral hash)."""
-    from taar_gcp_etl_spark.operators.dedup import simhash_hamming_pairs
-
-    return simhash_hamming_pairs(
-        media_audio_dhash(df), id_col="media_id", max_hamming=max_hamming
-    )
-
-
 def media_frame_dhash(df: DataFrame, max_frames: int = 8) -> DataFrame:
     """Frame-sampled perceptual hashes for ANIMATED media: GIF
     animations (operators/gif_frames.py) and MJPEG-in-MP4 movies
@@ -763,48 +558,4 @@ def media_frame_dhash(df: DataFrame, max_frames: int = 8) -> DataFrame:
             "media_id long, frame_idx int, "
             "simhash_hi long, simhash_lo long"
         ),
-    )
-
-
-def animated_near_dup(
-    df: DataFrame, min_shared_frames: int = 2, max_frames: int = 8
-) -> DataFrame:
-    """Animation near-duplicate pairs: two media match when at least
-    ``min_shared_frames`` of their sampled frames collide exactly on
-    the 64-bit perceptual hash — robust to frame reordering, trims,
-    and re-palettization (dHash survives those), NOT to per-frame
-    re-encoding noise (use the banded-Hamming still pipeline per frame
-    for that; exact-hash grouping keeps this one shuffle + one
-    aggregate, no candidate blowup). ``shared_frames`` counts matched
-    FRAME INSTANCES — the multiset intersection sum(min(count_a,
-    count_b)) per colliding hash — so two copies of a uniform
-    animation (every sampled frame identical) still report the full
-    sampled count, not 1 (ADVICE r6). Pre-aggregating to per-media
-    (hash, count) keeps the self-join linear in distinct hashes per
-    media, never quadratic in repeated frames. Returns (doc_a, doc_b,
-    shared_frames)."""
-    frames = (
-        media_frame_dhash(df, max_frames=max_frames)
-        .groupBy("media_id", "simhash_hi", "simhash_lo")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    a = frames.alias("a")
-    b = frames.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.simhash_hi") == F.col("b.simhash_hi"))
-            & (F.col("a.simhash_lo") == F.col("b.simhash_lo"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .groupBy(
-            F.col("a.media_id").alias("doc_a"),
-            F.col("b.media_id").alias("doc_b"),
-        )
-        .agg(
-            F.sum(
-                F.least(F.col("a.cnt"), F.col("b.cnt"))
-            ).alias("shared_frames")
-        )
-        .filter(F.col("shared_frames") >= min_shared_frames)
     )

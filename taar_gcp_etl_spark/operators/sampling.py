@@ -154,9 +154,7 @@ def weighted_sample_n(
 
     Scale shape: key assignment is a pure Column map; the top-n is a
     TakeOrdered (per-partition heads + driver merge), never a global
-    sort. n is assumed driver-merge small (a sample, not a re-shard);
-    for huge n switch to the threshold variant (keep key > t, calibrate
-    t from the weight sum) — same formula, no ordering at all.
+    sort. n is assumed driver-merge small (a sample, not a re-shard).
 
     Rows with weight <= 0 or NULL are excluded (zero selection mass).
     Returns the sampled rows with their `_es_key` dropped."""
@@ -171,93 +169,6 @@ def weighted_sample_n(
         keyed.orderBy(F.col("_es_key").desc(), F.col(key_col).asc())
         .limit(n)
         .drop("_es_key")
-    )
-
-
-def weighted_sample_threshold(
-    df: DataFrame,
-    n: int,
-    weight_col: str,
-    key_col: str,
-    buckets: int = HASH_BUCKETS,
-    overshoot: float = 1.25,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """`weighted_sample_n` for HUGE n — same Efraimidis-Spirakis keys,
-    same deterministic result, different physical shape. TakeOrdered's
-    driver merge holds n rows per partition head; at n in the hundreds of
-    millions (re-sharding a corpus, not picking a demo sample) that merge
-    IS a collect. This variant never orders the full relation:
-
-      1. ONE aggregate pass over the narrow (key, weight) projection
-         computes the eligible count AND a t-digest percentile LADDER of
-         the key distribution (approx_percentile takes an array — the
-         needed keep-fraction isn't known until the count is, so the
-         ladder brackets it and the next-coarser rung is picked, its
-         granularity providing margin on top of `overshoot`);
-      2. a pure Column filter `key >= t` keeps the candidate set — the
-         corpus itself never shuffles — and one count verifies the
-         sketch delivered ≥ n (if not: pathological distribution, fall
-         back to the whole eligible set, still exact);
-      3. the exact boundary is settled only among the ~n·overshoot
-         candidates with the two-phase distributed prefix sum
-         (packing.distributed_prefix_sum — range partition + per-partition
-         windows, no single-task global sort), keeping rows with
-         cum_before < n.
-
-    Total cost: 3 passes over the (column-pruned, re-hashed) projection —
-    the stats agg, the verify count, and the prefix-sum input. Output
-    rows and the selection boundary are IDENTICAL to `weighted_sample_n`
-    (same keys, same (key desc, id asc) total order), which is exactly
-    what the equivalence test pins. Like distributed_prefix_sum, the
-    returned plan reads a persisted intermediate — the CALLER owns
-    eviction (spark.catalog.clearCache() or materialize the result)."""
-    from taar_gcp_etl_spark.operators.packing import distributed_prefix_sum
-
-    u = (hash_bucket(F.col(key_col), buckets) + F.lit(0.5)) / F.lit(
-        float(buckets)
-    )
-    w = F.col(weight_col).cast("double")
-    keyed = df.filter(w > 0).withColumn("_es_key", F.log(u) / w)
-
-    # keep-fractions bracketing any plausible n/total; percentile points
-    # are 1-f (largest keys kept)
-    ladder = [0.0001, 0.001, 0.01, 0.05, 0.1, 0.25, 0.5]
-    pcts = ", ".join(str(1.0 - f) for f in ladder)
-    stats = (
-        keyed.select("_es_key")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.expr(
-                f"approx_percentile(_es_key, array({pcts}), 10000)"
-            ).alias("ts"),
-        )
-        .collect()[0]
-    )
-    total = stats["total"]
-    if total <= n:
-        return keyed.drop("_es_key")
-
-    needed = min(1.0, (n * overshoot) / total)
-    rung = next(
-        (i for i, f in enumerate(ladder) if f >= needed), None
-    )
-    cand = (
-        keyed.filter(F.col("_es_key") >= F.lit(stats["ts"][rung]))
-        if rung is not None
-        else keyed  # needed > 50%: just settle the boundary exactly
-    )
-    if rung is not None and cand.count() < n:
-        cand = keyed  # sketch under-delivered: exact fallback
-
-    summed = distributed_prefix_sum(
-        cand.withColumn("_one", F.lit(1)),
-        "_one",
-        [F.desc("_es_key"), F.asc(key_col)],
-        num_partitions,
-    )
-    return summed.filter(F.col("cum_before") < n).drop(
-        "_one", "_es_key", "cum_before"
     )
 
 

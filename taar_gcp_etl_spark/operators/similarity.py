@@ -529,147 +529,6 @@ def int8_topk(
     ).filter(F.col("rnk") <= k)
 
 
-def pq_train(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> list[list[list[float]]]:
-    """Product-quantization codebooks: split the vector into `m` subspaces
-    and K-Means each independently (seeded per subspace). Returns
-    codebooks[m][k][dim/m] — tiny (m·k·dim/m floats), driver-resident, and
-    shipped to executors as literals inside the encode/score projections.
-    Training cost is m small MLlib fits over the SLICED corpus; at 100 TB
-    you train on a sample (codebooks converge long before the corpus is
-    exhausted) and encode the full corpus map-only."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    d_sub = dim // m
-    base = df.select(_as_double(F.col(vec_col)).alias("v")).cache()
-    books: list[list[list[float]]] = []
-    try:
-        for j in range(m):
-            feat = base.select(
-                array_to_vector(
-                    F.slice(F.col("v"), j * d_sub + 1, d_sub)
-                ).alias("features")
-            )
-            model = KMeans(
-                k=k, seed=seed + j, maxIter=10, tol=1e-4
-            ).fit(feat)
-            books.append(
-                [[float(x) for x in c] for c in model.clusterCenters()]
-            )
-    finally:
-        base.unpersist(blocking=False)
-    return books
-
-
-def _pq_sub_dists(sub: Column, book: list[list[float]]) -> list[Column]:
-    """Squared L2 distance from a subvector to each centroid of one
-    codebook — the shared expression between encode (argmin) and the
-    query-side lookup tables (full array)."""
-    out = []
-    for c in book:
-        cent = F.array(*[F.lit(float(x)) for x in c])
-        out.append(
-            F.aggregate(
-                F.zip_with(sub, cent, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    return out
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode each vector as m code ids (nearest sub-centroid per
-    subspace, ties to the lower id): dim floats → m small ints, a
-    (dim·4)/(m) ≈ 32× compression at dim=64/m=8. Map-only projection —
-    codebooks are literals, nothing shuffles."""
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    staged = df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    code_cols = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(F.col("_v"), j * d_sub + 1, d_sub)
-        dists = _pq_sub_dists(sub, book)
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(d.alias("d"), F.lit(c).alias("i"))
-                    for c, d in enumerate(dists)
-                ]
-            )
-        )["i"]
-        code_cols.append(best)
-    return staged.select(F.col(id_col), F.array(*code_cols).alias("codes"))
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance PQ search: the corpus is scanned as CODES
-    (m bytes/vector, never decompressed); each query precomputes per-
-    subspace lookup tables (distance from its exact subvector to every
-    sub-centroid) and scores a code by summing m table lookups. Same
-    broadcast-queries shape as the exact path — the corpus never shuffles,
-    and per-vector cost drops from dim multiplies to m element_at's over
-    a 32× smaller scan. Approximate: ranking quality bounded by the
-    codebook resolution (recall tested)."""
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    codes = pq_encode(corpus, codebooks, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("_v"),
-    )
-    lut_cols = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(F.col("_v"), j * d_sub + 1, d_sub)
-        lut_cols.append(F.array(*_pq_sub_dists(sub, book)).alias(f"_lut{j}"))
-    luts = qv.select("query_id", *lut_cols)
-    dist = None
-    for j in range(m):
-        term = F.element_at(
-            F.col(f"_lut{j}"), F.element_at(F.col("codes"), j + 1) + 1
-        )
-        dist = term if dist is None else dist + term
-    scored = (
-        codes.join(F.broadcast(luts), F.lit(True))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dist, 6).alias("pq_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("pq_dist"), F.asc("neighbor_id")
-    )
-    return scored.withColumn(
-        "rnk", F.row_number().over(w)
-    ).filter(F.col("rnk") <= k)
-
-
 def pca_project(
     df: DataFrame,
     k: int,

@@ -67,30 +67,6 @@ def salted_join(
     return big_s.join(small_r, [key, "_salt"]).drop("_salt")
 
 
-def null_skew_left_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-) -> DataFrame:
-    """Left join that routes NULL-key rows AROUND the shuffle: in a plain
-    left join every null key hashes to the same reducer — a corpus where
-    30% of rows lack the key (unresolved IDs, optional foreign keys) piles
-    all of them onto one straggler task even though nulls can never match.
-    Split instead: non-null rows join normally; null-key rows skip the
-    exchange entirely and union back with null right-side columns. Same
-    result as `left.join(right, key, "left")` (equivalence-tested), minus
-    the pathological partition."""
-    right_cols = [c for c in right.columns if c != key]
-    matched = left.filter(F.col(key).isNotNull()).join(
-        right, key, "left"
-    )
-    nulls = left.filter(F.col(key).isNull()).select(
-        "*", *[F.lit(None).cast(right.schema[c].dataType).alias(c)
-               for c in right_cols]
-    )
-    return matched.unionByName(nulls.select(matched.columns))
-
-
 def skew_report(
     df: DataFrame,
     key_col: str,

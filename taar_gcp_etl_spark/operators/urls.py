@@ -26,7 +26,7 @@ the two engines' canonicalizers must agree byte-for-byte.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # one alternation, shared with the oracle's regex in queries.py
@@ -64,31 +64,3 @@ def canonical_url(url: Column | str) -> Column:
     ).otherwise(F.concat(F.lit("?"), sorted_q))
 
     return F.concat(scheme, F.lit("://"), host, port_part, path, q_part)
-
-
-def dedup_by_url(
-    df: DataFrame, url_col: str = "url", keep_order_col: str | None = None
-) -> DataFrame:
-    """One row per canonical URL. Deterministic winner: the row with
-    the smallest ``keep_order_col`` (e.g. crawl timestamp — keep the
-    first fetch), else an arbitrary-but-stable min over all columns'
-    struct. Standard hash-aggregate on the canonical key: map-side
-    partial min, one shuffle on the key, no window over the corpus."""
-    # unparseable URLs (canonical null: parse_url found no scheme/host)
-    # keep their RAW string as the key — they pass through
-    # one-per-distinct-value instead of collapsing into a single null
-    # group where min_by would silently delete each other
-    keyed = df.withColumn(
-        "_canon", F.coalesce(canonical_url(url_col), F.col(url_col))
-    )
-    order = F.col(keep_order_col) if keep_order_col else F.struct(
-        *[F.col(c) for c in df.columns]
-    )
-    winner = keyed.groupBy("_canon").agg(
-        F.min_by(F.struct(*[F.col(c) for c in df.columns]), order).alias(
-            "_row"
-        )
-    )
-    return winner.select("_canon", "_row.*").withColumnRenamed(
-        "_canon", "canonical_url"
-    )

@@ -3,9 +3,7 @@
 The reference's nearest analogues are per-key "latest" selection (A7,
 taar_etl/taar_amodump.py:228-243 last-page/last-element) and the grouped
 top-k contract (§2.10). Everything here is a single shuffle on the partition
-key; event-time windows are batch `F.window`/`session_window` aggregations
-whose semantics are identical to the Structured Streaming versions
-(streaming/ holds the readStream variants).
+key; event-time windows are batch `F.window` aggregations.
 """
 
 from __future__ import annotations
@@ -51,8 +49,7 @@ def running_aggregates(
 def tumbling_window_agg(
     df: DataFrame, ts: str, width: str, group_cols: list[str], aggs: list[Column]
 ) -> DataFrame:
-    """§2.11 — tumbling event-time window: `F.window(ts, width)`. Batch
-    execution; same operator drives the streaming variant with a watermark."""
+    """§2.11 — tumbling event-time window: `F.window(ts, width)`."""
     return (
         df.groupBy(F.window(ts, width).alias("win"), *group_cols)
         .agg(*aggs)
@@ -76,27 +73,13 @@ def sliding_window_agg(
     )
 
 
-def session_window_agg(
-    df: DataFrame, ts: str, gap: str, group_cols: list[str], aggs: list[Column]
-) -> DataFrame:
-    """§2.11 — session windows with inactivity gap (`session_window`): a
-    session extends while consecutive events are < gap apart. Batch
-    execution; identical semantics to the streaming stateful version."""
-    return (
-        df.groupBy(F.session_window(ts, gap).alias("win"), *group_cols)
-        .agg(*aggs)
-        .withColumn("session_start", F.col("win.start"))
-        .drop("win")
-    )
-
-
 def sessionize_gaps_and_islands(
     df: DataFrame, key: str, ts: str, gap_seconds: int
 ) -> DataFrame:
     """Sessionization via lag + cumulative sum (the classic gaps-and-islands
-    rewrite) — kept alongside session_window because it (a) gives each event
-    its session id (session_window only aggregates) and (b) is the
-    SQL-expressible form the DuckDB oracle can verify."""
+    rewrite): it gives each event its session id (`F.session_window` only
+    aggregates) and is the SQL-expressible form the DuckDB oracle can
+    verify."""
     w = Window.partitionBy(key).orderBy(F.col(ts))
     gap_flag = (
         F.when(

@@ -996,8 +996,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 — sessionization (30-min inactivity gap) via gaps-and-islands;
-    the session_window variant is equivalence-tested in tests/."""
+    """§2.11 — sessionization (30-min inactivity gap) via gaps-and-islands."""
     ev = _t(spark, sf_dir, "events")
     sessions = windows.sessionize_gaps_and_islands(ev, "user_id", "ts", 1800)
     return sessions.groupBy("user_id", "session_id").agg(
@@ -1100,8 +1099,7 @@ def q_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.11 — event-time windows, tumbling AND sliding, one query (r3
     registry fold): 1-day tumbling windows plus 1-day/12-h sliding windows
-    (each event lands in 2), discriminated by a `kind` column. Batch
-    semantics identical to the streaming variants in streaming/."""
+    (each event lands in 2), discriminated by a `kind` column."""
     ev = _t(spark, sf_dir, "events")
     aggs = [F.count("*").alias("n"), _r2(F.sum("value")).alias("sum_value")]
     tumb = windows.tumbling_window_agg(ev, "ts", "1 day", ["event_type"], aggs)

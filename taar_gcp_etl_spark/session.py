@@ -11,6 +11,9 @@ Engine-wide physical decisions (SURVEY.md §4):
     out-of-range element_at) (reference: taar_etl/taar_profile_bigtable.py:78).
   - shuffle partitions sized to cores for local mode; on a real cluster this
     would be set to ~2-3× total executor cores or left to AQE coalescing.
+  - sized to the machine it runs on: `local[<cores this process may use>]`
+    (SPARK_GRAFT_CPUS overrides) and a driver heap of half the physical
+    memory.
 """
 
 from __future__ import annotations
@@ -26,8 +29,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(
+        os.sched_getaffinity(0)
+    )
     shuffle = shuffle_partitions or int(cpus)
+    # half the physical memory, in MiB
+    heap_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 21
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -42,13 +49,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")
         # local mode: driver == all executors, so the default 1g heap is
-        # the whole cluster's memory — size it to the machine (128 GiB
-        # box; JVM heap is lazily committed). Must be set before the JVM
-        # launches, hence here and not per-query.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
+        # the whole cluster's memory — size it to the machine, leaving the
+        # other half to Python workers and the OS. Must be set before the
+        # JVM launches, hence here and not per-query.
+        .config("spark.driver.memory", f"{heap_mb}m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

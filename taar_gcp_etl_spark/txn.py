@@ -2,20 +2,20 @@
 tables (manifest-swap, Delta/Iceberg-style, reduced to the piece this
 engine needs).
 
-Why it exists: the plain-parquet maintenance paths are honest about two
-gaps (streaming/jobs.py):
+What it guarantees, through one mechanism (the same one every table
+format uses):
 
-* ``refresh_aggregate_store`` orders marker-after-overwrite, so a crash
-  between the table rewrite and the epoch-marker touch re-applies the
-  batch (double count) — the residual window every non-transactional
-  two-file commit has.
-* ``mode("overwrite")`` deletes the directory before writing, so a
-  concurrent reader can observe an empty or partial table mid-commit.
-* ``apply_cdc_batch`` retains no tombstones, so a stale upsert replayed
-  after a newer delete resurrects the row.
-
-This module closes all three with one mechanism, the same one every
-table format uses:
+* **Atomic publish**: a commit and the epoch it applies become visible
+  together, in one manifest. A crash before that point leaves the table
+  unchanged; a crash after it records the epoch, so a replayed batch is
+  skipped and never counted twice.
+* **No delete-then-write window**: a commit never touches the current
+  snapshot, so a concurrent reader sees the old version or the new one,
+  never an empty or partial table (``mode("overwrite")`` deletes the
+  directory before writing).
+* **Tombstones**: the CDC tables keep a delete as a seq-stamped
+  tombstone row, so a stale upsert replayed after a newer delete cannot
+  resurrect the key.
 
 Layout::
 
@@ -1205,46 +1205,6 @@ def apply_cdc_batch_bucketed(
     )
 
 
-def stream_cdc_apply_bucketed(
-    changes: DataFrame,
-    table_dir: str,
-    checkpoint: str,
-    key_col: str = "id",
-    op_col: str = "op",
-    seq_col: str = "seq",
-    n_buckets: int = 64,
-    stats_cols: list[str] | None = None,
-    target_file_rows: int | None = None,
-):
-    """Streaming face of apply_cdc_batch_bucketed — exactly-once CDC
-    maintenance of a fact-sized keyed table with per-batch cost bounded
-    by the touched key range, not the table. ``stats_cols`` /
-    ``target_file_rows`` flow through to the batch apply (both are
-    manifest-sticky, so setting them here on the first micro-batch is
-    enough for the table's lifetime): a streaming-ingested fact table
-    gets the same zone maps + bucket-local clustering that make
-    scan_cdc_pruned and the IVM recompute prune work."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_cdc_batch_bucketed(
-            batch_df,
-            table_dir,
-            key_col,
-            op_col,
-            seq_col,
-            n_buckets=n_buckets,
-            epoch_id=epoch_id,
-            stats_cols=stats_cols,
-            target_file_rows=target_file_rows,
-        )
-
-    return (
-        changes.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 def apply_cdc_batch_txn(
     batch_df: DataFrame,
     table_dir: str,
@@ -1257,8 +1217,7 @@ def apply_cdc_batch_txn(
     ``seq`` + op in {'I','U','D'}) to a transactional keyed table —
     MERGE-at-ingest with DELETE retention.
 
-    Differences from the plain-parquet ``streaming.jobs.apply_cdc_batch``
-    (whose docstring declares both gaps):
+    What a plain parquet overwrite would lack:
 
     * **Tombstones**: a delete stores a ``_deleted=true`` row carrying the
       delete's seq (payload columns nulled). A stale upsert replayed
@@ -2799,7 +2758,7 @@ def _full_rewrite_manifest(
         types = dict(schema_fields)
         manifest["stats_types"] = {c: types.get(c, "") for c in sc}
     if man.get("cluster_rows"):
-        # sticky independently of stats_cols, matching apply_cdc_batch
+        # sticky independently of stats_cols, matching apply_cdc_batch_bucketed
         manifest["cluster_rows"] = man["cluster_rows"]
     return manifest
 
@@ -2885,37 +2844,6 @@ def rescale_buckets(
     )
 
 
-def stream_cdc_apply_txn(
-    changes: DataFrame,
-    table_dir: str,
-    checkpoint: str,
-    key_col: str = "id",
-    op_col: str = "op",
-    seq_col: str = "seq",
-):
-    """Streaming CDC maintenance on the transactional layout: foreachBatch
-    + seq guard + tombstones + atomic epoch-stamped commit = effective
-    exactly-once table state with no resurrection path and no commit
-    crash window (the claims the plain-parquet twin documents as its
-    limitations)."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_cdc_batch_txn(
-            batch_df,
-            table_dir,
-            key_col,
-            op_col,
-            seq_col,
-            epoch_id=epoch_id,
-        )
-
-    return (
-        changes.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 def refresh_aggregate_store_txn(
     batch_df: DataFrame,
     table_dir: str,
@@ -2923,12 +2851,11 @@ def refresh_aggregate_store_txn(
     measures: dict,
     epoch_id: int | None = None,
 ) -> bool:
-    """Transactional twin of streaming.jobs.refresh_aggregate_store: merge
-    a micro-batch's per-key partials into the stored aggregate and
-    publish atomically. The epoch guard lives IN the manifest, so the
-    marker-after-write crash window of the plain path cannot occur: a
-    crash before the manifest rename leaves the store untouched (replay
-    re-applies, once), a crash after it leaves the epoch recorded
+    """Merge a micro-batch's per-key partials into the stored aggregate
+    (operators.merge.refresh_aggregate) and publish atomically. The epoch
+    guard lives IN the manifest, so there is no marker-after-write crash
+    window: a crash before the manifest rename leaves the store untouched
+    (replay re-applies, once), a crash after it leaves the epoch recorded
     (replay skipped). Returns True if applied, False on replay skip."""
     from taar_gcp_etl_spark.operators.merge import (
         _measure_agg,
@@ -3945,69 +3872,6 @@ def sync_join_from_cdc(
     finally:
         for df in persisted:
             df.unpersist()
-
-
-def register_cdc_table(
-    spark: SparkSession,
-    table_dir: str,
-    name: str,
-    version: int | None = None,
-    filters: list[tuple] | None = None,
-) -> bool:
-    """Expose a transactional CDC table (flat or bucketed) to SQL as a
-    temp view — ``spark.sql(f"SELECT ... FROM {name}")`` then reads the
-    table's LIVE rows (tombstones and maintenance columns hidden), or a
-    pinned ``version`` for time travel. The view captures the snapshot
-    AT REGISTRATION (the manifest resolved now — the same semantics as
-    every read_* face; re-register to see later commits: a view that
-    silently tracked the log would make two reads in one SQL statement
-    see different versions). Join/aggregate stores are CDC tables
-    underneath, so this registers them too; the `_mv_seq` maintenance
-    column is hidden like read_join_store hides it. AGGREGATE stores
-    are plain commit_txn snapshots (no tombstone column) — they route
-    through read_txn with the store's maintenance counters
-    (`_live_rows`, `_nn_*`) hidden; sketch measures surface as their
-    raw mergeable state (use read_aggregate_store(measures=) for
-    estimates). Returns False when the table has no committed version
-    yet (nothing registered).
-
-    Scale: registration is manifest-read only; the scan work stays in
-    the SQL that uses the view, with the same bucket-dir layout
-    underneath (partition pruning on `_bucket=` predicates etc. applies
-    as for any read_txn relation). ``filters`` (CDC-shaped tables only)
-    bakes read_cdc_table's zone-map file skipping into the registered
-    view — "register this month's slice" plans over this month's files;
-    the predicate is part of the view's definition, so SQL over it
-    cannot see rows outside the slice."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        return False
-    schema_names = {n for n, _ in man.get("schema") or []}
-    if DELETED_COL in schema_names:
-        df = read_cdc_table(
-            spark, table_dir, version=version, filters=filters
-        )
-    elif filters:
-        raise ValueError(
-            "register_cdc_table: filters= applies to CDC-shaped tables "
-            f"(with a tombstone column); {table_dir} is a plain "
-            "snapshot — filter in the SQL instead"
-        )
-    else:
-        # snapshot-shaped (aggregate store / plain commit_txn table):
-        # no tombstones to filter — review r9 fix; read_cdc_table's
-        # tombstone filter raised UNRESOLVED_COLUMN here
-        df = read_txn(spark, table_dir, version=version)
-    if df is None:
-        return False
-    drop = [
-        c
-        for c in df.columns
-        if c == "_mv_seq" or c == LIVE_ROWS_COL or c.startswith("_nn_")
-    ]
-    df = df.drop(*drop)
-    df.createOrReplaceTempView(name)
-    return True
 
 
 def read_join_store(

@@ -190,115 +190,6 @@ class TestDistributionPsi:
         assert "SortMergeJoin" not in plan
 
 
-class TestStreamingDrift:
-    def test_windowed_bins_append_and_read_side_psi(self, spark, tmp_path):
-        """Drift monitoring at ingest: the stream maintains windowed bin
-        counts only (append-safe, watermark-evicted); PSI against the
-        reference distribution is computed on read. Window 1 matches the
-        uniform reference (PSI ≈ 0); window 2 is shifted into the top
-        bins (PSI over the 0.2 investigate line)."""
-        import datetime as dt
-
-        from taar_gcp_etl_spark.streaming import jobs as stream_jobs
-
-        src = tmp_path / "drift_src"
-        src.mkdir()
-        schema = stream_jobs.EVENTS_SCHEMA
-        t1 = dt.datetime(2024, 1, 1, 0, 0, 30)
-        t2 = dt.datetime(2024, 1, 1, 1, 0, 30)
-        tflush = dt.datetime(2024, 1, 1, 12, 0)
-        rows = []
-        eid = 0
-        for i in range(100):  # window 1: uniform over [0, 100)
-            rows.append((eid, t1, i, "view", float(i), "{}"))
-            eid += 1
-        for i in range(100):  # window 2: all mass in [80, 100)
-            rows.append((eid, t2, i, "view", 80.0 + (i % 20), "{}"))
-            eid += 1
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-        stream = stream_jobs.read_event_stream(spark, str(src), 999)
-        bins = stream_jobs.stream_drift_bins(
-            stream, lo=0.0, hi=100.0, n_bins=5, width="1 hour"
-        )
-        q = (
-            bins.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("drift_bins")
-            .start()
-        )
-        q.processAllAvailable()
-        # second batch: watermark-advancing sentinel closes both windows
-        spark.createDataFrame(
-            [(eid, tflush, 0, "view", None, "{}")], schema
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        q.stop()
-
-        sink = spark.sql("SELECT * FROM drift_bins")
-        reference = spark.createDataFrame(
-            [(b, 0.2) for b in range(5)], "bin int, share double"
-        )
-        psi = {
-            r.window_start: r.psi
-            for r in stream_jobs.psi_against_reference(
-                sink, reference, n_bins=5
-            ).collect()
-        }
-        w1 = dt.datetime(2024, 1, 1, 0, 0)
-        w2 = dt.datetime(2024, 1, 1, 1, 0)
-        assert abs(psi[w1]) < 1e-3
-        assert psi[w2] > 0.2
-
-    def test_null_values_never_enter_bins(self, spark, tmp_path):
-        import datetime as dt
-
-        from taar_gcp_etl_spark.streaming import jobs as stream_jobs
-
-        src = tmp_path / "null_src"
-        src.mkdir()
-        t1 = dt.datetime(2024, 1, 1, 0, 0, 30)
-        tflush = dt.datetime(2024, 1, 1, 12, 0)
-        spark.createDataFrame(
-            [
-                (0, t1, 0, "view", 10.0, "{}"),
-                (1, t1, 1, "view", None, "{}"),
-                (2, tflush, 2, "view", 1.0, "{}"),
-            ],
-            stream_jobs.EVENTS_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        stream = stream_jobs.read_event_stream(spark, str(src), 999)
-        bins = stream_jobs.stream_drift_bins(
-            stream, lo=0.0, hi=100.0, n_bins=5, width="1 hour"
-        )
-        q = (
-            bins.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("null_bins")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.sql("SELECT * FROM null_bins").collect()
-        # the null-valued event rides in the NULL bin (so the watermark
-        # keeps advancing — any null FILTER would be pushed below the
-        # watermark node); real bins carry only the non-null mass
-        assert sum(r.n for r in out if r.bin is not None) == 1
-        assert sum(r.n for r in out if r.bin is None) == 1
-        # and the read side drops it: window shares are over non-null mass
-        from taar_gcp_etl_spark.streaming.jobs import psi_against_reference
-
-        ref = spark.createDataFrame(
-            [(b, 0.2) for b in range(5)], "bin int, share double"
-        )
-        psi = psi_against_reference(
-            spark.sql("SELECT * FROM null_bins"), ref, n_bins=5
-        ).collect()
-        assert all(r.psi is not None for r in psi)
-
-
 class TestRankingMetrics:
     def test_hand_computed_values(self, spark):
         """Query 1: truth {a,b}, pred ranks [a@1, c@2] → recall 1/2,

@@ -65,21 +65,6 @@ class TestUrlCanonical:
         for i, (_, want) in enumerate(self.CASES):
             assert got[i] == want, (self.CASES[i][0], got[i])
 
-    def test_dedup_keeps_first_fetch(self, spark):
-        from taar_gcp_etl_spark.operators.urls import dedup_by_url
-
-        rows = [
-            (1, "HTTP://A.com/x?utm_source=f", 100),
-            (2, "http://a.com/x", 50),          # same page, earlier crawl
-            (3, "http://a.com/y", 10),
-        ]
-        df = spark.createDataFrame(rows, "id long, url string, ts long")
-        out = {
-            r.canonical_url: r.id
-            for r in dedup_by_url(df, keep_order_col="ts").collect()
-        }
-        assert out == {"http://a.com/x": 2, "http://a.com/y": 3}
-
 
 class TestExtractor:
     def test_boilerplate_dropped_content_kept(self):
@@ -181,18 +166,3 @@ class TestReviewHardening:
             "<p><a href='/real'>real</a> " + ARTICLE + "</p></body>"
         )
         assert extract_html_doc(page)["n_links"] == 1
-
-    def test_unparseable_urls_pass_through_dedup_individually(
-        self, spark
-    ):
-        from taar_gcp_etl_spark.operators.urls import dedup_by_url
-
-        rows = [
-            (1, "http://exa mple.com/a", 1),
-            (2, "not-a-url", 2),
-            (3, "http://ok.com/x", 3),
-        ]
-        df = spark.createDataFrame(rows, "id long, url string, ts long")
-        out = dedup_by_url(df, keep_order_col="ts").collect()
-        # both unparseable rows survive (raw-string keys), nothing merged
-        assert sorted(r.id for r in out) == [1, 2, 3]

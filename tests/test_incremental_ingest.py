@@ -303,58 +303,6 @@ class TestIndexCompaction:
         assert result == {"digests": {}, "bands": {}}
 
 
-class TestStreamIngest:
-    def test_micro_batches_dedup_against_growing_index(
-        self, spark, tmp_path
-    ):
-        """Two file drops: batch 2 re-delivers a batch-1 doc and adds a
-        fresh one. The stream must accept each distinct doc exactly once —
-        the index append after batch 1 makes the re-delivery a corpus
-        exact dup in batch 2."""
-        from taar_gcp_etl_spark.streaming import jobs as stream_jobs
-
-        index_dir = str(tmp_path / "index")
-        corpus = _corpus(spark)
-        incremental_ingest.build_corpus_index(corpus, index_dir)
-        corpus_dup = corpus.orderBy("doc_id").limit(1).collect()[0].text
-
-        src = str(tmp_path / "drops")
-        b1 = spark.createDataFrame(
-            [
-                (5000, "stream batch one brand new document text"),
-                (5001, corpus_dup),  # exact dup of an indexed corpus doc
-            ],
-            "doc_id long, text string",
-        )
-        b2 = spark.createDataFrame(
-            [
-                # re-delivery of 5000's content under a new id
-                (6000, "stream batch one brand new document text"),
-                (6001, "stream batch two different novel document text"),
-            ],
-            "doc_id long, text string",
-        )
-        b1.coalesce(1).write.mode("append").parquet(src)
-        b2.coalesce(1).write.mode("append").parquet(src)
-
-        q = stream_jobs.stream_ingest_dedup(
-            stream_jobs.read_document_stream(spark, src),
-            index_dir,
-            str(tmp_path / "accepted"),
-            str(tmp_path / "ckpt"),
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        acc = spark.read.parquet(str(tmp_path / "accepted"))
-        texts = sorted(r.text for r in acc.collect())
-        # one copy of each distinct novel text, no corpus dup
-        assert texts == [
-            "stream batch one brand new document text",
-            "stream batch two different novel document text",
-        ]
-
-
 class TestIngestCli:
     def test_build_index_and_ingest_batch_cli(self, spark, tmp_path):
         """`python -m taar_gcp_etl_spark build_index / ingest_batch` —

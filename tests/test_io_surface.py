@@ -281,54 +281,3 @@ def test_bz2_artifact_survives_a_failed_write(tmp_path, monkeypatch):
     assert json.loads(bz2.decompress(before)) == {"a": 1}
     write_bz2_json({"b": 2}, str(tmp_path), "m", day + dt.timedelta(1))
     assert json.loads(bz2.decompress(latest.read_bytes())) == {"b": 2}
-
-
-class TestColumnarFormats:
-    def test_orc_roundtrip_with_pushdown(self, spark, tmp_path):
-        """ORC ships in-distribution and honors the same scan contract
-        as parquet: roundtrip is exact and a filter reaches the ORC scan
-        as a pushed predicate."""
-        from taar_gcp_etl_spark.io import read_columnar, write_columnar
-
-        df = spark.createDataFrame(
-            [(i, f"n{i}", i * 1.5) for i in range(100)],
-            "id long, name string, score double",
-        )
-        p = str(tmp_path / "t.orc")
-        write_columnar(df, p, "orc")
-        back = read_columnar(spark, p, "orc")
-        assert sorted(map(tuple, back.collect())) == sorted(
-            map(tuple, df.collect())
-        )
-        plan = (
-            back.filter(F.col("id") > 90)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "PushedFilters: [IsNotNull(id), GreaterThan(id,90)" in plan
-
-    def test_csv_and_json_roundtrip_with_schema(self, spark, tmp_path):
-        from taar_gcp_etl_spark.io import read_columnar, write_columnar
-
-        df = spark.createDataFrame(
-            [(1, "a"), (2, "b,c"), (3, None)], "id long, txt string"
-        )
-        for fmt in ("csv", "json"):
-            p = str(tmp_path / f"t.{fmt}")
-            write_columnar(df, p, fmt)
-            back = read_columnar(
-                spark, p, fmt, schema="id long, txt string"
-            )
-            assert sorted(
-                map(tuple, back.collect())
-            ) == sorted(map(tuple, df.collect()))
-
-    def test_unknown_format_rejected(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from taar_gcp_etl_spark.io import write_columnar
-
-        df = spark.range(1)
-        with _pytest.raises(ValueError, match="unsupported"):
-            write_columnar(df, str(tmp_path / "x"), "xml")

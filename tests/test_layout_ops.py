@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from taar_gcp_etl_spark.io import read_table
 from taar_gcp_etl_spark.operators.layout import (
     compact_parquet_dir,
-    minmax_scale_to_bits,
     sorted_range_write,
     zorder_key,
 )
@@ -122,15 +121,3 @@ class TestZOrder:
         # should be well under the full domain (random layout ≈ full span).
         assert spans.xs < 0.8 * full
         assert spans.ys < 0.8 * full
-
-    def test_minmax_scale_bounds(self, spark):
-        df = spark.createDataFrame(
-            [Row(v=-5.0), Row(v=0.0), Row(v=50.0), Row(v=500.0)]
-        )
-        got = df.select(
-            minmax_scale_to_bits("v", 0.0, 100.0, bits=8).alias("s")
-        ).collect()
-        vals = [r.s for r in got]
-        assert vals[0] == 0  # clamped low
-        assert vals[3] == 255  # clamped high
-        assert 0 <= vals[2] <= 255

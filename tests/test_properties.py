@@ -463,40 +463,6 @@ def test_psi_symmetric_and_nonnegative(spark, vals_a, vals_b):
     assert abs(psi_aa) < 1e-9
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    weights=st.lists(
-        st.integers(-2, 10_000), min_size=1, max_size=40, unique=True
-    ),
-    n=st.integers(1, 10),
-)
-def test_weighted_sample_threshold_equals_exact(spark, weights, n):
-    """The sketch-threshold physical plan must select the IDENTICAL row
-    set as the TakeOrdered plan for any weights (incl. non-positive,
-    which both exclude) and any n (incl. n > |eligible|)."""
-    from taar_gcp_etl_spark.operators.sampling import (
-        weighted_sample_n,
-        weighted_sample_threshold,
-    )
-
-    df = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(weights)], "id long, w long"
-    )
-    exact = sorted(
-        r.id for r in weighted_sample_n(df, n, "w", "id").collect()
-    )
-    thresh = sorted(
-        r.id
-        for r in weighted_sample_threshold(df, n, "w", "id").collect()
-    )
-    spark.catalog.clearCache()
-    assert thresh == exact
-
-
 kv_rows = st.lists(
     st.tuples(st.integers(0, 8), st.integers(-50, 50)),
     min_size=0,

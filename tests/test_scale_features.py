@@ -89,43 +89,6 @@ class TestBucketing:
 
 
 class TestMergeScd2:
-    def test_scd2_versioning(self, spark):
-        import datetime as dt
-
-        from taar_gcp_etl_spark.operators.merge import scd2_apply
-
-        t1 = dt.datetime(2024, 1, 1)
-        t2 = dt.datetime(2024, 6, 1)
-        dim = spark.createDataFrame(
-            [
-                ("c1", "BUILDING", t1, None, True),
-                ("c2", "AUTO", t1, None, True),
-                ("c3", "OLD", t1, t1, False),  # historical row carries over
-                ("c3", "FURNITURE", t1, None, True),
-            ],
-            "k string, segment string, valid_from timestamp, "
-            "valid_to timestamp, is_current boolean",
-        )
-        updates = spark.createDataFrame(
-            [
-                ("c1", t2, "MACHINERY"),  # changed → close + new version
-                ("c2", t2, "AUTO"),  # unchanged → no-op
-                ("c9", t2, "NEW"),  # brand-new key → insert
-            ],
-            "k string, eff timestamp, segment string",
-        )
-        out = scd2_apply(dim, updates, "k", "eff", ["segment"])
-        rows = {
-            (r.k, r.segment): (r.valid_from, r.valid_to, r.is_current)
-            for r in out.collect()
-        }
-        assert rows[("c1", "BUILDING")] == (t1, t2, False)  # closed
-        assert rows[("c1", "MACHINERY")] == (t2, None, True)  # new version
-        assert rows[("c2", "AUTO")] == (t1, None, True)  # untouched
-        assert rows[("c3", "OLD")] == (t1, t1, False)  # history preserved
-        assert rows[("c3", "FURNITURE")] == (t1, None, True)
-        assert rows[("c9", "NEW")] == (t2, None, True)  # insert
-        assert len(rows) == 6
 
     def test_upsert_duplicate_update_keys_last_write_wins(self, spark):
         from taar_gcp_etl_spark.operators.merge import upsert
@@ -145,31 +108,6 @@ class TestMergeScd2:
         out2 = upsert(store, updates, "k")
         assert out2.count() == 3
         assert out2.filter(F.col("k") == "k1").count() == 1
-
-    def test_scd2_duplicate_update_keys_single_current(self, spark):
-        import datetime as dt
-
-        from taar_gcp_etl_spark.operators.merge import scd2_apply
-
-        t1, t2, t3 = (
-            dt.datetime(2024, 1, 1),
-            dt.datetime(2024, 6, 1),
-            dt.datetime(2024, 9, 1),
-        )
-        dim = spark.createDataFrame(
-            [("c1", "BUILDING", t1, None, True)],
-            "k string, segment string, valid_from timestamp, "
-            "valid_to timestamp, is_current boolean",
-        )
-        updates = spark.createDataFrame(
-            [("c1", t2, "MACHINERY"), ("c1", t3, "AUTO")],
-            "k string, eff timestamp, segment string",
-        )
-        out = scd2_apply(dim, updates, "k", "eff", ["segment"]).collect()
-        current = [r for r in out if r.is_current]
-        assert len(out) == 2  # closed original + ONE new version, no fan-out
-        assert len(current) == 1
-        assert (current[0].segment, current[0].valid_from) == ("AUTO", t3)
 
 
 class TestLshHotBandCap:
@@ -491,43 +429,6 @@ class TestWeightedSample:
         mean_sample = a.agg(F.avg("n_chars")).collect()[0][0]
         assert mean_sample > mean_all
 
-    def test_threshold_variant_matches_exact_topn(self, spark):
-        """weighted_sample_threshold must select the IDENTICAL rows as
-        weighted_sample_n (same ES keys, same total order) — only the
-        physical plan differs (sketch + filter + prefix-sum trim instead
-        of a TakeOrdered driver merge)."""
-        from taar_gcp_etl_spark.operators.sampling import (
-            weighted_sample_n,
-            weighted_sample_threshold,
-        )
-
-        docs = read_table(spark, SF_SMOKE, "documents")
-        exact = sorted(
-            r.doc_id
-            for r in weighted_sample_n(docs, 25, "n_chars", "doc_id")
-            .select("doc_id")
-            .collect()
-        )
-        thresh = sorted(
-            r.doc_id
-            for r in weighted_sample_threshold(docs, 25, "n_chars", "doc_id")
-            .select("doc_id")
-            .collect()
-        )
-        assert thresh == exact
-        spark.catalog.clearCache()  # prefix-sum persists its intermediate
-
-    def test_threshold_variant_small_relation_short_circuits(self, spark):
-        from taar_gcp_etl_spark.operators.sampling import (
-            weighted_sample_threshold,
-        )
-
-        df = spark.createDataFrame(
-            [(1, 5), (2, 3), (3, 0)], "id long, w int"
-        )
-        out = weighted_sample_threshold(df, 10, "w", "id")
-        assert {r.id for r in out.collect()} == {1, 2}
-
     def test_zero_weight_rows_excluded(self, spark):
         from taar_gcp_etl_spark.operators.sampling import weighted_sample_n
 
@@ -570,114 +471,6 @@ class TestInterleave:
             [("a", 1.0)], "source string, weight double"
         )
         assert [r.doc_id for r in interleave_sources(df, weights).collect()] == [1]
-
-
-class TestProductQuantization:
-    def test_pq_recall_and_compression(self, spark):
-        """PQ asymmetric search must rank far above chance against the
-        exact L2 top-5. The fixture's iid-random embeddings are PQ's
-        WORST case (no inter-dimension correlation to exploit; distance
-        concentration) — measured recall@5 ≈ 0.36 at m=16/k=32 vs ≈ 0.01
-        chance (5/499); real embedding distributions with correlated dims
-        quantize far better. Codes must be valid (m entries in [0, k))."""
-        from taar_gcp_etl_spark.operators.similarity import (
-            _as_double,
-            pq_encode,
-            pq_topk,
-            pq_train,
-        )
-
-        emb = read_table(spark, SF_SMOKE, "embeddings")
-        books = pq_train(emb, m=16, k=32)
-        assert len(books) == 16 and all(len(b) == 32 for b in books)
-
-        codes = pq_encode(emb, books)
-        row = codes.select(
-            F.min(F.array_min("codes")).alias("lo"),
-            F.max(F.array_max("codes")).alias("hi"),
-            F.min(F.size("codes")).alias("m"),
-        ).collect()[0]
-        assert row.lo >= 0 and row.hi < 32 and row.m == 16
-
-        q = emb.filter(F.col("vec_id") < 20)
-        approx = {
-            (r.query_id, r.neighbor_id)
-            for r in pq_topk(emb, q, books, k=5).collect()
-        }
-        # exact L2 top-5 reference
-        c = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _as_double(F.col("embedding")).alias("cv"),
-        )
-        qd = q.select(
-            F.col("vec_id").alias("query_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        )
-        l2 = F.aggregate(
-            F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        from pyspark.sql import Window as W
-
-        scored = c.join(
-            F.broadcast(qd), F.col("query_id") != F.col("neighbor_id")
-        ).select("query_id", "neighbor_id", l2.alias("d"))
-        win = W.partitionBy("query_id").orderBy(
-            F.asc("d"), F.asc("neighbor_id")
-        )
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in scored.withColumn("rnk", F.row_number().over(win))
-            .filter(F.col("rnk") <= 5)
-            .collect()
-        }
-        recall = len(exact & approx) / len(exact)
-        assert recall > 0.2, f"PQ recall@5 = {recall} (chance ≈ 0.01)"
-
-    def test_pq_encode_deterministic(self, spark):
-        from taar_gcp_etl_spark.operators.similarity import (
-            pq_encode,
-            pq_train,
-        )
-
-        emb = read_table(spark, SF_SMOKE, "embeddings")
-        books1 = pq_train(emb, m=4, k=8)
-        books2 = pq_train(emb, m=4, k=8)
-        assert books1 == books2  # seeded training
-        a = sorted(map(tuple, pq_encode(emb, books1).collect()))
-        b = sorted(map(tuple, pq_encode(emb, books2).collect()))
-        assert a == b
-
-
-class TestNullSkewJoin:
-    def test_equivalent_to_plain_left_join(self, spark):
-        from taar_gcp_etl_spark.operators.skew import null_skew_left_join
-
-        left = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (None, "c"), (None, "d"), (3, "e")],
-            "k int, lv string",
-        )
-        right = spark.createDataFrame(
-            [(1, "x"), (3, "z"), (4, "w")], "k int, rv string"
-        )
-        cols = null_skew_left_join(left, right, "k").columns
-        keyf = lambda t: tuple((v is None, v) for v in t)  # noqa: E731
-        got = sorted(
-            map(tuple, null_skew_left_join(left, right, "k").collect()),
-            key=keyf,
-        )
-        want = sorted(
-            map(
-                tuple,
-                left.join(right, "k", "left").select(*cols).collect(),
-            ),
-            key=keyf,
-        )
-        assert got == want
-        # null-key rows keep their left values with null right side
-        nulls = [t for t in got if t[0] is None]
-        assert len(nulls) == 2 and all(t[-1] is None for t in nulls)
 
 
 class TestResampleFill:
@@ -854,37 +647,6 @@ class TestBoundedVerifyEquivalence:
             )
             got = {(r.id_a, r.id_b, r.dist) for r in out.collect()}
             assert got == expected, (adaptive, got ^ expected)
-
-
-class TestPhoneticBlocking:
-    def test_soundex_block_pairs_sound_alikes(self, spark):
-        """Soundex blocking puts "Jon Smith"/"John Smith" in one block
-        (J500) so the edit-distance verify sees the pair, while "Karen
-        Smith" lands in a different block and is never compared — the
-        phonetic recall that prefix/length blocks miss (Spark-only:
-        DuckDB has no soundex, so this is unit-tested, not oracle-paired)."""
-        from taar_gcp_etl_spark.operators.joins import (
-            fuzzy_self_join,
-            phonetic_block,
-        )
-
-        df = spark.createDataFrame(
-            [
-                (1, "Jon Smith"),
-                (2, "John Smith"),
-                (3, "Karen Smith"),
-            ],
-            "id long, name string",
-        ).withColumn("blk", phonetic_block("name"))
-        out = fuzzy_self_join(df, "name", "id", ["blk"], max_distance=2)
-        assert {(r.id_a, r.id_b) for r in out.collect()} == {(1, 2)}
-
-    def test_block_key_is_pure_column_no_exchange(self, spark):
-        from taar_gcp_etl_spark.operators.joins import phonetic_block
-
-        df = spark.createDataFrame([(1, "Robert Jones")], "id long, name string")
-        plan = formatted_plan(df.withColumn("blk", phonetic_block("name")))
-        assert "Exchange" not in plan
 
 
 class TestRefreshAggregate:

@@ -1,617 +1,12 @@
-"""Streaming equivalence, multimodal plumbing, and REST-source tests."""
+"""Multimodal plumbing and REST-source tests."""
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
-from taar_gcp_etl_spark.io import read_table
-from taar_gcp_etl_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    extract_features,
-    frame_sample_plan,
-    media_stats,
-)
-from taar_gcp_etl_spark.operators.windows import (
-    session_window_agg,
-    sessionize_gaps_and_islands,
-    tumbling_window_agg,
-)
+from taar_gcp_etl_spark.operators.multimodal import MEDIA_SCHEMA
 from taar_gcp_etl_spark.sources.rest import fetch_urls, fetch_with_retry
-from taar_gcp_etl_spark.streaming import jobs as stream_jobs
-from tests.conftest import SF_SMOKE
-
-
-class TestStreamingEquivalence:
-    def test_streaming_tumbling_equals_batch(self, spark, tmp_path):
-        """The streaming tumbling aggregation must produce exactly the batch
-        result once all data is processed (same operator, same semantics —
-        SURVEY.md §2.11 streaming posture)."""
-        # re-write events as a clean parquet dir (the fixture is TIMESTAMP_NANOS
-        # which the streaming file source cannot read)
-        events = read_table(spark, SF_SMOKE, "events")
-        src = str(tmp_path / "events_stream")
-        events.repartition(4).write.parquet(src)
-
-        stream = stream_jobs.read_event_stream(spark, src, max_files_per_trigger=2)
-        agg = stream_jobs.tumbling_counts(stream)
-        stream_jobs.run_to_memory(agg, "tumbling_out", output_mode="complete")
-        got = {
-            (r.window_start, r.event_type): (r.n, r.sum_value)
-            for r in spark.sql("SELECT * FROM tumbling_out").collect()
-        }
-
-        batch = tumbling_window_agg(
-            events,
-            "ts",
-            "1 day",
-            ["event_type"],
-            [F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
-        )
-        want = {
-            (r.window_start, r.event_type): (r.n, r.sum_value)
-            for r in batch.collect()
-        }
-        assert got == want
-
-    def test_stateful_running_totals(self, spark, tmp_path):
-        """applyInPandasWithState — state persists across micro-batches: the
-        final running totals must equal the batch groupBy, with each user's
-        state accumulated over multiple file-triggered batches."""
-        events = read_table(spark, SF_SMOKE, "events")
-        src = str(tmp_path / "events_state")
-        events.repartition(4).write.parquet(src)
-
-        stream = stream_jobs.read_event_stream(spark, src, max_files_per_trigger=1)
-        totals = stream_jobs.running_user_totals(stream)
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("state_out")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        # update mode emits one row per touched user per batch — the LAST
-        # emission per user is the lifetime total
-        final = spark.sql(
-            """
-            SELECT user_id, n_events, sum_value FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY user_id ORDER BY n_events DESC
-                ) rn FROM state_out
-            ) WHERE rn = 1
-            """
-        )
-        got = {r.user_id: (r.n_events, r.sum_value) for r in final.collect()}
-        want = {
-            r.user_id: (r.n, r.s)
-            for r in events.groupBy("user_id")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(F.sum("value"), 2).alias("s"),
-            )
-            .collect()
-        }
-        assert got == want
-
-    def test_stateful_sessionizer_with_close_events(self, spark, tmp_path):
-        """Side-output sessionizer: closed+open sessions across micro-batches
-        must reconstruct exactly the batch gaps-and-islands sessions."""
-        events = read_table(spark, SF_SMOKE, "events")
-        src = tmp_path / "sess_src"
-        src.mkdir()
-        stream = stream_jobs.read_event_stream(spark, str(src), 999)
-        out = stream_jobs.sessionize_with_close_events(stream, 1800)
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("sess_out")
-            .start()
-        )
-        # deliver in event-time-ordered batches (the operator's arrival
-        # contract): one week per micro-batch
-        for wk in range(5):
-            lo, hi = f"2024-01-{1+wk*7:02d}", f"2024-01-{min(1+(wk+1)*7, 31):02d}"
-            batch = events.filter(
-                (F.col("ts") >= lo) & (F.col("ts") < hi)
-            )
-            batch.coalesce(1).write.mode("append").parquet(str(src))
-            q.processAllAvailable()
-        q.stop()
-        # reconstruct: all closed sessions + the final 'open' emission per
-        # user (the open session re-emits each batch; keep the last state =
-        # max n_events per (user, session_start))
-        final = spark.sql(
-            """
-            SELECT user_id, session_start, max(n_events) AS n
-            FROM sess_out GROUP BY user_id, session_start
-            """
-        )
-        got = {
-            (r.user_id, r.session_start): r.n for r in final.collect()
-        }
-        batch = (
-            sessionize_gaps_and_islands(events, "user_id", "ts", 1800)
-            .groupBy("user_id", "session_id")
-            .agg(F.min("ts").alias("session_start"), F.count("*").alias("n"))
-        )
-        want = {(r.user_id, r.session_start): r.n for r in batch.collect()}
-        assert got == want
-
-    def test_session_window_equals_gaps_and_islands(self, spark):
-        """session_window(ts, gap) must partition events identically to the
-        lag+cumsum islands construction (the oracle-checkable form)."""
-        events = read_table(spark, SF_SMOKE, "events")
-        sw = session_window_agg(
-            events, "ts", "30 minutes", ["user_id"], [F.count("*").alias("n")]
-        )
-        got = {
-            (r.user_id, r.session_start): r.n
-            for r in sw.select("user_id", "session_start", "n").collect()
-        }
-        gi = (
-            sessionize_gaps_and_islands(events, "user_id", "ts", 1800)
-            .groupBy("user_id", "session_id")
-            .agg(F.min("ts").alias("session_start"), F.count("*").alias("n"))
-        )
-        want = {(r.user_id, r.session_start): r.n for r in gi.collect()}
-        assert got == want
-
-
-def _await_stream(q, predicate, timeout_s=120):
-    """Poll until `predicate()` holds, then stop the query. A rate source
-    never runs dry, so processAllAvailable cannot terminate it — stopping
-    on an observed condition is the harness contract (liveness enforced
-    by the timeout)."""
-    import time
-
-    deadline = time.time() + timeout_s
-    ok = False
-    try:
-        while time.time() < deadline:
-            if predicate():
-                ok = True
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    return ok
-
-
-class TestRateSourceParity:
-    """read_event_stream_rate: the rate-micro-batch replay source honors
-    the same EVENTS_SCHEMA contract and windowed-operator semantics as
-    the file source — and, unlike file drops, pins ARRIVAL ORDER at the
-    source boundary, so watermark/late-data behavior is tested where it
-    happens (VERDICT r3 next-4)."""
-
-    def test_tumbling_equivalence_through_rate_source(self, spark, tmp_path):
-        """Same assertion as the file-source equivalence test: once the
-        fixture has fully replayed through the rate source, the streaming
-        tumbling aggregate equals the batch operator exactly."""
-        events = read_table(spark, SF_SMOKE, "events")
-        src = str(tmp_path / "events_rate")
-        events.repartition(4).write.parquet(src)
-        total = events.count()
-
-        stream = stream_jobs.read_event_stream_rate(
-            spark, src, rows_per_batch=max(1, total // 3), order_col="ts"
-        )
-        agg = stream_jobs.tumbling_counts(stream)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("rate_tumbling_out")
-            .start()
-        )
-
-        def all_delivered():
-            rows = spark.sql(
-                "SELECT coalesce(sum(n), 0) s FROM rate_tumbling_out"
-            ).collect()
-            return rows[0].s == total
-
-        assert _await_stream(q, all_delivered), "fixture never fully replayed"
-
-        got = {
-            (r.window_start, r.event_type): (r.n, r.sum_value)
-            for r in spark.sql("SELECT * FROM rate_tumbling_out").collect()
-        }
-        batch = tumbling_window_agg(
-            events,
-            "ts",
-            "1 day",
-            ["event_type"],
-            [F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
-        )
-        want = {
-            (r.window_start, r.event_type): (r.n, r.sum_value)
-            for r in batch.collect()
-        }
-        assert got == want
-
-    def test_stateful_totals_through_rate_source(self, spark, tmp_path):
-        events = read_table(spark, SF_SMOKE, "events")
-        src = str(tmp_path / "events_rate_state")
-        events.repartition(4).write.parquet(src)
-        want = {
-            r.user_id: (r.n, r.s)
-            for r in events.groupBy("user_id")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(F.sum("value"), 2).alias("s"),
-            )
-            .collect()
-        }
-
-        stream = stream_jobs.read_event_stream_rate(
-            spark, src, rows_per_batch=max(1, events.count() // 3)
-        )
-        totals = stream_jobs.running_user_totals(stream)
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("rate_state_out")
-            .start()
-        )
-
-        def totals_converged():
-            final = spark.sql(
-                """
-                SELECT user_id, n_events, sum_value FROM (
-                    SELECT *, row_number() OVER (
-                        PARTITION BY user_id ORDER BY n_events DESC
-                    ) rn FROM rate_state_out
-                ) WHERE rn = 1
-                """
-            )
-            got = {
-                r.user_id: (r.n_events, r.sum_value) for r in final.collect()
-            }
-            return got == want
-
-        assert _await_stream(q, totals_converged), "state never converged"
-
-    def test_late_event_dropped_at_source_boundary(self, spark, tmp_path):
-        """THE source-boundary late-data test: arrival order is pinned by
-        event_id, so the seq-7 event (event-time 10:00:30) arrives two
-        batches after the watermark passed its window — it must be
-        dropped, and the closed 10:00 window must count 2, not 3. File
-        drops cannot pin batch boundaries this precisely; the rate
-        harness can. (One batch of separation matters: Spark filters
-        late rows with the PREVIOUS batch's watermark and evicts with
-        the current one, so a row arriving in the same batch its window
-        closes still merges — pinning that nuance is exactly what a
-        source-boundary harness is for.)"""
-        import datetime as dt
-
-        def ts(m, s):
-            return dt.datetime(2024, 1, 1, 10, m, s)
-
-        rows = [
-            # (event_id = arrival order, ts, user, type, value, props)
-            (1, ts(0, 10), 1, "a", 1.0, None),
-            (2, ts(0, 20), 1, "a", 1.0, None),   # batch 0 ends
-            (3, ts(30, 0), 1, "a", 1.0, None),
-            (4, ts(30, 5), 1, "a", 1.0, None),   # batch 1 → wm 10:29:05
-            (5, ts(40, 0), 1, "a", 1.0, None),
-            (6, ts(40, 5), 1, "a", 1.0, None),   # batch 2: 10:00 win closes
-            (7, ts(0, 30), 1, "a", 1.0, None),   # LATE: filter wm 10:29:05
-            (8, ts(59, 0), 1, "a", 1.0, None),   # batch 3 → flush 10:40
-        ]
-        src = str(tmp_path / "late_src")
-        spark.createDataFrame(
-            rows, stream_jobs.EVENTS_SCHEMA
-        ).write.parquet(src)
-
-        stream = stream_jobs.read_event_stream_rate(
-            spark, src, rows_per_batch=2
-        )
-        agg = stream_jobs.tumbling_counts(
-            stream, width="1 minute", watermark="1 minute"
-        )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("rate_late_out")
-            .start()
-        )
-
-        def windows_closed():
-            starts = {
-                r.window_start
-                for r in spark.sql(
-                    "SELECT window_start FROM rate_late_out"
-                ).collect()
-            }
-            return {ts(0, 0), ts(30, 0), ts(40, 0)} <= starts
-
-        assert _await_stream(q, windows_closed), "windows never closed"
-        got = {
-            r.window_start: r.n
-            for r in spark.sql("SELECT * FROM rate_late_out").collect()
-        }
-        assert got[ts(0, 0)] == 2  # late seq-7 event NOT counted
-        assert got[ts(30, 0)] == 2
-        assert got[ts(40, 0)] == 2
-
-
-class TestLateData:
-    def test_watermark_drops_late_events_in_append_mode(self, spark, tmp_path):
-        """Late-data contract: with a 30-min watermark in append mode, a
-        window only emits once the watermark passes its end, and an event
-        arriving after that is DROPPED (never re-emits the closed window).
-        Batch boundaries are controlled explicitly: file 1 advances the
-        watermark far past the early window, file 2 delivers a very late
-        event into that window."""
-        import datetime as dt
-
-        src = tmp_path / "late_src"
-        src.mkdir()
-        schema = stream_jobs.EVENTS_SCHEMA
-
-        def write_file(name, rows):
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(str(src))
-
-        t0 = dt.datetime(2024, 1, 1, 0, 5)
-        tlate = dt.datetime(2024, 1, 1, 12, 0)
-        # batch 1: events in the 00:00 window + one at 12:00 that pushes the
-        # watermark to 11:30, far past the 00:00-01:00 window's end
-        write_file("b1", [
-            (1, t0, 1, "click", 1.0, "{}"),
-            (2, t0, 2, "click", 1.0, "{}"),
-            (3, tlate, 3, "click", 1.0, "{}"),
-        ])
-        stream = stream_jobs.read_event_stream(spark, str(src), 999)
-        agg = (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("win"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("win.start").alias("ws"), "n")
-        )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("late_out")
-            .start()
-        )
-        q.processAllAvailable()
-        # batch 2: a very late event back in the (closed) 00:00 window
-        write_file("b2", [(4, t0, 9, "click", 1.0, "{}")])
-        q.processAllAvailable()
-        # batch 3: advance watermark again so anything pending could flush
-        write_file("b3", [(5, tlate + dt.timedelta(hours=2), 9, "click", 1.0, "{}")])
-        q.processAllAvailable()
-        q.stop()
-        out = {r.ws: r.n for r in spark.sql("SELECT * FROM late_out").collect()}
-        # the 00:00 window emitted with the ON-TIME count only — the late
-        # event never bumped it to 3
-        assert out[dt.datetime(2024, 1, 1, 0, 0)] == 2
-
-
-class TestCogroupAsof:
-    def test_cogroup_asof_equals_native(self, spark):
-        """The pandas merge_asof formulation must agree with the native
-        union+window as-of join on real data."""
-        from taar_gcp_etl_spark.operators.joins import (
-            asof_join_backward,
-            asof_join_cogroup_pandas,
-        )
-
-        ev = read_table(spark, SF_SMOKE, "events")
-        left = ev.filter(F.col("event_type") == "purchase").select(
-            "event_id", "user_id", "ts"
-        )
-        right = (
-            ev.filter(F.col("event_type") == "error")
-            .groupBy("user_id", "ts")
-            .agg(F.max("event_id").alias("err_id"))
-        )
-        native = {
-            r.event_id: r.err_id
-            for r in asof_join_backward(
-                left, right, "user_id", "ts", "ts", "err_id"
-            ).collect()
-        }
-        pandas_ver = {
-            r.event_id: r.err_id
-            for r in asof_join_cogroup_pandas(
-                left, right, "user_id", "ts", "ts", "err_id"
-            ).collect()
-        }
-        assert pandas_ver == native and len(native) > 0
-
-
-class TestStreamDedup:
-    def test_redelivered_events_dropped_within_watermark(self, spark, tmp_path):
-        """Ingest-dedup: an event re-delivered in a later micro-batch (inside
-        the watermark) must be emitted exactly once."""
-        events = read_table(spark, SF_SMOKE, "events").limit(200)
-        src = str(tmp_path / "dup_src")
-        # two identical file drops = every event delivered twice, in
-        # different micro-batches (maxFilesPerTrigger=1)
-        events.coalesce(1).write.mode("overwrite").parquet(src)
-        import glob
-        import shutil
-
-        part = glob.glob(f"{src}/part-*.parquet")[0]
-        shutil.copy(part, f"{src}/part-redelivery.parquet")
-
-        deduped = stream_jobs.dedup_stream(
-            stream_jobs.read_event_stream(spark, src, max_files_per_trigger=1)
-        )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dedup_out")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = spark.sql("SELECT event_id FROM dedup_out").collect()
-        ids = [r.event_id for r in got]
-        assert len(ids) == len(set(ids)) == events.count()
-
-
-class TestStreamStreamJoin:
-    def test_interval_join_equals_batch(self, spark, tmp_path):
-        """The watermarked stream-stream LEFT OUTER interval join must
-        converge to the batch left-join result once both streams drain:
-        each 'view' event pairs with same-user 'click' events at most
-        1 hour older, and a view with no such click is emitted with null
-        right-side columns. Outer results only flush when the watermark
-        passes the end of their match window, so after the real files a
-        far-future sentinel event is appended to both streams to advance
-        the watermark past every real event."""
-        events = read_table(spark, SF_SMOKE, "events")
-        views = events.filter(F.col("event_type") == "view")
-        clicks = events.filter(F.col("event_type") == "click")
-        vsrc, csrc = str(tmp_path / "views"), str(tmp_path / "clicks")
-        views.repartition(2).write.parquet(vsrc)
-        clicks.repartition(2).write.parquet(csrc)
-
-        joined = stream_jobs.stream_stream_interval_join(
-            stream_jobs.read_event_stream(spark, vsrc, 999),
-            stream_jobs.read_event_stream(spark, csrc, 999),
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("ssj_out")
-            .start()
-        )
-        q.processAllAvailable()
-        # watermark-advancing sentinel on both sides (far future, unique
-        # user so it matches nothing real)
-        sentinel = events.limit(1).select(
-            F.lit(-1).cast("long").alias("event_id"),
-            F.lit(-1).cast("long").alias("user_id"),
-            *[
-                F.col(c)
-                for c in events.columns
-                if c not in ("event_id", "user_id", "ts")
-            ],
-            (F.col("ts") + F.expr("INTERVAL 1000 HOURS")).alias("ts"),
-        ).select(*events.columns)
-        sentinel.coalesce(1).write.mode("append").parquet(vsrc)
-        sentinel.coalesce(1).write.mode("append").parquet(csrc)
-        q.processAllAvailable()
-        q.stop()
-        got = {
-            (r.user_id, r.l_event_id, r.r_event_id)
-            for r in spark.sql(
-                "SELECT * FROM ssj_out WHERE user_id != -1"
-            ).collect()
-        }
-
-        want = {
-            (r.user_id, r.l_event_id, r.r_event_id)
-            for r in views.alias("l")
-            .join(
-                clicks.alias("r"),
-                F.expr(
-                    "l.user_id = r.user_id AND "
-                    "r.ts BETWEEN l.ts - INTERVAL 1 HOUR AND l.ts"
-                ),
-                "left",
-            )
-            .select(
-                F.col("l.user_id").alias("user_id"),
-                F.col("l.event_id").alias("l_event_id"),
-                F.col("r.event_id").alias("r_event_id"),
-            )
-            .collect()
-        }
-        assert len(want) > 0
-        unmatched = {t for t in want if t[2] is None}
-        assert len(unmatched) > 0, "fixture should have unmatched views"
-        assert got == want
-
-
-class TestForeachBatchSink:
-    def test_stream_to_serving_table(self, spark, tmp_path):
-        """foreachBatch serving sink: after the stream drains, the store
-        holds one packed row per source event, key-prefix partitioned."""
-        events = read_table(spark, SF_SMOKE, "events")
-        src = str(tmp_path / "ev_src")
-        events.repartition(3).write.parquet(src)
-        serving = str(tmp_path / "serving")
-        q = stream_jobs.stream_to_serving_table(
-            stream_jobs.read_event_stream(spark, src, max_files_per_trigger=1),
-            serving,
-            str(tmp_path / "ckpt"),
-        )
-        q.processAllAvailable()
-        q.stop()
-        store = spark.read.parquet(serving)
-        assert store.count() == events.count()
-        assert set(store.columns) == {"key", "payload", "key_prefix", "epoch_id"}
-        assert store.select("key").distinct().count() == events.count()
-
-    def test_epoch_replay_is_idempotent(self, spark, tmp_path):
-        """A replayed micro-batch (same epoch_id) overwrites its own epoch
-        partition instead of appending — the failure-between-write-and-
-        checkpoint-commit case."""
-        events = read_table(spark, SF_SMOKE, "events").limit(50)
-        serving = str(tmp_path / "serving_replay")
-        stream_jobs.write_serving_epoch(events, 7, serving)
-        first = spark.read.parquet(serving).count()
-        stream_jobs.write_serving_epoch(events, 7, serving)  # replay
-        assert spark.read.parquet(serving).count() == first == 50
-
-
-class TestMultimodal:
-    @pytest.fixture(scope="class")
-    def media(self, spark):
-        rows = [
-            Row(
-                media_id=1,
-                kind="image",
-                # unknown format → deterministic stub features (PNG and
-                # baseline JPEG decode for real now)
-                content=bytes([10, 20, 30, 40]),
-                meta=Row(
-                    mime="application/octet-stream",
-                    width=2,
-                    height=2,
-                    duration_ms=None,
-                ),
-            ),
-            Row(
-                media_id=2,
-                kind="video",
-                content=bytes(range(64)),
-                meta=Row(mime="video/mp4", width=16, height=9, duration_ms=3500),
-            ),
-            Row(media_id=3, kind="image", content=None, meta=None),
-        ]
-        return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    def test_media_stats_column_only(self, media):
-        got = {r.media_id: r for r in media_stats(media).collect()}
-        assert got[1].n_bytes == 4
-        assert got[1].sha256 == hashlib.sha256(bytes([10, 20, 30, 40])).hexdigest()
-        assert got[3].n_bytes is None  # null content propagates
-
-    def test_extract_features_batch_shape(self, media):
-        got = {r.media_id: r for r in extract_features(media).collect()}
-        assert got[1].feat[0] == pytest.approx(10 / 255)
-        assert got[3].feat is None  # null-content row survives as null
-        # r7: video/mp4 parses for real now — garbage bytes are a
-        # CORRUPT container (null features), not stub input
-        assert got[2].feat is None
-        assert got[2].sha256 == hashlib.sha256(bytes(range(64))).hexdigest()
-
-    def test_frame_sample_fanout(self, media):
-        frames = frame_sample_plan(media, every_ms=1000).collect()
-        # 3500ms video sampled at 1000ms → ts 0,1000,2000,3000
-        assert [r.frame_ts_ms for r in frames] == [0, 1000, 2000, 3000]
 
 
 def _ppm_bytes(w, h, pixels):
@@ -1385,49 +780,6 @@ class TestRealDecoders:
         [(0, 0, 255), (255, 255, 255)],
     ]  # 2x2: red, green / blue, white
 
-    def _expected_means(self):
-        import numpy as np
-
-        img = np.array(self.PIXELS, dtype=np.uint8)
-        return img.reshape(-1, 3).mean(axis=0) / 255.0
-
-    def test_ppm_decodes_to_true_pixels(self, spark):
-        from pyspark.sql import Row
-
-        from taar_gcp_etl_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            decode_ppm,
-            extract_features,
-        )
-
-        content = _ppm_bytes(2, 2, self.PIXELS)
-        import numpy as np
-
-        assert (decode_ppm(content) == np.array(self.PIXELS)).all()
-
-        df = spark.createDataFrame(
-            [
-                Row(
-                    media_id=10,
-                    kind="image",
-                    content=content,
-                    meta=Row(
-                        mime="image/x-portable-pixmap",
-                        width=2,
-                        height=2,
-                        duration_ms=None,
-                    ),
-                )
-            ],
-            MEDIA_SCHEMA,
-        )
-        feat = extract_features(df).collect()[0].feat
-        exp = self._expected_means()
-        assert feat[0] == 2.0 and feat[1] == 2.0  # true decoded dims
-        assert feat[2] == pytest.approx(exp[0])
-        assert feat[3] == pytest.approx(exp[1])
-        assert feat[4] == pytest.approx(exp[2])
-
     def test_bmp_roundtrip_matches_ppm(self, spark):
         """The same pixels through the BMP container (bottom-up rows,
         BGR order, 4-byte padding) must decode identically to the PPM."""
@@ -2042,83 +1394,6 @@ class TestRealDecoders:
         with _pytest.raises(TypeError, match="max_frames"):
             media_frame_dhash(spark.range(0), max_frames=0)
 
-    def test_animated_near_dup_uniform_animation_copies(self, spark):
-        """ADVICE r6: shared_frames counts matched frame INSTANCES
-        (multiset intersection), so two exact copies of a static-loop
-        animation — every sampled frame identical — match at the
-        default min_shared_frames=2 instead of collapsing to 1."""
-        import numpy as np
-        from pyspark.sql import Row
-
-        from taar_gcp_etl_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            animated_near_dup,
-        )
-
-        rng = np.random.RandomState(12)
-        pal = rng.randint(0, 256, size=(8, 3)).astype(np.uint8)
-        still = rng.randint(0, 8, size=(16, 16)).astype(np.uint8)
-        uniform = [still] * 4  # static loop: 4 identical frames
-
-        def media_row(i, frames):
-            return Row(
-                media_id=i, kind="image",
-                content=_gif_anim_bytes(frames, pal),
-                meta=Row(mime="image/gif", width=16, height=16,
-                         duration_ms=None),
-            )
-
-        df = spark.createDataFrame(
-            [media_row(1, uniform), media_row(2, uniform)],
-            MEDIA_SCHEMA,
-        )
-        pairs = {
-            (r.doc_a, r.doc_b): r.shared_frames
-            for r in animated_near_dup(df, min_shared_frames=2).collect()
-        }
-        assert pairs.get((1, 2), 0) == 4
-
-    def test_animated_near_dup_survives_reorder_and_trim(self, spark):
-        """Two animations sharing frames (one is a reordered trim of
-        the other) pair on shared frame hashes; a third with disjoint
-        frames stays apart."""
-        import numpy as np
-        from pyspark.sql import Row
-
-        from taar_gcp_etl_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            animated_near_dup,
-        )
-
-        rng = np.random.RandomState(10)
-        pal = rng.randint(0, 256, size=(8, 3)).astype(np.uint8)
-        mk = lambda: rng.randint(0, 8, size=(16, 16)).astype(np.uint8)  # noqa: E731
-        f = [mk() for _ in range(5)]
-        g = [mk() for _ in range(3)]  # disjoint content
-
-        def media_row(i, frames):
-            return Row(
-                media_id=i, kind="image",
-                content=_gif_anim_bytes(frames, pal),
-                meta=Row(mime="image/gif", width=16, height=16,
-                         duration_ms=None),
-            )
-
-        df = spark.createDataFrame(
-            [
-                media_row(1, f),
-                media_row(2, [f[3], f[1], f[4]]),  # reorder + trim
-                media_row(3, g),
-            ],
-            MEDIA_SCHEMA,
-        )
-        pairs = {
-            (r.doc_a, r.doc_b): r.shared_frames
-            for r in animated_near_dup(df, min_shared_frames=2).collect()
-        }
-        assert pairs.get((1, 2), 0) >= 2
-        assert (1, 3) not in pairs and (2, 3) not in pairs
-
     def test_gif_png_twins_dedup_through_shared_hamming_engine(
         self, spark
     ):
@@ -2256,21 +1531,6 @@ class TestRealDecoders:
         got = media_dhash(df).collect()
         assert {r.media_id for r in got} == {1}
 
-    def test_corrupt_blobs_yield_null_features(self, spark):
-        from taar_gcp_etl_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            extract_features,
-        )
-
-        df = spark.createDataFrame(self._corrupt_rows(), MEDIA_SCHEMA)
-        got = {r.media_id: r for r in extract_features(df).collect()}
-        assert len(got) == 5  # every row survives the pass
-        assert got[1].feat is not None
-        for mid in (2, 3, 4, 5):
-            assert got[mid].feat is None
-        # metadata columns still computed for corrupt rows
-        assert got[2].n_bytes == len(self._corrupt_rows()[1].content)
-
     def test_decode_errors_cover_what_decoders_raise(self):
         """The DECODE_ERRORS tuple must actually cover each decoder's
         failure modes — pin the raw exception classes so a decoder change
@@ -2326,366 +1586,6 @@ class TestRestSource:
         out = fetch_with_retry(urls, workers=2, fetcher=flaky).collect()
         assert sorted(r.url for r in out) == ["u/a", "u/b", "u/flaky"]
         assert all(r.status == 200 for r in out)
-
-
-class TestContinuousRollup:
-    def test_streamed_partials_cascade_equals_batch(self, spark, tmp_path):
-        """Stream the events fixture through the minute-grain continuous
-        aggregate, then derive hour/day from the STREAMED partials — the
-        result must equal the batch rollup_cascade over the same raw
-        events (one-scan continuous-aggregate contract)."""
-        from taar_gcp_etl_spark.io import read_table
-        from taar_gcp_etl_spark.operators.windows import (
-            rollup_cascade,
-            rollup_from_partials,
-        )
-        from taar_gcp_etl_spark.streaming import jobs as sj
-        from tests.conftest import SF_SMOKE
-
-        # watermarks require TIMESTAMP (not NTZ); the UTC-pinned session
-        # makes the cast value-preserving
-        ev = (
-            read_table(spark, SF_SMOKE, "events")
-            .drop("props")
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        src = str(tmp_path / "stream_src")
-        # two file drops → two micro-batches
-        ev.filter(F.col("event_id") % 2 == 0).write.parquet(src + "/a")
-        ev.filter(F.col("event_id") % 2 == 1).write.parquet(src + "/b")
-        stream = spark.readStream.schema(ev.schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(src + "/*")
-        q = (
-            sj.continuous_minute_rollup(stream)
-            .writeStream.format("memory")
-            .queryName("minute_partials_t")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        streamed = spark.table("minute_partials_t")
-        got = sorted(
-            map(
-                tuple,
-                rollup_from_partials(streamed).collect(),
-            )
-        )
-        want = sorted(map(tuple, rollup_cascade(ev).collect()))
-        assert got == want
-
-        # append mode must be ACCEPTED: it requires the state store's
-        # eviction predicate, which only exists when the grouping carries
-        # event-time metadata (the F.window expression, not date_trunc) —
-        # this is the regression guard for unbounded streaming state
-        q2 = (
-            sj.continuous_minute_rollup(
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src + "/*")
-            )
-            .writeStream.format("memory")
-            .queryName("minute_partials_append_t")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination(120)
-        appended = sorted(
-            map(tuple, spark.table("minute_partials_append_t").collect())
-        )
-        complete = sorted(map(tuple, streamed.collect()))
-        # append emits only watermark-closed windows → subset of complete
-        assert set(appended) <= set(complete)
-
-
-class TestCdcApply:
-    CDC_SCHEMA = "id long, val string, seq long, op string"
-
-    def test_seq_guarded_merge_and_replay_idempotence(self, spark, tmp_path):
-        """Three applies: inserts; update + delete + insert; then a
-        REPLAY of a stale op (foreachBatch is at-least-once). The seq
-        guard makes the stale insert a no-op — key 1 keeps its seq-3
-        update. (A stale upsert of a DELETED key would resurrect it —
-        the documented no-tombstone limitation — so the replay here
-        targets a live key, which is the guarantee the operator makes.)"""
-        from taar_gcp_etl_spark.streaming.jobs import apply_cdc_batch
-
-        table = str(tmp_path / "dim")
-        b1 = spark.createDataFrame(
-            [(1, "a0", 1, "I"), (2, "b0", 2, "I")], self.CDC_SCHEMA
-        )
-        apply_cdc_batch(b1, table)
-        b2 = spark.createDataFrame(
-            [(1, "a1", 3, "U"), (2, None, 4, "D"), (3, "c0", 5, "I")],
-            self.CDC_SCHEMA,
-        )
-        apply_cdc_batch(b2, table)
-        # replay k1's original insert (stale seq 1) — must not clobber a1
-        b3 = spark.createDataFrame([(1, "a0", 1, "I")], self.CDC_SCHEMA)
-        apply_cdc_batch(b3, table)
-
-        rows = {
-            r.id: (r.val, r.seq)
-            for r in spark.read.parquet(table).collect()
-        }
-        assert rows == {1: ("a1", 3), 3: ("c0", 5)}
-
-    def test_in_batch_ordering_latest_seq_wins(self, spark, tmp_path):
-        from taar_gcp_etl_spark.streaming.jobs import apply_cdc_batch
-
-        table = str(tmp_path / "dim2")
-        b = spark.createDataFrame(
-            [(1, "x1", 1, "I"), (1, "x3", 3, "U"), (1, "x2", 2, "U")],
-            self.CDC_SCHEMA,
-        )
-        apply_cdc_batch(b, table)
-        rows = spark.read.parquet(table).collect()
-        assert len(rows) == 1 and rows[0].val == "x3"
-
-    def test_streaming_cdc_file_drops(self, spark, tmp_path):
-        from taar_gcp_etl_spark.streaming.jobs import stream_cdc_apply
-
-        src = tmp_path / "cdc_src"
-        src.mkdir()
-        table = str(tmp_path / "dim3")
-        spark.createDataFrame(
-            [(1, "a0", 1, "I"), (2, "b0", 2, "I")], self.CDC_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(src))
-
-        changes = (
-            spark.readStream.schema(
-                "id long, val string, seq long, op string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = stream_cdc_apply(changes, table, str(tmp_path / "ckpt"))
-        q.processAllAvailable()
-        spark.createDataFrame(
-            [(2, None, 3, "D"), (1, "a9", 4, "U")], self.CDC_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        q.stop()
-
-        rows = {
-            r.id: r.val for r in spark.read.parquet(table).collect()
-        }
-        assert rows == {1: "a9"}
-
-
-class TestStreamRefreshAggregate:
-    def test_batches_accumulate_and_replay_skipped(self, spark, tmp_path):
-        """Two applied micro-batches accumulate into the stored aggregate;
-        re-applying an epoch is a no-op (the at-least-once guard)."""
-        from taar_gcp_etl_spark.streaming.jobs import (
-            refresh_aggregate_store,
-        )
-
-        table = str(tmp_path / "mv")
-        measures = {"total": ("sum", "v"), "n": ("count", "v")}
-        b1 = spark.createDataFrame([(1, 2.0), (1, 3.0), (2, 1.0)], ["k", "v"])
-        b2 = spark.createDataFrame([(1, 5.0), (3, 7.0)], ["k", "v"])
-        assert refresh_aggregate_store(b1, table, ["k"], measures, 0)
-        assert refresh_aggregate_store(b2, table, ["k"], measures, 1)
-        # replay of epoch 1 must change nothing
-        assert not refresh_aggregate_store(b2, table, ["k"], measures, 1)
-        # replay of an OLDER epoch must also be skipped: markers live in
-        # a sibling directory precisely so the table overwrite cannot
-        # wipe them (in-table markers guarded only the latest epoch)
-        assert not refresh_aggregate_store(b1, table, ["k"], measures, 0)
-        rows = {
-            r["k"]: (r["total"], r["n"])
-            for r in spark.read.parquet(table).collect()
-        }
-        assert rows == {1: (10.0, 3), 2: (1.0, 1), 3: (7.0, 1)}
-
-    def test_approx_distinct_through_the_streaming_face(
-        self, spark, tmp_path
-    ):
-        """The HLL measure flows through the streaming store too:
-        sketches written per epoch, unioned across micro-batches, exact
-        at small cardinality."""
-        from taar_gcp_etl_spark.operators.merge import sketch_estimates
-        from taar_gcp_etl_spark.streaming.jobs import (
-            refresh_aggregate_store,
-        )
-
-        table = str(tmp_path / "mvh")
-        measures = {"u": ("approx_distinct", "v")}
-        b1 = spark.createDataFrame(
-            [(1, "x"), (1, "y"), (2, "x")], ["k", "v"]
-        )
-        b2 = spark.createDataFrame(
-            [(1, "y"), (1, "z"), (3, "w")], ["k", "v"]
-        )
-        assert refresh_aggregate_store(b1, table, ["k"], measures, 0)
-        assert refresh_aggregate_store(b2, table, ["k"], measures, 1)
-        got = {
-            r["k"]: r["u"]
-            for r in sketch_estimates(
-                spark.read.parquet(table), measures
-            ).collect()
-        }
-        assert got == {1: 3, 2: 1, 3: 1}
-
-    def test_streaming_end_to_end_matches_full_aggregate(
-        self, spark, tmp_path
-    ):
-        from taar_gcp_etl_spark.streaming.jobs import (
-            stream_refresh_aggregate,
-        )
-
-        src = tmp_path / "mv_src"
-        src.mkdir()
-        table = str(tmp_path / "mv2")
-        rows1 = [(1, 2.0), (2, 4.0), (1, 6.0)]
-        rows2 = [(2, 1.0), (3, 3.0)]
-        spark.createDataFrame(rows1, ["k", "v"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-        stream = (
-            spark.readStream.schema("k long, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = stream_refresh_aggregate(
-            stream,
-            table,
-            str(tmp_path / "mv_ckpt"),
-            ["k"],
-            {"total": ("sum", "v"), "n": ("count", "v"), "mx": ("max", "v")},
-        )
-        q.processAllAvailable()
-        spark.createDataFrame(rows2, ["k", "v"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-        q.processAllAvailable()
-        q.stop()
-
-        got = {
-            r["k"]: (r["total"], r["n"], r["mx"])
-            for r in spark.read.parquet(table).collect()
-        }
-        full = spark.createDataFrame(rows1 + rows2, ["k", "v"]).groupBy(
-            "k"
-        ).agg(
-            F.sum("v").alias("total"),
-            F.count("v").alias("n"),
-            F.max("v").alias("mx"),
-        )
-        expect = {
-            r["k"]: (r["total"], r["n"], r["mx"]) for r in full.collect()
-        }
-        assert got == expect
-
-
-class TestAudioFingerprint:
-    def _chord(self, freqs, n=16384, rate=8000, noise=0.0, seed=1):
-        """Multi-tone signal — realistic audio has many spectral
-        components; a noisy copy keeps its band profile while a
-        different chord moves it."""
-        import math
-        import random
-
-        rng = random.Random(seed)
-        amp = 24000 / max(1, len(freqs))
-        return [
-            int(
-                sum(
-                    amp * math.sin(2 * math.pi * f * i / rate)
-                    for f in freqs
-                )
-                + (rng.uniform(-1, 1) * 32767 * noise)
-            )
-            for i in range(n)
-        ]
-
-    CHORD_A = (220, 440, 660, 990, 1480, 2220)
-    CHORD_B = (310, 520, 780, 1170, 1760, 2640)
-
-    def _media(self, spark, rows):
-        from pyspark.sql import Row
-
-        from taar_gcp_etl_spark.operators.multimodal import MEDIA_SCHEMA
-
-        return spark.createDataFrame(
-            [
-                Row(
-                    media_id=mid,
-                    kind="audio",
-                    content=content,
-                    meta=Row(
-                        mime="audio/wav", width=None, height=None,
-                        duration_ms=None,
-                    ),
-                )
-                for mid, content in rows
-            ],
-            MEDIA_SCHEMA,
-        )
-
-    def test_noisy_copy_is_near_same_tone_far_from_other(self, spark):
-        """The robustness contract: a mildly-noised copy of a tone keeps
-        a small Hamming distance to the original, while a different
-        frequency is far — the property the banded near-dup pairing
-        depends on."""
-        from taar_gcp_etl_spark.operators.multimodal import (
-            media_audio_dhash,
-        )
-
-        a = _wav_bytes(self._chord(self.CHORD_A))
-        a_noisy = _wav_bytes(self._chord(self.CHORD_A, noise=0.02, seed=7))
-        b = _wav_bytes(self._chord(self.CHORD_B))
-        df = self._media(spark, [(1, a), (2, a_noisy), (3, b)])
-        fp = {
-            r["media_id"]: (r["simhash_hi"], r["simhash_lo"])
-            for r in media_audio_dhash(df).collect()
-        }
-
-        def ham(x, y):
-            return bin(((x[0] ^ y[0]) << 32) | (x[1] ^ y[1])).count("1")
-
-        assert ham(fp[1], fp[2]) <= 4
-        assert ham(fp[1], fp[3]) >= 8
-
-    def test_near_dup_pairs_through_shared_engine(self, spark):
-        from taar_gcp_etl_spark.operators.multimodal import audio_near_dup
-
-        a = _wav_bytes(self._chord(self.CHORD_A))
-        a_noisy = _wav_bytes(self._chord(self.CHORD_A, noise=0.02, seed=7))
-        b = _wav_bytes(self._chord(self.CHORD_B))
-        short = _wav_bytes([0] * 100)  # below 2 frames → no identity
-        df = self._media(
-            spark, [(1, a), (2, a_noisy), (3, b), (4, short), (5, None)]
-        )
-        pairs = {
-            (r["doc_a"], r["doc_b"])
-            for r in audio_near_dup(df, max_hamming=8).collect()
-        }
-        assert pairs == {(1, 2)}
-
-
-    def test_resampled_copy_keeps_its_fingerprint(self, spark):
-        """Band edges live in Hz, not bin indices: the same chord
-        rendered at 8 kHz and 16 kHz must fingerprint near-identically —
-        the re-encode duplicate case the operator exists for."""
-        from taar_gcp_etl_spark.operators.multimodal import (
-            audio_fingerprint64,
-            decode_wav,
-        )
-
-        a8 = _wav_bytes(self._chord(self.CHORD_A, rate=8000), rate=8000)
-        a16 = _wav_bytes(
-            self._chord(self.CHORD_A, n=32768, rate=16000), rate=16000
-        )
-        fp8 = audio_fingerprint64(*decode_wav(a8))
-        fp16 = audio_fingerprint64(*decode_wav(a16))
-        ham = bin(
-            ((fp8[0] ^ fp16[0]) << 32) | (fp8[1] ^ fp16[1])
-        ).count("1")
-        assert ham <= 6
 
 
 def _mp4_bytes(samples, w, h, timescale=1000, sample_delta=40,

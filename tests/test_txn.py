@@ -253,29 +253,6 @@ class TestCdcTombstones:
         # live row untouched
         assert state == {2: True, 3: False}
 
-    def test_streaming_cdc_txn_end_to_end(self, spark, tmp_path):
-        from taar_gcp_etl_spark.txn import stream_cdc_apply_txn
-
-        src = tmp_path / "cdc_src"
-        src.mkdir()
-        t = str(tmp_path / "dim")
-        spark.createDataFrame(
-            [(1, "a0", 1, "I"), (2, "b0", 2, "I")], CDC_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        changes = (
-            spark.readStream.schema(CDC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = stream_cdc_apply_txn(changes, t, str(tmp_path / "ckpt"))
-        q.processAllAvailable()
-        spark.createDataFrame(
-            [(2, None, 3, "D"), (1, "a9", 4, "U")], CDC_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        q.stop()
-        assert _rows(txn.read_cdc_table(spark, t)) == {1: ("a9", 4)}
-
 
 class TestVacuum:
     def test_vacuum_keeps_readable_recent_versions(self, spark, tmp_path):
@@ -446,36 +423,6 @@ class TestBucketedCdc:
                 buck,
                 n_buckets=16,
             )
-
-    def test_streaming_bucketed_end_to_end(self, spark, tmp_path):
-        src = tmp_path / "cdc_src"
-        src.mkdir()
-        t = str(tmp_path / "buck")
-        spark.createDataFrame(
-            [(1, "a0", 1, "I"), (2, "b0", 2, "I")], CDC_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        changes = (
-            spark.readStream.schema(CDC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = txn.stream_cdc_apply_bucketed(
-            changes, t, str(tmp_path / "ckpt"), n_buckets=8,
-            stats_cols=["seq"], target_file_rows=64,
-        )
-        q.processAllAvailable()
-        spark.createDataFrame(
-            [(2, None, 3, "D"), (1, "a9", 4, "U")], CDC_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        q.stop()
-        assert _rows(txn.read_cdc_table(spark, t)) == {1: ("a9", 4)}
-        # r7: the streaming face passes the layout knobs through — the
-        # ingested table carries zone maps + the sticky roll size
-        man = txn.latest_manifest(spark, t)
-        assert man["stats_cols"] == ["seq"]
-        assert man["cluster_rows"] == 64
-        assert man["file_stats"]
 
 
 class TestDeleteOverlays:
@@ -2250,218 +2197,6 @@ class TestSumSqMeasure:
                 spark, store, derive={"x": ("median", "s", "n")}
             )
 
-    def test_streaming_store_merges_sum_sq(self, spark, tmp_path):
-        from taar_gcp_etl_spark.streaming.jobs import (
-            refresh_aggregate_store,
-        )
-
-        store = str(tmp_path / "st")
-        b1 = spark.createDataFrame(
-            [("a", 3.0), ("a", 4.0)], "grp string, val double"
-        )
-        b2 = spark.createDataFrame(
-            [("a", 5.0), ("b", None)], "grp string, val double"
-        )
-        refresh_aggregate_store(b1, store, ["grp"], self.MEASURES,
-                                epoch_id=1)
-        refresh_aggregate_store(b2, store, ["grp"], self.MEASURES,
-                                epoch_id=2)
-        got = {
-            r.grp: (r.s, r.q, r.n)
-            for r in spark.read.parquet(store).collect()
-        }
-        assert got["a"] == (12.0, 50.0, 3)  # 9+16+25 merged across batches
-        assert got["b"] == (None, None, 0)
-
-
-class TestStreamSyncAggregate:
-    """NEXT.md r7 #3: the streaming IVM loop — a file stream over the
-    source's _log/ commit stream drives sync_aggregate_from_cdc per
-    committed version; the sync's own cursor turns the at-least-once
-    trigger into exactly-once on the store."""
-
-    SRC = "id long, grp string, val long, seq long, op string"
-    MEASURES = {"total": ("sum", "val"), "n": ("count", "*"),
-                "mx": ("max", "val")}
-
-    def _apply(self, spark, src, rows):
-        return txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(rows, self.SRC), src,
-            key_col="id", n_buckets=4, stats_cols=["grp"],
-        )
-
-    def _expect(self, spark, src):
-        from taar_gcp_etl_spark.operators.merge import _measure_agg
-
-        mnames = sorted(self.MEASURES)
-        return {
-            r.grp: tuple(r[m] for m in mnames)
-            for r in txn.read_cdc_table(spark, src)
-            .groupBy("grp")
-            .agg(*[_measure_agg(self.MEASURES[m]).alias(m)
-                   for m in mnames])
-            .collect()
-        }
-
-    def _got(self, spark, store):
-        mnames = sorted(self.MEASURES)
-        return {
-            r.grp: tuple(r[m] for m in mnames)
-            for r in txn.read_aggregate_store(spark, store).collect()
-        }
-
-    def test_stream_starts_before_first_commit(self, spark, tmp_path):
-        """Review fix: deploying the sync stream BEFORE the source's
-        first commit (the natural bootstrap order) must wait for it,
-        not die on PATH_NOT_FOUND for the missing _log dir."""
-        from taar_gcp_etl_spark.streaming.jobs import stream_sync_aggregate
-
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "mv")
-        q = stream_sync_aggregate(
-            spark, src, store, str(tmp_path / "ckpt"), ["grp"],
-            self.MEASURES,
-        )
-        try:
-            q.processAllAvailable()  # nothing committed yet: no-op
-            self._apply(spark, src, [(1, "a", 10, 1, "I")])
-            q.processAllAvailable()
-            assert self._got(spark, store) == self._expect(spark, src)
-        finally:
-            q.stop()
-
-    def test_poison_version_fails_stream_cursor_unmoved(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """VERDICT r7: the failure CONTRACT of the streaming IVM loop.
-        A sync that throws inside the trigger surfaces as a stream
-        failure (at-least-once retry, never a silent skip), the store
-        cursor does not move, and a restart with the fault cleared
-        catches up exactly — no double-apply, no lost commit."""
-        from pyspark.errors.exceptions.captured import (
-            StreamingQueryException,
-        )
-
-        from taar_gcp_etl_spark.streaming.jobs import stream_sync_aggregate
-
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "mv")
-        ckpt = str(tmp_path / "ckpt")
-        self._apply(spark, src, [(1, "a", 10, 1, "I")])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"], self.MEASURES
-        )
-        cursor0 = txn.latest_manifest(spark, store)["epoch_id"]
-
-        real = txn.sync_aggregate_from_cdc
-        monkeypatch.setattr(
-            txn, "sync_aggregate_from_cdc",
-            lambda *a, **k: (_ for _ in ()).throw(
-                RuntimeError("poisoned source version")
-            ),
-        )
-        q = stream_sync_aggregate(
-            spark, src, store, ckpt, ["grp"], self.MEASURES
-        )
-        try:
-            self._apply(spark, src, [(2, "b", 5, 2, "I")])
-            import pytest as _pytest
-
-            with _pytest.raises(StreamingQueryException):
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        # cursor unmoved: the poisoned commit was NOT marked synced
-        assert txn.latest_manifest(spark, store)["epoch_id"] == cursor0
-        assert self._got(spark, store) == {"a": (10, 1, 10)}
-
-        # fault cleared → restart on the same checkpoint catches up
-        monkeypatch.setattr(txn, "sync_aggregate_from_cdc", real)
-        q2 = stream_sync_aggregate(
-            spark, src, store, ckpt, ["grp"], self.MEASURES
-        )
-        try:
-            q2.processAllAvailable()
-            assert self._got(spark, store) == self._expect(spark, src)
-            assert (
-                txn.latest_manifest(spark, store)["epoch_id"] > cursor0
-            )
-        finally:
-            q2.stop()
-
-    def test_stream_survives_log_vacuum_race(self, spark, tmp_path):
-        """The commit-stream file source lists _log/ manifests that
-        vacuum_txn(keep_last=) may delete between listing and read —
-        ignoreMissingFiles (plus tick() ignoring file CONTENT) keeps
-        the stream alive through a vacuum, and later commits still
-        sync exactly."""
-        from taar_gcp_etl_spark.streaming.jobs import stream_sync_aggregate
-
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "mv")
-        ckpt = str(tmp_path / "ckpt")
-        for k in range(4):  # several manifests so vacuum has victims
-            self._apply(spark, src, [(k, "a", 10 + k, k + 1, "I")])
-        q = stream_sync_aggregate(
-            spark, src, store, ckpt, ["grp"], self.MEASURES
-        )
-        try:
-            q.processAllAvailable()
-            assert self._got(spark, store) == self._expect(spark, src)
-            # vacuum while the stream is live, then keep committing
-            report = txn.vacuum_txn(spark, src, keep_last=1)
-            assert report["removed_manifests"] > 0
-            self._apply(spark, src, [(9, "b", 5, 10, "I")])
-            q.processAllAvailable()
-            assert q.isActive  # no FileNotFound death
-            assert self._got(spark, store) == self._expect(spark, src)
-        finally:
-            q.stop()
-
-    def test_store_follows_churn_and_restart(self, spark, tmp_path):
-        from taar_gcp_etl_spark.streaming.jobs import stream_sync_aggregate
-
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "mv")
-        ckpt = str(tmp_path / "ckpt")
-        self._apply(spark, src, [
-            (1, "a", 10, 1, "I"), (2, "a", 20, 1, "I"),
-            (3, "b", 5, 1, "I"),
-        ])
-        q = stream_sync_aggregate(
-            spark, src, store, ckpt, ["grp"], self.MEASURES
-        )
-        try:
-            q.processAllAvailable()
-            assert self._got(spark, store) == self._expect(spark, src)
-            # churn WHILE the stream runs: update + group move +
-            # delete (a retraction window → recompute path) and an
-            # insert-only batch (→ merge fast path), two commits
-            self._apply(spark, src, [
-                (2, "b", 25, 2, "U"),           # move a→b
-                (1, None, None, 2, "D"),        # delete a's other row
-            ])
-            self._apply(spark, src, [(4, "c", 7, 3, "I")])
-            q.processAllAvailable()
-            assert self._got(spark, store) == self._expect(spark, src)
-        finally:
-            q.stop()
-        # restart on the same checkpoint: the processed manifests are
-        # not replayed into double-applies (cursor no-op), and new
-        # commits still flow
-        self._apply(spark, src, [(5, "c", 100, 4, "I"),
-                                 (3, None, None, 4, "D")])
-        q2 = stream_sync_aggregate(
-            spark, src, store, ckpt, ["grp"], self.MEASURES
-        )
-        try:
-            q2.processAllAvailable()
-            got = self._got(spark, store)
-            assert got == self._expect(spark, src)
-            assert got["c"] == (100, 2, 107)  # (mx, n, total)
-        finally:
-            q2.stop()
-
 
 class TestClusteredRewritePruning:
     """r7: bucket-local sort + file rolling on CDC rewrite keeps
@@ -3560,7 +3295,6 @@ class TestSyncJoinFromCdc:
             txn.sync_join_from_cdc(spark, left, right, store)
             self._check(spark, left, right, store, "inner")
 
-
     def test_store_lifecycle_compact_vacuum_rescale(self, spark, tmp_path):
         """VERDICT r9 #4: store maintenance under churn — tombstone
         compaction (every churned key writes one into the store),
@@ -3627,156 +3361,6 @@ class TestSyncJoinFromCdc:
         )
         assert txn.sync_join_from_cdc(spark, left, right, store) is not None
         self._check(spark, left, right, store, "inner")
-
-class TestStreamSyncJoin:
-    """Streaming maintenance of the materialized join view
-    (stream_sync_join): a commit on EITHER source's log fires a
-    txn.sync_join_from_cdc tick; exactly-once rides the packed
-    two-version cursor; poison contract inherited from the aggregate
-    loop. Truth for every check is a from-scratch join of the live
-    sides."""
-
-    L = "id long, lval string, seq long, op string"
-    R = "id long, rval string, seq long, op string"
-
-    def _apply(self, spark, t, rows, schema):
-        return txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(rows, schema), t, n_buckets=8
-        )
-
-    def _truth(self, spark, left, right, how="inner"):
-        l = txn.read_cdc_table(spark, left)
-        r = txn.read_cdc_table(spark, right)
-        ren = {c: c + "_r" for c in r.columns if c in l.columns and c != "id"}
-        return l.join(r.withColumnsRenamed(ren), "id", how)
-
-    def _norm(self, df):
-        return sorted(
-            (tuple(r) for r in df.select(sorted(df.columns)).collect()),
-            key=lambda t: tuple((v is None, v) for v in t),
-        )
-
-    def _check(self, spark, left, right, store, how="inner"):
-        got = txn.read_join_store(spark, store)
-        want = self._truth(spark, left, right, how)
-        assert sorted(got.columns) == sorted(want.columns)
-        assert self._norm(got) == self._norm(want)
-
-    def test_stream_starts_before_either_commit(self, spark, tmp_path):
-        """Deploy-first bootstrap: the sync stream starts with NEITHER
-        source committed (both _log dirs missing) and must wait, then
-        cold-start the view on the first commits."""
-        from taar_gcp_etl_spark.streaming.jobs import stream_sync_join
-
-        left, right = str(tmp_path / "l"), str(tmp_path / "r")
-        store = str(tmp_path / "mv")
-        q = stream_sync_join(
-            spark, left, right, store, str(tmp_path / "ckpt")
-        )
-        try:
-            q.processAllAvailable()  # nothing committed yet: no-op
-            assert txn.latest_manifest(spark, store) is None
-            self._apply(spark, left, [(1, "a", 1, "I")], self.L)
-            self._apply(spark, right, [(1, "b", 1, "I")], self.R)
-            q.processAllAvailable()
-            self._check(spark, left, right, store)
-        finally:
-            q.stop()
-
-    def test_one_sided_commits_fire_and_restart_no_replay(
-        self, spark, tmp_path
-    ):
-        """A commit on EITHER side alone fires a sync; a restart on the
-        same checkpoint replays no double-apply (packed-cursor no-op)
-        and later commits still flow."""
-        from taar_gcp_etl_spark.streaming.jobs import stream_sync_join
-
-        left, right = str(tmp_path / "l"), str(tmp_path / "r")
-        store = str(tmp_path / "mv")
-        ckpt = str(tmp_path / "ckpt")
-        self._apply(
-            spark, left, [(i, f"l{i}", 1, "I") for i in (1, 2, 3)], self.L
-        )
-        self._apply(
-            spark, right, [(i, f"r{i}", 1, "I") for i in (2, 3, 4)], self.R
-        )
-        q = stream_sync_join(spark, left, right, store, ckpt)
-        try:
-            q.processAllAvailable()
-            self._check(spark, left, right, store)
-            # LEFT-only churn: update + delete
-            self._apply(
-                spark, left,
-                [(2, "l2b", 2, "U"), (3, None, 2, "D")], self.L,
-            )
-            q.processAllAvailable()
-            self._check(spark, left, right, store)
-            # RIGHT-only churn: insert completes a pair
-            self._apply(spark, right, [(1, "r1", 2, "I")], self.R)
-            q.processAllAvailable()
-            self._check(spark, left, right, store)
-            got = {r.id: (r.lval, r.rval)
-                   for r in txn.read_join_store(spark, store).collect()}
-            assert got == {1: ("l1", "r1"), 2: ("l2b", "r2")}
-        finally:
-            q.stop()
-        ver = txn.latest_manifest(spark, store)["version"]
-        # restart on the same checkpoint: processed manifests replay
-        # into cursor no-ops, not double-applies; new commits flow
-        self._apply(spark, left, [(5, "l5", 3, "I")], self.L)
-        self._apply(spark, right, [(5, "r5", 3, "I")], self.R)
-        q2 = stream_sync_join(spark, left, right, store, ckpt)
-        try:
-            q2.processAllAvailable()
-            self._check(spark, left, right, store)
-            assert txn.latest_manifest(spark, store)["version"] > ver
-        finally:
-            q2.stop()
-
-    def test_poison_fails_stream_cursor_unmoved(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Inherited poison contract: a throwing sync fails the stream
-        visibly, the packed cursor does not move, and a restart with
-        the fault cleared catches up exactly."""
-        from pyspark.errors.exceptions.captured import (
-            StreamingQueryException,
-        )
-
-        from taar_gcp_etl_spark.streaming.jobs import stream_sync_join
-
-        left, right = str(tmp_path / "l"), str(tmp_path / "r")
-        store = str(tmp_path / "mv")
-        ckpt = str(tmp_path / "ckpt")
-        self._apply(spark, left, [(1, "a", 1, "I")], self.L)
-        self._apply(spark, right, [(1, "b", 1, "I")], self.R)
-        txn.sync_join_from_cdc(spark, left, right, store)
-        cursor0 = txn.latest_manifest(spark, store)["epoch_id"]
-
-        real = txn.sync_join_from_cdc
-        monkeypatch.setattr(
-            txn, "sync_join_from_cdc",
-            lambda *a, **k: (_ for _ in ()).throw(
-                RuntimeError("poisoned source version")
-            ),
-        )
-        q = stream_sync_join(spark, left, right, store, ckpt)
-        try:
-            self._apply(spark, right, [(2, "b2", 2, "I")], self.R)
-            with pytest.raises(StreamingQueryException):
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        assert txn.latest_manifest(spark, store)["epoch_id"] == cursor0
-
-        monkeypatch.setattr(txn, "sync_join_from_cdc", real)
-        q2 = stream_sync_join(spark, left, right, store, ckpt)
-        try:
-            q2.processAllAvailable()
-            self._check(spark, left, right, store)
-            assert txn.latest_manifest(spark, store)["epoch_id"] > cursor0
-        finally:
-            q2.stop()
 
 
 class TestMergeInto:
@@ -4643,257 +4227,6 @@ class TestPrunedUserReads:
         assert set(rows) == set(range(8, 16))
         assert all(v == (2, 2) for v in rows.values())
 
-class TestRegisterCdcTable:
-    """SQL face over the txn layer: register_cdc_table exposes live
-    rows (or a pinned version) as a temp view; snapshot captured at
-    registration."""
-
-    def test_register_live_and_time_travel(self, spark, tmp_path):
-        t = str(tmp_path / "t")
-        assert not txn.register_cdc_table(spark, t, "missing_tbl")
-        txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(
-                [(1, "a", 1, "I"), (2, "b", 1, "I")],
-                "id long, val string, seq long, op string",
-            ),
-            t, n_buckets=4,
-        )
-        txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(
-                [(2, None, 2, "D"), (3, "c", 2, "I")],
-                "id long, val string, seq long, op string",
-            ),
-            t, n_buckets=None,
-        )
-        assert txn.register_cdc_table(spark, t, "reg_live")
-        got = {
-            r.id: r.val
-            for r in spark.sql(
-                "SELECT id, val FROM reg_live ORDER BY id"
-            ).collect()
-        }
-        assert got == {1: "a", 3: "c"}
-        # time travel to version 1 under a second name
-        assert txn.register_cdc_table(spark, t, "reg_v1", version=1)
-        got1 = {
-            r.id: r.val for r in spark.sql(
-                "SELECT id, val FROM reg_v1"
-            ).collect()
-        }
-        assert got1 == {1: "a", 2: "b"}
-        # snapshot-at-registration: a later commit is NOT visible
-        # through the existing view until re-registration
-        txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(
-                [(4, "d", 3, "I")],
-                "id long, val string, seq long, op string",
-            ),
-            t, n_buckets=None,
-        )
-        assert spark.sql(
-            "SELECT count(*) AS n FROM reg_live"
-        ).collect()[0].n == 2
-        txn.register_cdc_table(spark, t, "reg_live")
-        assert spark.sql(
-            "SELECT count(*) AS n FROM reg_live"
-        ).collect()[0].n == 3
-        spark.catalog.dropTempView("reg_live")
-        spark.catalog.dropTempView("reg_v1")
-
-    def test_register_join_store_hides_cursor(self, spark, tmp_path):
-        left, right = str(tmp_path / "l"), str(tmp_path / "r")
-        store = str(tmp_path / "mv")
-        for d, col in ((left, "lval"), (right, "rval")):
-            txn.apply_cdc_batch_bucketed(
-                spark.createDataFrame(
-                    [(1, "x", 1, "I")],
-                    f"id long, {col} string, seq long, op string",
-                ),
-                d, n_buckets=4,
-            )
-        txn.sync_join_from_cdc(spark, left, right, store)
-        assert txn.register_cdc_table(spark, store, "reg_mv")
-        cols = spark.sql("SELECT * FROM reg_mv").columns
-        assert "_mv_seq" not in cols and "lval" in cols and "rval" in cols
-        spark.catalog.dropTempView("reg_mv")
-
-    def test_register_aggregate_store_snapshot(self, spark, tmp_path):
-        """Review r9 fix: aggregate stores are snapshot-shaped (no
-        tombstone column) — registration must route through read_txn
-        and hide the maintenance counters instead of raising."""
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "agg")
-        txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(
-                [(1, "a", 10, 1, "I"), (2, "a", 20, 1, "I"),
-                 (3, "b", 5, 1, "I")],
-                "id long, grp string, val long, seq long, op string",
-            ),
-            src, n_buckets=4, stats_cols=["grp"],
-        )
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"],
-            {"total": ("sum", "val"), "n": ("count", "*")},
-        )
-        assert txn.register_cdc_table(spark, store, "reg_agg")
-        rows = {
-            r.grp: (r.total, r.n)
-            for r in spark.sql(
-                "SELECT grp, total, n FROM reg_agg"
-            ).collect()
-        }
-        assert rows == {"a": (30, 2), "b": (5, 1)}
-        cols = spark.sql("SELECT * FROM reg_agg").columns
-        assert not any(
-            c == "_live_rows" or c.startswith("_nn_") for c in cols
-        )
-        spark.catalog.dropTempView("reg_agg")
-
-    def test_filters_delegate_to_pruned_read(self, spark, tmp_path):
-        """register_cdc_table(filters=) bakes file skipping into the
-        view; snapshot-shaped tables reject the parameter with
-        guidance (filter in SQL instead)."""
-        t = str(tmp_path / "t")
-        txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(
-                [(i, i % 4, f"v{i}", 1, "I") for i in range(24)],
-                "id long, day int, val string, seq long, op string",
-            ),
-            t, n_buckets=4, stats_cols=["day"],
-        )
-        assert txn.register_cdc_table(
-            spark, t, "slice_view", filters=[("day", "=", 2)]
-        )
-        got = spark.sql("SELECT id FROM slice_view ORDER BY id")
-        assert [r.id for r in got.collect()] == [
-            i for i in range(24) if i % 4 == 2
-        ]
-        snap = str(tmp_path / "snap")
-        txn.commit_txn(
-            spark.createDataFrame([(1, 2)], "a long, b long"), snap
-        )
-        with pytest.raises(ValueError, match="plain"):
-            txn.register_cdc_table(
-                spark, snap, "v2", filters=[("a", "=", 1)]
-            )
-
-
-class TestStreamMergeInto:
-    """Streaming MERGE (streaming.jobs.stream_merge_into): foreachBatch
-    + txn.merge_into with per-batch key dedup and epoch replay skip —
-    the Delta streaming-upsert recipe as one call."""
-
-    D = "id long, val string, flag boolean, ts long"
-
-    def test_end_to_end_with_dedup_and_clauses(self, spark, tmp_path):
-        from taar_gcp_etl_spark.streaming.jobs import stream_merge_into
-
-        src = tmp_path / "src"
-        src.mkdir()
-        t = str(tmp_path / "t")
-        txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(
-                [(1, "a", False, 0, 1, "I"), (2, "b", False, 0, 1, "I")],
-                self.D + ", seq long, op string",
-            ),
-            t, n_buckets=4,
-        )
-        # trigger 1: key 3 arrives TWICE in one batch (ts 5 then 9 —
-        # dedup keeps ts 9); key 1 updates; key 2 delete-flagged
-        spark.createDataFrame(
-            [(3, "c-old", False, 5), (3, "c-new", False, 9),
-             (1, "a2", False, 7), (2, None, True, 8)],
-            self.D,
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        stream = (
-            spark.readStream.schema(self.D)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = stream_merge_into(
-            stream, t, str(tmp_path / "ckpt"),
-            dedup_order="ts",
-            matched_delete_condition="flag",
-            not_matched_condition="NOT flag",
-        )
-        q.processAllAvailable()
-        live = {
-            r.id: r.val for r in txn.read_cdc_table(spark, t).collect()
-        }
-        assert live == {1: "a2", 3: "c-new"}
-        v_after = txn.latest_manifest(spark, t)["version"]
-        # trigger 2: another file
-        spark.createDataFrame(
-            [(3, "c3", False, 12)], self.D
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        q.stop()
-        assert txn.latest_manifest(spark, t)["version"] > v_after
-        assert {
-            r.id: r.val for r in txn.read_cdc_table(spark, t).collect()
-        } == {1: "a2", 3: "c3"}
-
-    def test_epoch_replay_skips(self, spark, tmp_path):
-        """A replayed epoch (fresh checkpoint over already-merged
-        files) must not double-apply an accumulating SET expression."""
-        from taar_gcp_etl_spark.streaming.jobs import stream_merge_into
-
-        src = tmp_path / "src"
-        src.mkdir()
-        t = str(tmp_path / "t")
-        txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(
-                [(1, "a", False, 0, 1, "I")],
-                self.D + ", seq long, op string",
-            ),
-            t, n_buckets=4,
-        )
-        spark.createDataFrame(
-            [(1, "a", False, 3)], self.D
-        ).coalesce(1).write.mode("append").parquet(str(src))
-
-        def run(ckpt):
-            stream = spark.readStream.schema(self.D).parquet(str(src))
-            q = stream_merge_into(
-                stream, t, str(tmp_path / ckpt),
-                when=[{"matched": "update",
-                       "set": {"ts": "t_ts + ts"}}],
-            )
-            q.processAllAvailable()
-            q.stop()
-
-        run("ckpt1")
-        got = {r.id: r.ts for r in txn.read_cdc_table(spark, t).collect()}
-        assert got == {1: 3}
-        # same files, FRESH checkpoint: epoch_id restarts at 0, which
-        # the manifest guard treats as already-committed — no re-apply
-        run("ckpt2")
-        got2 = {r.id: r.ts for r in txn.read_cdc_table(spark, t).collect()}
-        assert got2 == {1: 3}
-
-    def test_dedup_tiebreak_tolerates_map_columns(self, spark, tmp_path):
-        """Review r10: the dedup tie-break hashed every column, which
-        xxhash64 rejects for maps at analysis time — a map-carrying
-        stream must still merge."""
-        from taar_gcp_etl_spark.streaming.jobs import stream_merge_into
-
-        src = tmp_path / "src"
-        src.mkdir()
-        t = str(tmp_path / "t")
-        d = "id long, attrs map<string,string>, ts long"
-        spark.createDataFrame(
-            [(1, {"k": "v1"}, 1), (1, {"k": "v2"}, 2)], d
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        stream = spark.readStream.schema(d).parquet(str(src))
-        q = stream_merge_into(
-            stream, t, str(tmp_path / "ckpt"),
-            dedup_order="ts", key_col="id", n_buckets=4,
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = txn.read_cdc_table(spark, t).collect()
-        assert len(got) == 1 and got[0].attrs == {"k": "v2"}
-
 
 class TestMergeNotMatchedBySource:
     """Delta's WHEN NOT MATCHED BY SOURCE (r10): target rows absent
@@ -5455,4 +4788,3 @@ class TestMergeSourcePersist:
         # one materialization (the persist) — not one per traversal.
         # Exactly n_src under the cache; 4-5x that if the persist broke.
         assert acc.value == n_src, acc.value
-
