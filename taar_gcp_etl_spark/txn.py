@@ -176,6 +176,22 @@ def latest_manifest(spark: SparkSession, table_dir: str) -> dict | None:
     return read_manifest(spark, table_dir, versions[-1])
 
 
+def _ddl(fields: list[list[str]]) -> str:
+    """DDL column list for manifest schema fields [[name, dtype], ...]."""
+    return ", ".join(
+        "`{}` {}".format(n.replace("`", "``"), t) for n, t in fields
+    )
+
+
+def _subdirs(spark: SparkSession, parent: str) -> set[str]:
+    """Names directly under ``parent`` (empty when it does not exist) —
+    one listStatus, no Spark job."""
+    _, fs, p = _fs(spark, parent)
+    if not fs.exists(p):
+        return set()
+    return {st.getPath().getName() for st in fs.listStatus(p)}
+
+
 def read_txn(
     spark: SparkSession,
     table_dir: str,
@@ -189,11 +205,15 @@ def read_txn(
 
     Handles both layouts: plain (one snapshot dir per version) and
     BUCKETED (the manifest maps each hash bucket to the snapshot dir
-    that currently owns it — see apply_cdc_batch_bucketed). For a
-    bucketed table, ``buckets`` restricts the read to those buckets,
-    and because each owning dir is hash-partitioned on the bucket
-    column, the isin() filter prunes to exactly those partition
-    directories — the read cost is O(selected buckets), not O(table)."""
+    that currently owns it — see apply_cdc_batch_bucketed). A bucketed
+    read takes its schema from the manifest, so planning it runs no
+    Spark job (no footer inference), and a dir written before an
+    additive schema evolution reads the new columns as null. For a
+    bucketed table, ``buckets`` restricts the read to those buckets'
+    ``_bucket=b`` partition directories, listed from their parent — the
+    read cost is O(selected buckets), not O(table). A mapped bucket
+    with no subdir (a full rewrite maps every bucket, including empty
+    ones) holds no rows."""
     if version is None:
         man = latest_manifest(spark, table_dir)
     else:
@@ -203,30 +223,43 @@ def read_txn(
     table_dir = table_dir.rstrip("/")
     if "snapshot" in man:
         return spark.read.parquet(f"{table_dir}/{man['snapshot']}")
-    mapping = man["buckets"]
+    want = None if buckets is None else {int(b) for b in buckets}
     sel = {
         int(b): d
-        for b, d in mapping.items()
-        if buckets is None or int(b) in set(buckets)
+        for b, d in man["buckets"].items()
+        if want is None or int(b) in want
     }
     if not sel:
         return None
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(_ddl(man["schema"]))
+
+    def scan(dir_buckets: dict[str, list[int]]) -> list[DataFrame]:
+        # one read per dir, pruned to its selected buckets by partition
+        # filter; a bucket selection also lists only their subdirs
+        parts = []
+        for d, bs in sorted(dir_buckets.items()):
+            root = f"{table_dir}/{d}"
+            paths = [root]
+            if want is not None:
+                have = _subdirs(spark, root)
+                paths = [
+                    f"{root}/{BUCKET_COL}={b}"
+                    for b in sorted(bs)
+                    if f"{BUCKET_COL}={b}" in have
+                ]
+            if paths:
+                parts.append(
+                    spark.read.schema(schema)
+                    .option("basePath", root).parquet(*paths)
+                    .filter(F.col(BUCKET_COL).isin(bs))
+                )
+        return parts
+
     by_dir: dict[str, list[int]] = {}
     for b, d in sel.items():
         by_dir.setdefault(d, []).append(b)
-    parts = [
-        spark.read.parquet(f"{table_dir}/{d}").filter(
-            F.col(BUCKET_COL).isin(bs)
-        )
-        for d, bs in sorted(by_dir.items())
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        # dirs written before an additive schema evolution lack the new
-        # columns — they read as null (allowMissingColumns), the
-        # standard evolution-read semantics
-        out = out.unionByName(p, allowMissingColumns=True)
-
     # merge-on-read: fold in delete overlays covering the selected
     # buckets (see apply_cdc_batch_bucketed's delete-only fast path).
     # The resolution window is the MoR read tax — paid only while
@@ -238,44 +271,30 @@ def read_txn(
         if int(b_str) in sel:
             for p in paths:
                 overlay_dirs.setdefault(p, []).append(int(b_str))
+    parts = scan(by_dir) + scan(overlay_dirs)
+    if not parts:
+        return spark.createDataFrame([], schema)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
     if overlay_dirs:
         from pyspark.sql import Window
 
-        for d, bs in sorted(overlay_dirs.items()):
-            out = out.unionByName(
-                spark.read.parquet(f"{table_dir}/{d}").filter(
-                    F.col(BUCKET_COL).isin(bs)
-                ),
-                allowMissingColumns=True,
-            )
-        key_col = man["key_col"]
-        seq_col = man["seq_col"]
         # tiebreaker mirrors the write path's strict '>' guard: an
         # overlay tombstone whose seq EQUALS the stored row's must lose
         # deterministically (asc on _deleted → the non-tombstone/base
         # row sorts first on seq ties), not win per-read at random
-        w = Window.partitionBy(key_col).orderBy(
-            F.desc(seq_col), F.asc(DELETED_COL)
+        w = Window.partitionBy(man["key_col"]).orderBy(
+            F.desc(man["seq_col"]), F.asc(DELETED_COL)
         )
         out = (
             out.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-    if "schema" in man:
-        # align to the manifest's (widest) schema: a bucket selection
-        # served entirely by pre-evolution dirs still presents the new
-        # columns (as null), in stable order
-        have = set(out.columns)
-        out = out.select(
-            *[
-                F.col(n)
-                if n in have
-                else F.lit(None).cast(t).alias(n)
-                for n, t in man["schema"]
-            ]
-        )
-    return out
+    # the reader appends the partition column last: restore the
+    # manifest's column order
+    return out.select(*schema.names)
 
 
 def last_committed_epoch(
@@ -806,21 +825,39 @@ def _bucket_of(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
+def _preimage_names(cur_pay: list[str]) -> list[str]:
+    """Columns that carry each staged key's stored state (payload and
+    tombstone flag; null = key absent) into _change_rows."""
+    return [f"_o_{c}" for c in cur_pay] + ["_o_del"]
+
+
 def _stage_cdc_batch(
-    batch_df: DataFrame, key_col: str, op_col: str, seq_col: str
+    batch_df: DataFrame,
+    key_col: str,
+    op_col: str,
+    seq_col: str,
+    preimage_cols: list[str] | None = None,
 ) -> DataFrame:
     """Reduce a CDC micro-batch to its latest op per key and stage it in
-    stored-table shape: payload (nulled on delete), seq, _deleted."""
+    stored-table shape: payload (nulled on delete), seq, _deleted.
+
+    ``preimage_cols`` marks a merge_into batch: already one row per key
+    (nothing to reduce), carrying those stored columns' preimages
+    (_preimage_names), which pass through unchanged."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key_col).orderBy(F.desc(seq_col))
-    latest = (
-        batch_df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    pre = [] if preimage_cols is None else _preimage_names(preimage_cols)
+    latest = batch_df
+    if preimage_cols is None:
+        w = Window.partitionBy(key_col).orderBy(F.desc(seq_col))
+        latest = (
+            batch_df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
     payload_cols = [
-        c for c in latest.columns if c not in (key_col, op_col, seq_col)
+        c for c in latest.columns
+        if c not in (key_col, op_col, seq_col) and c not in pre
     ]
     is_del = F.col(op_col) == "D"
     return latest.select(
@@ -828,6 +865,7 @@ def _stage_cdc_batch(
         *[F.when(~is_del, F.col(c)).alias(c) for c in payload_cols],
         F.col(seq_col),
         is_del.alias(DELETED_COL),
+        *pre,
     )
 
 
@@ -837,11 +875,14 @@ def _merge_cdc(
     key_col: str,
     seq_col: str,
     hint_small: bool = False,
+    guarded: bool = True,
 ) -> DataFrame:
     """Seq-guarded merge of staged CDC rows into the current state (both
     in stored shape): a staged row applies iff its seq is strictly newer
     than the stored row's — tombstones included, so stale upserts cannot
-    resurrect deletes.
+    resurrect deletes. ``guarded=False`` skips that join for a batch
+    whose every seq is known to outrank ``cur`` (a merge_into batch
+    against the version it classified).
 
     Schema evolution: a batch may carry NEW payload columns (additive —
     stored rows read them as null) but an UPSERT batch missing stored
@@ -872,7 +913,11 @@ def _merge_cdc(
             "would silently null committed data — carry the full "
             "payload (delete-only batches are exempt)"
         )
-    applied = _applied_rows(cur, staged, key_col, seq_col, hint_small)
+    applied = (
+        _applied_rows(cur, staged, key_col, seq_col, hint_small)
+        if guarded
+        else staged
+    )
     applied_keys = applied.select(key_col)
     if hint_small:
         applied_keys = F.broadcast(applied_keys)
@@ -937,7 +982,6 @@ def _cdc_change_rows(
         )
     applied = _applied_rows(cur, staged, key_col, seq_col, hint_small)
     cur_pay = [c for c in cur.columns if c not in meta + (DELETED_COL,)]
-    new_pay = [c for c in applied.columns if c not in meta + (DELETED_COL,)]
     if hint_small:  # probe the table with the batch keys, never shuffle it
         cur = cur.join(
             F.broadcast(staged.select(key_col)), key_col, "left_semi"
@@ -947,9 +991,20 @@ def _cdc_change_rows(
         *[F.col(c).alias(f"_o_{c}") for c in cur_pay],
         F.col(DELETED_COL).alias("_o_del"),
     )
-    j = applied.join(old, key_col, "left")
+    return _change_rows(applied.join(old, key_col, "left"), key_col, cur_pay)
+
+
+def _change_rows(j: DataFrame, key_col: str, cur_pay: list[str]) -> DataFrame:
+    """CDF rows from applied staged rows that carry their keys'
+    preimages (``_preimage_names(cur_pay)``)."""
+    pre = _preimage_names(cur_pay)
+    new_pay = [
+        c for c in j.columns
+        if c not in (key_col, BUCKET_COL, DELETED_COL) and c not in pre
+    ]
     new_live = ~F.col(DELETED_COL)
-    old_live = F.col("_o_del") == False  # noqa: E712 — null ⇒ absent
+    # null _o_del: the key was absent
+    old_live = F.coalesce(~F.col("_o_del"), F.lit(False))
 
     def rows(side_cols, ctype, flt):
         return j.filter(flt).select(
@@ -958,13 +1013,13 @@ def _cdc_change_rows(
 
     new_side = [F.col(c) for c in new_pay]
     old_side = [F.col(f"_o_{c}").alias(c) for c in cur_pay]
-    ins = rows(new_side, "insert", new_live & ~F.coalesce(old_live, F.lit(False)))
-    dele = rows(old_side, "delete", ~new_live & F.coalesce(old_live, F.lit(False)))
-    pre = rows(old_side, "update_preimage", new_live & F.coalesce(old_live, F.lit(False)))
-    post = rows(new_side, "update_postimage", new_live & F.coalesce(old_live, F.lit(False)))
+    ins = rows(new_side, "insert", new_live & ~old_live)
+    dele = rows(old_side, "delete", ~new_live & old_live)
+    pre_rows = rows(old_side, "update_preimage", new_live & old_live)
+    post = rows(new_side, "update_postimage", new_live & old_live)
     return (
         ins.unionByName(dele, allowMissingColumns=True)
-        .unionByName(pre, allowMissingColumns=True)
+        .unionByName(pre_rows, allowMissingColumns=True)
         .unionByName(post, allowMissingColumns=True)
     )
 
@@ -1012,11 +1067,14 @@ def apply_cdc_batch_bucketed(
     space is hashed into ``n_buckets`` and the manifest maps EACH BUCKET
     to the snapshot dir that currently owns it. One micro-batch then:
 
-    1. stages its ops and computes their bucket set (a ≤ n_buckets-row
-       collect — bounded by construction);
-    2. reads ONLY the touched buckets' current state — the per-dir
-       isin() filter prunes to those hash-partition directories, so the
-       read is O(touched fraction of table), never a full scan;
+    1. stages its ops once (checkpointed) and takes its row count,
+       delete-only flag and bucket set (≤ n_buckets elements — bounded
+       by construction) from one aggregate observed while the
+       checkpoint materializes, so no job of its own;
+    2. reads ONLY the touched buckets' current state — read_txn lists
+       just those hash-partition directories and takes the schema from
+       the manifest, so the read is O(touched fraction of table), never
+       a full scan, and plans without a Spark job;
     3. merges (same seq guard + tombstones as the flat path) and writes
        one new dir holding just the touched buckets, hash-partitioned;
     4. publishes a manifest whose mapping repoints the touched buckets
@@ -1046,27 +1104,68 @@ def apply_cdc_batch_bucketed(
     rewrite of a bucket folds its overlays in and clears them from the
     manifest (compaction clears all).
     """
-    spark = batch_df.sparkSession
+    return _apply_staged_bucketed(
+        _stage_cdc_batch(batch_df, key_col, op_col, seq_col),
+        table_dir, key_col, seq_col, n_buckets, epoch_id, max_attempts,
+        stats_cols, target_file_rows,
+    )
+
+
+def _apply_staged_bucketed(
+    staged: DataFrame,
+    table_dir: str,
+    key_col: str,
+    seq_col: str,
+    n_buckets: int | None,
+    epoch_id: int | None,
+    max_attempts: int = 5,
+    stats_cols: list[str] | None = None,
+    target_file_rows: int | None = None,
+    preimage: tuple[int, list[str]] | None = None,
+) -> int | None:
+    """apply_cdc_batch_bucketed over an already staged batch.
+
+    ``preimage=(version, cur_pay)`` is merge_into's hand-off: the batch
+    carries ``_preimage_names(cur_pay)`` and its seq stamps outrank the
+    state the merge classified at ``version``. While the table is still
+    at that version the apply skips the seq-guard join and takes the
+    change file from the carried preimages; after a lost CAS race it
+    re-reads and guards like any other batch."""
+    spark = staged.sparkSession
     table_dir = table_dir.rstrip("/")
     inherit = n_buckets is None
-    staged_base = _stage_cdc_batch(
-        batch_df, key_col, op_col, seq_col
-    ).localCheckpoint(eager=True)
-    if staged_base.limit(1).count() == 0:
+    pre_names = [] if preimage is None else _preimage_names(preimage[1])
+    man = latest_manifest(spark, table_dir)
+    # stage once, bucketed on the count the table has now (a rescale
+    # landing before the commit re-buckets below)
+    cur_nb = (man or {}).get("n_buckets") if inherit else n_buckets
+    if cur_nb is not None:
+        staged = staged.withColumn(BUCKET_COL, _bucket_of(key_col, cur_nb))
+    # and aggregate size, delete-only and touched buckets while the
+    # checkpoint materializes it (observed metrics: no extra job)
+    from pyspark.sql import Observation
+
+    probe = [
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(~F.col(DELETED_COL), 1)).alias("live"),
+    ]
+    if cur_nb is not None:
+        probe.append(F.collect_set(BUCKET_COL).alias("buckets"))
+    seen = Observation()
+    staged_all = staged.observe(seen, *probe).localCheckpoint(eager=True)
+    stats = seen.get
+    if stats["n"] == 0:
         return None
     # measured batch size decides the broadcast hint: micro-batches
     # probe the touched buckets with a broadcast of their key set
     # instead of shuffling the bucket read through a sort-merge join
-    hint_small = staged_base.count() <= 2_000_000
-    delete_only = (
-        staged_base.filter(~F.col(DELETED_COL)).limit(1).count() == 0
-    )
+    hint_small = stats["n"] <= 2_000_000
+    delete_only = stats["live"] == 0
+    touched: list[int] = sorted(stats.get("buckets", []))
     token = uuid.uuid4().hex[:8]
-    cur_nb = None
-    staged_all = None
-    touched: list[int] = []
-    for _ in range(max_attempts):
-        man = latest_manifest(spark, table_dir)
+    for attempt in range(max_attempts):
+        if attempt:
+            man = latest_manifest(spark, table_dir)
         if man is not None:
             last = man.get("epoch_id")
             if (
@@ -1101,7 +1200,7 @@ def apply_cdc_batch_bucketed(
                     f"caller passed {nb}"
                 )
         if nb != cur_nb:
-            staged_all = staged_base.withColumn(
+            staged_all = staged_all.withColumn(
                 BUCKET_COL, _bucket_of(key_col, nb)
             )
             touched = sorted(
@@ -1119,9 +1218,17 @@ def apply_cdc_batch_bucketed(
         eff_file_rows = (man or {}).get("cluster_rows") or target_file_rows
         file_stats = dict((man or {}).get("file_stats") or {})
         change_files = None
+        rows = staged_all.drop(*pre_names)
+        # the merge's classification read this very version: every row
+        # outranks its stored key and already carries its preimage
+        fresh = (
+            preimage is not None
+            and man is not None
+            and man["version"] == preimage[0]
+        )
         if delete_only and man is not None:
             over_rel = f"data/o{version:010d}-{token}"
-            staged_all.write.mode("overwrite").partitionBy(
+            rows.write.mode("overwrite").partitionBy(
                 BUCKET_COL
             ).parquet(f"{table_dir}/{over_rel}")
             for b in touched:
@@ -1129,9 +1236,12 @@ def apply_cdc_batch_bucketed(
             mapping = dict(man["buckets"])
             schema_fields = man.get("schema")  # tombstones don't evolve
         else:
-            cur = read_txn(spark, table_dir, buckets=touched)
+            cur = read_txn(
+                spark, table_dir, version=man["version"], buckets=touched
+            ) if man else None
             merged = _merge_cdc(
-                cur, staged_all, key_col, seq_col, hint_small=hint_small
+                cur, rows, key_col, seq_col, hint_small=hint_small,
+                guarded=not fresh,
             )
             schema_fields = _schema_fields(merged)
             check_schema_evolution(
@@ -1147,16 +1257,23 @@ def apply_cdc_batch_bucketed(
                 mapping[str(b)] = snap_rel
                 overlays.pop(str(b), None)  # rewrite folds overlays in
             if man is not None:
-                # materialize this commit's change feed (one extra pass
-                # over the touched buckets — cur is already the pruned
-                # read): read_changes can then net change files instead
-                # of diffing snapshots. The seed commit skips it (v0→v1
-                # is "insert everything" by definition).
+                # materialize this commit's change feed (from the carried
+                # preimages, else one extra pass over the touched buckets
+                # — cur is already the pruned read): read_changes can then
+                # net change files instead of diffing snapshots. The seed
+                # commit skips it (v0→v1 is "insert everything" by
+                # definition).
                 ch_rel = f"data/c{version:010d}-{token}"
-                _cdc_change_rows(
-                    cur, staged_all, key_col, seq_col,
-                    hint_small=hint_small,
-                ).write.mode("overwrite").parquet(f"{table_dir}/{ch_rel}")
+                changes = (
+                    _change_rows(staged_all, key_col, preimage[1])
+                    if fresh and cur is not None
+                    else _cdc_change_rows(
+                        cur, rows, key_col, seq_col, hint_small=hint_small
+                    )
+                )
+                changes.write.mode("overwrite").parquet(
+                    f"{table_dir}/{ch_rel}"
+                )
                 change_files = {"path": ch_rel, "preimage": True}
             if eff_stats_cols:
                 from taar_gcp_etl_spark.layout import collect_file_stats
@@ -1685,12 +1802,17 @@ def merge_into(
     fails the cast or would overflow (ADVICE r9: a blind non-ANSI cast
     silently wrapped narrowing keys and mis-merged them).
 
-    Cost: classification reads ONLY the touched buckets (source keys →
-    bucket ids → partition-dir-pruned read_txn, semi-joined down to
+    Cost: one aggregate probes the source (row count, null key,
+    duplicate key, touched buckets); classification reads ONLY the
+    touched buckets (partition-dir-pruned read_txn, semi-joined down to
     the matched keys — broadcast while the source is under
     ``MERGE_BROADCAST_KEY_GATE`` rows, a plain AQE-planned semi-join
-    past it), and the apply rewrites only the touched buckets.
-    O(source + touched buckets), never O(table) — which also states
+    past it); the classified batch is staged once, already one row per
+    key and carrying each key's preimage, so the apply neither re-ranks
+    it nor joins the table again for the seq guard or the change file;
+    and the apply rewrites only the touched buckets. A warm 14-key
+    merge runs about a dozen Spark jobs (SCALE.md). O(source + touched
+    buckets), never O(table) — which also states
     the honest ceiling: a source spread across EVERY bucket degrades
     to a full rewrite plus classification (measured 1.5x a plain
     overwrite at 8M rows; SCALE.md "Declarative MERGE INTO"). Key- or
@@ -1844,8 +1966,9 @@ def merge_into(
             return out
         return F.expr(c) if isinstance(c, str) else c
 
-    # the source is traversed several times (cardinality check, bucket
-    # collect, the classification join, the staged batch) — persist for
+    # the source is traversed more than once (the key-cast check when
+    # the key types differ, the probe aggregate, the classification
+    # join feeding the staged batch) — persist for
     # the call so a recomputed (or nondeterministic) source can't
     # diverge between traversals, and release before returning
     from pyspark import StorageLevel
@@ -1900,23 +2023,33 @@ def _merge_into_impl(
     key_col, live_cols, seq_col, n_buckets, epoch_id, _cond,
     payload_cols,
 ):
-    # MERGE cardinality (at most one source row per key) and key
-    # validity (CDC keys are non-null by construction; a null key
-    # would also poison the bucket probe) — one aggregation pass
-    bad = (
-        source.groupBy(key_col).count()
-        .filter((F.col("count") > 1) | F.col(key_col).isNull())
-        .limit(1).collect()
-    )
-    if bad:
-        if bad[0][0] is None:
-            raise ValueError(
-                f"merge_into: source has NULL {key_col} rows — CDC "
-                "keys are non-null; filter them out or fix the extract"
-            )
+    # the one source probe: row count, key validity (CDC keys are
+    # non-null by construction; a null key would also poison the bucket
+    # probe), MERGE cardinality (at most one source row per key) and the
+    # touched bucket set — one aggregation, one collect
+    per_key = source.groupBy(key_col).agg(F.count(F.lit(1)).alias("_n"))
+    probe = [
+        F.sum("_n").alias("n"),
+        F.bool_or(F.col(key_col).isNull()).alias("null_key"),
+        F.first(
+            F.when(F.col("_n") > 1, F.col(key_col)), ignorenulls=True
+        ).alias("dup"),
+    ]
+    bucketed = man is not None and "buckets" in man
+    if bucketed:
+        probe.append(
+            F.collect_set(_bucket_of(key_col, man["n_buckets"])).alias("bs")
+        )
+    probed = per_key.agg(*probe).first()
+    if probed["null_key"]:
+        raise ValueError(
+            f"merge_into: source has NULL {key_col} rows — CDC "
+            "keys are non-null; filter them out or fix the extract"
+        )
+    if probed["dup"] is not None:
         raise ValueError(
             f"merge_into: source has multiple rows for key "
-            f"{key_col}={bad[0][0]!r} — MERGE requires one row per key"
+            f"{key_col}={probed['dup']!r} — MERGE requires one row per key"
         )
 
     seq_val = (man["version"] + 1) if man else 1
@@ -1950,8 +2083,7 @@ def _merge_into_impl(
     # source past the gate would OOM the driver long before the
     # full-width warning matters — fall back to a plain semi-join and
     # let AQE pick the strategy (VERDICT r9 #3, Delta's behavior)
-    n_src = source.count()
-    hint_small = n_src <= MERGE_BROADCAST_KEY_GATE
+    hint_small = (probed["n"] or 0) <= MERGE_BROADCAST_KEY_GATE
 
     # NBS zone-map prune plan (round 11, VERDICT r10 #4): when EVERY
     # not_matched_by_source clause carries a structured (col, op, val)
@@ -2022,14 +2154,9 @@ def _merge_into_impl(
     # the NBS side reads its own zone-map-pruned scan above, in which
     # case the matched side gets its bucket pruning back too.
     buckets = None
-    if "buckets" in man and (not nbs_clauses or nbs_kept_paths is not None):
+    if bucketed and (not nbs_clauses or nbs_kept_paths is not None):
         nb = man["n_buckets"]
-        buckets = [
-            r[0]
-            for r in source.select(
-                _bucket_of(key_col, nb).alias("_b")
-            ).distinct().collect()
-        ]
+        buckets = probed["bs"]
         if len(buckets) >= nb:
             # full-width source: the merge degrades to a full rewrite
             # PLUS classification (measured 1.5x a plain overwrite —
@@ -2053,7 +2180,9 @@ def _merge_into_impl(
     # tombstone or was user-supplied (binlog LSN / timestamp — review
     # finding r9, verified: a version-derived stamp silently lost to
     # seq=1000 rows)
-    cur = read_txn(spark, table_dir, buckets=buckets)
+    cur = read_txn(
+        spark, table_dir, version=man["version"], buckets=buckets
+    )
     if cur is None:
         raw = _empty_live(spark, man).withColumn(
             DELETED_COL, F.lit(False)
@@ -2064,6 +2193,17 @@ def _merge_into_impl(
             raw = raw.drop(BUCKET_COL)
     src_keys = source.select(key_col)
     raw_all = raw  # pre-semi-join handle: the NBS pass reads it
+    # a bucketed apply takes each row's preimage from this join (the
+    # state its seq stamp outranks) instead of joining the table again
+    pre_cols, pre = None, []
+    if bucketed:
+        pre_cols = [c for c in raw.columns if c not in (key_col, DELETED_COL)]
+        pre = [
+            F.col(f"t_{c}").alias(n)
+            for c, n in zip(
+                pre_cols + [DELETED_COL], _preimage_names(pre_cols)
+            )
+        ]
     raw = raw.join(
         F.broadcast(src_keys) if hint_small else src_keys,
         key_col, "left_semi",
@@ -2175,6 +2315,7 @@ def _merge_into_impl(
             *[_out_col(c) for c in live_cols],
             F.col("_m_op"),
             seq_expr.alias(seq_col),
+            *pre,
         )
     )
     if nbs_clauses:
@@ -2244,6 +2385,7 @@ def _merge_into_impl(
                 *[_nbs_col(c) for c in live_cols],
                 F.col("_m_op"),
                 nbs_seq.alias(seq_col),
+                *pre,
             )
         )
         batch = batch.unionByName(nbs_batch)
@@ -2255,9 +2397,12 @@ def _merge_into_impl(
             batch, table_dir, key_col=key_col, op_col="_m_op",
             seq_col=seq_col, epoch_id=epoch_id,
         )
-    return apply_cdc_batch_bucketed(
-        batch, table_dir, key_col=key_col, op_col="_m_op",
-        seq_col=seq_col, n_buckets=None, epoch_id=epoch_id,
+    return _apply_staged_bucketed(
+        _stage_cdc_batch(
+            batch, key_col, "_m_op", seq_col, preimage_cols=pre_cols
+        ),
+        table_dir, key_col, seq_col, None, epoch_id,
+        preimage=(man["version"], pre_cols),
     )
 
 
@@ -2271,9 +2416,7 @@ def _empty_live(spark: SparkSession, man: dict) -> DataFrame:
         for n, t in man["schema"]
         if n not in (DELETED_COL, BUCKET_COL)
     ]
-    return spark.createDataFrame(
-        [], ", ".join(f"`{n}` {t}" for n, t in fields)
-    )
+    return spark.createDataFrame([], _ddl(fields))
 
 
 def join_bucketed(
@@ -2435,12 +2578,7 @@ def join_bucketed(
 
     def _list_subdirs(parent: str) -> set:
         if parent not in _subdir_cache:
-            _, fs, jp = _fs(spark, parent)
-            _subdir_cache[parent] = (
-                {st.getPath().getName() for st in fs.listStatus(jp)}
-                if fs.exists(jp)
-                else set()
-            )
+            _subdir_cache[parent] = _subdirs(spark, parent)
         return _subdir_cache[parent]
 
     def live(table_dir: str, man: dict, b: int, prune: dict | None):
