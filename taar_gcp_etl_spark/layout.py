@@ -270,8 +270,18 @@ def collect_file_stats(
     file, so "every slice disjoint" still proves the file has no
     matching rows, and the residual pushed onto the base scan lets the
     parquet reader do its own native row-group skipping inside kept
-    files."""
-    df = spark.read.parquet(path)
+    files.
+
+    A dir holding no data file (a rewrite whose rows were all retired)
+    has no file to describe: ``[]``."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return []
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in stats_cols:
         aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]

@@ -8,5 +8,4 @@ windows.py     §2.11 window functions, A7 per-key latest, event-time windows
 dedup.py       north-star dedup: exact, MinHash+LSH, SimHash, n-gram Jaccard
 similarity.py  north-star ANN: brute-force cosine top-k, bucketed LSH variant
 text.py        north-star text analysis: lang-id, quality, tokens, fingerprint
-multimodal.py  binary media columns: schema + plumbing, decode stubbed
 """

@@ -17,8 +17,7 @@ the weight:
   the length gate directly, which is the dominant term.
 
 Execution model: ``extract_html_text`` runs the parser per row inside
-``mapInPandas`` (Arrow batches, one Python process per core — the
-same shape as the media decoders in operators/multimodal.py). Parsing
+``mapInPandas`` (Arrow batches, one Python process per core). Parsing
 is CPU-bound string work, exactly what scales linearly with
 executors; nothing here shuffles. Script/style/template/svg/head
 subtrees are dropped wholesale; character references decode via the

@@ -1502,10 +1502,10 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opaque-binary column handling (the multimodal storage contract,
-    operators/multimodal.py): documents' text re-encoded as a binary blob
-    column, then byte length + sha256 content digest computed Column-side
-    — the metadata/integrity pass a blob lake runs without ever decoding
+    """Opaque-binary column handling (the multimodal-columns storage
+    contract): documents' text re-encoded as a binary blob column,
+    then byte length + sha256 content digest computed Column-side —
+    the metadata/integrity pass a blob lake runs without ever decoding
     payloads. Pure map, zero shuffle; the blob bytes stay JVM-side."""
     docs = _wide(spark, sf_dir, "documents")
     blob = F.encode(F.col("text"), "UTF-8")

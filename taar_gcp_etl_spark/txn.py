@@ -297,13 +297,6 @@ def read_txn(
     return out.select(*schema.names)
 
 
-def last_committed_epoch(
-    spark: SparkSession, table_dir: str
-) -> int | None:
-    man = latest_manifest(spark, table_dir)
-    return None if man is None else man.get("epoch_id")
-
-
 class RenameManifestPublisher:
     """Publish by temp-write + rename-into-slot — the right strategy
     where rename is atomic and fails on an existing destination (HDFS;
@@ -475,8 +468,8 @@ def commit_txn(
     reserved manifest fields raise ``ValueError`` (silently dropping
     them would hide a caller bug — ADVICE r10). ``key_col`` /
     ``seq_col`` already present on the PRIOR manifest carry forward
-    automatically, so maintenance rewrites (compaction, aggregate
-    refresh) never strip the key stamp a CDC apply recorded.
+    automatically, so maintenance rewrites (compaction) never strip
+    the key stamp a CDC apply recorded.
 
     ``df`` is either a DataFrame (blind write — content independent of
     the table's current state) or a BUILDER ``f(current_version | None)
@@ -488,8 +481,8 @@ def commit_txn(
     built, so merely re-executing a stale plan would re-read the OLD
     snapshot and silently drop the concurrent writer's changes). Every
     read-modify-write caller in this module (apply_cdc_batch_txn,
-    refresh_aggregate_store_txn, compact_cdc_tombstones) uses the
-    builder form; the bucketed path has its own equivalent loop.
+    compact_cdc_tombstones) uses the builder form; the bucketed path
+    has its own equivalent loop.
 
     As a safety net, a plain DataFrame whose plan scans ``table_dir``
     raises on a lost race instead of retrying — the retry would be the
@@ -585,7 +578,6 @@ def vacuum_txn(
     table_dir: str,
     keep_last: int = 2,
     grace_seconds: float = 0.0,
-    pin_versions: list[int] | None = None,
 ) -> dict:
     """Garbage-collect snapshots: keep the snapshot dirs referenced by the
     newest ``keep_last`` manifests, delete every other entry under
@@ -609,22 +601,10 @@ def vacuum_txn(
     Bucketed layouts: a kept manifest references every dir its bucket
     mapping points at — an OLD dir stays live for as long as any kept
     version still owns a bucket in it, so incremental commits never
-    strand data they didn't rewrite.
-
-    ``pin_versions`` keeps additional specific versions beyond the
-    newest ``keep_last`` — the hook table_group.group_vacuum uses to
-    protect versions an old-but-retained GROUP manifest still pins
-    (vacuuming members independently could reclaim a version a group
-    vector still resolves to). Pins not present in the log are
-    ignored."""
+    strand data they didn't rewrite."""
     table_dir = table_dir.rstrip("/")
     versions = _list_manifest_versions(spark, table_dir)
     keep_versions = versions[-keep_last:] if keep_last > 0 else []
-    if pin_versions:
-        have = set(versions)
-        keep_versions = sorted(
-            set(keep_versions) | {v for v in pin_versions if v in have}
-        )
     keep_snaps = set()
     for v in keep_versions:
         man = read_manifest(spark, table_dir, v)
@@ -1058,8 +1038,9 @@ def apply_cdc_batch_bucketed(
     converges per-file stats to the full range (r6 soak: 44% kept for
     a 1-of-8-days filter) and pruning dies. Row-group-slice stats ride
     in the manifest alongside (collected in the same single stats pass,
-    ~8 slices per rolled file — see collect_file_stats), so the IVM
-    prune cost gate can see sub-file selectivity for big sorted files.
+    ~8 slices per rolled file — see collect_file_stats), so
+    cdc_prune_report can price sub-file selectivity for big sorted
+    files.
 
     The flat transactional apply rewrites O(table) per micro-batch:
     right for dimension tables, ruinous for a fact-sized keyed table
@@ -2094,10 +2075,10 @@ def _merge_into_impl(
     # survives in the per-clause kept set; the union over clauses is
     # therefore a superset of every claimable row (same soundness
     # argument as scan_cdc_pruned: skipping a file only removes rows no
-    # clause could touch). Metadata-only decision, gated on the same
-    # kept-fraction threshold as the IVM prune (a near-full keep pays
-    # the many-small-reads scan without saving IO), falling back to the
-    # honest O(table) read on pre-stats dirs.
+    # clause could touch). Metadata-only decision, gated on the
+    # kept-fraction threshold _IVM_PRUNE_MAX_KEPT_FRACTION (a near-full
+    # keep pays the many-small-reads scan without saving IO), falling
+    # back to the honest O(table) read on pre-stats dirs.
     nbs_kept_paths: list[str] | None = None
     if (
         nbs_clauses
@@ -2792,7 +2773,7 @@ def _clustered_for_write(
     """Bucket-local clustering for a bucketed-CDC rewrite (r7): when the
     table tracks zone maps, shuffle to one task per bucket and sort each
     bucket's rows by ``stats_cols`` before the partitionBy write. Two
-    effects, both load-bearing for IVM recompute pruning:
+    effects, both load-bearing for zone-map pruning (scan_cdc_pruned):
 
     - per-FILE zone maps stay NARROW under churn: the r6 sf1 soak
       measured per-file day stats converging to the full range after 8
@@ -2979,55 +2960,6 @@ def rescale_buckets(
             return version
     raise RuntimeError(
         f"rescale_buckets: version conflicts on {table_dir}"
-    )
-
-
-def refresh_aggregate_store_txn(
-    batch_df: DataFrame,
-    table_dir: str,
-    keys: list[str],
-    measures: dict,
-    epoch_id: int | None = None,
-) -> bool:
-    """Merge a micro-batch's per-key partials into the stored aggregate
-    (operators.merge.refresh_aggregate) and publish atomically. The epoch
-    guard lives IN the manifest, so there is no marker-after-write crash
-    window: a crash before the manifest rename leaves the store untouched
-    (replay re-applies, once), a crash after it leaves the epoch recorded
-    (replay skipped). Returns True if applied, False on replay skip."""
-    from taar_gcp_etl_spark.operators.merge import (
-        _measure_agg,
-        refresh_aggregate,
-    )
-
-    spark = batch_df.sparkSession
-    if epoch_id is not None:
-        last = last_committed_epoch(spark, table_dir)
-        if last is not None and epoch_id <= last:
-            return False
-    mnames = sorted(measures)
-
-    # builder form (see commit_txn): re-merges against the fresh store
-    # version if the CAS loses a race
-    def build(cur_version):
-        store = (
-            read_txn(spark, table_dir, version=cur_version)
-            if cur_version is not None
-            else None
-        )
-        if store is not None:
-            out = refresh_aggregate(
-                store.select(*keys, *mnames), batch_df, keys, measures
-            )
-        else:
-            out = batch_df.groupBy(*keys).agg(
-                *[_measure_agg(measures[m]).alias(m) for m in mnames]
-            )
-        return out.select(*keys, *mnames)
-
-    return (
-        commit_txn(build, table_dir, epoch_id=epoch_id, spark=spark)
-        is not None
     )
 
 
@@ -3349,387 +3281,12 @@ def read_changes_bucketed(
     return _keyed_diff(old, new, key_col, seq_col, mode=mode)
 
 
-def _nn(m: str) -> str:
-    return f"_nn_{m}"
-
-
-LIVE_ROWS_COL = "_live_rows"
-
-
-# max distinct touched group-key values shipped as an in-list prune
-# filter; beyond this the prune degrades to the touched min/max range
-# (still sound, coarser). Bounds the driver-side collect to O(cap).
-_IVM_IN_CAP = 256
-
-# engage the pruned recompute scan only when the metadata says at least
-# this fraction of candidate files is SKIPPED: per-file reads cost more
-# per byte than a dir scan (listing + no split packing), and the sf1
-# soak measured a 44%-kept prune losing to the plain scan 1.8x while a
-# fully-correlated layout (the unit fixtures) wins outright.
+# merge_into's NBS zone-map prune reads a file list instead of the bucket
+# dirs only when it keeps at most this fraction of candidate files:
+# per-file reads cost more per byte than a dir scan (listing + no split
+# packing), and the sf1 soak measured a 44%-kept prune losing to the
+# plain scan 1.8x while a fully-correlated layout wins outright.
 _IVM_PRUNE_MAX_KEPT_FRACTION = 0.25
-
-
-def _pruned_live_for_groups(
-    spark: SparkSession,
-    source_dir: str,
-    man: dict,
-    touched: DataFrame,
-    group_keys: list[str],
-    version: int,
-) -> DataFrame | None:
-    """Zone-map-pruned live-row scan for the IVM group-targeted
-    recompute (NEXT.md r6 #6): derive per-group-key prune filters from
-    the touched-group relation and read only intersecting source files
-    via scan_cdc_pruned. Returns None when the source has no usable
-    zone maps (caller falls back to the full live scan).
-
-    Soundness: every filter is implied by "row belongs to a touched
-    group" — an in-list of ALL touched values, or their min/max range —
-    so the pruned scan is a superset of the rows the semi-join keeps.
-    A NULL touched key defeats range/in predicates (comparisons never
-    match null), so that column contributes no filter; if no column
-    can contribute, fall back rather than prune unsoundly.
-
-    Composite keys (r8, NEXT r8 #5): ALL atomic-typed group keys
-    contribute filters, not just the stats-covered ones. The manifest
-    plan prices files on whichever filters have zone-map/row-group
-    stats (_cdc_prune_plan skips unknown columns conservatively), while
-    the residual scan_cdc_pruned pushes onto the base scan carries
-    every filter — so for a store keyed (day, region) where only day is
-    stats-covered, the region in-list still skips row groups via the
-    parquet reader's native stats and shrinks the semi-join's probe
-    input. At least one stats-covered key must contribute, or no FILE
-    can be pruned and the scan construction cost buys nothing."""
-    if "file_stats" not in man or "buckets" not in man:
-        return None
-    stat_cols = set(man.get("stats_cols") or [])
-    if not any(k in stat_cols for k in group_keys):
-        return None
-    atomic = {
-        f.name
-        for f in touched.schema.fields
-        if not f.dataType.typeName() in ("array", "map", "struct")
-    }
-    cols = [k for k in group_keys if k in atomic]
-    # one bounded job: nulls + bounds per candidate column
-    aggs = []
-    for k in cols:
-        aggs += [
-            F.max(F.col(k).isNull().cast("int")).alias(f"_null_{k}"),
-            F.min(k).alias(f"_min_{k}"),
-            F.max(k).alias(f"_max_{k}"),
-        ]
-    stats = touched.agg(*aggs).first()
-    filters: list[tuple] = []
-    for k in cols:
-        if stats[f"_null_{k}"] or stats[f"_min_{k}"] is None:
-            continue  # touched null group (or empty window): no prune
-        vals = [
-            r[0]
-            for r in touched.select(k)
-            .distinct()
-            .limit(_IVM_IN_CAP + 1)
-            .collect()
-        ]
-        if len(vals) <= _IVM_IN_CAP:
-            filters.append((k, "in", sorted(vals)))
-        else:
-            filters.append(
-                (k, "between", (stats[f"_min_{k}"], stats[f"_max_{k}"]))
-            )
-    if not any(c in stat_cols for c, _, _ in filters):
-        return None  # residual-only filters can't skip any file
-    # cost gate (metadata-only): a prune that keeps most of the BYTES
-    # pays the many-small-reads scan construction without saving IO —
-    # the r6 sf1 soak measured a hash-bucket-mixed table keeping 44% of
-    # files and losing to the plain scan 1.8x. Price on the MEAN of the
-    # two honest bounds (ADVICE r8): kept_rows (slice model — the IO if
-    # the reader's physical row-group skipping matches the logical
-    # slices) and kept_file_rows (all rows of kept files — the IO if
-    # each rolled file is one physical row group and the residual skips
-    # nothing inside it). Files without slice stats make the bounds
-    # equal, so this degrades exactly to the old row-fraction gate
-    # there; the file fraction is the no-row-counts fallback.
-    plan = _cdc_prune_plan(man, source_dir.rstrip("/"), filters)
-    if plan["unstated_dirs"]:
-        # pre-adoption dirs have unknown contents: the cost model can't
-        # price them and the scan would read them wholesale anyway —
-        # fall back to the plain live scan
-        return None
-    frac = (
-        (plan["kept_rows"] + plan["kept_file_rows"])
-        / (2 * plan["total_rows"])
-        if plan["total_rows"]
-        else (
-            plan["kept_files"] / plan["total_files"]
-            if plan["total_files"]
-            else 1.0
-        )
-    )
-    if plan["total_files"] == 0 or frac > _IVM_PRUNE_MAX_KEPT_FRACTION:
-        return None
-    # pass the kept list through so the scan doesn't redo the metadata
-    # pass over O(files) entries
-    return scan_cdc_pruned(
-        spark, source_dir, filters, version=version,
-        kept_paths=plan["kept_paths"],
-    )
-
-
-def sync_aggregate_from_cdc(
-    spark: SparkSession,
-    source_dir: str,
-    store_dir: str,
-    group_keys: list[str],
-    measures: dict[str, tuple[str, str]],
-    prune_recompute: bool = True,
-) -> int | None:
-    """Incremental materialized-VIEW maintenance over a CDC-maintained
-    source table, driven by the change feed — the piece
-    refresh_aggregate_store_txn cannot be: that operator merges
-    APPEND-ONLY event partials, but a CDC source updates and deletes
-    rows, so a sound refresh must RETRACT old contributions, not just
-    add new ones.
-
-    ``measures`` uses operators.merge's explicit (op, column) specs.
-    Two maintenance strategies, chosen from the measure set:
-
-    * **Retraction (all measures invertible: sum/count)** — the
-      textbook IVM path: read the CDF in 'cdf' mode (update_preimage /
-      update_postimage rows; deletes carry the old payload), aggregate
-      signed contributions per group (+1 for insert/postimage, -1 for
-      delete/preimage), and merge into the store with plain arithmetic.
-      Cost is O(changes + store): the source is read only through the
-      bucket-granular CDF (changed buckets), never fully scanned. The
-      store additionally carries ``_live_rows`` (groups whose count
-      reaches zero are dropped) and a ``_nn_<m>`` non-null counter per
-      sum measure (so a sum over a group whose non-null inputs all
-      retract goes back to NULL, exactly matching a full re-aggregate —
-      without the counter it would freeze at 0).
-    * **Group-targeted recompute (any min/max/approx_distinct)** —
-      these cannot be retracted (removing the current min says nothing
-      about the new one; an HLL sketch cannot forget a value). The
-      preimage rows name every group that lost a row, so the
-      sync recomputes exactly the TOUCHED groups from the source's live
-      rows (one semi-join pass) and splices them into the store. Cost
-      is O(changes + rows-in-touched-groups + store). When the source
-      carries zone maps over a group-key column (``stats_cols`` at
-      apply time) and ``prune_recompute`` is on (default), the
-      recompute reads only the FILES whose stats intersect the touched
-      keys — an ``in``-list up to ``_IVM_IN_CAP`` distinct touched
-      values, a min/max ``between`` beyond that; metadata-only
-      planning, the semi-join still provides exactness, and a touched
-      NULL group key disables pruning on that column (range predicates
-      cannot keep nulls), so the prune is always sound.
-
-    Cursor + idempotence: the store's manifest ``epoch_id`` records the
-    last source VERSION synced (source versions are monotonic, so the
-    existing epoch guard gives exactly-once replay semantics for free),
-    and the whole read-diff-merge runs inside commit_txn's CAS builder,
-    so a lost race re-reads the fresh store AND re-reads the cursor.
-    Group keys join null-safely (a null group is a group, matching SQL
-    GROUP BY). Returns the committed store version (None when the
-    source has no commits or the store is already at the source
-    version)."""
-    from taar_gcp_etl_spark.operators.merge import (
-        _MERGEABLE_OPS,
-        _measure_agg,
-    )
-
-    src_man = latest_manifest(spark, source_dir)
-    if src_man is None:
-        return None
-    to_version = src_man["version"]
-    mnames = sorted(measures)
-    for m in mnames:
-        if measures[m][0] not in _MERGEABLE_OPS:
-            raise ValueError(
-                f"measure {m!r}: op {measures[m][0]!r} not in "
-                f"{sorted(_MERGEABLE_OPS)}"
-            )
-    invertible = all(
-        measures[m][0] in ("sum", "count", "sum_sq") for m in mnames
-    )
-    # sum_sq shares sum's NULL parity (sum over an all-null group is
-    # NULL) and its signed-retraction algebra — the contribution is
-    # col^2 instead of col
-    sum_cols = [m for m in mnames if measures[m][0] in ("sum", "sum_sq")]
-    extra = [LIVE_ROWS_COL] + [_nn(m) for m in sum_cols]
-
-    def full_agg(live_df: DataFrame) -> DataFrame:
-        aggs = [_measure_agg(measures[m]).alias(m) for m in mnames]
-        if invertible:
-            aggs.append(F.count(F.lit(1)).alias(LIVE_ROWS_COL))
-            aggs += [
-                F.count(F.col(measures[m][1])).alias(_nn(m))
-                for m in sum_cols
-            ]
-        return live_df.groupBy(*group_keys).agg(*aggs)
-
-    def out_cols(df: DataFrame) -> DataFrame:
-        cols = [*group_keys, *mnames] + (extra if invertible else [])
-        return df.select(*cols)
-
-    persisted: list[DataFrame] = []
-
-    def null_safe_on(left: DataFrame, right: DataFrame):
-        cond = F.lit(True)
-        for kcol in group_keys:
-            cond = cond & left[kcol].eqNullSafe(right[kcol])
-        return cond
-
-    def build(cur_version):
-        last = None
-        if cur_version is not None:
-            last = read_manifest(spark, store_dir, cur_version).get(
-                "epoch_id"
-            )
-        if last is None:
-            # cold start: one full aggregate of the source's live rows
-            return out_cols(
-                full_agg(
-                    read_cdc_table(spark, source_dir, version=to_version)
-                )
-            )
-        store = read_txn(spark, store_dir, version=cur_version)
-        ch = read_changes_bucketed(
-            spark, source_dir, last, to_version, mode="cdf"
-        )
-        # The change feed is consumed by SEVERAL actions in one sync
-        # (fast-path check, touched-group collects, prune stats, the
-        # final merge plan). It is O(changes) small by definition, but
-        # its LINEAGE can be expensive — a delete-only overlay commit
-        # has no change file, so the feed falls back to a bucket-pruned
-        # snapshot diff; re-running that per action multiplied the sf1
-        # soak's sync cost ~6x. Persist for the sync's lifetime;
-        # sync_aggregate_from_cdc unpersists after commit (the builder
-        # may run several times under CAS retry — each persist handle
-        # is tracked, none leak past the sync call).
-        ch = ch.persist()
-        persisted.append(ch)
-        if invertible:
-            sign = F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-            daggs = [F.sum(sign).alias(f"_d_{LIVE_ROWS_COL}")]
-            for m in mnames:
-                op, c = measures[m]
-                if op in ("sum", "sum_sq"):
-                    contrib = (
-                        F.col(c) * F.col(c) if op == "sum_sq"
-                        else F.col(c)
-                    )
-                    daggs.append(F.sum(sign * contrib).alias(f"_d_{m}"))
-                    daggs.append(
-                        F.sum(
-                            sign * F.col(c).isNotNull().cast("long")
-                        ).alias(f"_d_{_nn(m)}")
-                    )
-                else:  # count
-                    src = (
-                        F.lit(1)
-                        if c == "*"
-                        else F.col(c).isNotNull().cast("long")
-                    )
-                    daggs.append(F.sum(sign * src).alias(f"_d_{m}"))
-            delta = ch.groupBy(*group_keys).agg(*daggs)
-            # anti + left instead of a full-outer join: a full outer
-            # preserves both sides so neither can broadcast — the whole
-            # store would shuffle on every sync. Split into (untouched
-            # store rows) ∪ (delta merged against its store rows): both
-            # joins have the small delta on one side, so AQE turns them
-            # into broadcast probes and the store is only SCANNED.
-            s, d = store.alias("s"), delta.alias("d")
-            d2 = delta.select(*group_keys).alias("d2")
-            untouched = s.join(d2, null_safe_on(s, d2), "left_anti")
-            j = d.join(s, null_safe_on(d, s), "left")
-            sel = [F.col(f"d.{kcol}").alias(kcol) for kcol in group_keys]
-            for m in mnames:
-                op, _ = measures[m]
-                merged = F.coalesce(F.col(f"s.{m}"), F.lit(0)) + F.coalesce(
-                    F.col(f"_d_{m}"), F.lit(0)
-                )
-                if op in ("sum", "sum_sq"):
-                    new_nn = F.coalesce(
-                        F.col(f"s.{_nn(m)}"), F.lit(0)
-                    ) + F.coalesce(F.col(f"_d_{_nn(m)}"), F.lit(0))
-                    sel.append(
-                        F.when(new_nn == 0, F.lit(None)).otherwise(merged)
-                        .alias(m)
-                    )
-                else:
-                    sel.append(merged.alias(m))
-            sel.append(
-                (
-                    F.coalesce(F.col(f"s.{LIVE_ROWS_COL}"), F.lit(0))
-                    + F.coalesce(F.col(f"_d_{LIVE_ROWS_COL}"), F.lit(0))
-                ).alias(LIVE_ROWS_COL)
-            )
-            sel += [
-                (
-                    F.coalesce(F.col(f"s.{_nn(m)}"), F.lit(0))
-                    + F.coalesce(F.col(f"_d_{_nn(m)}"), F.lit(0))
-                ).alias(_nn(m))
-                for m in sum_cols
-            ]
-            merged_rows = j.select(*sel).filter(
-                F.col(LIVE_ROWS_COL) > 0
-            )
-            return out_cols(untouched).unionByName(out_cols(merged_rows))
-        # non-invertible, but an INSERT-ONLY window needs no recompute:
-        # every op in the vocabulary is insert-mergeable (min/max via
-        # least/greatest, approx_distinct via sketch union, sum/count
-        # via +) — only retractions force the recompute. Streaming
-        # ingest is typically insert-only, so this check (one pass over
-        # the O(changes) feed) usually replaces the touched-group source
-        # scan with a merge against the store. A NULL group key in the
-        # window disqualifies it: refresh_aggregate joins keys with
-        # plain equality, and a null group must stay one group.
-        nullk = F.lit(False)
-        for kcol in group_keys:
-            nullk = nullk | F.col(kcol).isNull()
-        if ch.filter(
-            (F.col("_change_type") != "insert") | nullk
-        ).limit(1).isEmpty():
-            from taar_gcp_etl_spark.operators.merge import (
-                refresh_aggregate,
-            )
-
-            return out_cols(
-                refresh_aggregate(
-                    store.select(*group_keys, *mnames),
-                    ch,
-                    group_keys,
-                    measures,
-                )
-            )
-        # recompute exactly the touched groups
-        touched = ch.select(*group_keys).distinct()
-        live_df = None
-        if prune_recompute:
-            live_df = _pruned_live_for_groups(
-                spark, source_dir, src_man, touched, group_keys,
-                to_version,
-            )
-        if live_df is None:
-            live_df = read_cdc_table(spark, source_dir, version=to_version)
-        live_df = live_df.alias("l")
-        t1, t2 = touched.alias("t1"), touched.alias("t2")
-        fresh = full_agg(
-            live_df.join(t1, null_safe_on(live_df, t1), "left_semi")
-        )
-        s = store.alias("s")
-        untouched = s.join(t2, null_safe_on(s, t2), "left_anti")
-        return out_cols(untouched.unionByName(fresh))
-
-    try:
-        return commit_txn(
-            build, store_dir, epoch_id=to_version, spark=spark
-        )
-    finally:
-        for df in persisted:
-            df.unpersist()
 
 
 _JOIN_CURSOR_SHIFT = 31  # right version in the low 31 bits
@@ -3769,10 +3326,9 @@ def sync_join_from_cdc(
     """Incremental materialized JOIN-view maintenance: keep
     ``store_dir`` equal to ``live(left) JOIN live(right)`` on the two
     tables' key columns, maintained from their change feeds with
-    O(changed keys) work per sync — the join-view sibling of
-    sync_aggregate_from_cdc (the delta-join rule ΔV = ΔL⋈R ∪ L⋈ΔR,
-    specialized to KEY-KEY joins where it collapses to "recompute
-    exactly the touched keys").
+    O(changed keys) work per sync — the delta-join rule
+    ΔV = ΔL⋈R ∪ L⋈ΔR, specialized to KEY-KEY joins where it collapses
+    to "recompute exactly the touched keys".
 
     Why key-key makes this cheap and exact: both sides key their rows
     uniquely (CDC primary keys — non-null by construction), so every
@@ -4030,61 +3586,6 @@ def read_join_store(
     return df.drop("_mv_seq")
 
 
-def read_aggregate_store(
-    spark: SparkSession,
-    store_dir: str,
-    version: int | None = None,
-    measures: dict | None = None,
-    derive: dict | None = None,
-) -> DataFrame | None:
-    """User-facing read of a sync_aggregate_from_cdc store: maintenance
-    counters hidden. Pass the store's ``measures`` spec to present
-    approx_distinct sketch columns as their HLL estimates (long)
-    instead of raw binary.
-
-    ``derive`` adds MOMENT-DERIVED columns so consumers stop
-    hand-writing the algebra: {out_col: (stat, *measure_names)} with
-    stat in {'avg': (sum, count), 'var'/'stddev': (sum_sq, sum,
-    count)} — population forms, var = sum_sq/n - (sum/n)^2, NULL when
-    the count is 0. The store itself stays moments-only (mergeable,
-    invertible); derivation is one select at read time."""
-    df = read_txn(spark, store_dir, version=version)
-    if df is None:
-        return df
-    drop = [
-        c
-        for c in df.columns
-        if c == LIVE_ROWS_COL or c.startswith("_nn_")
-    ]
-    df = df.drop(*drop)
-    if measures:
-        from taar_gcp_etl_spark.operators.merge import sketch_estimates
-
-        df = sketch_estimates(df, measures)
-    for out, spec in (derive or {}).items():
-        stat, names = spec[0], spec[1:]
-        if stat == "avg":
-            s, n = (F.col(c) for c in names)
-            expr = F.when(n > 0, s / n)
-        elif stat in ("var", "stddev"):
-            q, s, n = (F.col(c) for c in names)
-            expr = F.when(n > 0, q / n - (s / n) * (s / n))
-            if stat == "stddev":
-                # clamp tiny negative rounding residue before sqrt —
-                # under the n>0 guard, or greatest(NULL, 0) would turn
-                # an empty group's NULL into stddev 0
-                expr = F.when(
-                    n > 0, F.sqrt(F.greatest(expr, F.lit(0.0)))
-                )
-        else:
-            raise ValueError(
-                f"derive {out!r}: stat {stat!r} not in "
-                "('avg', 'var', 'stddev')"
-            )
-        df = df.withColumn(out, expr)
-    return df
-
-
 def _cdc_prune_plan(
     man: dict, table_dir: str, filters: list[tuple]
 ) -> dict:
@@ -4106,7 +3607,7 @@ def _cdc_prune_plan(
     ONE physical group, in which case the reader skips nothing inside
     kept files. ``kept_file_rows`` (all rows of kept files) is the
     matching pessimistic bound; cost gates should price between the
-    two (the IVM gate blends them). A slice missing stats for a
+    two. A slice missing stats for a
     filtered column is kept conservatively; entries without slice
     stats count all their rows when the file-level envelope overlaps
     (making kept_rows == kept_file_rows there).
@@ -4232,10 +3733,11 @@ def scan_cdc_pruned(
     candidates (a superseded bucket's file may linger in an old dir).
 
     Returns None for an empty selection. ``kept_paths`` lets a caller
-    that already ran the metadata pass (_cdc_kept_files — e.g. the IVM
-    prune cost gate) hand the result over instead of recomputing it —
-    such a caller must have verified there are no unstated (pre-stats)
-    dirs, since the plan that produced the list owns that knowledge.
+    that already ran the metadata pass (_cdc_prune_plan — e.g.
+    merge_into's NBS prune) hand the result over instead of recomputing
+    it — such a caller must have verified there are no unstated
+    (pre-stats) dirs, since the plan that produced the list owns that
+    knowledge.
     ``raw=True`` returns the RESOLVED keyed state (latest row per key,
     overlay tombstones applied) with ``DELETED_COL`` and the seq column
     still visible and NO residual applied — the merge_into NBS pass
@@ -4320,12 +3822,14 @@ def scan_cdc_pruned(
             od, allowMissingColumns=True
         )
     if out is None:
-        # every file pruned: empty result with the table's schema
-        any_dir = next(iter(man["buckets"].values()), None)
-        if any_dir is None:
+        # every file pruned: empty result with the manifest's schema
+        # (the dirs may hold no file to infer one from)
+        if not man["buckets"]:
             return None
-        out = spark.read.parquet(f"{table_dir}/{any_dir}").filter(
-            F.lit(False)
+        from pyspark.sql.types import StructType
+
+        out = spark.createDataFrame(
+            [], StructType.fromDDL(_ddl(man["schema"]))
         )
     if overlay_dirs:
         from pyspark.sql import Window
@@ -4369,12 +3873,8 @@ def maintain_cdc_table(
        differs from the table's current count — ordered after the
        rewrites so the re-hash isn't immediately invalidated.
     4. **Vacuum** (`vacuum_txn`) last, with a grace window defaulting
-       to an hour so a concurrent writer's in-flight snapshot survives.
-
-    Tables that belong to a GROUP should vacuum through
-    `table_group.group_vacuum` instead of step 4 (pass
-    ``vacuum_keep_last=0`` here to skip it) — member retention must
-    respect the group vectors' pins.
+       to an hour so a concurrent writer's in-flight snapshot survives;
+       ``vacuum_keep_last=0`` skips it.
 
     Returns {compacted_version, tombstone_version, rescaled_version,
     vacuum} (None entries = not due)."""

@@ -135,9 +135,8 @@ class TestCommitClusteredAndPrune:
         assert got == exp and len(exp) > 0
 
     def test_in_list_prunes_like_equalities(self, spark, table):
-        """The 'in' op (IVM recompute's touched-key filter) keeps a
-        file iff ANY listed value intersects its [min, max]; a list of
-        out-of-domain values reads zero files."""
+        """The 'in' op keeps a file iff ANY listed value intersects its
+        [min, max]; a list of out-of-domain values reads zero files."""
         rep = layout.prune_report(spark, table, [("o_custkey", "in", [7])])
         eq = layout.prune_report(spark, table, [("o_custkey", "=", 7)])
         assert rep == eq

@@ -625,45 +625,6 @@ def test_alternating_cc_matches_propagation(spark, pairs):
 
 
 @settings(
-    max_examples=40,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    h=st.integers(min_value=1, max_value=24),
-    w=st.integers(min_value=1, max_value=24),
-    n_colors=st.integers(min_value=2, max_value=200),
-    interlace=st.booleans(),
-    clear_every=st.integers(min_value=1, max_value=64),
-    use_lct=st.booleans(),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_gif_lzw_roundtrip_property(
-    spark, h, w, n_colors, interlace, clear_every, use_lct, seed
-):
-    """GIF decode is the exact inverse of the spec-built test encoder
-    for ANY size / palette cardinality / interlace flag / clear
-    cadence — the property that pins the variable-width LZW bit
-    unpacking, dictionary growth, and 4-pass de-interleave against
-    off-by-one regressions (encoder and decoder share no code)."""
-    import numpy as np
-
-    from taar_gcp_etl_spark.operators.gif import decode_gif
-    from tests.test_streaming_multimodal_sources import _gif_bytes
-
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, size=(n_colors, 3)).astype(np.uint8)
-    idx = rng.randint(0, n_colors, size=(h, w)).astype(np.uint8)
-    blob = _gif_bytes(
-        idx, pal, interlace=interlace, use_lct=use_lct,
-        clear_every=clear_every,
-    )
-    got = decode_gif(blob)
-    assert got.shape == (h, w, 3)
-    assert np.array_equal(got, pal[idx])
-
-
-@settings(
     max_examples=15,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
@@ -730,96 +691,6 @@ def test_remove_repeated_spans_matches_pure_python(
         ).collect()
     }
     assert got == expect
-
-
-@settings(
-    max_examples=60,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    sizes=st.lists(st.integers(1, 200), min_size=1, max_size=40),
-    chunk_seed=st.integers(0, 2**31 - 1),
-    uniform=st.booleans(),
-    wide=st.booleans(),
-)
-def test_mp4_sample_walk_recovers_exact_ranges(
-    sizes, chunk_seed, uniform, wide
-):
-    """Property: for ANY sample-size list and ANY chunk grouping, the
-    stsc/stco/stsz walk locates every sample's exact bytes — checked
-    against a spec-built container whose samples are content-addressed
-    (sample k's payload starts with k's big-endian index), so a
-    misplaced offset or size cannot match. Exercises uniform-size stsz
-    (const field) and co64 wide offsets alongside the common shapes."""
-    import random
-    import struct as st_
-
-    from taar_gcp_etl_spark.operators.mp4 import (
-        _boxes,
-        _parse_track,
-        _sample_ranges,
-        parse_mp4,
-    )
-    from tests.test_streaming_multimodal_sources import _mp4_bytes
-
-    rng = random.Random(chunk_seed)
-    if uniform:
-        sizes = [max(4, sizes[0])] * len(sizes)
-    else:
-        sizes = [max(4, s) for s in sizes]
-    samples = [
-        st_.pack(">I", k) + bytes(
-            (k * 7 + j) % 256 for j in range(sz - 4)
-        )
-        for k, sz in enumerate(sizes)
-    ]
-    # random chunk grouping summing to len(samples)
-    chunking, left = [], len(samples)
-    while left:
-        take = rng.randint(1, left)
-        chunking.append(take)
-        left -= take
-    blob = _mp4_bytes(samples, 16, 16, chunking=chunking,
-                      stsz_const=uniform)
-    if wide:
-        # co64 variant: rewrite the stco box as co64 with u64 offsets
-        # (spec layout change only — same offsets)
-        i = blob.find(b"stco")
-        assert i > 0
-        size = st_.unpack_from(">I", blob, i - 4)[0]
-        body = blob[i + 4:i - 4 + size]
-        n = st_.unpack_from(">I", body, 4)[0]
-        offs = [
-            st_.unpack_from(">I", body, 8 + 4 * k)[0] for k in range(n)
-        ]
-        new_body = body[:8] + b"".join(st_.pack(">Q", o) for o in offs)
-        new_box = st_.pack(">I", len(new_body) + 8) + b"co64" + new_body
-        grew = len(new_box) - size
-        blob = blob[:i - 4] + new_box + blob[i - 4 + size:]
-        # growing moov doesn't move mdat (moov is written LAST), but
-        # every enclosing box size must grow too
-        out = bytearray(blob)
-        for t in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-            j = out.find(t)
-            st_.pack_into(
-                ">I", out, j - 4,
-                st_.unpack_from(">I", out, j - 4)[0] + grew,
-            )
-        blob = bytes(out)
-    info = parse_mp4(blob)
-    assert info["tracks"][0]["n_samples"] == len(samples)
-    top = list(_boxes(blob, 0, len(blob)))
-    moov = next((p, e) for t, p, e in top if t == "moov")
-    trak = next(
-        (p, e) for t, p, e in _boxes(blob, moov[0], moov[1])
-        if t == "trak"
-    )
-    trk = _parse_track(blob, *trak)
-    ranges = _sample_ranges(blob, *trk["_stbl"])
-    assert len(ranges) == len(samples)
-    for k, (off, sz) in enumerate(ranges):
-        assert blob[off:off + sz] == samples[k]
 
 
 # --- merge_into vs a dict model ---------------------------------------

@@ -125,11 +125,12 @@ class TestCrashWindow:
         the manifest rename. The table must still read as the previous
         version (orphan snapshot invisible), and re-running the batch
         must apply it exactly once."""
-        t = str(tmp_path / "mv")
-        measures = {"total": ("sum", "v"), "n": ("count", "v")}
-        b1 = spark.createDataFrame([(1, 2.0), (2, 1.0)], ["k", "v"])
-        b2 = spark.createDataFrame([(1, 5.0)], ["k", "v"])
-        assert txn.refresh_aggregate_store_txn(b1, t, ["k"], measures, 0)
+        t = str(tmp_path / "dim")
+        b1 = spark.createDataFrame(
+            [(1, "a0", 1, "I"), (2, "b0", 2, "I")], CDC_SCHEMA
+        )
+        b2 = spark.createDataFrame([(1, "a1", 3, "U")], CDC_SCHEMA)
+        assert txn.apply_cdc_batch_txn(b1, t, epoch_id=0) == 1
 
         real_write = txn._write_bytes
         boom = RuntimeError("killed before manifest publish")
@@ -141,25 +142,22 @@ class TestCrashWindow:
 
         monkeypatch.setattr(txn, "_write_bytes", dying_write)
         with pytest.raises(RuntimeError, match="killed before"):
-            txn.refresh_aggregate_store_txn(b2, t, ["k"], measures, 1)
+            txn.apply_cdc_batch_txn(b2, t, epoch_id=1)
         monkeypatch.undo()
 
         # crash left the table at epoch-0 state — no partial apply
         assert txn.latest_manifest(spark, t)["version"] == 1
-        assert {
-            r.k: (r.total, r.n)
-            for r in txn.read_txn(spark, t).collect()
-        } == {1: (2.0, 1), 2: (1.0, 1)}
+        assert _rows(txn.read_cdc_table(spark, t)) == {
+            1: ("a0", 1), 2: ("b0", 2)
+        }
 
         # replayed batch applies EXACTLY once; a second replay is skipped
-        assert txn.refresh_aggregate_store_txn(b2, t, ["k"], measures, 1)
-        assert not txn.refresh_aggregate_store_txn(
-            b2, t, ["k"], measures, 1
-        )
-        assert {
-            r.k: (r.total, r.n)
-            for r in txn.read_txn(spark, t).collect()
-        } == {1: (7.0, 2), 2: (1.0, 1)}
+        assert txn.apply_cdc_batch_txn(b2, t, epoch_id=1) == 2
+        assert txn.apply_cdc_batch_txn(b2, t, epoch_id=1) is None
+        assert txn.latest_manifest(spark, t)["version"] == 2
+        assert _rows(txn.read_cdc_table(spark, t)) == {
+            1: ("a1", 3), 2: ("b0", 2)
+        }
 
         # the orphan snapshot from the crash is garbage-collected
         report = txn.vacuum_txn(spark, t, keep_last=2)
@@ -1437,481 +1435,6 @@ class TestRescaleBuckets:
             )
 
 
-class TestIncrementalViewSync:
-    """sync_aggregate_from_cdc: a materialized aggregate over a
-    CDC-maintained table stays equal to a full re-aggregate of the live
-    rows after every sync — through updates, group moves, deletes, and
-    replays — while reading the source only through the bucket-granular
-    change feed."""
-
-    SRC = "id long, grp string, val long, seq long, op string"
-    MEASURES = {"total": ("sum", "val"), "n": ("count", "*")}
-
-    def _apply(self, spark, src, rows):
-        return txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(rows, self.SRC), src,
-            key_col="id", n_buckets=8,
-        )
-
-    def _expect(self, spark, src, measures):
-        from taar_gcp_etl_spark.operators.merge import _measure_agg
-
-        live = txn.read_cdc_table(spark, src)
-        mnames = sorted(measures)
-        return {
-            r.grp: tuple(r[m] for m in mnames)
-            for r in live.groupBy("grp")
-            .agg(*[_measure_agg(measures[m]).alias(m) for m in mnames])
-            .collect()
-        }
-
-    def _got(self, spark, store, measures):
-        df = txn.read_aggregate_store(spark, store)
-        mnames = sorted(measures)
-        assert set(df.columns) == {"grp", *mnames}  # counters hidden
-        return {r.grp: tuple(r[m] for m in mnames) for r in df.collect()}
-
-    def test_retraction_path_tracks_updates_moves_deletes(
-        self, spark, tmp_path
-    ):
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "mv")
-        self._apply(spark, src, [
-            (1, "a", 10, 1, "I"), (2, "a", 20, 2, "I"),
-            (3, "b", 5, 3, "I"), (4, "b", None, 4, "I"),
-        ])
-        v = txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"], self.MEASURES
-        )
-        assert v == 1
-        assert self._got(spark, store, self.MEASURES) == self._expect(
-            spark, src, self.MEASURES
-        )
-        # update value, MOVE a row a->b, delete one row
-        self._apply(spark, src, [
-            (1, "a", 11, 10, "U"),      # value update in place
-            (2, "b", 20, 11, "U"),      # group move: a loses, b gains
-            (3, None, None, 12, "D"),   # delete
-            (5, "c", 7, 13, "I"),       # new group
-        ])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        assert self._got(spark, store, self.MEASURES) == self._expect(
-            spark, src, self.MEASURES
-        )
-        # empty group a entirely: it must vanish from the store
-        self._apply(spark, src, [(1, None, None, 20, "D")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        got = self._got(spark, store, self.MEASURES)
-        assert "a" not in got
-        assert got == self._expect(spark, src, self.MEASURES)
-        # replay: already at source version -> no-op, store unchanged
-        assert txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"], self.MEASURES
-        ) is None
-        assert got == self._got(spark, store, self.MEASURES)
-
-    def test_sum_returns_to_null_when_nonnull_inputs_retract(
-        self, spark, tmp_path
-    ):
-        """The _nn counter edge: a group whose only non-null value is
-        deleted must show sum NULL again (full-re-aggregate parity),
-        not a frozen 0."""
-        src = str(tmp_path / "srcn")
-        store = str(tmp_path / "mvn")
-        self._apply(spark, src, [(1, "g", None, 1, "I")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        assert self._got(spark, store, self.MEASURES)["g"] == (1, None)
-        self._apply(spark, src, [(2, "g", 42, 2, "I")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        assert self._got(spark, store, self.MEASURES)["g"] == (2, 42)
-        self._apply(spark, src, [(2, None, None, 3, "D")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        assert self._got(spark, store, self.MEASURES)["g"] == (1, None)
-        assert self._got(spark, store, self.MEASURES) == self._expect(
-            spark, src, self.MEASURES
-        )
-
-    def test_null_group_key_is_a_group(self, spark, tmp_path):
-        src = str(tmp_path / "srcg")
-        store = str(tmp_path / "mvg")
-        self._apply(spark, src, [
-            (1, None, 3, 1, "I"), (2, None, 4, 2, "I"), (3, "x", 9, 3, "I"),
-        ])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        assert self._got(spark, store, self.MEASURES) == self._expect(
-            spark, src, self.MEASURES
-        )
-        self._apply(spark, src, [(1, None, None, 9, "D")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        got = self._got(spark, store, self.MEASURES)
-        assert got[None] == (1, 4)
-        assert got == self._expect(spark, src, self.MEASURES)
-
-    def test_minmax_recompute_path(self, spark, tmp_path):
-        """Deleting the current max forces the group's recompute — the
-        retraction identity cannot produce the new max."""
-        measures = {"mx": ("max", "val"), "mn": ("min", "val")}
-        src = str(tmp_path / "srcm")
-        store = str(tmp_path / "mvm")
-        self._apply(spark, src, [
-            (1, "a", 10, 1, "I"), (2, "a", 99, 2, "I"), (3, "b", 7, 3, "I"),
-        ])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert self._got(spark, store, measures) == self._expect(
-            spark, src, measures
-        )
-        self._apply(spark, src, [(2, None, None, 10, "D")])  # drop the max
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        got = self._got(spark, store, measures)
-        assert got["a"] == (10, 10)
-        assert got == self._expect(spark, src, measures)
-        # untouched group b must have survived the splice unchanged
-        assert got["b"] == (7, 7)
-
-    def test_approx_distinct_measure_tracks_live_rows(
-        self, spark, tmp_path
-    ):
-        """approx_distinct routes through the group-targeted recompute
-        (an HLL sketch cannot forget a value): after updates and
-        deletes the estimate equals the exact distinct count of the
-        LIVE rows (exact at these cardinalities), read back as a number
-        via read_aggregate_store(measures=)."""
-        measures = {"u": ("approx_distinct", "val"), "mx": ("max", "val")}
-        src = str(tmp_path / "srch")
-        store = str(tmp_path / "mvh")
-        self._apply(spark, src, [
-            (1, "a", 10, 1, "I"), (2, "a", 10, 2, "I"),
-            (3, "a", 30, 3, "I"), (4, "b", 7, 4, "I"),
-        ])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-
-        def got():
-            df = txn.read_aggregate_store(spark, store, measures=measures)
-            assert dict(df.dtypes)["u"] == "bigint"
-            return {r.grp: (r.u, r.mx) for r in df.collect()}
-
-        assert got() == {"a": (2, 30), "b": (1, 7)}
-        # delete one of the duplicated-value rows: distinct unchanged;
-        # delete the unique 30: distinct drops — a sketch-union store
-        # could never produce this, only the recompute can
-        self._apply(spark, src, [(1, None, None, 10, "D")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert got() == {"a": (2, 30), "b": (1, 7)}
-        self._apply(spark, src, [(3, None, None, 11, "D")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert got() == {"a": (1, 10), "b": (1, 7)}
-
-    def test_insert_only_window_merges_without_source_read(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """An insert-only change window maintains min/max/HLL stores by
-        MERGE (least/greatest/sketch-union), never reading the source:
-        read_cdc_table and scan_cdc_pruned must not be called; deletes
-        re-engage the recompute; a NULL group key disqualifies the fast
-        path (plain-equality joins would split the null group)."""
-        measures = {"mx": ("max", "val"), "u": ("approx_distinct", "val")}
-        src = str(tmp_path / "srci")
-        store = str(tmp_path / "mvi")
-        self._apply(spark, src, [(1, "a", 10, 1, "I"), (2, "b", 5, 2, "I")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-
-        reads = []
-        real_read, real_scan = txn.read_cdc_table, txn.scan_cdc_pruned
-        monkeypatch.setattr(
-            txn, "read_cdc_table",
-            lambda *a, **k: (reads.append("full"), real_read(*a, **k))[1],
-        )
-        monkeypatch.setattr(
-            txn, "scan_cdc_pruned",
-            lambda *a, **k: (reads.append("pruned"), real_scan(*a, **k))[1],
-        )
-
-        def got():
-            df = txn.read_aggregate_store(spark, store, measures=measures)
-            return {r.grp: (r.mx, r.u) for r in df.collect()}
-
-        # insert-only window: new group + growth of an existing one
-        self._apply(spark, src, [
-            (3, "a", 99, 3, "I"), (4, "c", 7, 4, "I"),
-        ])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert reads == []  # merged, no source scan
-        assert got() == {"a": (99, 2), "b": (5, 1), "c": (7, 1)}
-
-        # a delete re-engages the recompute (and may prune)
-        self._apply(spark, src, [(3, None, None, 9, "D")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert reads != []
-        assert got() == {"a": (10, 1), "b": (5, 1), "c": (7, 1)}
-
-        # NULL group key: fast path declined, result still exact
-        reads.clear()
-        self._apply(spark, src, [(5, None, 42, 10, "I")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert reads != []
-        assert got() == {
-            "a": (10, 1), "b": (5, 1), "c": (7, 1), None: (42, 1),
-        }
-        assert got() == {
-            r.grp: (r.mx, r.u)
-            for r in txn.read_cdc_table(spark, src)
-            .groupBy("grp")
-            .agg(
-                F.max("val").alias("mx"),
-                F.countDistinct("val").alias("u"),
-            )
-            .collect()
-        }
-
-    def test_minmax_recompute_prunes_zone_mapped_source(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """NEXT.md r6 #6: when the source carries zone maps on the
-        group key, the recompute reads only files whose stats intersect
-        the touched keys — asserted by spying scan_cdc_pruned AND by
-        the prune report, with the result still equal to a full
-        re-aggregate. The cost gate is overridden to 1.0 here: this
-        tests the MECHANISM; the gate policy has its own test."""
-        measures = {"mx": ("max", "val"), "mn": ("min", "val")}
-        src = str(tmp_path / "srcz")
-        store = str(tmp_path / "mvz")
-
-        def apply(rows):
-            txn.apply_cdc_batch_bucketed(
-                spark.createDataFrame(rows, self.SRC), src,
-                key_col="id", n_buckets=4, stats_cols=["grp"],
-            )
-
-        # two batches with disjoint group ranges → per-file grp stats
-        # that separate them
-        apply([(i, "aaa", i * 10, i, "I") for i in range(1, 5)])
-        apply([(i, "zzz", i * 10, i, "I") for i in range(10, 14)])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-
-        monkeypatch.setattr(txn, "_IVM_PRUNE_MAX_KEPT_FRACTION", 1.0)
-        calls = []
-        real = txn.scan_cdc_pruned
-
-        def spy(spark_, table_dir, filters, **kw):
-            calls.append(filters)
-            return real(spark_, table_dir, filters, **kw)
-
-        monkeypatch.setattr(txn, "scan_cdc_pruned", spy)
-        apply([(2, None, None, 100, "D")])  # drop group aaa's max
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert calls == [[("grp", "in", ["aaa"])]]
-        rep = txn.cdc_prune_report(spark, src, calls[0])
-        assert 0 < rep["kept_files"] < rep["total_files"], rep
-        got = self._got(spark, store, measures)
-        assert got == self._expect(spark, src, measures)
-        assert got["zzz"] == (100, 130)  # untouched group spliced intact
-
-        # touched NULL group key: pruning must stand down, result exact
-        apply([(20, None, 5, 101, "I"), (21, "aaa", 1, 102, "I")])
-        calls.clear()
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert calls == []  # fell back to the full live scan
-        assert self._got(spark, store, measures) == self._expect(
-            spark, src, measures
-        )
-
-        # in-list cap: beyond it the filter degrades to the min/max
-        # range (group move aaa→bbb + insert ccc: a retraction window,
-        # so the recompute — not the insert-only merge — runs)
-        monkeypatch.setattr(txn, "_IVM_IN_CAP", 1)
-        calls.clear()
-        apply([(21, "bbb", 2, 103, "U"), (23, "ccc", 3, 104, "I")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert calls == [[("grp", "between", ("aaa", "ccc"))]]
-        assert self._got(spark, store, measures) == self._expect(
-            spark, src, measures
-        )
-
-        # opt-out flag bypasses the pruned scan entirely (delete forces
-        # the recompute branch; with pruning off it reads the full live
-        # set)
-        calls.clear()
-        apply([(10, None, None, 105, "D")])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"], measures, prune_recompute=False
-        )
-        assert calls == []
-        assert self._got(spark, store, measures) == self._expect(
-            spark, src, measures
-        )
-
-    def test_prune_cost_gate_falls_back_when_little_is_skipped(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """The metadata cost gate: when the touched-key filters keep
-        more than _IVM_PRUNE_MAX_KEPT_FRACTION of candidate files, the
-        pruned scan (many per-file reads) loses to the plain dir scan —
-        measured 1.8x at 44% kept in the sf1 soak — so the sync must
-        fall back, and stay correct."""
-        measures = {"mx": ("max", "val")}
-        src = str(tmp_path / "srcg2")
-        store = str(tmp_path / "mvg2")
-
-        def apply(rows):
-            txn.apply_cdc_batch_bucketed(
-                spark.createDataFrame(rows, self.SRC), src,
-                key_col="id", n_buckets=4, stats_cols=["grp"],
-            )
-
-        # one commit, all groups mixed in every file: any filter keeps
-        # every file (kept fraction 1.0 > 0.25)
-        apply([(i, f"g{i % 3}", i, i, "I") for i in range(1, 13)])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        calls = []
-        real = txn.scan_cdc_pruned
-        monkeypatch.setattr(
-            txn, "scan_cdc_pruned",
-            lambda *a, **k: (calls.append(a[2]), real(*a, **k))[1],
-        )
-        apply([(1, None, None, 99, "D")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert calls == []  # gate declined the prune
-        assert self._got(spark, store, measures) == self._expect(
-            spark, src, measures
-        )
-
-    def test_composite_key_second_column_rides_residual(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """NEXT r8 #5: for a store keyed (grp, reg) where only grp is
-        stats-covered, the touched-group filters now include a reg
-        in-list — the manifest plan prices files on grp alone (sound:
-        unknown columns are kept conservatively) while the residual
-        pushed onto the base scan carries reg too, so the parquet
-        reader's native stats skip inside kept files and the semi-join
-        probe shrinks. Result stays equal to a full re-aggregate."""
-        schema = (
-            "id long, grp string, reg string, val long, seq long, "
-            "op string"
-        )
-        measures = {"mx": ("max", "val"), "mn": ("min", "val")}
-        src = str(tmp_path / "srccomp")
-        store = str(tmp_path / "mvcomp")
-
-        def apply(rows):
-            txn.apply_cdc_batch_bucketed(
-                spark.createDataFrame(rows, schema), src,
-                key_col="id", n_buckets=4, stats_cols=["grp"],
-            )
-
-        def expect():
-            return {
-                (r.grp, r.reg): (r.mx, r.mn)
-                for r in txn.read_cdc_table(spark, src)
-                .groupBy("grp", "reg")
-                .agg(F.max("val").alias("mx"), F.min("val").alias("mn"))
-                .collect()
-            }
-
-        def got():
-            return {
-                (r.grp, r.reg): (r.mx, r.mn)
-                for r in txn.read_aggregate_store(spark, store).collect()
-            }
-
-        apply([(i, "aaa", f"r{i % 2}", i * 10, i, "I")
-               for i in range(1, 5)])
-        apply([(i, "zzz", f"r{i % 2}", i * 10, i, "I")
-               for i in range(10, 14)])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp", "reg"], measures
-        )
-        monkeypatch.setattr(txn, "_IVM_PRUNE_MAX_KEPT_FRACTION", 1.0)
-        calls = []
-        real = txn.scan_cdc_pruned
-        monkeypatch.setattr(
-            txn, "scan_cdc_pruned",
-            lambda *a, **k: (calls.append(a[2]), real(*a, **k))[1],
-        )
-        apply([(2, None, None, None, 100, "D")])  # touches (aaa, r0)
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp", "reg"], measures
-        )
-        assert calls == [
-            [("grp", "in", ["aaa"]), ("reg", "in", ["r0"])]
-        ]
-        assert got() == expect()
-
-        # NULL in the residual-only column: reg contributes no filter,
-        # grp still prunes files
-        calls.clear()
-        apply([(30, "aaa", None, 7, 101, "I")])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp", "reg"], measures
-        )
-        assert calls == [[("grp", "in", ["aaa"])]]
-        assert got() == expect()
-
-        # stats-covered key NULL, residual-only key intact: no FILE can
-        # be pruned soundly, so the whole prune stands down
-        calls.clear()
-        apply([(31, None, "r1", 9, 102, "I")])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp", "reg"], measures
-        )
-        assert calls == []
-        assert got() == expect()
-
-    def test_prune_survives_bucket_rescale(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """A sync window spanning rescale_buckets still prunes: the
-        full-rewrite manifest recollects per-dir zone maps, the rescale
-        records an empty change file (CDF netting spans it), and the
-        recompute reads only stat-intersecting files of the NEW layout."""
-        measures = {"mx": ("max", "val"), "mn": ("min", "val")}
-        src = str(tmp_path / "srcr")
-        store = str(tmp_path / "mvr")
-
-        def apply(rows, nb=2):
-            txn.apply_cdc_batch_bucketed(
-                spark.createDataFrame(rows, self.SRC), src,
-                key_col="id", n_buckets=nb, stats_cols=["grp"],
-            )
-
-        apply([(i, "aaa", i * 10, i, "I") for i in range(1, 5)])
-        apply([(i, "zzz", i * 10, i, "I") for i in range(10, 14)])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-
-        assert txn.rescale_buckets(spark, src, 8) is not None
-        monkeypatch.setattr(txn, "_IVM_PRUNE_MAX_KEPT_FRACTION", 1.0)
-        calls = []
-        real = txn.scan_cdc_pruned
-        monkeypatch.setattr(
-            txn, "scan_cdc_pruned",
-            lambda *a, **k: (calls.append(a[2]), real(*a, **k))[1],
-        )
-        apply([(13, None, None, 100, "D")], nb=None)  # drop zzz's max
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        assert calls == [[("grp", "in", ["zzz"])]]
-        assert self._got(spark, store, measures) == self._expect(
-            spark, src, measures
-        )
-        rep = txn.cdc_prune_report(spark, src, calls[0])
-        assert 0 < rep["kept_files"] < rep["total_files"], rep
-
-    def test_cursor_survives_multi_version_gaps(self, spark, tmp_path):
-        """Several source commits between syncs: one sync catches up
-        across all of them (the CDF diffs last-synced..latest)."""
-        src = str(tmp_path / "srcc")
-        store = str(tmp_path / "mvc")
-        self._apply(spark, src, [(1, "a", 1, 1, "I")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        self._apply(spark, src, [(2, "a", 2, 2, "I")])
-        self._apply(spark, src, [(1, "a", 5, 3, "U")])
-        self._apply(spark, src, [(3, "b", 9, 4, "I")])
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], self.MEASURES)
-        assert self._got(spark, store, self.MEASURES) == self._expect(
-            spark, src, self.MEASURES
-        )
-        assert txn.latest_manifest(spark, store)["epoch_id"] == 4
-
-
 class TestCdcZoneMaps:
     """Zone-map pruning over the bucketed CDC layout: time-correlated
     ingest leaves each commit's dir covering a narrow seq/date range,
@@ -2018,13 +1541,13 @@ class TestCdcZoneMaps:
         )
 
     def test_midlife_stats_adoption_keeps_pre_adoption_rows(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path
     ):
         """r7 review repro: a table that adopts stats_cols mid-life has
         file_stats only for post-adoption dirs. The pruned scan must
         read pre-adoption dirs WHOLESALE (their owned buckets), not
-        silently drop their rows; the report exposes them and the IVM
-        gate declines while any exist."""
+        silently drop their rows; the report exposes them until a full
+        rewrite restates every dir."""
         from taar_gcp_etl_spark.layout import _residual
 
         t = str(tmp_path / "zm-adopt")
@@ -2052,19 +1575,10 @@ class TestCdcZoneMaps:
             assert got == expect and len(got) > 0, filters
         rep = txn.cdc_prune_report(spark, t, [("day", "=", 1)])
         assert rep["unstated_dirs"]
-        touched = spark.createDataFrame([(9,)], "day long")
-        monkeypatch.setattr(txn, "_IVM_PRUNE_MAX_KEPT_FRACTION", 1.0)
-        assert txn._pruned_live_for_groups(
-            spark, t, man, touched, ["day"], man["version"]
-        ) is None
-        # once every dir is post-adoption (full rewrite), pruning wakes
+        # once every dir is post-adoption (full rewrite), none is unstated
         txn.compact_cdc_tombstones(spark, t, min_live_seq=0)
-        man = txn.latest_manifest(spark, t)
         rep = txn.cdc_prune_report(spark, t, [("day", "=", 9)])
         assert not rep["unstated_dirs"]
-        assert txn._pruned_live_for_groups(
-            spark, t, man, touched, ["day"], man["version"]
-        ) is not None
 
     def test_stats_cols_sticky_across_batches(self, spark, tmp_path):
         t = str(tmp_path / "zm-sticky")
@@ -2076,127 +1590,6 @@ class TestCdcZoneMaps:
         man = txn.latest_manifest(spark, t)
         assert man["stats_cols"] == ["day"]
         assert len(man["file_stats"]) == 2  # both dirs carry zone maps
-
-
-class TestSumSqMeasure:
-    """r7: 'sum_sq' joins the mergeable/invertible vocabulary — the
-    second moment, so variance/stddev derive from (sum_sq, sum, count)
-    through every maintenance path with no exact-state store."""
-
-    SRC = "id long, grp string, val double, seq long, op string"
-    MEASURES = {"s": ("sum", "val"), "q": ("sum_sq", "val"),
-                "n": ("count", "val")}
-
-    def _apply(self, spark, src, rows):
-        return txn.apply_cdc_batch_bucketed(
-            spark.createDataFrame(rows, self.SRC), src,
-            key_col="id", n_buckets=4,
-        )
-
-    def _got(self, spark, store):
-        return {
-            r.grp: (r.s, r.q, r.n)
-            for r in txn.read_aggregate_store(spark, store).collect()
-        }
-
-    def _expect(self, spark, src):
-        return {
-            r.grp: (r.s, r.q, r.n)
-            for r in txn.read_cdc_table(spark, src)
-            .groupBy("grp")
-            .agg(
-                F.sum("val").alias("s"),
-                F.sum(F.col("val") * F.col("val")).alias("q"),
-                F.count("val").alias("n"),
-            )
-            .collect()
-        }
-
-    def test_invertible_through_churn_with_null_parity(
-        self, spark, tmp_path, monkeypatch
-    ):
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "mv")
-        self._apply(spark, src, [
-            (1, "a", 3.0, 1, "I"), (2, "a", 4.0, 1, "I"),
-            (3, "b", 5.0, 1, "I"), (4, "c", None, 1, "I"),
-        ])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"], self.MEASURES
-        )
-        assert self._got(spark, store) == self._expect(spark, src)
-        # all-sum_sq/sum/count measures: churn must take the INVERTIBLE
-        # path (no source read), and stay exact through update + delete
-        reads = []
-        monkeypatch.setattr(
-            txn, "read_cdc_table",
-            lambda *a, **k: reads.append(1) or (_ for _ in ()).throw(
-                AssertionError("invertible sync must not read source")
-            ),
-        )
-        self._apply(spark, src, [
-            (1, "a", 7.0, 2, "U"),            # 3.0 -> 7.0
-            (3, None, None, 2, "D"),          # b retires
-            (5, "c", 2.0, 2, "I"),            # c gains a non-null
-        ])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"], self.MEASURES
-        )
-        monkeypatch.undo()
-        got = self._got(spark, store)
-        assert got == self._expect(spark, src)
-        assert got["a"] == (11.0, 65.0, 2)    # 7+4, 49+16
-        assert "b" not in got                 # group retired
-        assert got["c"] == (2.0, 4.0, 1)      # NULL parity: was (None,
-        #                                       None, 0) before the ins
-        # derived variance matches an exact stddev_pop over live rows
-        s, q, n = got["a"]
-        var = q / n - (s / n) ** 2
-        exact = (
-            txn.read_cdc_table(spark, src)
-            .filter(F.col("grp") == "a")
-            .agg(F.var_pop("val")).first()[0]
-        )
-        assert abs(var - exact) < 1e-9
-
-    def test_derived_moment_faces(self, spark, tmp_path):
-        """read_aggregate_store(derive=) presents avg/var/stddev from
-        the stored moments — population forms, NULL on empty count —
-        matching exact aggregates over the live rows."""
-        import math
-
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "mv")
-        self._apply(spark, src, [
-            (1, "a", 3.0, 1, "I"), (2, "a", 4.0, 1, "I"),
-            (3, "a", 8.0, 1, "I"), (4, "c", None, 1, "I"),
-        ])
-        txn.sync_aggregate_from_cdc(
-            spark, src, store, ["grp"], self.MEASURES
-        )
-        got = {
-            r.grp: (r.mean, r.v, r.sd)
-            for r in txn.read_aggregate_store(
-                spark, store,
-                derive={"mean": ("avg", "s", "n"),
-                        "v": ("var", "q", "s", "n"),
-                        "sd": ("stddev", "q", "s", "n")},
-            ).collect()
-        }
-        exact = txn.read_cdc_table(spark, src).filter(
-            F.col("grp") == "a"
-        ).agg(F.avg("val"), F.var_pop("val"), F.stddev_pop("val")).first()
-        assert got["a"][0] == exact[0]
-        assert abs(got["a"][1] - exact[1]) < 1e-9
-        assert abs(got["a"][2] - exact[2]) < 1e-9
-        assert got["c"] == (None, None, None)  # n=0: no moments
-        assert math.isclose(got["a"][2] ** 2, got["a"][1])
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="not in"):
-            txn.read_aggregate_store(
-                spark, store, derive={"x": ("median", "s", "n")}
-            )
 
 
 class TestClusteredRewritePruning:
@@ -2585,27 +1978,6 @@ class TestFlatCasRetryFreshRead:
             2: ("b2", 10),
         }
 
-    def test_aggregate_refresh_retry_remerges_against_fresh_state(
-        self, spark, tmp_path, monkeypatch
-    ):
-        t = str(tmp_path / "cas-agg")
-        measures = {"total": ("sum", "v")}
-        txn.refresh_aggregate_store_txn(
-            spark.createDataFrame([(1, 2.0)], ["k", "v"]), t, ["k"], measures
-        )
-        stale = txn.latest_manifest(spark, t)
-        txn.refresh_aggregate_store_txn(
-            spark.createDataFrame([(1, 5.0)], ["k", "v"]), t, ["k"], measures
-        )
-        calls = self._stale_once(monkeypatch, stale)
-        assert txn.refresh_aggregate_store_txn(
-            spark.createDataFrame([(1, 1.0)], ["k", "v"]), t, ["k"], measures
-        )
-        monkeypatch.undo()
-        assert calls["n"] >= 2
-        # 2 + 5 + 1: B's partial (5.0) must survive A's retried merge
-        assert txn.read_txn(spark, t).collect()[0].total == 8.0
-
     def test_compaction_retry_refilters_fresh_state(
         self, spark, tmp_path, monkeypatch
     ):
@@ -2928,9 +2300,9 @@ class TestJoinBucketed:
 class TestPruneGateBlend:
     """ADVICE r8: kept_rows (logical-slice model) is an OPTIMISTIC IO
     bound — a rolled file is often ONE physical parquet row group, so
-    the residual may skip nothing inside kept files. The plan now also
-    reports kept_file_rows (pessimistic bound) and the IVM gate prices
-    the mean of the two."""
+    the residual may skip nothing inside kept files. The plan also
+    reports kept_file_rows (pessimistic bound), so a cost gate can
+    price between the two."""
 
     def _man(self):
         return {
@@ -2974,74 +2346,6 @@ class TestPruneGateBlend:
         plan = txn._cdc_prune_plan(man, "/t", [("day", "=", 7)])
         assert plan["kept_rows"] == plan["kept_file_rows"] == 1000
 
-    def test_gate_declines_on_blend_where_slice_model_alone_passed(
-        self, spark, tmp_path
-    ):
-        """End-to-end: every file's slices say a touched-group filter
-        keeps ~1/8 of rows (under the 0.25 gate), but every file's
-        envelope overlaps every group — each kept file may be one
-        physical row group, so the blend ~(0.125 + 1.0)/2 > 0.25 and
-        the sync must fall back to the plain dir scan, staying exact."""
-        schema = "id long, grp long, val long, seq long, op string"
-        measures = {"mx": ("max", "val")}
-        src = str(tmp_path / "srcblend")
-        store = str(tmp_path / "mvblend")
-
-        def apply(rows, seq):
-            txn.apply_cdc_batch_bucketed(
-                spark.createDataFrame(
-                    [(i, g, v, seq, "I") for i, g, v in rows], schema
-                ),
-                src, key_col="id", n_buckets=1, stats_cols=["grp"],
-                # rows interleave all 8 groups; slice ~1/8 of the file
-                # so each slice is nearly group-pure after the
-                # bucket-local sort on grp
-                target_file_rows=4096,
-            )
-
-        n, n_grp = 4096, 8
-        apply([(i, i % n_grp, i) for i in range(n)], seq=1)
-        txn.sync_aggregate_from_cdc(spark, src, store, ["grp"], measures)
-        plan_calls = []
-        real = txn.scan_cdc_pruned
-        import taar_gcp_etl_spark.txn as txn_mod
-
-        orig_plan = txn_mod._cdc_prune_plan
-
-        def spy_plan(*a, **k):
-            p = orig_plan(*a, **k)
-            plan_calls.append(p)
-            return p
-
-        txn_mod._cdc_prune_plan = spy_plan
-        scan_calls = []
-        txn_mod.scan_cdc_pruned = lambda *a, **k: (
-            scan_calls.append(1), real(*a, **k)
-        )[1]
-        try:
-            apply([(0, 0, 10_000_000)], seq=2)  # touch group 0 only
-            txn.sync_aggregate_from_cdc(
-                spark, src, store, ["grp"], measures
-            )
-        finally:
-            txn_mod._cdc_prune_plan = orig_plan
-            txn_mod.scan_cdc_pruned = real
-        assert plan_calls, "the planner ran"
-        p = plan_calls[-1]
-        slice_frac = p["kept_rows"] / p["total_rows"]
-        blend = (p["kept_rows"] + p["kept_file_rows"]) / (
-            2 * p["total_rows"]
-        )
-        assert slice_frac <= txn._IVM_PRUNE_MAX_KEPT_FRACTION, p
-        assert blend > txn._IVM_PRUNE_MAX_KEPT_FRACTION, p
-        assert scan_calls == []  # gate declined under the blend
-        # and the store is still exact
-        got = {
-            r.grp: r.mx
-            for r in txn.read_aggregate_store(spark, store).collect()
-        }
-        assert got[0] == 10_000_000
-
 
 class TestJoinBucketedRenameCollision:
     """Review fix: the rsuffix rename must not itself collide — a right
@@ -3075,10 +2379,9 @@ class TestJoinBucketedRenameCollision:
 class TestSyncJoinFromCdc:
     """Incremental materialized JOIN view (sync_join_from_cdc): store ==
     live(L) JOIN live(R) on the key columns, maintained from the change
-    feeds with O(touched keys) probes — the join-view sibling of
-    sync_aggregate_from_cdc. Every test's final assertion is equality
-    with a from-scratch join of the live sides (the full-recompute
-    truth)."""
+    feeds with O(touched keys) probes. Every test's final assertion is
+    equality with a from-scratch join of the live sides (the
+    full-recompute truth)."""
 
     L = "id long, lval string, seq long, op string"
     R = "id long, rval string, seq long, op string"
@@ -4839,6 +4142,33 @@ class TestManifestRead:
         )
         live = {r.id: r.val for r in txn.read_cdc_table(spark, t).collect()}
         assert live == {3: "c"}
+
+    def test_fully_retired_stats_table_compacts_and_reads_empty(
+        self, spark, tmp_path
+    ):
+        """The same retirement on a table with zone maps: the stats pass
+        over the empty rewrite dir must not infer a schema from files,
+        so the compaction commits, a pruned read (every file pruned)
+        returns no row and a later merge inserts."""
+        schema = "id long, val string, d long, seq long, op string"
+        t = str(tmp_path / "t")
+        for rows in ([(1, "a", 1, 1, "I"), (2, "b", 1, 1, "I")],
+                     [(1, None, 1, 2, "D"), (2, None, 1, 2, "D")]):
+            txn.apply_cdc_batch_bucketed(
+                spark.createDataFrame(rows, schema), t,
+                n_buckets=8, stats_cols=["d"],
+            )
+        before = txn.latest_manifest(spark, t)["version"]
+        v = txn.compact_cdc_tombstones(spark, t, 2**62)
+        assert v == txn.latest_manifest(spark, t)["version"] == before + 1
+        day1 = [("d", "=", 1)]
+        assert txn.read_cdc_table(spark, t, filters=day1).count() == 0
+        src = spark.createDataFrame(
+            [(3, "c", 1)], "id long, val string, d long"
+        )
+        txn.merge_into(spark, t, src)
+        got = txn.read_cdc_table(spark, t, filters=day1).collect()
+        assert {r.id: r.val for r in got} == {3: "c"}
 
     def test_pruned_read_skips_absent_bucket_dirs(self, spark, tmp_path):
         """A full rewrite maps all 8 buckets to one dir holding at most
