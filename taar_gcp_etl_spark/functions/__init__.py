@@ -6,6 +6,7 @@ cites the reference function it reproduces (F1-F21 in SURVEY.md §2.7).
 
 from taar_gcp_etl_spark.functions.scalars import (
     sha256_key,
+    token_ngrams,
     tokens,
     try_long,
 )
@@ -14,4 +15,5 @@ __all__ = [
     "sha256_key",
     "try_long",
     "tokens",
+    "token_ngrams",
 ]

@@ -18,8 +18,13 @@ Scale design:
     engine mode);
   - tokenization happens AFTER cleaning, so the vocabulary and the
     token-count statistics reflect only surviving documents;
-  - packing's prefix sum orders by doc_id, making shard contents
-    deterministic — a re-run reproduces byte-identical shard membership;
+  - the corpus is tokenized once: the vocabulary fit and the encoding
+    read the cleaned corpus, and packing reads the encoded rows (their
+    n_tokens), so nothing is re-split or joined back on doc_id;
+  - packing's prefix sum orders by doc_id, and shard k holds the k-th of
+    n_shards equal runs of seq_ids, assigned as an exact partition id
+    (no sampled range bounds) — a re-run reproduces byte-identical shard
+    membership;
   - the output is range-sharded on seq_id so each training shard holds a
     contiguous run of sequences (a data loader streams shards in order
     without a shuffle pass).
@@ -47,7 +52,7 @@ def build(
     offset_in_seq, n_seqs_spanned); `vocab` the (token, id) dictionary;
     `attrition` the per-stage drop report."""
     from taar_gcp_etl_spark.jobs import clean_corpus
-    from taar_gcp_etl_spark.operators.packing import pack_sequences
+    from taar_gcp_etl_spark.operators.packing import pack_positions
     from taar_gcp_etl_spark.operators.text import (
         tokenize_to_ids,
         vocab_with_ids,
@@ -56,21 +61,16 @@ def build(
     cleaned, attrition = clean_corpus.run(
         spark, sf_dir, target_lang=target_lang, near_dup_mode=near_dup_mode
     )
-    # cleaned is consumed three times (vocab fit, tokenize, packing scan);
-    # it reads the labeled corpus clean_corpus.run persisted
+    # cleaned is consumed twice (vocab fit, tokenize); it reads the
+    # labeled corpus clean_corpus.run persisted
     vocab = vocab_with_ids(cleaned, vocab_size=vocab_size)
     encoded = tokenize_to_ids(cleaned, vocab)
-    # shuffle_docs=True packs in deterministic hash order instead of
-    # doc_id order — the global pseudo-random permutation a training run
-    # wants (crawl order is domain-correlated); still fully reproducible
-    packed_pos = pack_sequences(cleaned, seq_len, shuffle=shuffle_docs)
-    packed = encoded.join(
-        packed_pos.select(
-            "doc_id", "tokens_before", "seq_id", "offset_in_seq",
-            "n_seqs_spanned",
-        ),
-        "doc_id",
-    )
+    # the encoded rows carry n_tokens, so they are packed as they are: no
+    # second tokenization, no join back on doc_id. shuffle_docs=True packs
+    # in deterministic hash order instead of doc_id order — the global
+    # pseudo-random permutation a training run wants (crawl order is
+    # domain-correlated); still fully reproducible
+    packed = pack_positions(encoded, seq_len, shuffle=shuffle_docs)
     return packed, vocab, attrition
 
 
@@ -98,21 +98,27 @@ def run(
         near_dup_mode=near_dup_mode,
         shuffle_docs=shuffle_docs,
     )
+    stats = packed.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+        F.sum("n_oov").alias("n_oov"),
+    ).collect()[0]
+    total_tokens = int(stats["n_tokens"] or 0)
+    # ceil(total/seq_len): max(seq_id)+1 would undercount when the final
+    # document spans past its starting sequence
+    n_sequences = -(-total_tokens // seq_len)
+    # Shard k holds the k-th of n_shards equal runs of sequences: an exact
+    # partition id, not repartitionByRange, whose bounds come from a
+    # sample seeded by the RDD id — a re-run could move rows across shards
+    shard = F.floor(F.col("seq_id") * n_shards / max(n_sequences, 1))
     (
-        packed.repartitionByRange(n_shards, "seq_id")
+        packed.repartitionById(n_shards, shard.cast("int"))
         .sortWithinPartitions("seq_id", "doc_id")
         .write.mode("overwrite")
         .parquet(f"{out_dir}/packed")
     )
     vocab.write.mode("overwrite").parquet(f"{out_dir}/vocab")
 
-    out = spark.read.parquet(f"{out_dir}/packed")
-    stats = out.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("n_oov").alias("n_oov"),
-    ).collect()[0]
-    total_tokens = int(stats["n_tokens"] or 0)
     manifest = {
         "seq_len": seq_len,
         "vocab_size": vocab_size,
@@ -121,9 +127,7 @@ def run(
         "n_docs": stats["n_docs"],
         "n_tokens": total_tokens,
         "n_oov": int(stats["n_oov"] or 0),
-        # ceil(total/seq_len): max(seq_id)+1 would undercount when the
-        # final document spans past its starting sequence
-        "n_sequences": -(-total_tokens // seq_len),
+        "n_sequences": n_sequences,
         "attrition": {
             r["stage"]: r["count"] for r in attrition.collect()
         },

@@ -6,13 +6,17 @@ This is the canonical 100 TB training-data job the individual operators
 exist for (no reference counterpart — the reference is an addon-metadata
 ETL; this composes the engine's LLM-pipeline surface end to end).
 
-Scale design — ONE labeled lineage, not N filtered copies:
-  - the row-level gates (language, quality) are pure Column predicates
-    folded into a single projection that assigns each document its
+Scale design — ONE linear labeled lineage, not N filtered copies:
+  - one projection splits each document once; the row-level gates
+    (language, quality) are Column predicates over that token array,
+    folded into the next projection, which assigns each document its
     first-failing stage;
-  - the dedup stages attach via joins AGAINST SURVIVORS ONLY (a doc
-    already dropped by a cheap gate never reaches the expensive shingle
-    hashing — the gates run in cost order on purpose);
+  - exact dedup is one window over md5(text): the min SURVIVING id per
+    digest is the representative, so no aggregate is joined back;
+  - near dedup hashes shingles of the survivors only (a doc already
+    dropped by a cheap gate never reaches the expensive shingle hashing —
+    the gates run in cost order on purpose), and its verdicts attach by
+    one left join; drop_stage is the first non-null stage label;
   - the attrition report and the cleaned corpus are two consumers of the
     same persisted labeled DataFrame: `groupBy(drop_stage).count()` and
     `filter(drop_stage IS NULL)`. No per-stage count() actions, no
@@ -21,7 +25,7 @@ Scale design — ONE labeled lineage, not N filtered copies:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from taar_gcp_etl_spark.functions import tokens
@@ -51,13 +55,12 @@ def label_corpus(
     decision an at-scale dedup actually wants."""
     from taar_gcp_etl_spark.operators.dedup import (
         connected_components,
-        exact_dedup,
         lsh_near_dup_pairs,
         minhash_signatures,
     )
-    from taar_gcp_etl_spark.operators.text import language_id
+    from taar_gcp_etl_spark.operators.text import stopword_language
 
-    toks = tokens(text_col)
+    toks = F.col("_toks")
     n_tokens = F.size(toks)
     avg_len = F.length(text_col) / n_tokens
     stop_ratio = F.size(
@@ -69,39 +72,38 @@ def label_corpus(
         & (avg_len <= F.col("max_avg_len"))
         & (stop_ratio >= F.col("min_stop_ratio"))
     )
-    lang = language_id(docs, text_col).select(id_col, "predicted_lang")
+    _, _, lang = stopword_language(toks)
 
-    # one projection: cheap row-level gates in cost order
+    # cheap row-level gates in cost order, over one tokenization
     gated = (
-        docs.join(F.broadcast(rules))
-        .join(lang, id_col)
+        docs.crossJoin(F.broadcast(rules))
+        .select(
+            id_col, text_col, tokens(text_col).alias("_toks"), *rules.columns
+        )
         .select(
             id_col,
             text_col,
-            F.when(F.col("predicted_lang") != target_lang, F.lit("language"))
+            F.when(lang != target_lang, F.lit("language"))
             .when(~quality_ok, F.lit("quality"))
             .alias("drop_stage"),
         )
     )
 
-    # exact dedup over gate survivors only
-    survivors = gated.filter(F.col("drop_stage").isNull())
-    reps = exact_dedup(survivors, text_col, id_col).select(
-        F.col(id_col).alias("_rep_id"), F.col("content_hash")
-    )
-    with_rep = survivors.join(
-        reps,
-        F.md5(F.col(text_col)) == F.col("content_hash"),
-    ).select(
+    # exact dedup over gate survivors: the min surviving id per digest
+    rep_id = F.min(
+        F.when(F.col("drop_stage").isNull(), F.col(id_col))
+    ).over(Window.partitionBy(F.md5(F.col(text_col))))
+    deduped = gated.select(
         id_col,
         text_col,
-        F.when(F.col(id_col) != F.col("_rep_id"), F.lit("exact_dup")).alias(
-            "drop_stage"
-        ),
+        F.coalesce(
+            F.col("drop_stage"),
+            F.when(F.col(id_col) != rep_id, F.lit("exact_dup")),
+        ).alias("drop_stage"),
     )
 
     # near-dup over exact-dedup survivors: drop the higher id of each pair
-    uniq = with_rep.filter(F.col("drop_stage").isNull())
+    uniq = deduped.filter(F.col("drop_stage").isNull())
     pairs = lsh_near_dup_pairs(
         minhash_signatures(uniq, text_col, id_col),
         id_col=id_col,
@@ -120,20 +122,16 @@ def label_corpus(
     # near-duplicate id set — commonly 20-40% of a web-scale corpus — so a
     # broadcast hint here is O(corpus) driver memory. Let AQE pick the
     # strategy; at fixture scale it still broadcasts on its own.
-    labeled_tail = uniq.join(
+    return deduped.join(
         near_dups.withColumn("_nd", F.lit(True)),
         id_col,
         "left",
     ).select(
         id_col,
         text_col,
-        F.when(F.col("_nd"), F.lit("near_dup")).alias("drop_stage"),
-    )
-
-    return (
-        gated.filter(F.col("drop_stage").isNotNull())
-        .unionByName(with_rep.filter(F.col("drop_stage").isNotNull()))
-        .unionByName(labeled_tail)
+        F.coalesce(
+            F.col("drop_stage"), F.when(F.col("_nd"), F.lit("near_dup"))
+        ).alias("drop_stage"),
     )
 
 

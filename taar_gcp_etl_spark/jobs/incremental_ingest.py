@@ -211,7 +211,15 @@ def ingest_batch(
             .distinct()
         )
     else:
+        from taar_gcp_etl_spark.functions import tokens
         from taar_gcp_etl_spark.operators.dedup import token_shingles
+
+        def shingled(df: DataFrame, id_as: str, sh_as: str) -> DataFrame:
+            return df.select(
+                F.col(id_col).alias(id_as), tokens(text_col).alias("_toks")
+            ).select(id_as, token_shingles(F.col("_toks"), shingle_n).alias(
+                sh_as
+            ))
 
         cand = (
             bb.join(idx_sigs, "band")
@@ -222,14 +230,8 @@ def ingest_batch(
             )
             .distinct()
         )
-        c_sh = corpus_text.select(
-            F.col(id_col).alias("c_doc_id"),
-            token_shingles(text_col, shingle_n).alias("_c_sh"),
-        )
-        b_sh = b2.select(
-            F.col(id_col).alias("doc_id"),
-            token_shingles(text_col, shingle_n).alias("_b_sh"),
-        )
+        c_sh = shingled(corpus_text, "c_doc_id", "_c_sh")
+        b_sh = shingled(b2, "doc_id", "_b_sh")
         inter = F.size(F.array_intersect("_b_sh", "_c_sh"))
         union = F.size("_b_sh") + F.size("_c_sh") - inter
         # LEFT join to the text store: a candidate whose corpus doc is

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from taar_gcp_etl_spark.functions import tokens
+from taar_gcp_etl_spark.functions import token_ngrams, tokens
 
 
 def exact_dedup(
@@ -37,21 +37,11 @@ def exact_dedup(
     )
 
 
-def token_shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct n-token shingles of a document (the MinHash/Jaccard unit)."""
-    toks = tokens(text_col)
-    # Guarded: Spark's sequence(1, 0) yields a DESCENDING [1, 0], not an
-    # empty array — documents shorter than n tokens must shingle to [].
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
+def token_shingles(toks: Column, n: int = 3) -> Column:
+    """Distinct n-token shingles of a token-array column (the
+    MinHash/Jaccard unit); [] for documents shorter than n tokens. `toks`
+    must be a projected column — see functions.token_ngrams."""
+    return F.array_distinct(token_ngrams(toks, n))
 
 
 def minhash_signatures(
@@ -66,25 +56,32 @@ def minhash_signatures(
     random-permutation proxy and is reproducible in any engine with md5.
     Per-row map — no shuffle.
 
-    The shingle array and the per-shingle md5 array are each materialized
-    in their own projection before the four slice-min folds read them:
-    whole-stage codegen does NOT common-subexpression-eliminate across
-    higher-order-function lambdas (nor reliably across two uses of the same
-    expensive array expression in one Project), so inlining
+    The text is split once, in its own projection, and the shingles are
+    cut from that token column: a `tokens(text)` inlined into the shingle
+    lambda re-splits the whole document for every shingle
+    (functions.token_ngrams). The shingle array and the per-shingle md5
+    array are each materialized in their own projection before the four
+    slice-min folds read them: whole-stage codegen does NOT
+    common-subexpression-eliminate across higher-order-function lambdas
+    (nor reliably across two uses of the same expensive array expression
+    in one Project), so inlining
     `transform(shingles, md5)` into each fold re-hashes every shingle once
     per signature — measured 40 s inlined / 21 s one-projection / 8.5 s
     this shape on the sf0.1 corpus at matched parallelism. CollapseProject
     keeps the split because the referenced arrays are expensive and
     multiply-referenced."""
-    sh = token_shingles(text_col, shingle_n)
     # One md5 per shingle PER GROUP OF FOUR signatures, each digest sliced
     # into four 32-bit (8-hex-char) independent signatures — 4× fewer hash
     # evaluations than hashing per-signature, which dominates the cost of
     # this operator at corpus scale. n_hashes > 4 (the larger b×r LSH
     # profiles) derives further digests by salting the shingle with the
     # digest-group index.
-    shingled = df.filter(F.size(tokens(text_col)) >= shingle_n).select(
-        id_col, sh.alias("shingles")
+    shingled = (
+        df.select(id_col, tokens(text_col).alias("_toks"))
+        .filter(F.size("_toks") >= shingle_n)
+        .select(id_col, token_shingles(F.col("_toks"), shingle_n).alias(
+            "shingles"
+        ))
     )
     n_digests = (n_hashes + 3) // 4
 
@@ -257,9 +254,13 @@ def _all_pairs_shingle_scores(
     score — rounding first would admit boundary pairs the oracle's
     unrounded WHERE rejects (a 0.79999997 pair must fail a 0.8 gate in
     both engines); the rounded value is output-only."""
-    sh = df.select(
-        F.col(id_col), token_shingles(text_col, shingle_n).alias("sh")
-    ).filter(F.size("sh") > 0)
+    # filter on the token count, not on size(sh): a filter on the shingle
+    # array is pushed below its projection and re-shingles inline
+    sh = (
+        df.select(F.col(id_col), tokens(text_col).alias("_toks"))
+        .filter(F.size("_toks") >= shingle_n)
+        .select(id_col, token_shingles(F.col("_toks"), shingle_n).alias("sh"))
+    )
     a, b = sh.alias("a"), sh.alias("b")
     raw = score(
         F.size(F.array_intersect("a.sh", "b.sh")),
@@ -661,20 +662,19 @@ def benchmark_overlap(
     # that grow with the benchmark suite. Cost: engine portability, so
     # oracle-paired callers keep the md5 prefix. Both are 64-bit keys;
     # identical collision posture.
-    def gram_keys(df: DataFrame) -> Column:
+    def gram_keys(df: DataFrame, *keep: str) -> DataFrame:
+        grams = token_shingles(F.col("_toks"), n)
         if fast_hash:
-            return F.transform(
-                token_shingles(text_col, n), lambda g: F.xxhash64(g)
-            )
-        return F.transform(
-            token_shingles(text_col, n), lambda g: F.substring(F.md5(g), 1, 16)
+            keys = F.transform(grams, lambda g: F.xxhash64(g))
+        else:
+            keys = F.transform(grams, lambda g: F.substring(F.md5(g), 1, 16))
+        return df.select(*keep, tokens(text_col).alias("_toks")).select(
+            *keep, F.explode(keys).alias("gram")
         )
 
-    c = corpus.select(
-        F.col(id_col), F.explode(gram_keys(corpus)).alias("gram")
-    )
+    c = gram_keys(corpus, id_col)
     b = (
-        benchmark.select(F.explode(gram_keys(benchmark)).alias("gram"))
+        gram_keys(benchmark)
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
@@ -722,20 +722,9 @@ def segment_dedup(
     occurrence, never paired). Output: (id, n_segments, n_kept,
     cleaned_text).
     """
-    toks = tokens(text_col)
-    n_segs = F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("int")
-    # sequence(0, -1) yields a DESCENDING [0, -1], not [] — guard empties.
-    segs = F.when(
-        n_segs > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_segs - 1),
-            lambda i: F.array_join(
-                F.slice(toks, i * seg_tokens + 1, seg_tokens), " "
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    rows = df.select(
-        F.col(id_col), F.posexplode(segs).alias("pos", "seg")
+    segs = token_ngrams(F.col("_toks"), seg_tokens, step=seg_tokens)
+    rows = df.select(F.col(id_col), tokens(text_col).alias("_toks")).select(
+        id_col, F.posexplode(segs).alias("pos", "seg")
     )
     w = Window.partitionBy(F.md5(F.col("seg"))).orderBy(
         F.col(id_col), F.col("pos")

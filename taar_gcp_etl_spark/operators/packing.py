@@ -16,8 +16,8 @@ token-budget selector in operators/sampling.py):
    keys precede partition p+1's),
 2. cumulative-sum WITHIN each partition (a partitioned window — parallel),
 3. aggregate one total per partition (tiny: #partitions rows), prefix-sum
-   those on the driver, and broadcast-join the per-partition base offsets
-   back.
+   those on the driver, and add each row's partition base offset from a
+   literal array indexed by partition id.
 
 Only the narrow projection shuffles; the driver handles #partitions
 integers. Every step is Catalyst-planned (no Python row path).
@@ -49,10 +49,9 @@ def distributed_prefix_sum(
     Two-phase distributed scan (see module docstring) — no global-window
     single-task funnel. The returned plan reads a persisted intermediate
     (the scanned projection is consumed twice: partition totals + the
-    final join); the CALLER owns eviction via spark.catalog.clearCache()
+    final projection); the CALLER owns eviction via spark.catalog.clearCache()
     or by materializing the result (same convention as the persisted LSH
     signature relation in operators/dedup.py)."""
-    spark = df.sparkSession
     if num_partitions is not None:
         ranged = df.repartitionByRange(num_partitions, *order_cols)
     else:
@@ -72,27 +71,26 @@ def distributed_prefix_sum(
         "_local_cum", F.sum(value_col).over(w)
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    # Phase 3: one total per partition → driver-side prefix → broadcast
-    # back. Range partitioning guarantees pid order == order_cols order.
-    totals = (
+    # Phase 3: one total per partition → driver-side prefix → a literal
+    # array of base offsets indexed by _pid. Range partitioning guarantees
+    # pid order == order_cols order. A literal, not a joined createDataFrame:
+    # that plans as a Python-RDD scan, which every action on the result
+    # would run again as one more Spark job to broadcast it.
+    totals = dict(
         local.groupBy("_pid")
         .agg(F.max("_local_cum").alias("_ptotal"))
         .collect()
     )
-    base, offsets = 0, []
-    for row in sorted(totals, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], base))
-        base += row["_ptotal"]
-    offset_df = spark.createDataFrame(offsets, "_pid INT, _base BIGINT")
+    base, bases = 0, []
+    for pid in range(max(totals, default=-1) + 1):
+        bases.append(F.lit(base).cast("bigint"))
+        base += totals.get(pid, 0)
+    base_of_pid = F.element_at(F.array(*bases), F.col("_pid") + 1)
 
-    return (
-        local.join(F.broadcast(offset_df), "_pid")
-        .withColumn(
-            "cum_before",
-            F.col("_base") + F.col("_local_cum") - F.col(value_col),
-        )
-        .drop("_pid", "_local_cum", "_base")
-    )
+    return local.withColumn(
+        "cum_before",
+        base_of_pid + F.col("_local_cum") - F.col(value_col),
+    ).drop("_pid", "_local_cum")
 
 
 def pack_sequences(
@@ -128,16 +126,35 @@ def pack_sequences(
         .otherwise(F.size(tokens(text_col)))
         .alias("n_tokens"),
     )
+    return pack_positions(
+        counts, seq_len, id_col=id_col, num_partitions=num_partitions,
+        shuffle=shuffle,
+    )
+
+
+def pack_positions(
+    rows: DataFrame,
+    seq_len: int,
+    *,
+    id_col: str = "doc_id",
+    num_partitions: int | None = None,
+    shuffle: bool = False,
+) -> DataFrame:
+    """pack_sequences for rows that already carry their `n_tokens` (an
+    encoded corpus): every column of `rows`, then tokens_before, seq_id,
+    offset_in_seq and n_seqs_spanned. The rows ride through the prefix
+    sum, so a caller needs no join back on `id_col`."""
+    cols = rows.columns
     # the global packing order: id, or (hash, id) for shuffled packing —
     # the hash tiebreak on id keeps the order total (collisions possible)
     if shuffle:
-        counts = counts.withColumn("_ord", F.xxhash64(F.col(id_col)))
+        rows = rows.withColumn("_ord", F.xxhash64(F.col(id_col)))
         order_cols = ["_ord", id_col]
     else:
         order_cols = [id_col]
 
     summed = distributed_prefix_sum(
-        counts, "n_tokens", order_cols, num_partitions
+        rows, "n_tokens", order_cols, num_partitions
     )
 
     tokens_before = F.col("cum_before")
@@ -146,8 +163,7 @@ def pack_sequences(
     )
     seq_id = F.floor(tokens_before / seq_len)
     return summed.select(
-        id_col,
-        "n_tokens",
+        *cols,
         tokens_before.alias("tokens_before"),
         seq_id.alias("seq_id"),
         (tokens_before % seq_len).alias("offset_in_seq"),

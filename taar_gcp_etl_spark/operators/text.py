@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from taar_gcp_etl_spark.functions import tokens
+from taar_gcp_etl_spark.functions import token_ngrams, tokens
 
 # Small closed-class stopword sets used by the quality/lang-id heuristics.
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -23,6 +23,20 @@ STOPWORDS_DE = ("der", "die", "das", "und", "ist", "ein", "zu", "mit")
 def _stop_ratio(toks: Column, stops: tuple[str, ...]) -> Column:
     hits = F.size(F.filter(toks, lambda t: t.isin(*stops)))
     return hits / F.size(toks)
+
+
+def stopword_language(toks: Column) -> tuple[Column, Column, Column]:
+    """(score_en, score_de, predicted_lang) of a token-array column: the
+    stopword-set hit ratio per candidate language, and their argmax with a
+    deterministic tie-break toward 'en' ('und' when no set fires)."""
+    en = _stop_ratio(toks, STOPWORDS_EN)
+    de = _stop_ratio(toks, STOPWORDS_DE)
+    lang = (
+        F.when((en == 0) & (de == 0), "und")
+        .when(en >= de, "en")
+        .otherwise("de")
+    )
+    return en, de, lang
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -72,17 +86,8 @@ def repetition_stats(
     generations score high; clean prose scores near 0. Pure Column map —
     zero shuffle, linear in tokens (same 100 TB posture as text_stats).
     Documents shorter than n tokens score 0 over 0 grams → 0.0."""
-    toks = tokens(text_col)
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    based = df.select("doc_id", grams.alias("_g"))
+    toks = df.select("doc_id", tokens(text_col).alias("_toks"))
+    based = toks.select("doc_id", token_ngrams(F.col("_toks"), n).alias("_g"))
     # Two-stage select so array_distinct evaluates once (referencing the
     # same Column object twice in one projection still plans it twice).
     counted = based.select(
@@ -109,17 +114,12 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     argmax with deterministic tie-break toward 'en', 'und' (undetermined)
     when no set fires. N-gram/stopword scoring is the classic cheap lang-id;
     per-row map, no shuffle."""
-    toks = tokens(text_col)
-    en = _stop_ratio(toks, STOPWORDS_EN)
-    de = _stop_ratio(toks, STOPWORDS_DE)
+    en, de, lang = stopword_language(tokens(text_col))
     return df.select(
         "doc_id",
         F.round(en, 6).alias("score_en"),
         F.round(de, 6).alias("score_de"),
-        F.when((en == 0) & (de == 0), "und")
-        .when(en >= de, "en")
-        .otherwise("de")
-        .alias("predicted_lang"),
+        lang.alias("predicted_lang"),
     )
 
 
@@ -146,8 +146,7 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
             lambda t: t != "",
         )
     )
-    en = _stop_ratio(toks, STOPWORDS_EN)
-    de = _stop_ratio(toks, STOPWORDS_DE)
+    en, de, lang = stopword_language(toks)
     return df.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
@@ -165,10 +164,7 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
         ).alias("punct_ratio"),
         F.round(en, 6).alias("score_en"),
         F.round(de, 6).alias("score_de"),
-        F.when((en == 0) & (de == 0), "und")
-        .when(en >= de, "en")
-        .otherwise("de")
-        .alias("predicted_lang"),
+        lang.alias("predicted_lang"),
     )
 
 
@@ -187,18 +183,8 @@ def winnow_fingerprints(
     pairwise comparison. Pure Column expressions; per-row map then explode."""
     from pyspark.sql import Window
 
-    toks = tokens(text_col)
-    hashes = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-            lambda i: F.md5(
-                F.concat_ws(
-                    " ", *[F.element_at(toks, i + j) for j in range(k)]
-                )
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    toks = df.select("doc_id", tokens(text_col).alias("_toks"))
+    hashes = F.transform(token_ngrams(F.col("_toks"), k), lambda g: F.md5(g))
     # Sliding-window minimum via posexplode + frame min — NOT per-position
     # array slices (measured 38 s vs ~4 s at sf0.1: slice-in-transform is
     # interpreted and copies `window` elements per position; the window
@@ -208,7 +194,7 @@ def winnow_fingerprints(
     # NOT from size(hashes): referencing the hash-array expression in a
     # post-explode filter lets Catalyst inline it per exploded row — the
     # whole document re-hashes for every shingle (measured 40 s).
-    ex = df.select("doc_id", F.posexplode(hashes).alias("pos", "h"))
+    ex = toks.select("doc_id", F.posexplode(hashes).alias("pos", "h"))
     by_doc = Window.partitionBy("doc_id")
     frame = (
         by_doc.orderBy("pos").rowsBetween(Window.currentRow, window - 1)
@@ -228,21 +214,13 @@ def fingerprint(df: DataFrame, text_col: str = "text", k: int = 4) -> DataFrame:
     """Document fingerprint: min-hash over rolling k-gram token windows
     (winnowing-style — the minimum md5 of all k-token shingles is a stable,
     order-insensitive content fingerprint). Documents shorter than k tokens
-    fingerprint as NULL."""
-    toks = tokens(text_col)
+    fingerprint as NULL (the min of no shingles)."""
+    toks = df.select("doc_id", tokens(text_col).alias("_toks"))
     shingle_hashes = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-        lambda i: F.md5(
-            F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            )
-        ),
+        token_ngrams(F.col("_toks"), k), lambda g: F.md5(g)
     )
-    return df.select(
-        "doc_id",
-        F.when(F.size(toks) >= k, F.array_min(shingle_hashes)).alias(
-            "fingerprint"
-        ),
+    return toks.select(
+        "doc_id", F.array_min(shingle_hashes).alias("fingerprint")
     )
 
 

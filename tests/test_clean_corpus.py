@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import collections
+
 from pyspark.sql import functions as F
 
 from taar_gcp_etl_spark.io import read_table
@@ -37,6 +39,76 @@ class TestCleanCorpus:
         en_ids = lang.filter(F.col("predicted_lang") == "en").select("doc_id")
         # quality stage evaluated only on language survivors
         assert stages.get("quality", 0) <= en_ids.count()
+
+    def test_stage_counts_match_python_reference(self, spark):
+        """Every stage count of the attrition report against a pure-Python
+        relabeling of the corpus: the stopword language gate, the rulepack
+        quality thresholds and the min id per md5 among gate survivors.
+        The near-dup count is the distinct doc_b of the LSH pairs over the
+        reference's own unique set."""
+        import hashlib
+        import re
+
+        from taar_gcp_etl_spark.operators.dedup import (
+            lsh_near_dup_pairs,
+            minhash_signatures,
+        )
+        from taar_gcp_etl_spark.operators.quality import (
+            DEFAULT_QUALITY_RULES as R,
+        )
+        from taar_gcp_etl_spark.operators.text import (
+            STOPWORDS_DE,
+            STOPWORDS_EN,
+        )
+
+        docs = read_table(spark, SF_SMOKE, "documents")
+        rows = docs.select("doc_id", "text").collect()
+
+        def label(text):
+            if text is None:  # NULL scores fall through to 'de'
+                return "language"
+            # Spark: split(trim(lower(text)), '\s+') — trim strips spaces
+            # only, and \s is Java's ASCII whitespace class
+            toks = re.split(r"[ \t\n\x0b\f\r]+", text.lower().strip(" "))
+            n = len(toks)
+            en = sum(t in STOPWORDS_EN for t in toks) / n
+            de = sum(t in STOPWORDS_DE for t in toks) / n
+            lang = "und" if en == 0 and de == 0 else "en" if en >= de else "de"
+            if lang != "en":
+                return "language"
+            avg = len(text) / n
+            stop = sum(t in ("the", "a", "of", "and", "to") for t in toks) / n
+            if not (
+                n >= R["min_tokens"]
+                and R["min_avg_len"] <= avg <= R["max_avg_len"]
+                and stop >= R["min_stop_ratio"]
+            ):
+                return "quality"
+            return None
+
+        want = collections.Counter()
+        rep: dict[str, int] = {}
+        survivors = []
+        for r in rows:
+            stage = label(r.text)
+            if stage:
+                want[stage] += 1
+                continue
+            digest = hashlib.md5(r.text.encode()).hexdigest()
+            rep[digest] = min(rep.get(digest, r.doc_id), r.doc_id)
+            survivors.append((r.doc_id, digest))
+        uniq = [i for i, d in survivors if rep[d] == i]
+        want["exact_dup"] += len(survivors) - len(uniq)
+        pairs = lsh_near_dup_pairs(
+            minhash_signatures(docs.filter(F.col("doc_id").isin(uniq)))
+        )
+        want["near_dup"] += pairs.select("doc_b").distinct().count()
+        want["kept"] += len(uniq) - want["near_dup"]
+        assert want["language"] and want["quality"] and want["kept"]
+
+        _, report = clean_corpus.run(spark, SF_SMOKE)
+        got = {r.stage: r["count"] for r in report.collect()}
+        assert got == {k: v for k, v in want.items() if v}
 
     def test_cleaned_corpus_has_no_duplicates(self, spark):
         from taar_gcp_etl_spark.operators.dedup import (
@@ -175,24 +247,49 @@ class TestBuildTrainingSet:
         """The composed clean->tokenize->pack job must produce internally
         consistent output: packed rows only for cleaned docs, exact global
         token accounting, contiguous seq_id shards, and a manifest whose
-        attrition sums to the corpus size."""
+        attrition sums to the corpus size. A second run reproduces the
+        shard membership."""
+        import glob
         import json
+
+        import pyarrow.parquet as pq
 
         from taar_gcp_etl_spark.jobs import build_training_set
         from tests.conftest import SF_SMOKE
 
-        out = str(tmp_path / "ts")
-        manifest_path = str(tmp_path / "manifest.json")
-        manifest = build_training_set.run(
-            spark,
-            SF_SMOKE,
-            out,
-            manifest_path,
-            seq_len=128,
-            vocab_size=20,
-            n_shards=3,
+        def build(name):
+            out = str(tmp_path / name)
+            manifest = build_training_set.run(
+                spark,
+                SF_SMOKE,
+                out,
+                f"{out}.json",
+                seq_len=128,
+                vocab_size=20,
+                n_shards=3,
+            )
+            assert manifest == json.load(open(f"{out}.json"))
+            parts = [
+                pq.read_table(f, columns=["doc_id", "seq_id"]).to_pydict()
+                for f in sorted(glob.glob(f"{out}/packed/part-*.parquet"))
+            ]
+            return out, manifest, parts
+
+        out, manifest, parts = build("ts")
+        # the part files hold disjoint, ascending seq_id ranges
+        assert len(parts) > 1
+        for lo, hi in zip(parts, parts[1:]):
+            assert max(lo["seq_id"]) < min(hi["seq_id"])
+        seq_files = collections.Counter(
+            s for p in parts for s in set(p["seq_id"])
         )
-        assert manifest == json.load(open(manifest_path))
+        assert set(seq_files.values()) == {1}
+        # a re-run puts the same documents in the same part files
+        _, manifest2, parts2 = build("ts2")
+        assert manifest2 == manifest
+        assert [set(p["doc_id"]) for p in parts2] == [
+            set(p["doc_id"]) for p in parts
+        ]
         # attrition accounts for every document in the corpus
         from taar_gcp_etl_spark.io import read_table
 

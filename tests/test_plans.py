@@ -7,6 +7,15 @@ from __future__ import annotations
 
 import pytest
 
+from taar_gcp_etl_spark.operators.dedup import (
+    minhash_signatures,
+    segment_dedup,
+)
+from taar_gcp_etl_spark.operators.text import (
+    fingerprint,
+    repetition_stats,
+    winnow_fingerprints,
+)
 from taar_gcp_etl_spark.plans import (
     has_partial_aggregate,
     has_pushed_filter,
@@ -485,6 +494,65 @@ def test_rolling_windows_are_hash_partitioned(spark):
         assert "Window" in plan, name
         # a partitionless window plans a SinglePartition exchange
         assert "SinglePartition" not in plan, name
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every `lambdafunction(...)` of a plan string, found by a
+    balanced-parenthesis scan (nested lambdas are listed on their own
+    too)."""
+    bodies, start = [], 0
+    while (i := plan.find("lambdafunction(", start)) >= 0:
+        j, depth = i + len("lambdafunction("), 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[i:j])
+        start = i + 1
+    return bodies
+
+
+def _label_corpus(docs):
+    from taar_gcp_etl_spark.jobs.clean_corpus import label_corpus
+    from taar_gcp_etl_spark.operators.quality import default_rulepack
+
+    return label_corpus(docs, default_rulepack(docs.sparkSession))
+
+
+SPLIT_ONCE = {
+    "minhash_signatures": minhash_signatures,
+    "repetition_stats": repetition_stats,
+    "winnow_fingerprints": winnow_fingerprints,
+    "fingerprint": fingerprint,
+    "segment_dedup": segment_dedup,
+    "label_corpus": _label_corpus,
+}
+
+
+@pytest.mark.parametrize("name", list(SPLIT_ONCE))
+def test_no_regex_split_inside_lambdas(spark, name):
+    """The n-gram operators split each document once, in a projection, and
+    cut their windows from that token column: Catalyst does not eliminate
+    common subexpressions inside higher-order-function lambdas, so a
+    `split(...)` in a lambda body runs once per window — O(tokens²) per
+    document. Checked on the optimized plan; building it runs no job."""
+    import uuid
+
+    from taar_gcp_etl_spark.io import read_table
+
+    docs = read_table(spark, SF_SMOKE, "documents")
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = SPLIT_ONCE[name](docs)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    bodies = _lambda_bodies(plan)
+    assert bodies, "the plan should shingle inside a lambda"
+    assert not [b for b in bodies if "split(" in b], name
 
 
 def test_zorder_scan_pruned_file_list_and_pushdown(spark, tmp_path):
