@@ -27,9 +27,6 @@ composed with txn.py's manifest-swap commit:
   input_file_name — one result row per file, the same O(files)
   metadata any table format's manifest carries), publish atomically
   through the txn CAS (pluggable publisher seam included).
-* ``optimize_zorder``   — Delta-style table maintenance: rewrite the
-  current snapshot clustered; readers see old or new version, never a
-  mix.
 * ``scan_pruned``       — plan a scan over only the files whose zone
   maps intersect the predicate, then re-apply the predicate as a
   residual filter (zone maps are necessarily coarse); correctness is
@@ -583,7 +580,6 @@ def commit_clustered(
     bits: int = 8,
     epoch_id: int | None = None,
     max_attempts: int = 5,
-    require_parent: int | None = None,
     bloom_cols: list[str] | None = None,
     bloom_m_bits: int = 1 << 16,
     bloom_k: int = 5,
@@ -594,16 +590,12 @@ def commit_clustered(
     to the zorder columns) recorded in the manifest — at file AND
     row-group-slice granularity (``slice_rows`` rows per slice; size it
     ~1/8 of the expected file rows so mid-selectivity probes can prune
-    inside files whose envelope is wide). Atomicity, epoch-replay skip,
-    and CAS retry semantics are txn.commit_txn's; the snapshot is
-    written clustered and the manifest carries the ``files`` list
-    scan_pruned plans against.
-
-    ``require_parent`` pins a read-modify-write caller's expectation of
-    the version being replaced (optimize_zorder rewrites the snapshot
-    it read): if another writer moved the table past it, the commit
-    raises instead of replacing the concurrent writer's state with a
-    rewrite of older data — the caller re-reads and retries."""
+    inside files whose envelope is wide). The snapshot is written
+    clustered into a fresh dir and published through txn's manifest
+    CAS: a replayed ``epoch_id`` is skipped before any write, a commit
+    that loses its version slot re-reads the log and retries, and the
+    additive-only schema evolution contract applies. The manifest
+    carries the ``files`` list scan_pruned plans against."""
     spark = df.sparkSession
     table_dir = table_dir.rstrip("/")
     stats_cols = list(stats_cols or zorder_by)
@@ -624,13 +616,6 @@ def commit_clustered(
             last = man.get("epoch_id")
             if last is not None and epoch_id <= last:
                 return None
-        if require_parent is not None and (
-            man["version"] if man else None
-        ) != require_parent:
-            raise RuntimeError(
-                f"commit_clustered: table moved past expected parent "
-                f"{require_parent} — re-read and retry"
-            )
         fields = txn._schema_fields(df)
         txn.check_schema_evolution(
             man.get("schema") if man else None, fields
@@ -670,47 +655,6 @@ def commit_clustered(
         f"commit_clustered: gave up after {max_attempts} version conflicts "
         f"on {table_dir}"
     )
-
-
-def optimize_zorder(
-    spark: SparkSession,
-    table_dir: str,
-    zorder_by: list[str],
-    n_files: int = 16,
-    stats_cols: list[str] | None = None,
-    bits: int = 8,
-    slice_rows: int | None = None,
-) -> int | None:
-    """Table maintenance à la Delta ``OPTIMIZE ... ZORDER BY``: rewrite
-    the CURRENT snapshot clustered and commit it as the next version.
-    Runs inside commit_clustered's CAS loop reading the version being
-    replaced, so a concurrent commit is never silently dropped; readers
-    see the old or the new layout, never a mix. Returns the committed
-    version (None for an empty table)."""
-    if txn.latest_manifest(spark, table_dir) is None:
-        return None
-    # read-modify-write: pin each attempt to the version being replaced
-    # (require_parent), so a concurrent commit landing mid-rewrite makes
-    # THIS commit fail and retry against the fresh state — never the
-    # other way around
-    for _ in range(5):
-        man = txn.latest_manifest(spark, table_dir)
-        cur = txn.read_txn(spark, table_dir, version=man["version"])
-        try:
-            return commit_clustered(
-                cur,
-                table_dir,
-                zorder_by,
-                n_files=n_files,
-                stats_cols=stats_cols,
-                bits=bits,
-                max_attempts=1,
-                require_parent=man["version"],
-                slice_rows=slice_rows,
-            )
-        except RuntimeError:
-            continue  # lost the slot: loop re-reads the fresh state
-    raise RuntimeError(f"optimize_zorder: version conflicts on {table_dir}")
 
 
 # ---------------------------------------------------------------------------
@@ -783,7 +727,7 @@ def prune_report(
     if man is None or "files" not in man:
         raise ValueError(
             f"{table_dir} has no zone-map manifest (commit with "
-            "commit_clustered / optimize_zorder first)"
+            "commit_clustered first)"
         )
     types = man.get("stats_types", {})
     bref = man.get("blooms_ref")

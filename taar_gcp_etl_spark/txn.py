@@ -1,6 +1,6 @@
-"""Minimal transaction-log table layout: atomic commit for keyed parquet
-tables (manifest-swap, Delta/Iceberg-style, reduced to the piece this
-engine needs).
+"""Transaction-log table layout: atomic commit for keyed parquet tables
+(manifest-swap, Delta/Iceberg-style, reduced to the piece this engine
+needs).
 
 What it guarantees, through one mechanism (the same one every table
 format uses):
@@ -9,52 +9,60 @@ format uses):
   together, in one manifest. A crash before that point leaves the table
   unchanged; a crash after it records the epoch, so a replayed batch is
   skipped and never counted twice.
-* **No delete-then-write window**: a commit never touches the current
-  snapshot, so a concurrent reader sees the old version or the new one,
-  never an empty or partial table (``mode("overwrite")`` deletes the
-  directory before writing).
-* **Tombstones**: the CDC tables keep a delete as a seq-stamped
-  tombstone row, so a stale upsert replayed after a newer delete cannot
-  resurrect the key.
+* **No delete-then-write window**: a commit never touches the data the
+  current version reads, so a concurrent reader sees the old version or
+  the new one, never an empty or partial table (``mode("overwrite")``
+  deletes the directory before writing).
+* **Tombstones**: a CDC table keeps a delete as a seq-stamped tombstone
+  row, so a stale upsert replayed after a newer delete cannot resurrect
+  the key.
 
-Layout::
+Layout (the keyed CDC table: a sorted, key-addressed store mutated in
+place, BigTable-shaped)::
 
     table_dir/
       _log/00000000000000000001.json   # manifest: one per committed version
-      data/v0000000001-ab12cd34/       # immutable snapshot (parquet dir)
+      data/v0000000001-ab12cd34/       # immutable dir, _bucket=b/ subdirs
+      data/o0000000003-cd34ef56/       # delete-only overlay (tombstones)
+      data/c0000000002-ef56ab12/       # the commit's change rows
 
-A commit writes a brand-new snapshot directory (never touching the
-current one), then publishes it by renaming a fully-written temp
-manifest into ``_log/`` — the single atomic point. Crash before the
-rename: table state is unchanged and the replayed batch re-applies
-cleanly (the orphan snapshot is garbage, collected by ``vacuum_txn``).
-Crash after: the manifest records the epoch, and the replay is skipped
-before any work. There is no in-between. Readers resolve the latest
-manifest and scan only its snapshot, so they always see a complete
-committed version — snapshot isolation, and time travel for free
-(``read_txn(version=...)``).
+The key space is hashed into ``n_buckets`` and each manifest maps every
+bucket to the dir that owns it (``apply_cdc_batch_bucketed``). A commit
+writes a brand-new dir holding just the buckets it touched (never
+touching the current ones), then publishes by claiming the next
+versioned manifest slot in ``_log/`` — the single atomic point. Crash
+before the claim: table state is unchanged and the replayed batch
+re-applies cleanly (the orphan dir is garbage, collected by
+``vacuum_txn``). Crash after: the manifest records the epoch, and the
+replay is skipped before any work. Readers resolve one manifest and scan
+only the dirs it maps, so they always see a complete committed version
+— snapshot isolation, and time travel for free
+(``read_txn(version=...)``). Each commit also records its change rows,
+so ``read_changes`` nets those files instead of diffing snapshots.
+
+Every CDC entry point (apply, ``merge_into``, the maintenance rewrites,
+``read_changes``, ``join_bucketed``, ``sync_join_from_cdc``) takes this
+layout only. Plain snapshot manifests (a ``"snapshot"`` key: one dir per
+version, written by ``layout.commit_clustered``) share the log, the
+publisher, ``read_txn`` and ``vacuum_txn``; the CDC entry points reject
+them with one ``ValueError``.
 
 Concurrency: manifests are versioned, and a commit that finds its
-target manifest slot already claimed re-reads the log and retries —
-optimistic concurrency on an atomic put_if_absent of the versioned
-manifest. The claim strategy is pluggable (set_manifest_publisher, the
-one storage-specific seam): RenameManifestPublisher (default) for
-filesystems where rename is atomic and fails on an existing
-destination (HDFS; single-writer local), ConditionalPutManifestPublisher
-for object stores where the same CAS is a conditional PUT (S3
-If-None-Match, GCS generation-match) — S3-style "rename" is copy+delete
-with no destination guard and silently loses concurrent commits (the
-contract tests pin that failure mode). Read-modify-write commits use
-commit_txn's builder form so a lost race re-merges against the fresh
-state.
+target manifest slot already claimed re-reads the log and re-derives
+its write from the fresh state — optimistic concurrency on an atomic
+put_if_absent of the versioned manifest. The claim strategy is
+pluggable (set_manifest_publisher, the one storage-specific seam):
+RenameManifestPublisher (default) for filesystems where rename is atomic
+and fails on an existing destination (HDFS; single-writer local),
+ConditionalPutManifestPublisher for object stores where the same CAS is
+a conditional PUT (S3 If-None-Match, GCS generation-match) — S3-style
+"rename" is copy+delete with no destination guard and silently loses
+concurrent commits (the contract tests pin that failure mode).
 
-Scale: a commit costs O(committed DataFrame) in write volume plus two
-metadata ops, independent of table history; snapshot resolution is one
-directory listing of ``_log``. Full-table rewrites per commit remain
-the contract for the dimension-sized tables this engine maintains
-(same O(table) note as operators/merge.py); partition-pruned snapshot
-reuse would slot in at the manifest's file-list level exactly as in the
-big-table formats.
+Scale: an apply costs O(touched buckets) in read and write volume plus
+two metadata ops, independent of table history; version resolution is
+one directory listing of ``_log``. Only the maintenance rewrites
+(tombstone compaction, bucket rescale) are O(table).
 
 Reference parity: the reference's BigQuery CTAS-overwrite jobs
 (e.g. taar_etl/taar_profile_bigtable.py:70-96) get atomic replacement
@@ -203,9 +211,10 @@ def read_txn(
     orphan snapshot dirs from interrupted commits are invisible, which is
     the whole point.
 
-    Handles both layouts: plain (one snapshot dir per version) and
-    BUCKETED (the manifest maps each hash bucket to the snapshot dir
-    that currently owns it — see apply_cdc_batch_bucketed). A bucketed
+    Handles both manifest shapes: plain (one snapshot dir per version,
+    layout.commit_clustered) and BUCKETED (the CDC table: the manifest
+    maps each hash bucket to the snapshot dir that currently owns it —
+    see apply_cdc_batch_bucketed). A bucketed
     read takes its schema from the manifest, so planning it runs no
     Spark job (no footer inference), and a dir written before an
     additive schema evolution reads the new columns as null. For a
@@ -439,140 +448,6 @@ def _publish_manifest(
     return _manifest_publisher.put_if_absent(spark, final, data, token)
 
 
-def _plan_reads_table(df: DataFrame, table_dir: str) -> bool:
-    """Best-effort: does this DataFrame's plan scan ``table_dir``? Used
-    to refuse a retry that would commit a merge computed against a
-    superseded snapshot (see commit_txn's read-modify-write contract)."""
-    try:
-        # inputFiles() resolves the actual scan locations; plan STRINGS
-        # truncate long paths (spark.sql.maxMetadataStringLength) and
-        # would miss the match
-        return any(table_dir in f for f in df.inputFiles())
-    except Exception:
-        return False
-
-
-def commit_txn(
-    df,
-    table_dir: str,
-    epoch_id: int | None = None,
-    max_attempts: int = 5,
-    spark: SparkSession | None = None,
-    manifest_extra: dict | None = None,
-) -> int | None:
-    """Atomically commit the table's next version.
-
-    ``manifest_extra`` adds caller metadata fields to the manifest
-    (e.g. apply_cdc_batch_txn stamps ``key_col``/``seq_col`` so flat
-    CDC tables stay mergeable under non-default keys — ADVICE r9);
-    reserved manifest fields raise ``ValueError`` (silently dropping
-    them would hide a caller bug — ADVICE r10). ``key_col`` /
-    ``seq_col`` already present on the PRIOR manifest carry forward
-    automatically, so maintenance rewrites (compaction) never strip
-    the key stamp a CDC apply recorded.
-
-    ``df`` is either a DataFrame (blind write — content independent of
-    the table's current state) or a BUILDER ``f(current_version | None)
-    -> DataFrame`` for read-modify-write commits. The builder is
-    re-invoked on every CAS attempt with the version it must derive
-    from, so a lost version race recomputes the merge against the fresh
-    state instead of committing a result computed from the superseded
-    snapshot (read_txn resolves snapshot paths eagerly when the plan is
-    built, so merely re-executing a stale plan would re-read the OLD
-    snapshot and silently drop the concurrent writer's changes). Every
-    read-modify-write caller in this module (apply_cdc_batch_txn,
-    compact_cdc_tombstones) uses the builder form; the bucketed path
-    has its own equivalent loop.
-
-    As a safety net, a plain DataFrame whose plan scans ``table_dir``
-    raises on a lost race instead of retrying — the retry would be the
-    stale-merge bug; the error tells the caller to pass a builder.
-
-    Returns the committed version, or None if ``epoch_id`` was already
-    committed (replay skip — streaming epoch ids are monotonically
-    increasing, so the latest manifest's epoch is a sufficient guard;
-    foreachBatch replays re-run the SAME epoch, never an older one with
-    new content).
-
-    A builder may lazily read the snapshot it is given: the new
-    snapshot lands in a fresh directory, so no localCheckpoint /
-    lineage cut is needed — the plan never writes over what it reads.
-    """
-    is_builder = callable(df)
-    if is_builder:
-        if spark is None:
-            raise ValueError("commit_txn: builder form requires spark=")
-    else:
-        spark = df.sparkSession
-    if manifest_extra:
-        # every field the layer itself interprets is reserved — a
-        # caller-supplied 'overlays' or 'file_stats' would corrupt
-        # reads; reject up front, before any snapshot write, instead
-        # of silently dropping (review r10, ADVICE r10)
-        bad = sorted(k for k in manifest_extra if k in _RESERVED_MANIFEST)
-        if bad:
-            raise ValueError(
-                f"commit_txn: manifest_extra keys {bad} are reserved "
-                "manifest fields the layer itself writes — silently "
-                "dropping them would hide the caller's bug"
-            )
-    table_dir = table_dir.rstrip("/")
-    token = uuid.uuid4().hex[:8]
-    for attempt in range(max_attempts):
-        man = latest_manifest(spark, table_dir)
-        if epoch_id is not None and man is not None:
-            last = man.get("epoch_id")
-            if last is not None and epoch_id <= last:
-                return None
-        cur_version = man["version"] if man else None
-        if is_builder:
-            out = df(cur_version)
-        else:
-            if attempt > 0 and _plan_reads_table(df, table_dir):
-                raise RuntimeError(
-                    f"commit_txn: lost a version race on {table_dir} "
-                    "with a DataFrame whose plan reads the same table — "
-                    "re-executing it would merge against the superseded "
-                    "snapshot and drop the concurrent commit. Pass a "
-                    "builder (f(version) -> DataFrame) so the merge "
-                    "recomputes against the fresh state."
-                )
-            out = df
-        fields = _schema_fields(out)
-        check_schema_evolution(man.get("schema") if man else None, fields)
-        version = (cur_version or 0) + 1
-        snap_rel = f"data/v{version:010d}-{token}"
-        out.write.mode("overwrite").parquet(f"{table_dir}/{snap_rel}")
-
-        manifest = {
-            "version": version,
-            "snapshot": snap_rel,
-            "epoch_id": epoch_id,
-            "parent": cur_version,
-            "schema": fields,
-        }
-        # key/seq stamps survive maintenance rewrites that don't know
-        # about them (the prior manifest is the source of truth unless
-        # the caller restates them via manifest_extra)
-        if man:
-            for k in ("key_col", "seq_col"):
-                if k in man:
-                    manifest[k] = man[k]
-        if manifest_extra:
-            # validated against _RESERVED_MANIFEST at function entry
-            for k, v in manifest_extra.items():
-                manifest[k] = v
-        if _publish_manifest(spark, table_dir, manifest, token):
-            return version
-        # lost the race for this version: the orphan snapshot stays for
-        # vacuum; re-read the log and retry
-    raise RuntimeError(
-        f"commit_txn: gave up after {max_attempts} version conflicts on "
-        f"{table_dir} — concurrent writers exceed the optimistic retry "
-        "budget; coordinate writers or raise max_attempts"
-    )
-
-
 def vacuum_txn(
     spark: SparkSession,
     table_dir: str,
@@ -665,6 +540,17 @@ def vacuum_txn(
 DELETED_COL = "_deleted"
 BUCKET_COL = "_bucket"
 _TUPLE_OPS = ("<", "<=", ">", ">=", "=", "between", "in")
+
+
+def _require_cdc_layout(man: dict | None, table_dir: str) -> None:
+    """The one layout check of the CDC entry points: a committed table
+    must be bucketed. A plain snapshot table (layout.commit_clustered)
+    has no key stamp, buckets or tombstones to work with."""
+    if man is not None and "buckets" not in man:
+        raise ValueError(
+            f"{table_dir} is a plain snapshot table, not a bucketed CDC "
+            "table"
+        )
 
 
 def _tuple_pred(name: str, op: str, val) -> Column:
@@ -789,16 +675,6 @@ def _parse_nbs_condition(cond: str):
             val = int(lit)
         out.append((col, op, val))
     return out
-
-
-# manifest fields the layer itself writes/interprets — commit_txn
-# rejects these in manifest_extra (ADVICE r10)
-_RESERVED_MANIFEST = frozenset({
-    "version", "snapshot", "epoch_id", "parent", "schema",
-    "buckets", "n_buckets", "overlays", "file_stats",
-    "stats_types", "stats_cols", "cluster_rows",
-    "change_files", "target_file_rows",
-})
 
 
 def _bucket_of(key_col: str, n_buckets: int):
@@ -1016,8 +892,20 @@ def apply_cdc_batch_bucketed(
     stats_cols: list[str] | None = None,
     target_file_rows: int | None = None,
 ) -> int | None:
-    """Partition-pruned CDC apply — the fact-sized variant of
-    apply_cdc_batch_txn.
+    """Apply one CDC micro-batch (key + payload + monotonically
+    increasing ``seq`` + op in {'I','U','D'}) to a keyed table —
+    MERGE-at-ingest with DELETE retention, partition-pruned.
+
+    * **Tombstones**: a delete stores a ``_deleted=true`` row carrying
+      the delete's seq (payload columns nulled). A staged row applies
+      iff its seq is strictly newer than the stored row's, so a stale
+      upsert replayed after a newer delete cannot resurrect the row —
+      including deletes of keys the table has never seen.
+      ``read_cdc_table`` hides tombstones; ``compact_cdc_tombstones``
+      retires them once the producer's replay horizon has passed.
+    * **Atomic commit**: a replayed ``epoch_id`` is skipped before any
+      work (the seq guard additionally makes any replayed CONTENT a
+      no-op, so the two guards are belt and braces).
 
     ``stats_cols`` (sticky: recorded in the manifest on first use and
     inherited by later batches) adds per-FILE zone maps over the named
@@ -1042,11 +930,11 @@ def apply_cdc_batch_bucketed(
     cdc_prune_report can price sub-file selectivity for big sorted
     files.
 
-    The flat transactional apply rewrites O(table) per micro-batch:
-    right for dimension tables, ruinous for a fact-sized keyed table
-    where each batch touches a sliver of the key space. Here the key
-    space is hashed into ``n_buckets`` and the manifest maps EACH BUCKET
-    to the snapshot dir that currently owns it. One micro-batch then:
+    A whole-table rewrite per micro-batch would be ruinous for a
+    fact-sized keyed table where each batch touches a sliver of the key
+    space. Here the key space is hashed into ``n_buckets`` and the
+    manifest maps EACH BUCKET to the snapshot dir that currently owns
+    it. One micro-batch then:
 
     1. stages its ops once (checkpointed) and takes its row count,
        delete-only flag and bucket set (≤ n_buckets elements — bounded
@@ -1056,7 +944,7 @@ def apply_cdc_batch_bucketed(
        just those hash-partition directories and takes the schema from
        the manifest, so the read is O(touched fraction of table), never
        a full scan, and plans without a Spark job;
-    3. merges (same seq guard + tombstones as the flat path) and writes
+    3. merges (the seq guard + tombstones above) and writes
        one new dir holding just the touched buckets, hash-partitioned;
     4. publishes a manifest whose mapping repoints the touched buckets
        at the new dir and leaves every other bucket where it was — the
@@ -1147,6 +1035,7 @@ def _apply_staged_bucketed(
     for attempt in range(max_attempts):
         if attempt:
             man = latest_manifest(spark, table_dir)
+        _require_cdc_layout(man, table_dir)
         if man is not None:
             last = man.get("epoch_id")
             if (
@@ -1155,11 +1044,6 @@ def _apply_staged_bucketed(
                 and epoch_id <= last
             ):
                 return None
-            if "snapshot" in man:
-                raise ValueError(
-                    f"{table_dir} is a flat txn table; bucketed apply "
-                    "requires a bucketed (or empty) table"
-                )
         # resolve the bucket count PER ATTEMPT: with n_buckets=None the
         # count is inherited from the manifest just read, so a
         # rescale_buckets landing between attempts makes the retry
@@ -1303,58 +1187,6 @@ def _apply_staged_bucketed(
     )
 
 
-def apply_cdc_batch_txn(
-    batch_df: DataFrame,
-    table_dir: str,
-    key_col: str = "id",
-    op_col: str = "op",
-    seq_col: str = "seq",
-    epoch_id: int | None = None,
-) -> int | None:
-    """Apply one CDC micro-batch (key + payload + monotonically increasing
-    ``seq`` + op in {'I','U','D'}) to a transactional keyed table —
-    MERGE-at-ingest with DELETE retention.
-
-    What a plain parquet overwrite would lack:
-
-    * **Tombstones**: a delete stores a ``_deleted=true`` row carrying the
-      delete's seq (payload columns nulled). A stale upsert replayed
-      after a newer delete loses the seq comparison against the
-      tombstone and CANNOT resurrect the row — including deletes of
-      keys the table has never seen. ``read_cdc_table`` hides
-      tombstones; ``compact_cdc_tombstones`` retires them once the
-      producer's replay horizon has passed.
-    * **Atomic commit**: the merged table publishes via ``commit_txn`` —
-      no delete-then-write window for readers, no marker/table ordering
-      crash window, and a replayed ``epoch_id`` is skipped outright
-      (the seq guard additionally makes any replayed CONTENT a no-op,
-      so the two guards are belt and braces).
-
-    Cost per batch is O(table) rewrite like the plain path — right for
-    dimension-sized tables (apply_cdc_batch_bucketed is the fact-sized
-    variant); returns commit_txn's version (None = replay skip).
-    """
-    spark = batch_df.sparkSession
-    staged = _stage_cdc_batch(batch_df, key_col, op_col, seq_col)
-
-    # builder form: a lost CAS race re-reads the table at the fresh
-    # version and re-merges, instead of re-committing a merge computed
-    # against the superseded snapshot (ADVICE r4: the stale-log-read
-    # bug the bucketed path already guards against)
-    def build(cur_version):
-        cur = (
-            read_txn(spark, table_dir, version=cur_version)
-            if cur_version is not None
-            else None
-        )
-        return _merge_cdc(cur, staged, key_col, seq_col)
-
-    return commit_txn(
-        build, table_dir, epoch_id=epoch_id, spark=spark,
-        manifest_extra={"key_col": key_col, "seq_col": seq_col},
-    )
-
-
 def read_cdc_table(
     spark: SparkSession,
     table_dir: str,
@@ -1362,33 +1194,29 @@ def read_cdc_table(
     version: int | None = None,
     filters: list[tuple] | None = None,
 ) -> DataFrame | None:
-    """Live rows of a transactional CDC table — flat or bucketed
-    (tombstones filtered, the bucket column hidden; pass
-    include_tombstones=True for the raw keyed state, or ``version`` for
-    time travel).
+    """Live rows of a CDC table (tombstones filtered, the bucket column
+    hidden; pass include_tombstones=True for the raw keyed state, or
+    ``version`` for time travel).
 
     ``filters`` (VERDICT r9 #5 — the user-facing face of
     scan_cdc_pruned's zone-map skipping): a layout.py predicate list
     ``[(col, op, val), ...]`` (ops ``< <= > >= = between in``, ANDed).
-    On a bucketed table with manifest file stats the read plans over
-    ONLY the files whose per-file/slice envelopes overlap, pushes the
-    residual to the parquet reader (native row-group skipping inside
-    kept files), and re-applies it after overlay resolution — same
-    result as filtering the plain read, a fraction of the IO when the
-    table was ingested stats-clustered (apply batches with
-    ``stats_cols=``). Tables without stats (or flat layouts) apply the
-    predicate as a plain pushed filter — always correct, prunes at
-    parquet row-group granularity only. Incompatible with
-    ``include_tombstones`` (a tombstone's payload is null — filtering
-    it by payload is meaningless)."""
+    On a table with manifest file stats the read plans over ONLY the
+    files whose per-file/slice envelopes overlap, pushes the residual
+    to the parquet reader (native row-group skipping inside kept
+    files), and re-applies it after overlay resolution — same result
+    as filtering the plain read, a fraction of the IO when the table
+    was ingested stats-clustered (apply batches with ``stats_cols=``).
+    Tables without stats apply the predicate as a plain pushed filter —
+    always correct, prunes at parquet row-group granularity only.
+    Incompatible with ``include_tombstones`` (a tombstone's payload is
+    null — filtering it by payload is meaningless)."""
     if filters:
         if include_tombstones:
             raise ValueError(
                 "read_cdc_table: filters= cannot combine with "
                 "include_tombstones — tombstone payloads are null"
             )
-        from taar_gcp_etl_spark.layout import _residual
-
         man = (
             latest_manifest(spark, table_dir)
             if version is None
@@ -1396,20 +1224,19 @@ def read_cdc_table(
         )
         if man is None:
             return None
-        if "buckets" in man and "file_stats" in man:
+        if "file_stats" in man:
             return scan_cdc_pruned(
                 spark, table_dir, filters, version=version, man=man
             )
-        df = read_txn(spark, table_dir, version=version)
-        out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-        if BUCKET_COL in out.columns:
-            out = out.drop(BUCKET_COL)
-        return out.filter(_residual(filters))
     df = read_txn(spark, table_dir, version=version)
     if df is None or include_tombstones:
         return df
-    out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-    return out.drop(BUCKET_COL) if BUCKET_COL in out.columns else out
+    out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
+    if filters:
+        from taar_gcp_etl_spark.layout import _residual
+
+        out = out.filter(_residual(filters))
+    return out
 
 
 MERGE_BROADCAST_KEY_GATE = 4_000_000
@@ -1804,11 +1631,9 @@ def merge_into(
     ``payload_cols=[...]`` names the payload subset to store (the
     CDC-extract shape whose delete-flag column must NOT persist; warm
     merges drop extras automatically, so payload_cols is cold-start
-    only and raises once the table exists). Flat (dimension-sized)
-    tables route through apply_cdc_batch_txn with identical clause
-    semantics; their manifests carry ``key_col``/``seq_col`` stamps
-    (older stamp-less flat tables fall back to the caller-supplied
-    ``key_col``).
+    only and raises once the table exists). The table's key and seq
+    columns are the ones its manifest stamps; a caller's ``key_col``
+    must name the same key.
 
     Returns the committed version; None when no clause produced a row
     (or ``epoch_id`` replay-skipped). Reference analogue: none — the
@@ -1830,29 +1655,17 @@ def merge_into(
             f"{table_dir} already exists and its schema decides what "
             "persists (extra source columns are dropped automatically)"
         )
+    _require_cdc_layout(man, table_dir)
     key_needs_cast: str | None = None
     if man is not None:
-        man_key = man.get("key_col")
-        if man_key is None:
-            # stamp-less manifest (pre-r10 flat table, or a plain
-            # commit_txn table): trust the caller's key_col (ADVICE
-            # r9 — rejecting it made non-default-key flat tables
-            # unmergeable), default 'id'
-            man_key = key_col if key_col is not None else "id"
-            schema_names = [n for n, _ in man.get("schema") or []]
-            if man_key not in schema_names:
-                raise ValueError(
-                    f"merge_into: {table_dir} carries no key_col stamp "
-                    f"and {man_key!r} is not a table column "
-                    f"({schema_names}) — pass key_col= naming the key"
-                )
+        man_key = man["key_col"]
         if key_col is not None and key_col != man_key:
             raise ValueError(
                 f"merge_into: key_col={key_col!r} does not match the "
                 f"table's key column {man_key!r}"
             )
         key_col = man_key
-        seq_col = man.get("seq_col", "seq")
+        seq_col = man["seq_col"]
         # the stored seq is the CDC layer's maintenance stamp — merge
         # stamps a fresh one; the source supplies only business columns
         live_cols = [
@@ -2016,8 +1829,7 @@ def _merge_into_impl(
             F.when(F.col("_n") > 1, F.col(key_col)), ignorenulls=True
         ).alias("dup"),
     ]
-    bucketed = man is not None and "buckets" in man
-    if bucketed:
+    if man is not None:
         probe.append(
             F.collect_set(_bucket_of(key_col, man["n_buckets"])).alias("bs")
         )
@@ -2082,7 +1894,6 @@ def _merge_into_impl(
     nbs_kept_paths: list[str] | None = None
     if (
         nbs_clauses
-        and "buckets" in man
         and "file_stats" in man
         and all(
             isinstance(cl["condition"], (list, tuple))
@@ -2135,7 +1946,7 @@ def _merge_into_impl(
     # the NBS side reads its own zone-map-pruned scan above, in which
     # case the matched side gets its bucket pruning back too.
     buckets = None
-    if bucketed and (not nbs_clauses or nbs_kept_paths is not None):
+    if not nbs_clauses or nbs_kept_paths is not None:
         nb = man["n_buckets"]
         buckets = probed["bs"]
         if len(buckets) >= nb:
@@ -2174,17 +1985,13 @@ def _merge_into_impl(
             raw = raw.drop(BUCKET_COL)
     src_keys = source.select(key_col)
     raw_all = raw  # pre-semi-join handle: the NBS pass reads it
-    # a bucketed apply takes each row's preimage from this join (the
-    # state its seq stamp outranks) instead of joining the table again
-    pre_cols, pre = None, []
-    if bucketed:
-        pre_cols = [c for c in raw.columns if c not in (key_col, DELETED_COL)]
-        pre = [
-            F.col(f"t_{c}").alias(n)
-            for c, n in zip(
-                pre_cols + [DELETED_COL], _preimage_names(pre_cols)
-            )
-        ]
+    # the apply takes each row's preimage from this join (the state its
+    # seq stamp outranks) instead of joining the table again
+    pre_cols = [c for c in raw.columns if c not in (key_col, DELETED_COL)]
+    pre = [
+        F.col(f"t_{c}").alias(n)
+        for c, n in zip(pre_cols + [DELETED_COL], _preimage_names(pre_cols))
+    ]
     raw = raw.join(
         F.broadcast(src_keys) if hint_small else src_keys,
         key_col, "left_semi",
@@ -2370,14 +2177,6 @@ def _merge_into_impl(
             )
         )
         batch = batch.unionByName(nbs_batch)
-    if "buckets" not in man:
-        # flat (dimension-sized) CDC table: the O(table) rewrite is the
-        # layer's contract for these — same clause semantics, no bucket
-        # pruning to exploit
-        return apply_cdc_batch_txn(
-            batch, table_dir, key_col=key_col, op_col="_m_op",
-            seq_col=seq_col, epoch_id=epoch_id,
-        )
     return _apply_staged_bucketed(
         _stage_cdc_batch(
             batch, key_col, "_m_op", seq_col, preimage_cols=pre_cols
@@ -2479,10 +2278,7 @@ def join_bucketed(
     if man_l is None or man_r is None:
         return None
     for d, m in ((left_dir, man_l), (right_dir, man_r)):
-        if "buckets" not in m:
-            raise ValueError(
-                f"{d} is not a bucketed CDC table (flat snapshot layout)"
-            )
+        _require_cdc_layout(m, d)
     nb_l, nb_r = man_l["n_buckets"], man_r["n_buckets"]
     if nb_l != nb_r:
         raise ValueError(
@@ -2717,52 +2513,62 @@ def compact_cdc_tombstones(
     caller's promise that no producer can still emit a sequence number
     under that horizon (e.g. the streaming checkpoint's committed
     offset). Tombstones at/above the horizon keep guarding; live rows
-    are never touched. Commits a new version (None if nothing to do).
-    On a bucketed table this is the one full-rewrite maintenance op —
-    it re-materializes every bucket into a single fresh dir (keeping
-    the bucketed layout), which also serves as compaction for mappings
-    fragmented across many incremental dirs."""
-    man = latest_manifest(spark, table_dir)
-    if man is None:
-        return None
-
-    # recomputed per CAS attempt, pinned to the version being replaced —
-    # a lost race must re-read, not re-commit a stale filter result
-    def keep_at(version):
-        cur = read_txn(spark, table_dir, version=version)
-        return cur.filter(
+    are never touched. A full rewrite (the CAS loop rescale_buckets
+    shares): it re-materializes every bucket into a single fresh dir
+    (keeping the bucketed layout), which also serves as compaction for
+    mappings fragmented across many incremental dirs. Returns the
+    committed version, or None when the table has no committed
+    version."""
+    return _full_rewrite(
+        spark,
+        table_dir,
+        lambda cur: cur.filter(
             ~(F.col(DELETED_COL) & (F.col(seq_col) < F.lit(min_live_seq)))
-        )
+        ),
+    )
 
-    if "buckets" in man:
-        token = uuid.uuid4().hex[:8]
-        for _ in range(5):
-            man = latest_manifest(spark, table_dir)
-            version = man["version"] + 1
-            snap_rel = f"data/v{version:010d}-{token}"
-            kdf = keep_at(man["version"])
-            # maintenance must preserve the clustered layout, or one
-            # compaction would undo every apply's narrow zone maps
-            _rolled_writer(
-                _clustered_for_write(
-                    kdf, man.get("stats_cols"), man["n_buckets"]
-                ),
-                man.get("cluster_rows"),
-            ).parquet(f"{table_dir.rstrip('/')}/{snap_rel}")
-            manifest = _full_rewrite_manifest(
-                spark,
-                table_dir.rstrip("/"),
-                man,
-                version,
-                token,
-                snap_rel,
-                man["n_buckets"],
-                kdf,
-            )
-            if _publish_manifest(spark, table_dir, manifest, token):
-                return version
-        raise RuntimeError(f"compact: version conflicts on {table_dir}")
-    return commit_txn(keep_at, table_dir, spark=spark)
+
+def _full_rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    transform,
+    n_buckets: int | None = None,
+    max_attempts: int = 5,
+) -> int | None:
+    """The CAS loop of the maintenance rewrites (tombstone compaction,
+    bucket rescale): read the version being replaced, ``transform`` it,
+    write one clustered (and rolled) dir holding every bucket, and
+    publish _full_rewrite_manifest. Each attempt re-reads the log and
+    pins its read to that version, so a lost race rewrites the fresh
+    state instead of committing a stale one. ``n_buckets`` is the
+    rewritten table's bucket count (None keeps the current). None when
+    the table has no committed version."""
+    table_dir = table_dir.rstrip("/")
+    token = uuid.uuid4().hex[:8]
+    for _ in range(max_attempts):
+        man = latest_manifest(spark, table_dir)
+        if man is None:
+            return None
+        _require_cdc_layout(man, table_dir)
+        nb = n_buckets or man["n_buckets"]
+        version = man["version"] + 1
+        rows = transform(read_txn(spark, table_dir, version=man["version"]))
+        snap_rel = f"data/v{version:010d}-{token}"
+        # maintenance must preserve the clustered layout, or one
+        # rewrite would undo every apply's narrow zone maps
+        _rolled_writer(
+            _clustered_for_write(rows, man.get("stats_cols"), nb),
+            man.get("cluster_rows"),
+        ).parquet(f"{table_dir}/{snap_rel}")
+        manifest = _full_rewrite_manifest(
+            spark, table_dir, man, version, token, snap_rel, nb, rows
+        )
+        if _publish_manifest(spark, table_dir, manifest, token):
+            return version
+    raise RuntimeError(
+        f"full rewrite: gave up after {max_attempts} version conflicts on "
+        f"{table_dir}"
+    )
 
 
 def _clustered_for_write(
@@ -2839,16 +2645,16 @@ def _full_rewrite_manifest(
     one fresh dir, overlays folded, schema carried, per-dir stats
     recollected when the table tracks them, and an EMPTY change file
     recorded (live content unchanged) so CDF netting spans the
-    maintenance version. One shared assembly so the two full-rewrite
-    paths cannot drift (a field added to one and missed in the other
+    maintenance version. Only _full_rewrite builds it, so the two
+    rewrites cannot drift (a field added to one and missed in the other
     was exactly how compaction briefly lost its change file)."""
-    schema_fields = man.get("schema") or _schema_fields(rows)
+    schema_fields = man["schema"]
     manifest = {
         "version": version,
         "buckets": {str(b): snap_rel for b in range(n_buckets)},
         "n_buckets": n_buckets,
-        "key_col": man.get("key_col", "id"),
-        "seq_col": man.get("seq_col", "seq"),
+        "key_col": man["key_col"],
+        "seq_col": man["seq_col"],
         "overlays": {},  # full rewrite folds every overlay in
         "epoch_id": man.get("epoch_id"),
         "parent": man["version"],
@@ -2923,100 +2729,21 @@ def rescale_buckets(
     file (live content is unchanged) so CDF netting stays available
     across the maintenance version. Returns the committed version, or
     None if the table already has ``new_n_buckets``."""
-    table_dir = table_dir.rstrip("/")
-    token = uuid.uuid4().hex[:8]
-    for _ in range(max_attempts):
-        man = latest_manifest(spark, table_dir)
-        if man is None or "buckets" not in man:
-            raise ValueError(
-                f"{table_dir} is not a bucketed CDC table"
-            )
-        if man["n_buckets"] == new_n_buckets:
-            return None
-        key_col = man.get("key_col", "id")
-        version = man["version"] + 1
-        full = read_txn(spark, table_dir, version=man["version"])
-        rehashed = full.drop(BUCKET_COL).withColumn(
-            BUCKET_COL, _bucket_of(key_col, new_n_buckets)
-        )
-        snap_rel = f"data/v{version:010d}-{token}"
-        _rolled_writer(
-            _clustered_for_write(
-                rehashed, man.get("stats_cols"), new_n_buckets
-            ),
-            man.get("cluster_rows"),
-        ).parquet(f"{table_dir}/{snap_rel}")
-        manifest = _full_rewrite_manifest(
-            spark,
-            table_dir,
-            man,
-            version,
-            token,
-            snap_rel,
-            new_n_buckets,
-            full,
-        )
-        if _publish_manifest(spark, table_dir, manifest, token):
-            return version
-    raise RuntimeError(
-        f"rescale_buckets: version conflicts on {table_dir}"
-    )
-
-
-def read_changes(
-    spark: SparkSession,
-    table_dir: str,
-    from_version: int,
-    to_version: int | None = None,
-    mode: str = "compact",
-) -> DataFrame | None:
-    """Change data feed between two committed versions of a keyed CDC
-    table (flat or bucketed): rows tagged ``_change_type``, the
-    Delta-CDF-style contract that lets downstream consumers
-    incrementally sync without replaying the source stream. Two shapes:
-
-    * ``mode='compact'`` (default): one row per changed key, types
-      {'insert', 'update', 'delete'}, carrying the NEW payload (null
-      payload for deletes).
-    * ``mode='cdf'``: Delta-compatible pre/postimage rows — deletes
-      carry the OLD payload, and an update emits TWO rows
-      ('update_preimage' with the old payload, 'update_postimage' with
-      the new). This is the shape retraction-based incremental
-      aggregation needs: the preimage tells the consumer which group
-      LOST a row.
-
-    Computed as a keyed full-outer diff of the two snapshots' live rows
-    (tombstones count as absent): one shuffle on the key, O(both
-    snapshots) — read_changes_bucketed is the O(changed buckets)
-    variant; this full diff is the correctness baseline. The diff is
-    derived purely from committed snapshots, so it is stable under
-    replays and independent of how many micro-batches produced the
-    delta."""
-    if mode not in ("compact", "cdf"):
-        raise ValueError(f"mode {mode!r}: use 'compact' or 'cdf'")
     man = latest_manifest(spark, table_dir)
     if man is None:
+        raise ValueError(f"{table_dir} has no committed version")
+    _require_cdc_layout(man, table_dir)
+    if man["n_buckets"] == new_n_buckets:
         return None
-    if to_version is None:
-        to_version = man["version"]
-    key_col = man.get("key_col", "id")
-    seq_col = man.get("seq_col", "seq")
-    # from_version=0 means "since table creation": everything in the new
-    # snapshot is an insert (the read_changes_bucketed contract — flat
-    # tables delegate here BEFORE the bucketed variant's own guard, so
-    # the guard must live in both). version 0 has no manifest to read.
-    if from_version == 0:
-        new = read_cdc_table(spark, table_dir, version=to_version)
-        if new is None:
-            return None
-        return new.withColumn("_change_type", F.lit("insert"))
-    old = read_cdc_table(spark, table_dir, version=from_version)
-    new = read_cdc_table(spark, table_dir, version=to_version)
-    if new is None:
-        return None
-    if old is None:
-        return new.withColumn("_change_type", F.lit("insert"))
-    return _keyed_diff(old, new, key_col, seq_col, mode=mode)
+    return _full_rewrite(
+        spark,
+        table_dir,
+        lambda cur: cur.drop(BUCKET_COL).withColumn(
+            BUCKET_COL, _bucket_of(man["key_col"], new_n_buckets)
+        ),
+        n_buckets=new_n_buckets,
+        max_attempts=max_attempts,
+    )
 
 
 def _keyed_diff(
@@ -3027,7 +2754,7 @@ def _keyed_diff(
     mode: str = "compact",
 ) -> DataFrame:
     """Full-outer keyed diff of two live-row states → CDF-tagged rows
-    (the shared core of read_changes and read_changes_bucketed)."""
+    (read_changes' snapshot-diff fallback)."""
     if mode not in ("compact", "cdf"):
         raise ValueError(f"mode {mode!r}: use 'compact' or 'cdf'")
     payload = [c for c in new.columns if c != key_col]
@@ -3193,17 +2920,30 @@ def _net_change_files(
     )
 
 
-def read_changes_bucketed(
+def read_changes(
     spark: SparkSession,
     table_dir: str,
     from_version: int,
     to_version: int | None = None,
     mode: str = "compact",
 ) -> DataFrame | None:
-    """Change data feed over a BUCKETED CDC table, O(changes) where the
-    log allows and O(changed buckets) otherwise. Same row contract as
-    ``read_changes`` (compact or 'cdf' pre/postimage shape). Three
-    plans, tried in cost order:
+    """Change data feed between two committed versions of a CDC table:
+    rows tagged ``_change_type``, the Delta-CDF-style contract that lets
+    downstream consumers incrementally sync without replaying the
+    source stream. Two shapes:
+
+    * ``mode='compact'`` (default): one row per changed key, types
+      {'insert', 'update', 'delete'}, carrying the NEW payload (null
+      payload for deletes).
+    * ``mode='cdf'``: Delta-compatible pre/postimage rows — deletes
+      carry the OLD payload, and an update emits TWO rows
+      ('update_preimage' with the old payload, 'update_postimage' with
+      the new). This is the shape retraction-based incremental
+      aggregation needs: the preimage tells the consumer which group
+      LOST a row.
+
+    Tombstones count as absent. O(changes) where the log allows and
+    O(changed buckets) otherwise — two plans, tried in cost order:
 
     1. **Change-file netting** — every commit in (from, to] recorded
        its change feed at apply time (``change_files`` in the
@@ -3217,11 +2957,9 @@ def read_changes_bucketed(
        "changed buckets" was the whole table.
     2. **Bucket-pruned snapshot diff** — if any commit in the window
        lacks change files (delete-only overlay fast-path commits skip
-       the preimage read by design; pre-upgrade tables have none), diff
-       the two snapshots restricted to the buckets whose manifest
-       entries changed: O(changed fraction of table).
-    3. Flat tables delegate to ``read_changes`` (full diff — every
-       version is a whole new snapshot there).
+       the preimage read by design), diff the two versions' live rows
+       restricted to the buckets whose manifest entries changed:
+       O(changed fraction of table), one shuffle on the key.
 
     ``from_version=0`` means "since table creation": everything is an
     insert. A vacuumed (missing) ``from_version`` manifest raises —
@@ -3232,20 +2970,17 @@ def read_changes_bucketed(
     man = latest_manifest(spark, table_dir)
     if man is None:
         return None
-    if "snapshot" in man:  # flat layout: no bucket granularity
-        return read_changes(
-            spark, table_dir, from_version, to_version, mode=mode
-        )
+    _require_cdc_layout(man, table_dir)
     if to_version is None:
         to_version = man["version"]
-    key_col = man.get("key_col", "id")
-    seq_col = man.get("seq_col", "seq")
-    man_to = read_manifest(spark, table_dir, to_version)
+    key_col = man["key_col"]
+    seq_col = man["seq_col"]
     if from_version == 0:
         new = read_cdc_table(spark, table_dir, version=to_version)
         if new is None:
             return None
         return new.withColumn("_change_type", F.lit("insert"))
+    man_to = read_manifest(spark, table_dir, to_version)
     man_from = read_manifest(spark, table_dir, from_version)  # raises if gone
 
     if from_version < to_version:
@@ -3260,8 +2995,7 @@ def read_changes_bucketed(
         df = read_txn(spark, table_dir, version=version, buckets=buckets)
         if df is None:
             return None
-        out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-        return out.drop(BUCKET_COL) if BUCKET_COL in out.columns else out
+        return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
 
     changed = changed_buckets(man_from, man_to)
     new = live(to_version, changed)
@@ -3294,7 +3028,7 @@ _JOIN_CURSOR_SHIFT = 31  # right version in the low 31 bits
 
 def _pack_join_cursor(v_left: int, v_right: int) -> int:
     """One monotone integer from the (left, right) source-version pair,
-    so commit_txn's existing epoch guard gives the two-source sync
+    so the bucketed apply's epoch guard gives the two-source sync
     exactly-once replay semantics without new manifest machinery. Both
     source versions only ever grow, so the packed value grows with
     either — and equality means neither advanced (replay skip). 31 bits
@@ -3336,7 +3070,7 @@ def sync_join_from_cdc(
 
     1. reads both sources' COMPACT change feeds since the last synced
        versions — O(changes) via change-file netting when the log
-       allows (read_changes_bucketed);
+       allows (read_changes);
     2. takes the distinct TOUCHED key set (either side changing a key
        can flip that key's output row);
     3. re-joins the live sides restricted to the touched keys — the
@@ -3366,8 +3100,7 @@ def sync_join_from_cdc(
 
     Cold start (no store yet): one full join of the live sides —
     through join_bucketed's zero-shuffle per-bucket plan when both
-    sources are bucketed at the same modulus, the planner's join
-    otherwise.
+    sources share a bucket count, the planner's join otherwise.
 
     Cursor + idempotence: the store manifest's epoch_id packs BOTH
     source versions (_pack_join_cursor — monotone, so the bucketed
@@ -3388,9 +3121,11 @@ def sync_join_from_cdc(
     man_r = latest_manifest(spark, right_dir)
     if man_l is None or man_r is None:
         return None
+    _require_cdc_layout(man_l, left_dir)
+    _require_cdc_layout(man_r, right_dir)
     to_l, to_r = man_l["version"], man_r["version"]
-    key_l = man_l.get("key_col", "id")
-    key_r = man_r.get("key_col", "id")
+    key_l = man_l["key_col"]
+    key_r = man_r["key_col"]
     merged_key = key_l == key_r
 
     def live_cols(man: dict) -> list[str]:
@@ -3437,7 +3172,7 @@ def sync_join_from_cdc(
         join past it — VERDICT r9 #3, a churn burst must not OOM the
         driver)."""
         buckets = None
-        if keys is not None and prune_probe and "buckets" in man:
+        if keys is not None and prune_probe:
             nb = man["n_buckets"]
             buckets = [
                 r[0]
@@ -3448,9 +3183,7 @@ def sync_join_from_cdc(
         df = read_txn(spark, table_dir, version=version, buckets=buckets)
         if df is None:
             return _empty_live(spark, man)
-        out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-        if BUCKET_COL in out.columns:
-            out = out.drop(BUCKET_COL)
+        out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
         if keys is not None:
             k = keys.withColumnRenamed("_k", key_col)
             out = out.join(
@@ -3461,7 +3194,7 @@ def sync_join_from_cdc(
         return out
 
     packed = _pack_join_cursor(to_l, to_r)
-    nb_store = man_l.get("n_buckets") or 64
+    nb_store = man_l["n_buckets"]
     store_man = latest_manifest(spark, store_dir)
     persisted: list[DataFrame] = []
 
@@ -3473,13 +3206,9 @@ def sync_join_from_cdc(
     try:
         if store_man is None:
             # cold start: full join of the live sides — zero-shuffle
-            # bucket-aligned when the layouts admit it — committed as
-            # the store's seed CDC batch
-            if (
-                "buckets" in man_l
-                and "buckets" in man_r
-                and man_l["n_buckets"] == man_r["n_buckets"]
-            ):
+            # bucket-aligned when the bucket counts match — committed
+            # as the store's seed CDC batch
+            if man_l["n_buckets"] == man_r["n_buckets"]:
                 cold = join_bucketed(
                     spark, left_dir, right_dir, how=how, rsuffix=rsuffix
                 )
@@ -3517,9 +3246,7 @@ def sync_join_from_cdc(
         ):
             if frm == to:
                 continue
-            ch = read_changes_bucketed(
-                spark, table_dir, frm, to, mode="compact"
-            )
+            ch = read_changes(spark, table_dir, frm, to, mode="compact")
             if ch is not None:
                 touched_parts.append(
                     ch.select(F.col(key_col).alias("_k"))
@@ -3775,8 +3502,8 @@ def scan_cdc_pruned(
         # their rows silently vanish from the pruned scan
         unstated = plan["unstated_dirs"]
 
-    key_col = man.get("key_col", "id")
-    seq_col = man.get("seq_col", "seq")
+    key_col = man["key_col"]
+    seq_col = man["seq_col"]
     base = None
     if kept_paths:
         # basePath keeps the _bucket partition column when reading

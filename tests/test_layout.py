@@ -8,9 +8,8 @@ What must hold:
 * Z-order actually earns its shuffle: single-column predicates prune
   on EVERY clustered dimension (a linear sort prunes only its leading
   column — pinned by a head-to-head);
-* the maintenance op (optimize_zorder) is transactional: old version
-  time-travels, concurrent commits are never replaced by a rewrite of
-  older data.
+* a clustered commit is transactional: a replayed epoch is skipped
+  before any write.
 """
 
 from __future__ import annotations
@@ -447,50 +446,7 @@ class TestFileBloomFilters:
 
 
 class TestOptimizeZorder:
-    def test_rewrite_is_transactional_with_time_travel(
-        self, spark, orders, tmp_path
-    ):
-        t = str(tmp_path / "opt")
-        txn.commit_txn(orders, t)
-        with pytest.raises(ValueError, match="no zone-map manifest"):
-            layout.prune_report(spark, t, [("o_custkey", "=", 1)])
-        v = layout.optimize_zorder(
-            spark, t, ["o_custkey", "o_totalprice"], n_files=8
-        )
-        assert v == 2
-        # same rows, new layout; version 1 still time-travels
-        assert txn.read_txn(spark, t).count() == orders.count()
-        assert txn.read_txn(spark, t, version=1).count() == orders.count()
-        rep = layout.prune_report(
-            spark, t, [("o_custkey", "between", (1, 30))]
-        )
-        assert 0 < rep["kept_files"] < rep["total_files"]
-
-    def test_concurrent_commit_survives_optimize_race(
-        self, spark, orders, tmp_path, monkeypatch
-    ):
-        """optimize_zorder is read-modify-write: if a writer commits
-        while the rewrite runs, the rewrite must lose and retry against
-        the fresh state — the concurrent commit's rows end up in the
-        optimized table."""
-        t = str(tmp_path / "optrace")
-        txn.commit_txn(orders.limit(100), t)
-        stale = txn.latest_manifest(spark, t)
-        extra = orders.limit(150)
-        txn.commit_txn(extra, t)  # concurrent writer B
-        real = txn.latest_manifest
-        calls = {"n": 0}
-
-        def stale_once(spark_, table_dir):
-            calls["n"] += 1
-            return stale if calls["n"] <= 2 else real(spark_, table_dir)
-
-        monkeypatch.setattr(txn, "latest_manifest", stale_once)
-        v = layout.optimize_zorder(spark, t, ["o_custkey"], n_files=4)
-        monkeypatch.undo()
-        assert v == 3 and calls["n"] > 2
-        # B's 150-row state (not A's stale 100-row read) got optimized
-        assert txn.read_txn(spark, t).count() == 150
+    """commit_clustered's replay guard."""
 
     def test_epoch_replay_skipped(self, spark, orders, tmp_path):
         t = str(tmp_path / "epoch")

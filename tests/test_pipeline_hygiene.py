@@ -341,7 +341,6 @@ class TestNoUnreachedCode:
         "io.read_avro",
         "io.read_json_artifact",
         "io.write_avro",
-        "layout.optimize_zorder",
         "operators.dedup.simhash",
         "operators.filters.date_partition_predicate",
         "operators.filters.nonempty_array_predicate",

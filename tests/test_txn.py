@@ -13,11 +13,12 @@ from __future__ import annotations
 
 import json
 import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from taar_gcp_etl_spark import txn
+from taar_gcp_etl_spark import layout, txn
 
 CDC_SCHEMA = "id long, val string, seq long, op string"
 
@@ -26,13 +27,49 @@ def _rows(df):
     return {r.id: (r.val, r.seq) for r in df.collect()}
 
 
+def _apply(spark, t, rows, n_buckets=4, **kw):
+    """One CDC batch (CDC_SCHEMA rows) into a small bucketed table."""
+    return txn.apply_cdc_batch_bucketed(
+        spark.createDataFrame(rows, CDC_SCHEMA), t, n_buckets=n_buckets,
+        **kw,
+    )
+
+
+def _commit_snapshot(df, t, **kw):
+    """Commit ``df`` as the next version of a plain snapshot table."""
+    return layout.commit_clustered(df, t, ["id"], n_files=1, **kw)
+
+
+def _snapshot_diff(spark, t, lo, hi=None, mode="compact"):
+    """Reference change feed: txn._keyed_diff over the live rows of the
+    two versions (version 0 is the empty table before the first
+    commit)."""
+    man = txn.latest_manifest(spark, t)
+    new = txn.read_cdc_table(
+        spark, t, version=man["version"] if hi is None else hi
+    )
+    old = (
+        new.filter(F.lit(False))
+        if lo == 0
+        else txn.read_cdc_table(spark, t, version=lo)
+    )
+    return txn._keyed_diff(
+        old, new, man["key_col"], man["seq_col"], mode=mode
+    )
+
+
+def _feed_rows(df):
+    """A change feed's rows as a multiset, columns in name order."""
+    return Counter(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
 class TestCommitRead:
     def test_roundtrip_and_versions(self, spark, tmp_path):
         t = str(tmp_path / "t")
-        v1 = txn.commit_txn(
+        v1 = _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
-        v2 = txn.commit_txn(
+        v2 = _commit_snapshot(
             spark.createDataFrame([(1, "b"), (2, "c")], "id long, val string"),
             t,
         )
@@ -52,46 +89,29 @@ class TestCommitRead:
         new snapshot is a fresh directory, so no lineage cut is needed
         (the plain-parquet overwrite path must localCheckpoint)."""
         t = str(tmp_path / "t")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, 10)], "id long, v long"), t
         )
         cur = txn.read_txn(spark, t)
-        txn.commit_txn(cur.withColumn("v", F.col("v") + 1), t)
+        _commit_snapshot(cur.withColumn("v", F.col("v") + 1), t)
         assert txn.read_txn(spark, t).collect()[0].v == 11
 
     def test_epoch_replay_skipped(self, spark, tmp_path):
         t = str(tmp_path / "t")
         df = spark.createDataFrame([(1, "a")], "id long, val string")
-        assert txn.commit_txn(df, t, epoch_id=0) == 1
-        assert txn.commit_txn(df, t, epoch_id=1) == 2
+        assert _commit_snapshot(df, t, epoch_id=0) == 1
+        assert _commit_snapshot(df, t, epoch_id=1) == 2
         # same and older epochs are skipped before any write
-        assert txn.commit_txn(df, t, epoch_id=1) is None
-        assert txn.commit_txn(df, t, epoch_id=0) is None
+        assert _commit_snapshot(df, t, epoch_id=1) is None
+        assert _commit_snapshot(df, t, epoch_id=0) is None
         assert len(txn._list_manifest_versions(spark, t)) == 2
-
-    def test_manifest_extra_reserved_keys_rejected(self, spark, tmp_path):
-        """ADVICE r10: reserved keys in manifest_extra raise instead of
-        silently dropping — a caller passing 'file_stats' would believe
-        the field persisted. Non-reserved keys still land."""
-        t = str(tmp_path / "t")
-        df = spark.createDataFrame([(1, "a")], "id long, val string")
-        with pytest.raises(ValueError, match="reserved"):
-            txn.commit_txn(df, t, manifest_extra={"file_stats": {}})
-        with pytest.raises(ValueError, match="overlays"):
-            txn.commit_txn(
-                df, t, manifest_extra={"overlays": [], "note": "x"}
-            )
-        # the failed attempts must not have burned a version
-        assert txn.latest_manifest(spark, t) is None
-        txn.commit_txn(df, t, manifest_extra={"note": "x"})
-        assert txn.latest_manifest(spark, t)["note"] == "x"
 
     def test_version_conflict_retries_to_next_slot(self, spark, tmp_path):
         """Optimistic concurrency: if another writer took the target
         manifest slot between log-read and publish, the commit re-reads
         and lands on the next version instead of clobbering."""
         t = str(tmp_path / "t")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
         # squat on version 2 as a concurrent writer would
@@ -109,7 +129,7 @@ class TestCommitRead:
             f"{t}/_log/{txn._manifest_name(2)}",
             json.dumps(squat).encode(),
         )
-        v = txn.commit_txn(
+        v = _commit_snapshot(
             spark.createDataFrame([(3, "c")], "id long, val string"), t
         )
         assert v == 3
@@ -121,16 +141,14 @@ class TestCrashWindow:
     def test_kill_between_snapshot_write_and_manifest_publish(
         self, spark, tmp_path, monkeypatch
     ):
-        """THE crash test: the snapshot lands but the process dies before
-        the manifest rename. The table must still read as the previous
-        version (orphan snapshot invisible), and re-running the batch
-        must apply it exactly once."""
+        """THE crash test: the bucket dir lands but the process dies
+        before the manifest rename. The table must still read as the
+        previous version (orphan dir invisible), and re-running the
+        batch must apply it exactly once."""
         t = str(tmp_path / "dim")
-        b1 = spark.createDataFrame(
-            [(1, "a0", 1, "I"), (2, "b0", 2, "I")], CDC_SCHEMA
-        )
-        b2 = spark.createDataFrame([(1, "a1", 3, "U")], CDC_SCHEMA)
-        assert txn.apply_cdc_batch_txn(b1, t, epoch_id=0) == 1
+        b1 = [(1, "a0", 1, "I"), (2, "b0", 2, "I")]
+        b2 = [(1, "a1", 3, "U")]
+        assert _apply(spark, t, b1, epoch_id=0) == 1
 
         real_write = txn._write_bytes
         boom = RuntimeError("killed before manifest publish")
@@ -142,7 +160,7 @@ class TestCrashWindow:
 
         monkeypatch.setattr(txn, "_write_bytes", dying_write)
         with pytest.raises(RuntimeError, match="killed before"):
-            txn.apply_cdc_batch_txn(b2, t, epoch_id=1)
+            _apply(spark, t, b2, epoch_id=1)
         monkeypatch.undo()
 
         # crash left the table at epoch-0 state — no partial apply
@@ -152,14 +170,14 @@ class TestCrashWindow:
         }
 
         # replayed batch applies EXACTLY once; a second replay is skipped
-        assert txn.apply_cdc_batch_txn(b2, t, epoch_id=1) == 2
-        assert txn.apply_cdc_batch_txn(b2, t, epoch_id=1) is None
+        assert _apply(spark, t, b2, epoch_id=1) == 2
+        assert _apply(spark, t, b2, epoch_id=1) is None
         assert txn.latest_manifest(spark, t)["version"] == 2
         assert _rows(txn.read_cdc_table(spark, t)) == {
             1: ("a1", 3), 2: ("b0", 2)
         }
 
-        # the orphan snapshot from the crash is garbage-collected
+        # the orphan bucket dir from the crash is garbage-collected
         report = txn.vacuum_txn(spark, t, keep_last=2)
         assert report["removed_snapshots"] >= 1
         assert txn.read_txn(spark, t) is not None
@@ -173,19 +191,10 @@ class TestCdcTombstones:
         U(seq3). The plain-parquet path documents this as its
         resurrection gap; the tombstone's seq must win here."""
         t = str(tmp_path / "dim")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "a0", 1, "I"), (2, "b0", 2, "I")], CDC_SCHEMA
-            ),
-            t,
-        )
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, None, 4, "D")], CDC_SCHEMA), t
-        )
+        _apply(spark, t, [(1, "a0", 1, "I"), (2, "b0", 2, "I")])
+        _apply(spark, t, [(1, None, 4, "D")])
         # stale update from before the delete, replayed after it
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "a1", 3, "U")], CDC_SCHEMA), t
-        )
+        _apply(spark, t, [(1, "a1", 3, "U")])
         live = _rows(txn.read_cdc_table(spark, t))
         assert live == {2: ("b0", 2)}  # key 1 stays dead
         raw = txn.read_cdc_table(spark, t, include_tombstones=True)
@@ -196,54 +205,36 @@ class TestCdcTombstones:
         self, spark, tmp_path
     ):
         t = str(tmp_path / "dim")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(7, None, 10, "D")], CDC_SCHEMA), t
-        )
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(7, "zombie", 9, "I")], CDC_SCHEMA), t
-        )
+        _apply(spark, t, [(7, None, 10, "D")])
+        _apply(spark, t, [(7, "zombie", 9, "I")])
         assert txn.read_cdc_table(spark, t).count() == 0
         # a genuinely NEWER insert does revive the key
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(7, "fresh", 11, "I")], CDC_SCHEMA), t
-        )
+        _apply(spark, t, [(7, "fresh", 11, "I")])
         assert _rows(txn.read_cdc_table(spark, t)) == {7: ("fresh", 11)}
 
     def test_seq_guard_and_in_batch_ordering_parity(self, spark, tmp_path):
         """Same guarantees as the plain-parquet CDC tests, on the txn
         layout: in-batch latest-seq wins; replayed stale ops no-op."""
         t = str(tmp_path / "dim")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "x1", 1, "I"), (1, "x3", 3, "U"), (1, "x2", 2, "U")],
-                CDC_SCHEMA,
-            ),
-            t,
+        _apply(
+            spark, t,
+            [(1, "x1", 1, "I"), (1, "x3", 3, "U"), (1, "x2", 2, "U")],
         )
         assert _rows(txn.read_cdc_table(spark, t)) == {1: ("x3", 3)}
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "x1", 1, "I")], CDC_SCHEMA), t
-        )
+        _apply(spark, t, [(1, "x1", 1, "I")])
         assert _rows(txn.read_cdc_table(spark, t)) == {1: ("x3", 3)}
 
     def test_epoch_stamped_replay_skips_before_merge(self, spark, tmp_path):
         t = str(tmp_path / "dim")
-        b = spark.createDataFrame([(1, "a", 1, "I")], CDC_SCHEMA)
-        assert txn.apply_cdc_batch_txn(b, t, epoch_id=5) == 1
-        assert txn.apply_cdc_batch_txn(b, t, epoch_id=5) is None
+        b = [(1, "a", 1, "I")]
+        assert _apply(spark, t, b, epoch_id=5) == 1
+        assert _apply(spark, t, b, epoch_id=5) is None
 
     def test_tombstone_compaction_respects_horizon(self, spark, tmp_path):
         t = str(tmp_path / "dim")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [
-                    (1, None, 3, "D"),
-                    (2, None, 8, "D"),
-                    (3, "live", 9, "I"),
-                ],
-                CDC_SCHEMA,
-            ),
-            t,
+        _apply(
+            spark, t,
+            [(1, None, 3, "D"), (2, None, 8, "D"), (3, "live", 9, "I")],
         )
         txn.compact_cdc_tombstones(spark, t, min_live_seq=5)
         raw = txn.read_cdc_table(spark, t, include_tombstones=True)
@@ -257,7 +248,7 @@ class TestVacuum:
     def test_vacuum_keeps_readable_recent_versions(self, spark, tmp_path):
         t = str(tmp_path / "t")
         for i in range(5):
-            txn.commit_txn(
+            _commit_snapshot(
                 spark.createDataFrame([(i, "v")], "id long, val string"), t
             )
         report = txn.vacuum_txn(spark, t, keep_last=2)
@@ -272,7 +263,7 @@ class TestVacuum:
 class TestBucketedCdc:
     """Partition-pruned CDC (apply_cdc_batch_bucketed): per-batch cost
     bounded by touched buckets, atomicity and tombstone semantics
-    identical to the flat path."""
+    independent of the bucket count."""
 
     def _apply(self, spark, t, rows, **kw):
         return txn.apply_cdc_batch_bucketed(
@@ -280,16 +271,16 @@ class TestBucketedCdc:
         )
 
     def test_semantics_parity_with_flat_path(self, spark, tmp_path):
-        """The same op stream through flat and bucketed applies must
-        yield identical live rows — bucketing is a layout choice, not a
-        semantics choice."""
+        """The same op stream into a flat (single-bucket) table and an
+        8-bucket one must yield identical live rows — bucketing is a
+        layout choice, not a semantics choice."""
         ops1 = [(i, f"v{i}", i, "I") for i in range(1, 21)]
         ops2 = [(5, "v5b", 30, "U"), (6, None, 31, "D"), (21, "new", 32, "I")]
         ops3 = [(6, "zombie", 29, "U"), (5, "stale", 7, "U")]  # all stale
         flat, buck = str(tmp_path / "flat"), str(tmp_path / "buck")
         for ops in (ops1, ops2, ops3):
             df = spark.createDataFrame(ops, CDC_SCHEMA)
-            txn.apply_cdc_batch_txn(df, flat)
+            txn.apply_cdc_batch_bucketed(df, flat, n_buckets=1)
             txn.apply_cdc_batch_bucketed(df, buck, n_buckets=8)
         a = _rows(txn.read_cdc_table(spark, flat))
         b = _rows(txn.read_cdc_table(spark, buck))
@@ -408,12 +399,13 @@ class TestBucketedCdc:
         assert report["removed_snapshots"] == 3
 
     def test_layout_and_n_buckets_guards(self, spark, tmp_path):
-        flat = str(tmp_path / "flat")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "a", 1, "I")], CDC_SCHEMA), flat
+        snap = str(tmp_path / "snap")
+        _commit_snapshot(
+            spark.createDataFrame([(1, "a", 1)], "id long, val string, seq long"),
+            snap,
         )
-        with pytest.raises(ValueError, match="flat txn table"):
-            self._apply(spark, flat, [(2, "b", 2, "I")])
+        with pytest.raises(ValueError, match="plain snapshot table"):
+            self._apply(spark, snap, [(2, "b", 2, "I")])
         buck = str(tmp_path / "buck")
         self._apply(spark, buck, [(1, "a", 1, "I")])
         with pytest.raises(ValueError, match="n_buckets mismatch"):
@@ -601,11 +593,12 @@ class TestSchemaEvolution:
     def test_flat_add_column_then_drop_and_retype_rejected(
         self, spark, tmp_path
     ):
+        """A plain snapshot table (one flat dir per version)."""
         t = str(tmp_path / "evo")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame(
                 [(1, "a", 7.5)], "id long, val string, score double"
             ),
@@ -616,11 +609,11 @@ class TestSchemaEvolution:
         # time travel shows the pre-evolution schema
         assert "score" not in txn.read_txn(spark, t, version=1).columns
         with pytest.raises(ValueError, match="drops column"):
-            txn.commit_txn(
+            _commit_snapshot(
                 spark.createDataFrame([(1,)], "id long"), t
             )
         with pytest.raises(ValueError, match="changes column type"):
-            txn.commit_txn(
+            _commit_snapshot(
                 spark.createDataFrame(
                     [(1, 2, 0.0)], "id long, val int, score double"
                 ),
@@ -658,36 +651,32 @@ class TestSchemaEvolution:
         self, spark, tmp_path
     ):
         t = str(tmp_path / "evo-guard")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "a", 1, "I")], CDC_SCHEMA), t
-        )
+        _apply(spark, t, [(1, "a", 1, "I")])
         with pytest.raises(ValueError, match="missing stored payload"):
-            txn.apply_cdc_batch_txn(
+            txn.apply_cdc_batch_bucketed(
                 spark.createDataFrame(
                     [(1, 2, "U")], "id long, seq long, op string"
                 ),
-                t,
+                t, n_buckets=4,
             )
         # a delete-only batch without payload columns is fine
-        txn.apply_cdc_batch_txn(
+        txn.apply_cdc_batch_bucketed(
             spark.createDataFrame(
                 [(1, 9, "D")], "id long, seq long, op string"
             ),
-            t,
+            t, n_buckets=4,
         )
         assert txn.read_cdc_table(spark, t).count() == 0
 
     def test_cdc_retype_rejected(self, spark, tmp_path):
         t = str(tmp_path / "evo-retype")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "a", 1, "I")], CDC_SCHEMA), t
-        )
+        _apply(spark, t, [(1, "a", 1, "I")])
         with pytest.raises(ValueError, match="retypes"):
-            txn.apply_cdc_batch_txn(
+            txn.apply_cdc_batch_bucketed(
                 spark.createDataFrame(
                     [(1, 5, 2, "U")], "id long, val int, seq long, op string"
                 ),
-                t,
+                t, n_buckets=4,
             )
 
     def test_clustered_commit_enforces_evolution(self, spark, tmp_path):
@@ -750,7 +739,7 @@ class TestManifestPublisherSeam:
         is the executable justification for ConditionalPutManifestPublisher
         on object stores."""
         t = str(tmp_path / "racy")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
         test = self
@@ -770,7 +759,7 @@ class TestManifestPublisherSeam:
 
         prev = txn.set_manifest_publisher(RacyS3RenamePublisher())
         try:
-            v = txn.commit_txn(
+            v = _commit_snapshot(
                 spark.createDataFrame(
                     [(2, "from-a")], "id long, val string"
                 ),
@@ -792,7 +781,7 @@ class TestManifestPublisherSeam:
         retries against the fresh log and lands on the next version —
         both commits survive."""
         t = str(tmp_path / "cas-put")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
         test = self
@@ -810,7 +799,7 @@ class TestManifestPublisherSeam:
 
         prev = txn.set_manifest_publisher(ContendedConditionalPut())
         try:
-            v = txn.commit_txn(
+            v = _commit_snapshot(
                 spark.createDataFrame(
                     [(2, "from-a")], "id long, val string"
                 ),
@@ -839,7 +828,7 @@ class TestManifestPublisherSeam:
     ):
         """ADVICE r5: only destination-exists is a lost race. A
         persistent IO/permission failure must raise, not return False —
-        else commit_txn burns max_attempts full snapshot rewrites and
+        else a commit burns max_attempts full snapshot rewrites and
         then reports a misleading 'version conflicts' error."""
         import pytest as _pytest
 
@@ -974,7 +963,7 @@ class TestManifestPublisherSeam:
         semantics: claiming a taken slot fails and leaves no temp
         litter in _log/."""
         t = str(tmp_path / "ren")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
         assert isinstance(
@@ -991,19 +980,14 @@ class TestManifestPublisherSeam:
 
 class TestChangeDataFeed:
     def test_flat_diff_tags_insert_update_delete(self, spark, tmp_path):
+        """A flat (single-bucket) table: every change lands in the one
+        bucket."""
         t = str(tmp_path / "cdf")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "a", 1, "I"), (2, "b", 2, "I")], CDC_SCHEMA
-            ),
-            t,
-        )
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "a2", 10, "U"), (2, None, 11, "D"), (3, "c", 12, "I")],
-                CDC_SCHEMA,
-            ),
-            t,
+        _apply(spark, t, [(1, "a", 1, "I"), (2, "b", 2, "I")], n_buckets=1)
+        _apply(
+            spark, t,
+            [(1, "a2", 10, "U"), (2, None, 11, "D"), (3, "c", 12, "I")],
+            n_buckets=1,
         )
         got = {
             r.id: (r.val, r._change_type)
@@ -1018,24 +1002,21 @@ class TestChangeDataFeed:
         assert txn.read_changes(spark, t, 2, 2).count() == 0
 
     def test_flat_from_version_zero_is_all_inserts(self, spark, tmp_path):
-        """ADVICE r5: from_version=0 means 'since table creation' (the
-        read_changes_bucketed-documented contract) — on a FLAT table it
-        must return the snapshot tagged insert, not raise trying to
-        read the nonexistent version-0 manifest. Both entry points."""
+        """ADVICE r5: from_version=0 means 'since table creation' — on a
+        flat (single-bucket) table it must return the live rows tagged
+        insert, not raise trying to read the nonexistent version-0
+        manifest."""
         t = str(tmp_path / "cdf0")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "a", 1, "I"), (2, "b", 2, "I"), (2, None, 3, "D")],
-                CDC_SCHEMA,
-            ),
-            t,
+        _apply(
+            spark, t,
+            [(1, "a", 1, "I"), (2, "b", 2, "I"), (2, None, 3, "D")],
+            n_buckets=1,
         )
-        for reader in (txn.read_changes, txn.read_changes_bucketed):
-            got = {
-                r.id: (r.val, r._change_type)
-                for r in reader(spark, t, 0).collect()
-            }
-            assert got == {1: ("a", "insert")}  # tombstone absent
+        got = {
+            r.id: (r.val, r._change_type)
+            for r in txn.read_changes(spark, t, 0).collect()
+        }
+        assert got == {1: ("a", "insert")}  # tombstone absent
 
     def test_bucketed_diff_sees_overlay_deletes(self, spark, tmp_path):
         t = str(tmp_path / "cdf-b")
@@ -1060,12 +1041,10 @@ class TestChangeDataFeed:
 
 
 class TestBucketGranularCdf:
-    """read_changes_bucketed (round-6 backlog #7): the diff must read
-    only the buckets whose manifest entries changed between the two
-    versions, and must equal the full-snapshot diff exactly."""
-
-    def _cdf(self, df):
-        return {r.id: (r.val, r._change_type) for r in df.collect()}
+    """read_changes (round-6 backlog #7): the feed must read only the
+    change files or the buckets whose manifest entries changed between
+    the two versions, and must equal the full-snapshot diff
+    (_snapshot_diff) exactly."""
 
     def _build(self, spark, t):
         """v1: 8 inserts; v2: update/delete/insert touching a few keys;
@@ -1091,17 +1070,22 @@ class TestBucketGranularCdf:
             n_buckets=16,
         )
 
-    def test_equals_full_diff_across_all_version_pairs(
-        self, spark, tmp_path
-    ):
-        t = str(tmp_path / "bcdf")
+    @pytest.fixture(scope="class")
+    def built(self, spark, tmp_path_factory):
+        t = str(tmp_path_factory.mktemp("bcdf") / "t")
         self._build(spark, t)
-        for lo in (1, 2, 3):
-            for hi in (1, 2, 3):
-                full = txn.read_changes(spark, t, lo, hi)
-                fast = txn.read_changes_bucketed(spark, t, lo, hi)
-                assert self._cdf(fast) == self._cdf(full), (lo, hi)
-                assert sorted(fast.columns) == sorted(full.columns)
+        return t
+
+    @pytest.mark.parametrize("lo", [0, 1, 2, 3])
+    @pytest.mark.parametrize("mode", ["compact", "cdf"])
+    def test_equals_full_diff_across_all_version_pairs(
+        self, spark, built, mode, lo
+    ):
+        for hi in (1, 2, 3):
+            full = _snapshot_diff(spark, built, lo, hi, mode=mode)
+            fast = txn.read_changes(spark, built, lo, hi, mode=mode)
+            assert _feed_rows(fast) == _feed_rows(full), (lo, hi)
+            assert sorted(fast.columns) == sorted(full.columns)
 
     def test_changed_bucket_set_is_exactly_the_touched_buckets(
         self, spark, tmp_path
@@ -1132,7 +1116,7 @@ class TestBucketGranularCdf:
         t = str(tmp_path / "bcdf3")
         self._build(spark, t)
         plan = (
-            txn.read_changes_bucketed(spark, t, 2, 3)
+            txn.read_changes(spark, t, 2, 3)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -1150,9 +1134,7 @@ class TestBucketGranularCdf:
         self._build(spark, t)
         rows = {
             (r.id, r._change_type): r.val
-            for r in txn.read_changes_bucketed(
-                spark, t, 1, 2, mode="cdf"
-            ).collect()
+            for r in txn.read_changes(spark, t, 1, 2, mode="cdf").collect()
         }
         assert rows == {
             (2, "update_preimage"): "v2",
@@ -1163,7 +1145,7 @@ class TestBucketGranularCdf:
         # full-diff twin agrees
         full = {
             (r.id, r._change_type): r.val
-            for r in txn.read_changes(spark, t, 1, 2, mode="cdf").collect()
+            for r in _snapshot_diff(spark, t, 1, 2, mode="cdf").collect()
         }
         assert full == rows
 
@@ -1206,9 +1188,7 @@ class TestBucketGranularCdf:
             assert "change_files" in txn.read_manifest(spark, t, v)
         got = {
             (r.id, r._change_type): r.val
-            for r in txn.read_changes_bucketed(
-                spark, t, 1, 4, mode="cdf"
-            ).collect()
+            for r in txn.read_changes(spark, t, 1, 4, mode="cdf").collect()
         }
         assert got == {
             (1, "update_preimage"): "a1",
@@ -1220,7 +1200,7 @@ class TestBucketGranularCdf:
         # and the netted result equals the snapshot-diff baseline
         base = {
             (r.id, r._change_type): r.val
-            for r in txn.read_changes(spark, t, 1, 4, mode="cdf").collect()
+            for r in _snapshot_diff(spark, t, 1, 4, mode="cdf").collect()
         }
         assert got == base
 
@@ -1254,11 +1234,11 @@ class TestBucketGranularCdf:
             if r._change_type == "update_preimage"
         ]
         assert len(pre) == 1 and pre[0].email is None and pre[0].val == "a"
-        # invalid mode rejected eagerly on both entry points
+        # invalid mode rejected eagerly
         with pytest.raises(ValueError, match="compact"):
             txn.read_changes(spark, t, 1, 2, mode="CDF")
         with pytest.raises(ValueError, match="compact"):
-            txn.read_changes_bucketed(spark, t, 1, 2, mode="nope")
+            txn.read_changes(spark, t, 1, 2, mode="nope")
 
     def test_netting_spans_tombstone_compaction(self, spark, tmp_path):
         """compact_cdc_tombstones repoints every bucket; without its
@@ -1282,7 +1262,7 @@ class TestBucketGranularCdf:
             spark.createDataFrame([(3, "y", 20, "U")], CDC_SCHEMA),
             t, n_buckets=4,                                      # v4
         )
-        diff = txn.read_changes_bucketed(spark, t, 1, 4, mode="cdf")
+        diff = txn.read_changes(spark, t, 1, 4, mode="cdf")
         files = diff.inputFiles()
         assert files and all("/data/c" in f for f in files), files
         got = {(r.id, r._change_type) for r in diff.collect()}
@@ -1306,7 +1286,7 @@ class TestBucketGranularCdf:
             spark.createDataFrame([(1, "x", 10, "U")], CDC_SCHEMA),
             t, n_buckets=4,
         )
-        files = txn.read_changes_bucketed(spark, t, 1, 2).inputFiles()
+        files = txn.read_changes(spark, t, 1, 2).inputFiles()
         assert files, "expected a materialized change-file plan"
         assert all("/data/c" in f for f in files), files
 
@@ -1326,24 +1306,12 @@ class TestBucketGranularCdf:
             )
         txn.vacuum_txn(spark, t, keep_last=2)
         with pytest.raises(Exception):
-            txn.read_changes_bucketed(spark, t, 1, 4).collect()
+            txn.read_changes(spark, t, 1, 4).collect()
         # the kept window still diffs fine
         assert {
             r._change_type
-            for r in txn.read_changes_bucketed(spark, t, 3, 4).collect()
+            for r in txn.read_changes(spark, t, 3, 4).collect()
         } == {"update"}
-
-    def test_flat_table_falls_back_to_full_diff(self, spark, tmp_path):
-        t = str(tmp_path / "bcdf-flat")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "a", 1, "I")], CDC_SCHEMA), t
-        )
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "a2", 2, "U")], CDC_SCHEMA), t
-        )
-        assert self._cdf(
-            txn.read_changes_bucketed(spark, t, 1, 2)
-        ) == self._cdf(txn.read_changes(spark, t, 1, 2))
 
 
 class TestRescaleBuckets:
@@ -1415,7 +1383,7 @@ class TestRescaleBuckets:
             spark.createDataFrame([(2, "y", 11, "U")], CDC_SCHEMA),
             t, n_buckets=None,                                 # v4
         )
-        diff = txn.read_changes_bucketed(spark, t, 1, 4)
+        diff = txn.read_changes(spark, t, 1, 4)
         files = diff.inputFiles()
         assert files and all("/data/c" in f for f in files), files
         got = {(r.id, r._change_type): r.val for r in diff.collect()}
@@ -1423,7 +1391,7 @@ class TestRescaleBuckets:
         # equality with the snapshot-diff baseline
         base = {
             (r.id, r._change_type): r.val
-            for r in txn.read_changes(spark, t, 1, 4).collect()
+            for r in _snapshot_diff(spark, t, 1, 4).collect()
         }
         assert got == base
 
@@ -1935,94 +1903,36 @@ class TestClusteredRewritePruning:
 
 
 class TestFlatCasRetryFreshRead:
-    """ADVICE r4: the FLAT read-modify-write paths must re-read and
-    re-merge inside the CAS retry loop (commit_txn's builder form) —
-    losing a version race and re-committing the stale merge would
-    silently drop the concurrent writer's changes."""
-
-    def _stale_once(self, monkeypatch, stale):
-        real = txn.latest_manifest
-        calls = {"n": 0}
-
-        def fn(spark_, table_dir):
-            calls["n"] += 1
-            return stale if calls["n"] == 1 else real(spark_, table_dir)
-
-        monkeypatch.setattr(txn, "latest_manifest", fn)
-        return calls
-
-    def test_cdc_flat_retry_remerges_against_fresh_state(
-        self, spark, tmp_path, monkeypatch
-    ):
-        t = str(tmp_path / "cas-flat")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "a", 1, "I"), (2, "b", 2, "I")], CDC_SCHEMA
-            ),
-            t,
-        )
-        stale = txn.latest_manifest(spark, t)
-        # writer B lands an update A hasn't seen
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(2, "b2", 10, "U")], CDC_SCHEMA), t
-        )
-        calls = self._stale_once(monkeypatch, stale)
-        v = txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "a2", 11, "U")], CDC_SCHEMA), t
-        )
-        monkeypatch.undo()
-        assert v == 3 and calls["n"] >= 2
-        # BOTH writers' effects present — the stale merge never published
-        assert _rows(txn.read_cdc_table(spark, t)) == {
-            1: ("a2", 11),
-            2: ("b2", 10),
-        }
+    """ADVICE r4: a full-rewrite maintenance op on a flat (single-bucket)
+    table must re-read and re-derive its rewrite inside the CAS retry
+    loop — losing a version race and re-committing the stale rewrite
+    would silently drop the concurrent writer's changes."""
 
     def test_compaction_retry_refilters_fresh_state(
         self, spark, tmp_path, monkeypatch
     ):
         t = str(tmp_path / "cas-compact")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "a", 1, "I"), (2, None, 2, "D")], CDC_SCHEMA
-            ),
-            t,
-        )
-        stale = txn.latest_manifest(spark, t)
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(3, "c", 5, "I")], CDC_SCHEMA), t
-        )
-        calls = self._stale_once(monkeypatch, stale)
-        txn.compact_cdc_tombstones(spark, t, min_live_seq=3)
+        _apply(spark, t, [(1, "a", 1, "I"), (2, None, 2, "D")], n_buckets=1)
+        real = txn._publish_manifest
+        raced = []
+
+        def racing(spark_, table_dir, manifest, token):
+            if not raced:
+                raced.append(True)
+                # writer B lands version 2 before the compaction's first
+                # publish (its own publish re-enters here and goes
+                # straight through)
+                _apply(spark, t, [(3, "c", 5, "I")], n_buckets=1)
+            return real(spark_, table_dir, manifest, token)
+
+        monkeypatch.setattr(txn, "_publish_manifest", racing)
+        v = txn.compact_cdc_tombstones(spark, t, min_live_seq=3)
         monkeypatch.undo()
-        assert calls["n"] >= 2
+        assert raced and v == 3
         live = _rows(txn.read_cdc_table(spark, t))
         assert live == {1: ("a", 1), 3: ("c", 5)}  # B's insert survived
         raw = txn.read_txn(spark, t)
         assert raw.filter(F.col(txn.DELETED_COL)).count() == 0
-
-    def test_plain_df_reading_own_table_raises_on_lost_race(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Safety net: a PLAIN DataFrame whose plan scans the table it
-        commits to must refuse the retry (its re-execution would read
-        the superseded snapshot) and tell the caller to pass a builder."""
-        t = str(tmp_path / "cas-plain")
-        txn.commit_txn(
-            spark.createDataFrame([(1, 10)], "id long, v long"), t
-        )
-        derived = txn.read_txn(spark, t).withColumn("v", F.col("v") + 1)
-        stale = txn.latest_manifest(spark, t)
-        txn.commit_txn(
-            spark.createDataFrame([(2, 20)], "id long, v long"), t
-        )
-        calls = self._stale_once(monkeypatch, stale)
-        with pytest.raises(RuntimeError, match="builder"):
-            txn.commit_txn(derived, t)
-        monkeypatch.undo()
-        assert calls["n"] >= 2
-        # the concurrent commit is still the table state — nothing clobbered
-        assert txn.latest_manifest(spark, t)["version"] == 2
 
 
 class TestMoRSeqTieDeterminism:
@@ -2062,7 +1972,7 @@ class TestVacuumGrace:
         yet published) must not be vacuumed out from under the publish —
         dirs younger than grace_seconds are skipped."""
         t = str(tmp_path / "vg")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
         # simulate a concurrent writer mid-commit: snapshot written,
@@ -2093,7 +2003,7 @@ class TestVacuumGrace:
 
     def test_zero_grace_reclaims_immediately(self, spark, tmp_path):
         t = str(tmp_path / "vg0")
-        txn.commit_txn(
+        _commit_snapshot(
             spark.createDataFrame([(1, "a")], "id long, val string"), t
         )
         spark.createDataFrame(
@@ -2245,15 +2155,6 @@ class TestJoinBucketed:
         with pytest.raises(ValueError, match="key type mismatch"):
             txn.join_bucketed(spark, left, right)
 
-    def test_flat_table_raises(self, spark, tmp_path):
-        left, right = str(tmp_path / "l"), str(tmp_path / "r")
-        self._mk(spark, left, [(1, "a", 1, "I")])
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame([(1, "b", 1, "I")], CDC_SCHEMA), right
-        )
-        with pytest.raises(ValueError, match="not a bucketed"):
-            txn.join_bucketed(spark, left, right)
-
     def test_overlay_deletes_resolved_inside_bucket(self, spark, tmp_path):
         """A delete-only batch leaves a merge-on-read overlay; the
         bucket-aligned join must not resurrect the deleted key."""
@@ -2295,6 +2196,63 @@ class TestJoinBucketed:
         got = txn.join_bucketed(spark, left, right)
         self._mk(spark, left, [(99, "late", 200, "I")])
         assert got.count() == 10
+
+
+class TestSnapshotTableRejected:
+    """Every CDC entry point takes the bucketed layout only: a plain
+    snapshot table (layout.commit_clustered) raises the one layout
+    ValueError and stays at its version — no flat apply, no rewrite."""
+
+    ENTRY_POINTS = {
+        "apply_cdc_batch_bucketed": lambda spark, snap, buck, store: (
+            txn.apply_cdc_batch_bucketed(
+                spark.createDataFrame([(2, "b", 2, "I")], CDC_SCHEMA),
+                snap, n_buckets=4,
+            )
+        ),
+        "merge_into": lambda spark, snap, buck, store: txn.merge_into(
+            spark, snap,
+            spark.createDataFrame([(2, "b")], "id long, val string"),
+        ),
+        "compact_cdc_tombstones": lambda spark, snap, buck, store: (
+            txn.compact_cdc_tombstones(spark, snap, min_live_seq=10)
+        ),
+        "rescale_buckets": lambda spark, snap, buck, store: (
+            txn.rescale_buckets(spark, snap, 8)
+        ),
+        "read_changes": lambda spark, snap, buck, store: (
+            txn.read_changes(spark, snap, 1)
+        ),
+        "join_bucketed": lambda spark, snap, buck, store: (
+            txn.join_bucketed(spark, buck, snap)
+        ),
+        "sync_join_from_cdc": lambda spark, snap, buck, store: (
+            txn.sync_join_from_cdc(spark, buck, snap, store)
+        ),
+    }
+
+    @pytest.fixture(scope="class")
+    def tables(self, spark, tmp_path_factory):
+        root = tmp_path_factory.mktemp("snap")
+        snap, buck = str(root / "snap"), str(root / "buck")
+        _commit_snapshot(
+            spark.createDataFrame([(1, "a", 1)], "id long, val string, seq long"),
+            snap,
+        )
+        _apply(spark, buck, [(1, "b", 1, "I")])
+        return snap, buck
+
+    @pytest.mark.parametrize("entry", sorted(ENTRY_POINTS))
+    def test_cdc_entry_point_raises(self, spark, tables, tmp_path, entry):
+        snap, buck = tables
+        with pytest.raises(
+            ValueError, match="plain snapshot table, not a bucketed CDC table"
+        ):
+            self.ENTRY_POINTS[entry](
+                spark, snap, buck, str(tmp_path / "store")
+            )
+        assert txn.latest_manifest(spark, snap)["version"] == 1
+        assert _rows(txn.read_txn(spark, snap)) == {1: ("a", 1)}
 
 
 class TestPruneGateBlend:
@@ -2917,27 +2875,6 @@ class TestMergeInto:
         assert txn.merge_into(spark, t, src, epoch_id=7) is None
         assert txn.latest_manifest(spark, t)["version"] == 2
 
-    def test_flat_table_routes_through_flat_apply(self, spark, tmp_path):
-        """A flat (dimension-sized) CDC table takes the same clause
-        semantics through apply_cdc_batch_txn — no bucket machinery."""
-        t = str(tmp_path / "flat")
-        txn.apply_cdc_batch_txn(
-            spark.createDataFrame(
-                [(1, "a", False, 1, "I"), (2, "b", False, 1, "I")],
-                self.T + ", seq long, op string",
-            ),
-            t,
-        )
-        v = txn.merge_into(
-            spark, t,
-            self._src(spark, [(2, "b2", True), (3, "c", False)]),
-        )
-        assert v == 2
-        assert self._live(spark, t) == {
-            1: ("a", False), 2: ("b2", True), 3: ("c", False),
-        }
-        assert "buckets" not in txn.latest_manifest(spark, t)
-
     def test_matched_update_set_expressions(self, spark, tmp_path):
         """Delta SET-list semantics: named columns take the expression
         (reading source AND current-target values), UNNAMED columns
@@ -3240,21 +3177,19 @@ class TestMergeInto:
         assert {r.id: r.val
                 for r in txn.read_cdc_table(spark, t).collect()} == {1: "a2"}
 
-    # --- r10: flat tables with non-default keys (ADVICE r9) ------------
+    # --- r10: tables with non-default keys (ADVICE r9) -----------------
 
     def test_flat_table_non_default_key_merges(self, spark, tmp_path):
-        """apply_cdc_batch_txn stamps key_col/seq_col into flat
-        manifests, so a flat table keyed on a non-default column is
+        """The apply stamps key_col/seq_col into the manifest, so a flat
+        (single-bucket) table keyed on a non-default column is
         mergeable — the r9 manifest omission made it unmergeable."""
-        from taar_gcp_etl_spark.txn import apply_cdc_batch_txn
-
         t = str(tmp_path / "t")
-        apply_cdc_batch_txn(
+        txn.apply_cdc_batch_bucketed(
             spark.createDataFrame(
                 [("g1", 1.0, 1, "I"), ("g2", 2.0, 1, "I")],
                 "guid string, score double, seq long, op string",
             ),
-            t, key_col="guid",
+            t, key_col="guid", n_buckets=1,
         )
         man = txn.latest_manifest(spark, t)
         assert man["key_col"] == "guid" and man["seq_col"] == "seq"
@@ -3276,51 +3211,17 @@ class TestMergeInto:
         with pytest.raises(ValueError, match="does not match"):
             txn.merge_into(spark, t, src, key_col="score")
 
-    def test_stampless_flat_manifest_falls_back_to_caller_key(
-        self, spark, tmp_path
-    ):
-        """A pre-r10 flat manifest (no key_col field) must trust the
-        CALLER's key_col instead of rejecting it against the 'id'
-        default (ADVICE r9 medium)."""
-        t = str(tmp_path / "t")
-        df = spark.createDataFrame(
-            [("g1", 1.0, 1, False)],
-            "guid string, score double, seq long, _deleted boolean",
-        )
-        txn.commit_txn(df, t)  # plain commit: no key stamp
-        man = txn.latest_manifest(spark, t)
-        assert "key_col" not in man
-        src = spark.createDataFrame(
-            [("g1", 9.0)], "guid string, score double"
-        )
-        # naming a non-column raises clearly while the table is
-        # stampless (afterwards the stamp itself rejects mismatches)
-        with pytest.raises(ValueError, match="no key_col stamp"):
-            txn.merge_into(spark, t, src, key_col="absent")
-        txn.merge_into(spark, t, src, key_col="guid")
-        assert {r.guid: r.score
-                for r in txn.read_cdc_table(spark, t).collect()} == {
-            "g1": 9.0,
-        }
-        # the merge routed through apply_cdc_batch_txn, which stamps
-        # the manifest — the table has healed into a keyed one
-        assert txn.latest_manifest(spark, t)["key_col"] == "guid"
-        with pytest.raises(ValueError, match="does not match"):
-            txn.merge_into(spark, t, src, key_col="absent")
-
     def test_maintenance_rewrite_keeps_key_stamp(self, spark, tmp_path):
-        """compact/maintenance commits route through commit_txn, which
-        carries key_col/seq_col forward from the prior manifest — the
-        stamp survives a rewrite that doesn't know about it."""
-        from taar_gcp_etl_spark.txn import apply_cdc_batch_txn
-
+        """The maintenance rewrite carries key_col/seq_col forward from
+        the prior manifest — the stamp survives a rewrite that doesn't
+        know about it."""
         t = str(tmp_path / "t")
-        apply_cdc_batch_txn(
+        txn.apply_cdc_batch_bucketed(
             spark.createDataFrame(
                 [("g1", 1.0, 1, "I"), ("g2", 2.0, 2, "D")],
                 "guid string, score double, seq long, op string",
             ),
-            t, key_col="guid",
+            t, key_col="guid", n_buckets=1,
         )
         txn.compact_cdc_tombstones(spark, t, min_live_seq=10)
         man = txn.latest_manifest(spark, t)
@@ -3442,17 +3343,16 @@ class TestPrunedUserReads:
         assert "PushedFilters" in plan and "day" in plan
 
     def test_read_cdc_table_filters_flat_table(self, spark, tmp_path):
-        """No zone maps (flat layout): the filter applies as a plain
-        pushed predicate — same rows, no error."""
-        from taar_gcp_etl_spark.txn import apply_cdc_batch_txn
-
+        """No zone maps (a flat, single-bucket table applied without
+        stats_cols): the filter applies as a plain pushed predicate —
+        same rows, no error."""
         t = str(tmp_path / "t")
-        apply_cdc_batch_txn(
+        txn.apply_cdc_batch_bucketed(
             spark.createDataFrame(
                 [(i, f"v{i}", i % 3, i, "I") for i in range(12)],
                 self.CDC_D,
             ),
-            t,
+            t, n_buckets=1,
         )
         got = txn.read_cdc_table(spark, t, filters=[("day", "=", 1)])
         assert sorted(r.id for r in got.collect()) == [
@@ -4234,7 +4134,7 @@ class TestMergeJobBudget:
     def test_warm_small_merge_job_budget(self, spark, tmp_path):
         """Update, delete and insert in one 11-row merge. The change file
         it records (from the classification's preimages) must equal the
-        snapshot diff."""
+        snapshot diff (_snapshot_diff)."""
         t = str(tmp_path / "t")
         self._table(spark, t)
         src = spark.createDataFrame(
@@ -4253,8 +4153,8 @@ class TestMergeJobBudget:
             **{i: f"n{i}" for i in range(10) if i % 4},
             500: "new",
         }
-        netted = txn.read_changes_bucketed(spark, t, v - 1, mode="cdf")
-        diffed = txn.read_changes(spark, t, v - 1, mode="cdf")
+        netted = txn.read_changes(spark, t, v - 1, mode="cdf")
+        diffed = _snapshot_diff(spark, t, v - 1, mode="cdf")
         cols = sorted(diffed.columns)
         assert sorted(netted.select(cols).collect()) == sorted(
             diffed.select(cols).collect()
@@ -4303,8 +4203,8 @@ class TestMergeCasRetry:
         live = {r.id: r.val for r in txn.read_cdc_table(spark, t).collect()}
         # B's newer seq on key 2 wins the guard; A's other rows apply
         assert live == {1: "a2", 2: "bB", 3: "c"}
-        netted = txn.read_changes_bucketed(spark, t, 2, mode="cdf")
-        diffed = txn.read_changes(spark, t, 2, mode="cdf")
+        netted = txn.read_changes(spark, t, 2, mode="cdf")
+        diffed = _snapshot_diff(spark, t, 2, mode="cdf")
         cols = sorted(diffed.columns)
         got = sorted(netted.select(cols).collect())
         assert got == sorted(diffed.select(cols).collect())
