@@ -117,7 +117,8 @@ def run(
         .write.mode("overwrite")
         .parquet(f"{out_dir}/packed")
     )
-    vocab.write.mode("overwrite").parquet(f"{out_dir}/vocab")
+    # the vocabulary is at most vocab_size rows: one file
+    vocab.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/vocab")
 
     manifest = {
         "seq_len": seq_len,

@@ -364,12 +364,18 @@ def vocab_with_ids(
     tokenizer ships. The top-n list is bounded by construction, so rank
     assignment happens on the DRIVER over the collected rows (≤ vocab_size
     entries) rather than through a single-partition global window; the
-    result returns as a small DataFrame ready to broadcast."""
+    result returns as a small DataFrame ready to broadcast. It is built
+    from an Arrow table, which Spark keeps as a local relation (the rows
+    live in the plan); a list of tuples would go through ``parallelize``
+    into a Python-RDD scan."""
+    import pyarrow as pa
+
     top = vocab_top_tokens(df, text_col, id_col, vocab_size).collect()
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(r["token"], i) for i, r in enumerate(top)],
-        "token string, id int",
+    return df.sparkSession.createDataFrame(
+        pa.table({
+            "token": pa.array([r["token"] for r in top], pa.string()),
+            "id": pa.array(range(len(top)), pa.int32()),
+        })
     )
 
 

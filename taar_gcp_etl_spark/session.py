@@ -14,6 +14,13 @@ Engine-wide physical decisions (SURVEY.md §4):
   - sized to the machine it runs on: `local[<cores this process may use>]`
     (SPARK_GRAFT_CPUS overrides) and a driver heap of half the physical
     memory.
+  - file listing is serial. A read whose root holds more than 32 leaf
+    dirs (a 64-bucket CDC table's `_bucket=b` subdirs) would otherwise
+    list them in a parallel Spark job, one task per dir. That distributes
+    the listing across executors on a cluster; in local mode the
+    executors are this JVM, so the job is pure overhead (0.2-0.3 s per
+    read on 4 cores) while the driver lists a few hundred local dirs in
+    milliseconds. Planning a read then runs no Spark job.
 """
 
 from __future__ import annotations
@@ -44,6 +51,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
+        # never a parallel listing job (see the module docstring)
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -217,7 +217,10 @@ def read_txn(
     see apply_cdc_batch_bucketed). A bucketed
     read takes its schema from the manifest, so planning it runs no
     Spark job (no footer inference), and a dir written before an
-    additive schema evolution reads the new columns as null. For a
+    additive schema evolution reads the new columns as null. That holds
+    for any bucket count: the session lists a dir's ``_bucket=b``
+    subdirs on the driver (session.get_spark), where Spark would start
+    a parallel listing job once a root holds more than 32 of them. For a
     bucketed table, ``buckets`` restricts the read to those buckets'
     ``_bucket=b`` partition directories, listed from their parent — the
     read cost is O(selected buckets), not O(table). A mapped bucket
@@ -491,7 +494,9 @@ def vacuum_txn(
                 refs.extend(paths)
         if "blooms_ref" in man:  # bloom sidecar file lives under data/
             refs.append(man["blooms_ref"]["path"])
-        if "change_files" in man:  # per-commit CDF dir lives under data/
+        # per-commit CDF dir lives under data/ (a maintenance commit
+        # records an empty feed with no dir)
+        if (man.get("change_files") or {}).get("path"):
             refs.append(man["change_files"]["path"])
         keep_snaps.update(r.split("/", 1)[1] for r in refs)
     import time
@@ -2186,17 +2191,18 @@ def _merge_into_impl(
     )
 
 
+def _live_fields(man: dict) -> list[list[str]]:
+    """A bucketed table's LIVE schema fields: the manifest schema with
+    the internal tombstone/bucket columns hidden."""
+    return [f for f in man["schema"] if f[0] not in (DELETED_COL, BUCKET_COL)]
+
+
 def _empty_live(spark: SparkSession, man: dict) -> DataFrame:
-    """Empty relation with a bucketed table's LIVE schema (internal
-    tombstone/bucket columns hidden) — the per-bucket stand-in for a
-    bucket no dir owns yet, so outer joins still see the side's columns.
-    Catalyst's PropagateEmptyRelation prunes the sub-join it feeds."""
-    fields = [
-        (n, t)
-        for n, t in man["schema"]
-        if n not in (DELETED_COL, BUCKET_COL)
-    ]
-    return spark.createDataFrame([], _ddl(fields))
+    """Empty relation with a bucketed table's LIVE schema — the
+    per-bucket stand-in for a bucket no dir owns yet, so outer joins
+    still see the side's columns. Catalyst's PropagateEmptyRelation
+    prunes the sub-join it feeds."""
+    return spark.createDataFrame([], _ddl(_live_fields(man)))
 
 
 def join_bucketed(
@@ -2522,9 +2528,15 @@ def compact_cdc_tombstones(
     return _full_rewrite(
         spark,
         table_dir,
-        lambda cur: cur.filter(
-            ~(F.col(DELETED_COL) & (F.col(seq_col) < F.lit(min_live_seq)))
-        ),
+        lambda cur: _retire_tombstones(cur, min_live_seq, seq_col),
+    )
+
+
+def _retire_tombstones(
+    cur: DataFrame, min_live_seq: int, seq_col: str
+) -> DataFrame:
+    return cur.filter(
+        ~(F.col(DELETED_COL) & (F.col(seq_col) < F.lit(min_live_seq)))
     )
 
 
@@ -2561,7 +2573,7 @@ def _full_rewrite(
             man.get("cluster_rows"),
         ).parquet(f"{table_dir}/{snap_rel}")
         manifest = _full_rewrite_manifest(
-            spark, table_dir, man, version, token, snap_rel, nb, rows
+            spark, table_dir, man, version, snap_rel, nb
         )
         if _publish_manifest(spark, table_dir, manifest, token):
             return version
@@ -2635,19 +2647,19 @@ def _full_rewrite_manifest(
     table_dir: str,
     man: dict,
     version: int,
-    token: str,
     snap_rel: str,
     n_buckets: int,
-    rows: DataFrame,
 ) -> dict:
     """Manifest for a bucketed-table MAINTENANCE full rewrite
     (tombstone compaction, bucket rescale): every bucket repointed at
     one fresh dir, overlays folded, schema carried, per-dir stats
-    recollected when the table tracks them, and an EMPTY change file
-    recorded (live content unchanged) so CDF netting spans the
-    maintenance version. Only _full_rewrite builds it, so the two
-    rewrites cannot drift (a field added to one and missed in the other
-    was exactly how compaction briefly lost its change file)."""
+    recollected when the table tracks them, and an EMPTY change feed
+    recorded in the manifest itself (``path`` None: live content is
+    unchanged, so there is no file to write) so CDF netting spans the
+    maintenance version instead of falling back to the snapshot diff.
+    Only _full_rewrite builds it, so the rewrites cannot drift (a field
+    added to one and missed in the other was exactly how compaction
+    briefly lost its change feed)."""
     schema_fields = man["schema"]
     manifest = {
         "version": version,
@@ -2659,15 +2671,7 @@ def _full_rewrite_manifest(
         "epoch_id": man.get("epoch_id"),
         "parent": man["version"],
         "schema": schema_fields,
-        "change_files": _write_empty_change_file(
-            spark,
-            table_dir,
-            version,
-            token,
-            rows.filter(~F.col(DELETED_COL)).drop(
-                DELETED_COL, BUCKET_COL
-            ),
-        ),
+        "change_files": {"path": None, "preimage": True},
     }
     if man.get("stats_cols"):
         from taar_gcp_etl_spark.layout import collect_file_stats
@@ -2688,30 +2692,12 @@ def _full_rewrite_manifest(
     return manifest
 
 
-def _write_empty_change_file(
-    spark: SparkSession,
-    table_dir: str,
-    version: int,
-    token: str,
-    live_like: DataFrame,
-) -> dict:
-    """Empty change feed for a maintenance commit (rescale, compaction):
-    the live content is unchanged, and recording that EXPLICITLY keeps
-    read_changes' O(changes) netting fast path available across the
-    maintenance version instead of forcing every window containing it
-    back to the snapshot diff."""
-    ch_rel = f"data/c{version:010d}-{token}"
-    live_like.limit(0).withColumn(
-        "_change_type", F.lit("")
-    ).write.mode("overwrite").parquet(f"{table_dir}/{ch_rel}")
-    return {"path": ch_rel, "preimage": True}
-
-
 def rescale_buckets(
     spark: SparkSession,
     table_dir: str,
     new_n_buckets: int,
     max_attempts: int = 5,
+    min_live_seq: int | None = None,
 ) -> int | None:
     """Re-hash a bucketed CDC table to a different bucket count — the
     operational escape hatch for the one knob the bucketed layout fixes
@@ -2726,21 +2712,30 @@ def rescale_buckets(
     CAS loop, so a concurrent micro-batch either lands before (rescale
     re-reads) or after (its CAS sees the new version and re-merges);
     readers see old or new layout, never a mix. Records an EMPTY change
-    file (live content is unchanged) so CDF netting stays available
-    across the maintenance version. Returns the committed version, or
-    None if the table already has ``new_n_buckets``."""
+    feed in the manifest (live content is unchanged) so CDF netting
+    stays available across the maintenance version. ``min_live_seq``
+    also retires the tombstones below that horizon in the same rewrite
+    (as compact_cdc_tombstones; None keeps them all). Returns the
+    committed version, or None if the table already has
+    ``new_n_buckets``."""
     man = latest_manifest(spark, table_dir)
     if man is None:
         raise ValueError(f"{table_dir} has no committed version")
     _require_cdc_layout(man, table_dir)
     if man["n_buckets"] == new_n_buckets:
         return None
+
+    def transform(cur: DataFrame) -> DataFrame:
+        if min_live_seq is not None:
+            cur = _retire_tombstones(cur, min_live_seq, man["seq_col"])
+        return cur.drop(BUCKET_COL).withColumn(
+            BUCKET_COL, _bucket_of(man["key_col"], new_n_buckets)
+        )
+
     return _full_rewrite(
         spark,
         table_dir,
-        lambda cur: cur.drop(BUCKET_COL).withColumn(
-            BUCKET_COL, _bucket_of(man["key_col"], new_n_buckets)
-        ),
+        transform,
         n_buckets=new_n_buckets,
         max_attempts=max_attempts,
     )
@@ -2830,6 +2825,12 @@ def changed_buckets(man_from: dict, man_to: dict) -> list[int]:
     )
 
 
+def _feed_schema(man: dict) -> str:
+    """DDL of a commit's change rows, from its manifest: the live
+    columns plus ``_change_type``."""
+    return _ddl(_live_fields(man) + [["_change_type", "string"]])
+
+
 def _net_change_files(
     spark: SparkSession,
     table_dir: str,
@@ -2842,6 +2843,13 @@ def _net_change_files(
     """Net the per-commit change files of (from, to] into one diff, or
     None if any commit in the window didn't materialize its feed (the
     caller falls back to the snapshot diff).
+
+    Each file is read with the schema its commit's manifest records
+    (the table's columns without ``_deleted`` and ``_bucket``, plus
+    ``_change_type``), so planning runs no footer-inference job. A
+    maintenance commit records an empty feed with no file (``path``
+    None) and contributes no rows; a window of only such commits nets
+    to an empty frame with the feed's columns.
 
     Netting rules, per key over the window's applied transitions:
     * existed-before = the earliest change is NOT an insert;
@@ -2863,11 +2871,17 @@ def _net_change_files(
             return None
         if mode == "cdf" and not cf.get("preimage", False):
             return None  # feed exists but without preimages
-        parts.append(
-            spark.read.parquet(f"{table_dir}/{cf['path']}").withColumn(
-                "_v", F.lit(v)
+        if cf["path"] is not None:
+            parts.append(
+                spark.read.schema(_feed_schema(man_v))
+                .parquet(f"{table_dir}/{cf['path']}")
+                .withColumn("_v", F.lit(v))
             )
-        )
+    if not parts:
+        parts = [
+            spark.createDataFrame([], _feed_schema(man_v))
+            .withColumn("_v", F.lit(to_version))
+        ]
     ch = parts[0]
     for p in parts[1:]:
         ch = ch.unionByName(p, allowMissingColumns=True)
@@ -2950,8 +2964,11 @@ def read_changes(
        manifest): union those files and NET them per key (insert then
        delete cancels; first preimage is the state at ``from``; last
        postimage is the final payload). One aggregate over O(change
-       rows) — no snapshot is read at all. This is what makes a
-       low-churn sync cheap: the sf1 IVM soak measured the
+       rows) — no snapshot is read at all. A maintenance rewrite
+       records its feed as empty in the manifest (no file), so a window
+       spanning one still nets; the files are read with the manifest's
+       schema, so planning this path runs no Spark job. This is what
+       makes a low-churn sync cheap: the sf1 IVM soak measured the
        snapshot-diff path LOSING to a full re-aggregate (0.18x) when a
        6k-row batch touched all 64 buckets of a 6M-row table, because
        "changed buckets" was the whole table.
@@ -3584,47 +3601,57 @@ def maintain_cdc_table(
     vacuum_keep_last: int = 2,
     vacuum_grace_seconds: float = 3600.0,
 ) -> dict:
-    """One maintenance pass over a bucketed CDC table, in dependency
-    order — the cadence driver an operator schedules instead of wiring
-    the four primitives by hand (each is a no-op when not due, so
-    running this hourly is safe):
+    """One maintenance pass over a bucketed CDC table — the cadence
+    driver an operator schedules instead of wiring the primitives by
+    hand (each step is a no-op when not due, so running this hourly is
+    safe):
 
     1. **Overlay compaction** (`maybe_compact_overlays`): folds
        merge-on-read overlays once any bucket stacks more than
        ``max_overlays_per_bucket`` — bounds the per-scan read tax.
     2. **Tombstone retirement** (`compact_cdc_tombstones`) when the
        caller provides the safety horizon ``tombstone_min_live_seq``
-       (e.g. the streaming checkpoint's committed offset): the one
-       full rewrite, which also defragments incremental dirs.
+       (e.g. the streaming checkpoint's committed offset).
     3. **Bucket rescale** (`rescale_buckets`) when ``target_n_buckets``
-       differs from the table's current count — ordered after the
-       rewrites so the re-hash isn't immediately invalidated.
+       differs from the table's current count.
     4. **Vacuum** (`vacuum_txn`) last, with a grace window defaulting
        to an hour so a concurrent writer's in-flight snapshot survives;
        ``vacuum_keep_last=0`` skips it.
 
+    Steps 1-3 are each an O(table) rewrite, so the due ones run as ONE
+    rewrite and one commit: every full rewrite folds the overlays in
+    (and defragments incremental dirs), and a rescale retires the
+    tombstones below the horizon as it re-hashes. The table is
+    rewritten at most once per pass.
+
     Returns {compacted_version, tombstone_version, rescaled_version,
-    vacuum} (None entries = not due)."""
-    report: dict = {
-        "compacted_version": maybe_compact_overlays(
-            spark, table_dir,
-            max_overlays_per_bucket=max_overlays_per_bucket,
-            min_live_seq=tombstone_min_live_seq or 0,
-        ),
-        "tombstone_version": None,
-        "rescaled_version": None,
-        "vacuum": None,
-    }
-    if tombstone_min_live_seq is not None:
-        report["tombstone_version"] = compact_cdc_tombstones(
-            spark, table_dir, tombstone_min_live_seq
-        )
-    if target_n_buckets is not None:
-        man = latest_manifest(spark, table_dir)
-        if man is not None and man.get("n_buckets") != target_n_buckets:
-            report["rescaled_version"] = rescale_buckets(
-                spark, table_dir, target_n_buckets
+    vacuum}: each due rewrite step carries the version of that one
+    commit, None entries = not due."""
+    report: dict = dict.fromkeys(
+        ("compacted_version", "tombstone_version", "rescaled_version",
+         "vacuum")
+    )
+    man = latest_manifest(spark, table_dir)
+    if man is not None:
+        overlays_due = _overlay_pressure(man) > max_overlays_per_bucket
+        if target_n_buckets not in (None, man.get("n_buckets")):
+            version = rescale_buckets(
+                spark, table_dir, target_n_buckets,
+                min_live_seq=tombstone_min_live_seq,
             )
+            report["rescaled_version"] = version
+        elif tombstone_min_live_seq is not None:
+            version = compact_cdc_tombstones(
+                spark, table_dir, tombstone_min_live_seq
+            )
+        else:
+            version = maybe_compact_overlays(
+                spark, table_dir, max_overlays_per_bucket
+            )
+        if tombstone_min_live_seq is not None:
+            report["tombstone_version"] = version
+        if overlays_due:
+            report["compacted_version"] = version
     if vacuum_keep_last > 0:
         report["vacuum"] = vacuum_txn(
             spark,
@@ -3639,8 +3666,10 @@ def overlay_pressure(spark: SparkSession, table_dir: str) -> int:
     """Merge-on-read read-tax gauge: the maximum number of overlay dirs
     stacked on any single bucket (0 = plain pruned-scan reads)."""
     man = latest_manifest(spark, table_dir)
-    if man is None or "buckets" not in man:
-        return 0
+    return 0 if man is None else _overlay_pressure(man)
+
+
+def _overlay_pressure(man: dict) -> int:
     overlays = man.get("overlays") or {}
     return max((len(v) for v in overlays.values()), default=0)
 

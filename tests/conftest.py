@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -42,3 +43,17 @@ def duck():
                 f"SELECT * FROM '{sf}/{t}.parquet'"
             )
     yield con
+
+
+def spark_jobs(spark, fn):
+    """(fn(), Spark jobs it ran) — counted by job group, which AQE and
+    broadcast sub-jobs inherit."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -23,7 +23,7 @@ from taar_gcp_etl_spark.plans import (
     scan_read_schema,
 )
 from taar_gcp_etl_spark.queries import SPARK_QUERIES
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -535,21 +535,15 @@ def test_no_regex_split_inside_lambdas(spark, name):
     common subexpressions inside higher-order-function lambdas, so a
     `split(...)` in a lambda body runs once per window — O(tokens²) per
     document. Checked on the optimized plan; building it runs no job."""
-    import uuid
-
     from taar_gcp_etl_spark.io import read_table
 
     docs = read_table(spark, SF_SMOKE, "documents")
-    sc = spark.sparkContext
-    group = f"plan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        df = SPLIT_ONCE[name](docs)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    plan, n = spark_jobs(
+        spark,
+        lambda: SPLIT_ONCE[name](docs)
+        ._jdf.queryExecution().optimizedPlan().toString(),
+    )
+    assert n == 0, n
     bodies = _lambda_bodies(plan)
     assert bodies, "the plan should shingle inside a lambda"
     assert not [b for b in bodies if "split(" in b], name

@@ -12,13 +12,13 @@ paths document as their limitations (VERDICT r3 next-2):
 from __future__ import annotations
 
 import json
-import uuid
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from taar_gcp_etl_spark import layout, txn
+from tests.conftest import spark_jobs
 
 CDC_SCHEMA = "id long, val string, seq long, op string"
 
@@ -2069,6 +2069,34 @@ class TestMaintainCdcTable:
             assert rep["vacuum"]["removed_snapshots"] == 0
         assert txn.latest_manifest(spark, t)["version"] == v
 
+    def test_due_steps_compose_into_one_rewrite(self, spark, tmp_path):
+        """Overlay compaction, tombstone retirement and rescale all due:
+        one rewrite commit carries all three, and the live rows are the
+        ones before the pass."""
+        t = str(tmp_path / "mt")
+        self._apply(spark, t, [(i, f"v{i}", 1, "I") for i in range(1, 9)])
+        for s in range(2, 8):
+            self._apply(spark, t, [(1, None, s, "D")])
+        before = txn.latest_manifest(spark, t)["version"]
+        live = sorted(txn.read_cdc_table(spark, t).collect())
+        rep = txn.maintain_cdc_table(
+            spark, t,
+            max_overlays_per_bucket=2,
+            tombstone_min_live_seq=100,
+            target_n_buckets=8,
+            vacuum_keep_last=0,
+        )
+        man = txn.latest_manifest(spark, t)
+        assert man["version"] == before + 1
+        assert (
+            rep["compacted_version"] == rep["tombstone_version"]
+            == rep["rescaled_version"] == before + 1
+        )
+        assert man["n_buckets"] == 8 and man["overlays"] == {}
+        assert sorted(txn.read_cdc_table(spark, t).collect()) == live
+        raw = txn.read_cdc_table(spark, t, include_tombstones=True)
+        assert raw.filter(F.col(txn.DELETED_COL)).count() == 0
+
     def test_group_member_can_skip_vacuum(self, spark, tmp_path):
         t = str(tmp_path / "mt3")
         self._apply(spark, t, [(1, "a", 1, "I")])
@@ -3994,20 +4022,6 @@ class TestMergeSourcePersist:
         assert acc.value == n_src, acc.value
 
 
-def _spark_jobs(spark, fn):
-    """(fn(), Spark jobs it ran) — counted by job group, which AQE and
-    broadcast sub-jobs inherit."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestManifestRead:
     """read_txn plans a bucketed read from the manifest alone: the
     schema is the manifest's, and a bucket selection lists only the
@@ -4107,9 +4121,15 @@ class TestMergeJobBudget:
     """Spark jobs per call on a tiny table. At these sizes a call's cost
     is its fixed per-job overhead, so the job count is the deterministic
     measure of it: a bucket read plans without a job, and a warm merge
-    probes the source once, reads the table once and stages once."""
+    probes the source once, reads the table once and stages once.
+
+    On a 64-bucket table (more than the 32 leaf dirs above which Spark
+    would list in a parallel job) metadata costs no job either: a full
+    read and the change feed plan on the driver, and maintenance runs
+    only its rewrite's write job."""
 
     MERGE_JOBS = 10
+    MAINTAIN_JOBS = 1
 
     def _table(self, spark, t):
         txn.apply_cdc_batch_bucketed(
@@ -4122,7 +4142,7 @@ class TestMergeJobBudget:
     def test_bucket_read_runs_no_job(self, spark, tmp_path):
         t = str(tmp_path / "t")
         self._table(spark, t)
-        df, n = _spark_jobs(
+        df, n = spark_jobs(
             spark, lambda: txn.read_txn(spark, t, buckets=[0, 3, 5])
         )
         assert n == 0, n
@@ -4142,7 +4162,7 @@ class TestMergeJobBudget:
             + [(500, "new", False)],
             "id long, val string, is_del boolean",
         )
-        v, n = _spark_jobs(spark, lambda: txn.merge_into(
+        v, n = spark_jobs(spark, lambda: txn.merge_into(
             spark, t, src, matched_delete_condition="is_del",
             not_matched_condition="NOT is_del",
         ))
@@ -4160,6 +4180,86 @@ class TestMergeJobBudget:
             diffed.select(cols).collect()
         )
         assert netted.count() == 3 + 7 * 2 + 1
+
+    def _table64(self, spark, t):
+        txn.apply_cdc_batch_bucketed(
+            spark.createDataFrame(
+                [(i, f"v{i}", 1, "I") for i in range(400)], CDC_SCHEMA
+            ),
+            t, n_buckets=64,
+        )
+        (d,) = set(txn.latest_manifest(spark, t)["buckets"].values())
+        assert len(txn._subdirs(spark, f"{t}/{d}")) > 32
+
+    def _merge(self, spark, t, rows):
+        return txn.merge_into(
+            spark, t, spark.createDataFrame(rows, "id long, val string")
+        )
+
+    def test_full_read_runs_no_job(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        self._table64(spark, t)
+        df, n = spark_jobs(spark, lambda: txn.read_txn(spark, t))
+        assert n == 0, n
+        assert df.count() == 400
+
+    def test_change_feed_plans_without_job(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        self._table64(spark, t)
+        v = self._merge(spark, t, [(1, "n1"), (2, "n2"), (900, "new")])
+        df, n = spark_jobs(spark, lambda: txn.read_changes(spark, t, v - 1))
+        assert n == 0, n
+        assert _feed_rows(df) == _feed_rows(_snapshot_diff(spark, t, v - 1))
+
+    def test_maintenance_job_budget(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        self._table64(spark, t)
+        self._merge(spark, t, [(1, "n1")])
+        rep, n = spark_jobs(spark, lambda: txn.maintain_cdc_table(
+            spark, t, tombstone_min_live_seq=2**62,
+        ))
+        assert n == self.MAINTAIN_JOBS, n
+        man = txn.latest_manifest(spark, t)
+        assert rep["tombstone_version"] == man["version"]
+        assert man["change_files"] == {"path": None, "preimage": True}
+
+    def test_feed_spans_maintenance_commits_of_either_shape(
+        self, spark, tmp_path
+    ):
+        """A maintenance commit records its empty feed in the manifest; one
+        written before that recorded an empty change-file dir. A window
+        spanning either nets to the same rows, and a window of only the
+        maintenance commit is empty with the feed's columns."""
+        t = str(tmp_path / "t")
+        self._table64(spark, t)
+        self._merge(spark, t, [(1, "n1"), (2, "n2"), (900, "new")])
+        m = txn.maintain_cdc_table(
+            spark, t, tombstone_min_live_seq=2**62, vacuum_keep_last=0
+        )["tombstone_version"]
+        self._merge(spark, t, [(1, "m1"), (901, "new2")])
+        empty = txn.read_changes(spark, t, m - 1, m)
+        assert empty.columns == ["id", "val", "seq", "_change_type"]
+        assert empty.count() == 0
+        feeds = {
+            mode: _feed_rows(txn.read_changes(spark, t, 1, mode=mode))
+            for mode in ("compact", "cdf")
+        }
+        assert feeds["compact"] == _feed_rows(_snapshot_diff(spark, t, 1))
+
+        # the earlier shape: an empty parquet dir named by the manifest
+        rel = f"data/c{m:010d}-earlier"
+        txn.read_cdc_table(spark, t, version=m).limit(0).withColumn(
+            "_change_type", F.lit("")
+        ).write.parquet(f"{t}/{rel}")
+        man = txn.read_manifest(spark, t, m)
+        man["change_files"]["path"] = rel
+        txn._write_bytes(
+            spark, f"{t}/_log/{txn._manifest_name(m)}",
+            json.dumps(man, sort_keys=True).encode(),
+        )
+        for mode, want in feeds.items():
+            got = txn.read_changes(spark, t, 1, mode=mode)
+            assert _feed_rows(got) == want, mode
 
 
 class TestMergeCasRetry:
