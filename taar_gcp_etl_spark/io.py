@@ -4,7 +4,11 @@ Maps the reference's storage surface (SURVEY.md §2.1) onto Spark-native I/O:
   - fixture/table loading → columnar parquet scans (S5: BigQuery SQL scan,
     reference taar_etl/taar_profile_bigtable.py:56-68)
   - JSON.bz2 dual-write artifact sink (S11, taar_etl/taar_utils.py:32-63):
-    `latest` + dated snapshot, bzip2-compressed
+    one collect, one driver-side encode, and the same bzip2 bytes published
+    as `latest` and the dated snapshot by temp file + `os.replace` (a
+    crashed run never leaves a half-written `latest`). A list artifact
+    keeps the JSON-lines dir layout of Spark's JSON writer,
+    `{name}/part-00000.json.bz2`, because its readers glob `part-*`
   - keyed serving table (S9 KV upsert sink,
     taar_etl/taar_profile_bigtable.py:166-191): sha256 row key, one global
     sort on the key so each file holds a contiguous key range (BigTable's
@@ -19,6 +23,7 @@ import bz2
 import datetime as dt
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,49 +98,62 @@ def write_json_artifact(
     date: dt.date,
     key_col: str | None = None,
 ) -> None:
-    """Dual-write JSON artifact sink (S11, taar_etl/taar_utils.py:32-63).
+    """Dual-write JSON artifact sink (S11, taar_etl/taar_utils.py:32-63):
+    one Spark action collects the rows in Spark's JSON form (artifacts
+    are catalog-scale, SURVEY.md §7 hard part 1), then
+    write_json_records encodes and publishes them."""
+    records = [json.loads(r) for r in df.toJSON().collect()]
+    write_json_records(records, base_path, name, date, key_col)
 
-    Writes the artifact twice: `{base}/latest/{name}.json` and
-    `{base}/snapshot={YYYYMMDD}/{name}.json`, bzip2-compressed. When
-    ``key_col`` is given the artifact is the reference's map shape
-    ({key: record}); this is the ONE driver-side collection in the engine and
-    is bounded by catalog scale (SURVEY.md §7 hard part 1) — everything else
-    streams through `df.write`.
-    """
-    if key_col is None:
-        for sub in ("latest", f"snapshot={date:%Y%m%d}"):
-            (
-                df.coalesce(1)
-                .write.mode("overwrite")
-                .option("compression", "bzip2")
-                .json(f"{base_path}/{sub}/{name}")
-            )
+
+def write_json_records(
+    records: list[dict],
+    base_path: str,
+    name: str,
+    date: dt.date,
+    key_col: str | None = None,
+) -> None:
+    """Encode collected rows once and publish them: with ``key_col`` the
+    map shape {key: record} (write_bz2_json), else the list shape, one
+    compact JSON object per line in the given order."""
+    if key_col is not None:
+        write_bz2_json({r[key_col]: r for r in records}, base_path, name, date)
         return
-    # Map-shaped artifact {key: record}: JSON objects don't round-trip
-    # through df.write.json naturally; convert rows→map at the boundary
-    # (bounded: AMO-catalog scale, ~100k rows max).
-    obj = {}
-    for r in df.toJSON().collect():
-        rec = json.loads(r)
-        obj[rec[key_col]] = rec
-    write_bz2_json(obj, base_path, name, date)
+    lines = "".join(
+        json.dumps(r, separators=(",", ":"), ensure_ascii=False) + "\n"
+        for r in records
+    )
+    _publish(bz2.compress(lines.encode("utf-8")), base_path, date,
+             f"{name}/part-00000.json.bz2")
 
 
 def write_bz2_json(obj: dict, base_path: str, name: str, date: dt.date) -> None:
-    """Encode ``obj`` once as sorted-key bzip2 JSON and write the same bytes
-    to `{base}/latest/{name}.json.bz2` and
-    `{base}/snapshot={YYYYMMDD}/{name}.json.bz2`. Each copy is published by
-    `os.replace` from a temp file, so readers see the old or the new bytes."""
+    """Publish ``obj`` as sorted-key bzip2 JSON, `{name}.json.bz2`."""
     payload = bz2.compress(json.dumps(obj, sort_keys=True).encode("utf-8"))
+    _publish(payload, base_path, date, f"{name}.json.bz2")
+
+
+def _publish(payload: bytes, base_path: str, date: dt.date, rel: str) -> None:
+    """The one writer of artifact files: `{base}/latest/{rel}` and
+    `{base}/snapshot={YYYYMMDD}/{rel}` get the same bytes, each through a
+    hidden temp file (Spark's listing skips dot files) and an atomic
+    `os.replace`. A list artifact's dir keeps only its one part file, so
+    a rerun over an older Spark-written layout leaves one part file."""
+    sub_dir, fname = os.path.split(rel)
     for sub in ("latest", f"snapshot={date:%Y%m%d}"):
-        d = f"{base_path}/{sub}"
+        d = os.path.join(base_path, sub, sub_dir)
         os.makedirs(d, exist_ok=True)
-        # hidden temp name in the target directory (Spark's file listing
-        # skips dot files), then an atomic rename over the published copy
-        tmp = f"{d}/.{name}.json.bz2.tmp"
+        tmp = os.path.join(d, f".{fname}.tmp")
         with open(tmp, "wb") as fh:
             fh.write(payload)
-        os.replace(tmp, f"{d}/{name}.json.bz2")
+        os.replace(tmp, os.path.join(d, fname))
+        for e in list(os.scandir(d)) if sub_dir else ():
+            if e.name == fname:
+                continue
+            if e.is_dir(follow_symlinks=False):
+                shutil.rmtree(e.path)
+            else:
+                os.remove(e.path)
 
 
 def read_json_artifact(spark: SparkSession, path: str, schema=None) -> DataFrame:

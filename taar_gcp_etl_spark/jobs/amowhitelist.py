@@ -4,19 +4,23 @@ Reference: taar_etl/taar_amowhitelist.py — one pass over the addon catalog
 feeding three accumulators (whitelist P5 / featured P6 / featured∩whitelist
 P7, `transform()` at :144-162) then three artifacts (:190-193).
 
-Spark-first shape (SURVEY.md §3.3): cache the catalog once (scan sharing —
-Catalyst does not share scans across actions without it), derive the three
-filtered views, write three artifacts. At 100 TB the cache spills to disk
-per-executor; the alternative (three scans) is strictly worse.
+Spark-first shape (SURVEY.md §3.3): derive the three filtered views, tag
+each row with its artifact name and collect the union of the three in one
+Spark action, so their scans run in one job (no cache to build or
+release). The rows are split by tag on the driver, the empty-whitelist
+gate judges them, and the three map artifacts are published.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
+from functools import reduce
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from taar_gcp_etl_spark.io import write_json_artifact
+from taar_gcp_etl_spark.io import write_json_records
 from taar_gcp_etl_spark.operators.filters import (
     featured_predicate,
     whitelist_predicate,
@@ -53,10 +57,16 @@ def run(
     """extract → transform → load (3 artifacts, dual-write latest+snapshot,
     taar_etl/taar_amowhitelist.py:173-178). ``date`` is both the whitelist's
     as-of date and the snapshot stamp. The empty-whitelist gate (A5)
-    guards emission."""
-    catalog = catalog.cache()
+    guards emission: it runs before any file is written."""
     views = transform(catalog, date)
-    require_non_empty(views[WHITELIST])
-    for name, df in views.items():
-        write_json_artifact(df, out_base, name, date=date, key_col="guid")
+    rows = reduce(DataFrame.unionByName, [
+        df.select(F.lit(name).alias("artifact"),
+                  F.to_json(F.struct(*df.columns)).alias("record"))
+        for name, df in views.items()
+    ]).collect()
+    records = {name: [json.loads(r.record) for r in rows if r.artifact == name]
+               for name in views}
+    require_non_empty(records[WHITELIST])
+    for name, recs in records.items():
+        write_json_records(recs, out_base, name, date=date, key_col="guid")
     return views

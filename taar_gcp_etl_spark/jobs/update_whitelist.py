@@ -5,6 +5,7 @@ Reference: taar_etl/taar_update_whitelist.py — REST scan with the
 `recommended=true` server-side predicate (:28-43), row-validity filter
 (:46-48), set-build distinct (:58-62), ascending sort (:68), short-list gate
 (:70-73), sorted JSON array artifact only_guids_top_200.json (:19,90).
+Written as JSON lines, one `{"guid": ...}` object per line in guid order.
 """
 
 from __future__ import annotations
@@ -12,8 +13,9 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from taar_gcp_etl_spark.io import write_json_artifact
+from taar_gcp_etl_spark.io import write_json_records
 from taar_gcp_etl_spark.operators.filters import valid_guid_predicate
 from taar_gcp_etl_spark.operators.quality import require_min_rows
 
@@ -31,17 +33,6 @@ def distinct_sorted_guids(editorial: DataFrame) -> DataFrame:
     )
 
 
-def validate_against_catalog(guids: DataFrame, catalog: DataFrame) -> None:
-    """S4 re-expressed: the reference's optional per-guid HTTP 200 probe
-    (taar_etl/taar_update_whitelist.py:51-54,64-67) becomes one anti-join
-    against the catalog — raises listing the unknown guids instead of N
-    network round-trips."""
-    unknown = guids.join(catalog.select("guid"), "guid", "left_anti")
-    missing = [r.guid for r in unknown.limit(20).collect()]
-    if missing:
-        raise RuntimeError(f"guids not in AMO catalog: {missing}")
-
-
 def run(
     editorial: DataFrame,
     out_base: str,
@@ -49,9 +40,25 @@ def run(
     allow_shortlist: bool = False,
     catalog: DataFrame | None = None,
 ) -> DataFrame:
+    """One Spark action collects the distinct valid guids, each flagged
+    by whether the AMO catalog knows it (S4: a left join against the
+    catalog's distinct guids replaces the reference's per-guid HTTP 200
+    probe, taar_etl/taar_update_whitelist.py:51-54,64-67; always true
+    without a catalog). In guid order, those rows feed the A4 short-list
+    gate, then the unknown-guid check, then the artifact. Returns the
+    distinct sorted guids (lazy)."""
     guids = distinct_sorted_guids(editorial)
-    require_min_rows(guids, MIN_WHITELIST, allow_short=allow_shortlist)
-    if catalog is not None:
-        validate_against_catalog(guids, catalog)
-    write_json_artifact(guids, out_base, ARTIFACT, date=date)
+    known = F.lit(True).alias("known")
+    flagged = (
+        guids.select("guid", known) if catalog is None
+        else guids.join(catalog.select("guid", known).distinct(), "guid",
+                        "left")
+    )
+    rows = sorted(flagged.collect())
+    require_min_rows(rows, MIN_WHITELIST, allow_short=allow_shortlist)
+    missing = [r.guid for r in rows if not r.known][:20]
+    if missing:
+        raise RuntimeError(f"guids not in AMO catalog: {missing}")
+    records = [{"guid": r.guid} for r in rows]
+    write_json_records(records, out_base, ARTIFACT, date)
     return guids

@@ -2,11 +2,13 @@
 
 The reference guards artifact emission with runtime assertions; the engine
 keeps them as explicit operators so pipelines fail loudly before writing.
-Gates use `limit(n+1).count()` / `isEmpty()` — bounded actions, never a full
-count of a 100 TB table just to check a threshold.
+The gates judge the rows an artifact job has already collected for its
+write (artifacts are catalog-scale), so they add no Spark action.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,24 +51,24 @@ class EmptyWhitelistError(RuntimeError):
 
 
 def require_min_rows(
-    df: DataFrame, minimum: int, allow_short: bool = False
-) -> DataFrame:
-    """A4 — raise ShortWhitelistError if df has fewer than `minimum` rows
-    (taar_etl/taar_update_whitelist.py:70-73; --allow-shortlist escape hatch
-    at :84). Counts at most minimum rows — not the whole table."""
-    if not allow_short and df.limit(minimum).count() < minimum:
+    rows: Sequence, minimum: int, allow_short: bool = False
+) -> Sequence:
+    """A4 — raise ShortWhitelistError if the collected ``rows`` number
+    fewer than `minimum` (taar_etl/taar_update_whitelist.py:70-73;
+    --allow-shortlist escape hatch at :84)."""
+    if not allow_short and len(rows) < minimum:
         raise ShortWhitelistError(
             f"quality gate: fewer than {minimum} rows"
         )
-    return df
+    return rows
 
 
-def require_non_empty(df: DataFrame) -> DataFrame:
-    """A5 — raise EmptyWhitelistError on empty input
+def require_non_empty(rows: Sequence) -> Sequence:
+    """A5 — raise EmptyWhitelistError on empty collected ``rows``
     (taar_etl/taar_utils.py:95-96: 'Empty AMO whitelist detected')."""
-    if df.isEmpty():
+    if not rows:
         raise EmptyWhitelistError("quality gate: empty result")
-    return df
+    return rows
 
 
 def column_profile(

@@ -2513,7 +2513,6 @@ def compact_cdc_tombstones(
     spark: SparkSession,
     table_dir: str,
     min_live_seq: int,
-    seq_col: str = "seq",
 ) -> int | None:
     """Retire tombstones whose seq is below ``min_live_seq`` — the
     caller's promise that no producer can still emit a sequence number
@@ -2522,13 +2521,13 @@ def compact_cdc_tombstones(
     are never touched. A full rewrite (the CAS loop rescale_buckets
     shares): it re-materializes every bucket into a single fresh dir
     (keeping the bucketed layout), which also serves as compaction for
-    mappings fragmented across many incremental dirs. Returns the
-    committed version, or None when the table has no committed
-    version."""
+    mappings fragmented across many incremental dirs. The seq column
+    is the one the table's manifest records. Returns the committed
+    version, or None when the table has no committed version."""
     return _full_rewrite(
         spark,
         table_dir,
-        lambda cur: _retire_tombstones(cur, min_live_seq, seq_col),
+        lambda cur, man: _retire_tombstones(cur, min_live_seq, man["seq_col"]),
     )
 
 
@@ -2548,9 +2547,10 @@ def _full_rewrite(
     max_attempts: int = 5,
 ) -> int | None:
     """The CAS loop of the maintenance rewrites (tombstone compaction,
-    bucket rescale): read the version being replaced, ``transform`` it,
-    write one clustered (and rolled) dir holding every bucket, and
-    publish _full_rewrite_manifest. Each attempt re-reads the log and
+    bucket rescale): read the version being replaced, ``transform`` it
+    (called with the rows and that version's manifest), write one
+    clustered (and rolled) dir holding every bucket, and publish
+    _full_rewrite_manifest. Each attempt re-reads the log and
     pins its read to that version, so a lost race rewrites the fresh
     state instead of committing a stale one. ``n_buckets`` is the
     rewritten table's bucket count (None keeps the current). None when
@@ -2564,7 +2564,9 @@ def _full_rewrite(
         _require_cdc_layout(man, table_dir)
         nb = n_buckets or man["n_buckets"]
         version = man["version"] + 1
-        rows = transform(read_txn(spark, table_dir, version=man["version"]))
+        rows = transform(
+            read_txn(spark, table_dir, version=man["version"]), man
+        )
         snap_rel = f"data/v{version:010d}-{token}"
         # maintenance must preserve the clustered layout, or one
         # rewrite would undo every apply's narrow zone maps
@@ -2725,7 +2727,7 @@ def rescale_buckets(
     if man["n_buckets"] == new_n_buckets:
         return None
 
-    def transform(cur: DataFrame) -> DataFrame:
+    def transform(cur: DataFrame, man: dict) -> DataFrame:
         if min_live_seq is not None:
             cur = _retire_tombstones(cur, min_live_seq, man["seq_col"])
         return cur.drop(BUCKET_COL).withColumn(

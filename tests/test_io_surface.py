@@ -7,6 +7,7 @@ from __future__ import annotations
 import bz2
 import datetime as dt
 import json
+import os
 import urllib.parse
 
 import pytest
@@ -20,6 +21,7 @@ from taar_gcp_etl_spark.io import (
     write_avro,
     write_bz2_json,
     write_json_artifact,
+    write_json_records,
     write_serving_table,
 )
 from taar_gcp_etl_spark.operators.serving import pack_serving_rows
@@ -241,16 +243,35 @@ def test_json_artifact_row_roundtrip(spark, tmp_path):
     )
 
 
-def test_bz2_artifact_survives_a_failed_write(tmp_path, monkeypatch):
+def _json_lines(raw: bytes) -> list:
+    return [json.loads(x) for x in bz2.decompress(raw).decode().splitlines()]
+
+
+# shape -> (writer, `latest` copy, decoder, first version, second version)
+_SHAPES = {
+    "map": (
+        write_bz2_json, "latest/m.json.bz2",
+        lambda raw: json.loads(bz2.decompress(raw)), {"a": 1}, {"b": 2},
+    ),
+    "list": (
+        write_json_records, "latest/m/part-00000.json.bz2",
+        _json_lines, [{"a": 1}], [{"b": 2}, {"c": 3}],
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_bz2_artifact_survives_a_failed_write(tmp_path, monkeypatch, shape):
     """A crash mid-write leaves the previous `latest` bytes in place: each
     copy is written to a temp name and published by `os.replace`."""
     import builtins
 
     from taar_gcp_etl_spark import io as io_mod
 
+    write, rel, decode, first, second = _SHAPES[shape]
     day = dt.date(2026, 8, 13)
-    write_bz2_json({"a": 1}, str(tmp_path), "m", day)
-    latest = tmp_path / "latest" / "m.json.bz2"
+    write(first, str(tmp_path), "m", day)
+    latest = tmp_path / rel
     before = latest.read_bytes()
 
     class Torn:
@@ -274,10 +295,32 @@ def test_bz2_artifact_survives_a_failed_write(tmp_path, monkeypatch):
         raising=False,
     )
     with pytest.raises(OSError, match="disk full"):
-        write_bz2_json({"b": 2}, str(tmp_path), "m", day + dt.timedelta(1))
+        write(second, str(tmp_path), "m", day + dt.timedelta(1))
     monkeypatch.undo()
 
     assert latest.read_bytes() == before
-    assert json.loads(bz2.decompress(before)) == {"a": 1}
-    write_bz2_json({"b": 2}, str(tmp_path), "m", day + dt.timedelta(1))
-    assert json.loads(bz2.decompress(latest.read_bytes())) == {"b": 2}
+    assert decode(before) == first
+    write(second, str(tmp_path), "m", day + dt.timedelta(1))
+    assert decode(latest.read_bytes()) == second
+
+
+def test_list_artifact_rerun_over_spark_layout(spark, tmp_path):
+    """A dir written by Spark's JSON writer (uuid-named part file,
+    `_SUCCESS`, `.crc` files) rewritten by the sink holds exactly one
+    part file, which reads back equal to the Spark-written rows."""
+    df = read_table(spark, SF_SMOKE, "region")
+    day = dt.date(2026, 8, 13)
+    out = tmp_path / f"snapshot={day:%Y%m%d}" / "regions"
+    df.coalesce(1).write.option("compression", "bzip2").json(str(out))
+    spark_rows = [
+        json.loads(line)
+        for p in sorted(out.glob("part-*.json.bz2"))
+        for line in bz2.open(p, "rt")
+    ]
+    assert sorted(os.listdir(out)) != ["part-00000.json.bz2"]
+
+    write_json_artifact(df, str(tmp_path), "regions", day)
+    assert os.listdir(out) == ["part-00000.json.bz2"]
+    assert _json_lines((out / "part-00000.json.bz2").read_bytes()) == (
+        spark_rows
+    )

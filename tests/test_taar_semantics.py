@@ -29,6 +29,7 @@ from taar_gcp_etl_spark.operators.quality import (
     require_non_empty,
 )
 from taar_gcp_etl_spark.schemas import AMO_ADDON
+from tests.conftest import spark_jobs
 
 # the run date the fixture's addon ages are measured from
 AS_OF = dt.date(2026, 8, 13)
@@ -195,19 +196,19 @@ class TestProfileTranspose:
 
 
 class TestGatesAndArtifacts:
-    def test_a4_short_whitelist_gate(self, spark):
-        df = spark.range(5)
+    def test_a4_short_whitelist_gate(self):
+        rows = list(range(5))
         with pytest.raises(ShortWhitelistError):
-            require_min_rows(df, 100)
-        require_min_rows(df, 100, allow_short=True)  # escape hatch
-        require_min_rows(spark.range(100), 100)
+            require_min_rows(rows, 100)
+        require_min_rows(rows, 100, allow_short=True)  # escape hatch
+        require_min_rows(list(range(100)), 100)
 
-    def test_a5_empty_gate(self, spark):
+    def test_a5_empty_gate(self):
         with pytest.raises(EmptyWhitelistError):
-            require_non_empty(spark.range(1).filter("id < 0"))
+            require_non_empty([])
 
     def test_amowhitelist_job_triple_output(self, catalog, tmp_path):
-        """§3.3 — one cached scan, three map-shaped dual-written artifacts."""
+        """§3.3 — one collect, three map-shaped dual-written artifacts."""
         views = amowhitelist.run(
             catalog, str(tmp_path), date=dt.date(2026, 8, 13)
         )
@@ -233,6 +234,66 @@ class TestGatesAndArtifacts:
         )
         got = [r.guid for r in out.collect()]
         assert len(got) == 120 and got == sorted(got)
+
+    @staticmethod
+    def _editorial(spark, guids):
+        return spark.createDataFrame([Row(addon=Row(guid=g)) for g in guids])
+
+    def test_update_whitelist_rejects_unknown_guids(self, spark, tmp_path):
+        """S4: the catalog join names the first 20 unknown guids in guid
+        order, and no artifact is written."""
+        known = [f"g{i:03d}@x" for i in range(120)]
+        unknown = [f"u{i:02d}@x" for i in range(25)]
+        catalog = spark.createDataFrame([(g,) for g in known], ["guid"])
+        editorial = self._editorial(spark, known + unknown[::-1])
+        with pytest.raises(RuntimeError) as exc:
+            update_whitelist.run(
+                editorial, str(tmp_path), AS_OF, catalog=catalog
+            )
+        assert str(exc.value) == f"guids not in AMO catalog: {unknown[:20]}"
+        assert not (tmp_path / "latest").exists()
+
+    def test_short_gate_fires_before_the_catalog_check(
+        self, spark, catalog, tmp_path
+    ):
+        editorial = self._editorial(spark, ["good@a", "nowhere@x"])
+        with pytest.raises(ShortWhitelistError):
+            update_whitelist.run(
+                editorial, str(tmp_path), AS_OF, catalog=catalog
+            )
+        with pytest.raises(RuntimeError, match="nowhere@x"):
+            update_whitelist.run(
+                editorial, str(tmp_path), AS_OF, allow_shortlist=True,
+                catalog=catalog,
+            )
+
+    def test_amowhitelist_runs_one_spark_job(self, spark, catalog, tmp_path):
+        """The three views are collected in one action: no cache build,
+        no separate gate scan, no collect per artifact."""
+        catalog.count()  # the module fixture's cache is built outside
+        _, n = spark_jobs(
+            spark, lambda: amowhitelist.run(catalog, str(tmp_path), AS_OF)
+        )
+        assert n == 1
+
+    def test_update_whitelist_job_budget(self, spark, tmp_path):
+        """One collect serves the short-list gate, the catalog check and
+        the artifact."""
+        guids = [f"g{i:03d}@x" for i in range(120)]
+        catalog = spark.createDataFrame([(g,) for g in guids], ["guid"])
+        editorial = self._editorial(spark, guids + ["g005@x", ""])
+        _, n = spark_jobs(
+            spark,
+            lambda: update_whitelist.run(
+                editorial, str(tmp_path), AS_OF, catalog=catalog
+            ),
+        )
+        assert n == 4
+        part = tmp_path / "latest" / update_whitelist.ARTIFACT
+        lines = bz2.decompress(
+            (part / "part-00000.json.bz2").read_bytes()
+        ).decode().splitlines()
+        assert [json.loads(x) for x in lines] == [{"guid": g} for g in guids]
 
     def test_corrupt_json_tolerance(self, spark):
         """P10 bad-record tolerance: corrupt JSON rows null out (PERMISSIVE

@@ -2027,6 +2027,31 @@ class TestMaintainCdcTable:
             key_col="id", n_buckets=nb,
         )
 
+    @pytest.mark.parametrize("via", ["compact", "maintain"])
+    def test_tombstone_retirement_uses_the_tables_seq_col(
+        self, spark, tmp_path, via
+    ):
+        """A table applied with ``seq_col="ts"`` retires its tombstones
+        by that column, from compact_cdc_tombstones and from a
+        maintenance pass without a rescale."""
+        t = str(tmp_path / "ts")
+        schema = "id long, val string, ts long, op string"
+        for rows in ([(1, "a", 1, "I"), (2, "b", 1, "I")],
+                     [(1, None, 2, "D")]):
+            txn.apply_cdc_batch_bucketed(
+                spark.createDataFrame(rows, schema), t, seq_col="ts",
+                n_buckets=4,
+            )
+        if via == "compact":
+            assert txn.compact_cdc_tombstones(spark, t, 100) is not None
+        else:
+            rep = txn.maintain_cdc_table(
+                spark, t, tombstone_min_live_seq=100, vacuum_keep_last=0
+            )
+            assert rep["tombstone_version"] is not None
+        raw = txn.read_cdc_table(spark, t, include_tombstones=True)
+        assert {(r.id, r._deleted) for r in raw.collect()} == {(2, False)}
+
     def test_full_pass_fires_each_due_step(self, spark, tmp_path):
         t = str(tmp_path / "mt")
         self._apply(spark, t, [(i, f"v{i}", 1, "I") for i in range(1, 9)])
@@ -2619,7 +2644,7 @@ class TestSyncJoinFromCdc:
         # compact at the current cursor horizon (single writer: no
         # older sync can replay) — tombstones retire, cursor survives
         assert txn.compact_cdc_tombstones(
-            spark, store, min_live_seq=cursor + 1, seq_col="_mv_seq"
+            spark, store, min_live_seq=cursor + 1
         ) is not None
         man2 = txn.latest_manifest(spark, store)
         assert man2["epoch_id"] == cursor
