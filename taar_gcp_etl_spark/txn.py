@@ -61,8 +61,9 @@ concurrent commits (the contract tests pin that failure mode).
 
 Scale: an apply costs O(touched buckets) in read and write volume plus
 two metadata ops, independent of table history; version resolution is
-one directory listing of ``_log``. Only the maintenance rewrites
-(tombstone compaction, bucket rescale) are O(table).
+one directory listing of ``_log``. Tombstone compaction is
+O(buckets holding a tombstone or an overlay), tracked in the manifest;
+only a bucket rescale is O(table).
 
 Reference parity: the reference's BigQuery CTAS-overwrite jobs
 (e.g. taar_etl/taar_profile_bigtable.py:70-96) get atomic replacement
@@ -74,7 +75,7 @@ from __future__ import annotations
 import json
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _LOG = "_log"
@@ -223,9 +224,10 @@ def read_txn(
     a parallel listing job once a root holds more than 32 of them. For a
     bucketed table, ``buckets`` restricts the read to those buckets'
     ``_bucket=b`` partition directories, listed from their parent — the
-    read cost is O(selected buckets), not O(table). A mapped bucket
-    with no subdir (a full rewrite maps every bucket, including empty
-    ones) holds no rows."""
+    read cost is O(selected buckets), not O(table); the maintenance
+    rewrites read their dirty buckets this way. A mapped bucket with no
+    subdir (a rewrite maps every bucket it covers, including the ones
+    left empty) holds no rows."""
     if version is None:
         man = latest_manifest(spark, table_dir)
     else:
@@ -476,22 +478,27 @@ def vacuum_txn(
     holding a DataFrame pinned to a deleted old version will fail on
     its next action — keep_last is the retention knob.
 
-    Bucketed layouts: a kept manifest references every dir its bucket
-    mapping points at — an OLD dir stays live for as long as any kept
-    version still owns a bucket in it, so incremental commits never
-    strand data they didn't rewrite."""
+    Bucketed layouts reclaim per bucket: a kept manifest references
+    every dir its bucket mapping and overlays point at — an OLD dir
+    stays live for as long as any kept version still reads a bucket
+    from it, so incremental commits never strand data they didn't
+    rewrite — and inside a kept dir the ``_bucket=b`` subdirs that no
+    kept manifest reads (buckets a later commit or maintenance rewrite
+    repointed) are deleted too (counted in ``removed_bucket_dirs``)."""
     table_dir = table_dir.rstrip("/")
     versions = _list_manifest_versions(spark, table_dir)
     keep_versions = versions[-keep_last:] if keep_last > 0 else []
     keep_snaps = set()
+    # bucketed dir -> the _bucket=b subdirs some kept manifest reads
+    mapped: dict[str, set[str]] = {}
     for v in keep_versions:
         man = read_manifest(spark, table_dir, v)
-        if "snapshot" in man:
-            refs = [man["snapshot"]]
-        else:
-            refs = list(man["buckets"].values())
-            for paths in (man.get("overlays") or {}).values():
-                refs.extend(paths)
+        refs = [man["snapshot"]] if "snapshot" in man else []
+        for b, d in (man.get("buckets") or {}).items():
+            mapped.setdefault(d, set()).add(f"{BUCKET_COL}={b}")
+        for b, paths in (man.get("overlays") or {}).items():
+            for d in paths:
+                mapped.setdefault(d, set()).add(f"{BUCKET_COL}={b}")
         if "blooms_ref" in man:  # bloom sidecar file lives under data/
             refs.append(man["blooms_ref"]["path"])
         # per-commit CDF dir lives under data/ (a maintenance commit
@@ -499,6 +506,7 @@ def vacuum_txn(
         if (man.get("change_files") or {}).get("path"):
             refs.append(man["change_files"]["path"])
         keep_snaps.update(r.split("/", 1)[1] for r in refs)
+    keep_snaps.update(d.split("/", 1)[1] for d in mapped)
     import time
 
     import re
@@ -521,6 +529,16 @@ def vacuum_txn(
                 removed_feeds += 1
             else:
                 removed_snaps += 1
+    removed_bucket_dirs = 0
+    for d, subs in sorted(mapped.items()):
+        dir_p = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{d}")
+        if not fs.exists(dir_p):
+            continue
+        for st in fs.listStatus(dir_p):
+            name = st.getPath().getName()
+            if name.startswith(f"{BUCKET_COL}=") and name not in subs:
+                fs.delete(st.getPath(), True)
+                removed_bucket_dirs += 1
     removed_manifests = 0
     for v in versions:
         if v not in keep_versions:
@@ -532,6 +550,7 @@ def vacuum_txn(
     return {
         "removed_snapshots": removed_snaps,
         "removed_change_feeds": removed_feeds,
+        "removed_bucket_dirs": removed_bucket_dirs,
         "removed_manifests": removed_manifests,
         "skipped_young": skipped_young,
         "kept_versions": keep_versions,
@@ -985,6 +1004,11 @@ def apply_cdc_batch_bucketed(
     )
 
 
+def _tomb_buckets() -> Column:
+    """Aggregate: the set of buckets that hold a tombstone row."""
+    return F.collect_set(F.when(F.col(DELETED_COL), F.col(BUCKET_COL)))
+
+
 def _apply_staged_bucketed(
     staged: DataFrame,
     table_dir: str,
@@ -1017,14 +1041,15 @@ def _apply_staged_bucketed(
         staged = staged.withColumn(BUCKET_COL, _bucket_of(key_col, cur_nb))
     # and aggregate size, delete-only and touched buckets while the
     # checkpoint materializes it (observed metrics: no extra job)
-    from pyspark.sql import Observation
-
     probe = [
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(~F.col(DELETED_COL), 1)).alias("live"),
     ]
     if cur_nb is not None:
-        probe.append(F.collect_set(BUCKET_COL).alias("buckets"))
+        probe += [
+            F.collect_set(BUCKET_COL).alias("buckets"),
+            _tomb_buckets().alias("tombs"),
+        ]
     seen = Observation()
     staged_all = staged.observe(seen, *probe).localCheckpoint(eager=True)
     stats = seen.get
@@ -1036,6 +1061,7 @@ def _apply_staged_bucketed(
     hint_small = stats["n"] <= 2_000_000
     delete_only = stats["live"] == 0
     touched: list[int] = sorted(stats.get("buckets", []))
+    tombs: list[int] = sorted(stats.get("tombs", []))
     token = uuid.uuid4().hex[:8]
     for attempt in range(max_attempts):
         if attempt:
@@ -1073,12 +1099,12 @@ def _apply_staged_bucketed(
             staged_all = staged_all.withColumn(
                 BUCKET_COL, _bucket_of(key_col, nb)
             )
-            touched = sorted(
-                r[0]
-                for r in staged_all.select(BUCKET_COL)
-                .distinct()
+            pairs = (
+                staged_all.select(BUCKET_COL, DELETED_COL).distinct()
                 .collect()
             )
+            touched = sorted({r[0] for r in pairs})
+            tombs = sorted({r[0] for r in pairs if r[1]})
             cur_nb = nb
         n_buckets_eff = nb
         version = (man["version"] if man else 0) + 1
@@ -1171,6 +1197,13 @@ def _apply_staged_bucketed(
             manifest["schema"] = schema_fields
         if change_files is not None:
             manifest["change_files"] = change_files
+        if man is None or "tombstone_buckets" in man:
+            # sticky superset of the buckets holding a tombstone (base
+            # or overlay); absent on a table written before it was
+            # tracked, which maintenance then treats as every bucket
+            manifest["tombstone_buckets"] = sorted(
+                set((man or {}).get("tombstone_buckets", [])) | set(tombs)
+            )
         if eff_stats_cols:
             manifest["stats_cols"] = list(eff_stats_cols)
             manifest["file_stats"] = file_stats
@@ -2518,16 +2551,22 @@ def compact_cdc_tombstones(
     caller's promise that no producer can still emit a sequence number
     under that horizon (e.g. the streaming checkpoint's committed
     offset). Tombstones at/above the horizon keep guarding; live rows
-    are never touched. A full rewrite (the CAS loop rescale_buckets
-    shares): it re-materializes every bucket into a single fresh dir
-    (keeping the bucketed layout), which also serves as compaction for
-    mappings fragmented across many incremental dirs. The seq column
-    is the one the table's manifest records. Returns the committed
-    version, or None when the table has no committed version."""
+    are never touched.
+
+    O(dirty buckets), the way BigTable compacts only the tablets its
+    deletes touched: it rewrites just the buckets ``_dirty_buckets``
+    names (those that may hold a tombstone, those with an overlay, and
+    on a zone-mapped table those owned by a dir without stats) into one
+    fresh dir, folding their overlays in, and repoints only them; every
+    other bucket keeps its dir. A table with no dirty bucket commits a
+    manifest-only version (no Spark job). The seq column is the one the
+    table's manifest records. Returns the committed version, or None
+    when the table has no committed version."""
     return _full_rewrite(
         spark,
         table_dir,
         lambda cur, man: _retire_tombstones(cur, min_live_seq, man["seq_col"]),
+        dirty=_dirty_buckets,
     )
 
 
@@ -2539,20 +2578,41 @@ def _retire_tombstones(
     )
 
 
+def _dirty_buckets(man: dict) -> list[int]:
+    """The buckets a tombstone compaction must rewrite: the manifest's
+    sticky ``tombstone_buckets`` (absent on a table written before it
+    was tracked: every bucket), every bucket with an overlay and, on a
+    zone-mapped table, every bucket owned by a dir with no stats yet
+    (written before the table adopted ``stats_cols``)."""
+    dirty = set(man.get("tombstone_buckets", range(man["n_buckets"])))
+    dirty.update(int(b) for b in man.get("overlays") or {})
+    if man.get("stats_cols"):
+        stated = man.get("file_stats") or {}
+        dirty.update(
+            int(b) for b, d in man["buckets"].items() if d not in stated
+        )
+    return sorted(dirty)
+
+
 def _full_rewrite(
     spark: SparkSession,
     table_dir: str,
     transform,
     n_buckets: int | None = None,
     max_attempts: int = 5,
+    dirty=None,
 ) -> int | None:
     """The CAS loop of the maintenance rewrites (tombstone compaction,
-    bucket rescale): read the version being replaced, ``transform`` it
-    (called with the rows and that version's manifest), write one
-    clustered (and rolled) dir holding every bucket, and publish
-    _full_rewrite_manifest. Each attempt re-reads the log and
-    pins its read to that version, so a lost race rewrites the fresh
-    state instead of committing a stale one. ``n_buckets`` is the
+    bucket rescale): read the buckets being rewritten at the version
+    being replaced, ``transform`` them (called with the rows and that
+    version's manifest), write one clustered (and rolled) dir holding
+    them, and publish _full_rewrite_manifest. ``dirty`` (called with the
+    manifest) picks the buckets; None rewrites every bucket, which a
+    rescale needs, and an empty pick writes nothing and commits the
+    manifest alone. The buckets of the tombstones the rewrite keeps are
+    observed during its write (no extra job). Each attempt re-reads the
+    log and pins its read to that version, so a lost race rewrites the
+    fresh state instead of committing a stale one. ``n_buckets`` is the
     rewritten table's bucket count (None keeps the current). None when
     the table has no committed version."""
     table_dir = table_dir.rstrip("/")
@@ -2564,18 +2624,28 @@ def _full_rewrite(
         _require_cdc_layout(man, table_dir)
         nb = n_buckets or man["n_buckets"]
         version = man["version"] + 1
-        rows = transform(
-            read_txn(spark, table_dir, version=man["version"]), man
-        )
-        snap_rel = f"data/v{version:010d}-{token}"
-        # maintenance must preserve the clustered layout, or one
-        # rewrite would undo every apply's narrow zone maps
-        _rolled_writer(
-            _clustered_for_write(rows, man.get("stats_cols"), nb),
-            man.get("cluster_rows"),
-        ).parquet(f"{table_dir}/{snap_rel}")
+        sel = None if dirty is None else dirty(man)
+        snap_rel, tombs = None, []
+        if sel != []:
+            rows = transform(
+                read_txn(spark, table_dir, version=man["version"], buckets=sel),
+                man,
+            )
+            # maintenance must preserve the clustered layout, or one
+            # rewrite would undo every apply's narrow zone maps. The
+            # observation sits above the clustering shuffle: below it, a
+            # shuffle that AQE finds empty drops the observed metrics
+            seen = Observation()
+            rows = _clustered_for_write(
+                rows, man.get("stats_cols"), nb
+            ).observe(seen, _tomb_buckets().alias("tombs"))
+            snap_rel = f"data/v{version:010d}-{token}"
+            _rolled_writer(rows, man.get("cluster_rows")).parquet(
+                f"{table_dir}/{snap_rel}"
+            )
+            tombs = seen.get["tombs"]
         manifest = _full_rewrite_manifest(
-            spark, table_dir, man, version, snap_rel, nb
+            spark, table_dir, man, version, snap_rel, nb, sel, tombs
         )
         if _publish_manifest(spark, table_dir, manifest, token):
             return version
@@ -2649,43 +2719,61 @@ def _full_rewrite_manifest(
     table_dir: str,
     man: dict,
     version: int,
-    snap_rel: str,
+    snap_rel: str | None,
     n_buckets: int,
+    rewritten: list[int] | None,
+    tombs: list[int],
 ) -> dict:
-    """Manifest for a bucketed-table MAINTENANCE full rewrite
-    (tombstone compaction, bucket rescale): every bucket repointed at
-    one fresh dir, overlays folded, schema carried, per-dir stats
-    recollected when the table tracks them, and an EMPTY change feed
-    recorded in the manifest itself (``path`` None: live content is
-    unchanged, so there is no file to write) so CDF netting spans the
-    maintenance version instead of falling back to the snapshot diff.
-    Only _full_rewrite builds it, so the rewrites cannot drift (a field
-    added to one and missed in the other was exactly how compaction
-    briefly lost its change feed)."""
+    """Manifest for a bucketed-table MAINTENANCE rewrite (tombstone
+    compaction, bucket rescale): the ``rewritten`` buckets (None: every
+    bucket of the ``n_buckets``) repointed at ``snap_rel`` and every
+    other mapping entry left as it was, overlays folded (a rewrite
+    covers every bucket that has one), ``tombstone_buckets`` set to the
+    buckets where the rewrite kept a tombstone (``tombs``; the others
+    hold none), schema carried, the stats of every still-referenced dir
+    kept plus the new dir's collected when the table tracks them, and an
+    EMPTY change feed recorded in the manifest itself (``path`` None:
+    live content is unchanged, so there is no file to write) so CDF
+    netting spans the maintenance version instead of falling back to
+    the snapshot diff. Only _full_rewrite builds it, so the rewrites
+    cannot drift (a field added to one and missed in the other was
+    exactly how compaction briefly lost its change feed)."""
     schema_fields = man["schema"]
+    if rewritten is None:
+        mapping = {str(b): snap_rel for b in range(n_buckets)}
+    else:
+        mapping = dict(man["buckets"])
+        mapping.update({str(b): snap_rel for b in rewritten})
     manifest = {
         "version": version,
-        "buckets": {str(b): snap_rel for b in range(n_buckets)},
+        "buckets": mapping,
         "n_buckets": n_buckets,
         "key_col": man["key_col"],
         "seq_col": man["seq_col"],
-        "overlays": {},  # full rewrite folds every overlay in
+        "overlays": {},  # every overlay bucket was rewritten
         "epoch_id": man.get("epoch_id"),
         "parent": man["version"],
         "schema": schema_fields,
         "change_files": {"path": None, "preimage": True},
+        "tombstone_buckets": sorted(tombs),
     }
     if man.get("stats_cols"):
         from taar_gcp_etl_spark.layout import collect_file_stats
 
         sc = man["stats_cols"]
-        manifest["stats_cols"] = sc
-        manifest["file_stats"] = {
-            snap_rel: collect_file_stats(
+        live_dirs = set(mapping.values())
+        file_stats = {
+            d: st
+            for d, st in (man.get("file_stats") or {}).items()
+            if d in live_dirs
+        }
+        if snap_rel is not None:
+            file_stats[snap_rel] = collect_file_stats(
                 spark, f"{table_dir}/{snap_rel}", sc, row_groups=True,
                 slice_rows=_slice_rows_for(man.get("cluster_rows")),
             )
-        }
+        manifest["stats_cols"] = sc
+        manifest["file_stats"] = file_stats
         types = dict(schema_fields)
         manifest["stats_types"] = {c: types.get(c, "") for c in sc}
     if man.get("cluster_rows"):
@@ -3620,11 +3708,14 @@ def maintain_cdc_table(
        to an hour so a concurrent writer's in-flight snapshot survives;
        ``vacuum_keep_last=0`` skips it.
 
-    Steps 1-3 are each an O(table) rewrite, so the due ones run as ONE
-    rewrite and one commit: every full rewrite folds the overlays in
-    (and defragments incremental dirs), and a rescale retires the
-    tombstones below the horizon as it re-hashes. The table is
-    rewritten at most once per pass.
+    The due steps 1-3 run as ONE rewrite and one commit. Steps 1-2 are
+    the same compaction, O(dirty buckets): it rewrites only the buckets
+    that hold a tombstone or an overlay and leaves every other bucket in
+    its dir (so a table can come to own up to ``n_buckets`` dirs; the
+    vacuum reclaims the repointed buckets' subdirs). Step 3 re-hashes
+    the whole table, folding the overlays in and retiring the
+    tombstones below the horizon as it goes. The table is rewritten at
+    most once per pass.
 
     Returns {compacted_version, tombstone_version, rescaled_version,
     vacuum}: each due rewrite step carries the version of that one
@@ -3690,8 +3781,9 @@ def maybe_compact_overlays(
     ``min_live_seq`` retire in the same pass (0 retires nothing).
     Returns the committed version, or None if pressure is under the
     threshold. Call it from the foreachBatch writer after the apply —
-    cost is one full-table rewrite, amortized over the delete batches
-    that stacked the overlays."""
+    cost is one rewrite of the buckets with an overlay or a tombstone
+    (not the table), amortized over the delete batches that stacked
+    the overlays."""
     if overlay_pressure(spark, table_dir) <= max_overlays_per_bucket:
         return None
     return compact_cdc_tombstones(spark, table_dir, min_live_seq)

@@ -11,6 +11,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from jobbench import trace  # noqa: E402
 from taar_gcp_etl_spark.io import TABLE_NAMES  # noqa: E402
 from taar_gcp_etl_spark.session import get_spark  # noqa: E402
 
@@ -57,3 +58,11 @@ def spark_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def files_written(path, fn):
+    """(fn(), (files, bytes) new or changed under ``path``) — the same
+    before/after snapshot diff the benchmark's traced spans count."""
+    before = trace.snapshot([path])
+    out = fn()
+    return out, trace.written(before, trace.snapshot([path]))

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from taar_gcp_etl_spark import layout, txn
-from tests.conftest import spark_jobs
+from tests.conftest import files_written, spark_jobs
 
 CDC_SCHEMA = "id long, val string, seq long, op string"
 
@@ -56,6 +56,44 @@ def _snapshot_diff(spark, t, lo, hi=None, mode="compact"):
     return txn._keyed_diff(
         old, new, man["key_col"], man["seq_col"], mode=mode
     )
+
+
+def _buckets(spark, keys, n_buckets):
+    """{key: bucket} for integer keys of an ``n_buckets`` table."""
+    df = spark.createDataFrame([(int(k),) for k in keys], "id long")
+    return {
+        r.id: r.b
+        for r in df.select(
+            "id", txn._bucket_of("id", n_buckets).alias("b")
+        ).collect()
+    }
+
+
+def _bucket_subdirs(t, d):
+    """The buckets with a ``_bucket=b`` subdir under ``t/d``."""
+    from pathlib import Path
+
+    root = Path(t) / d
+    return {
+        int(p.name.split("=", 1)[1])
+        for p in (root.iterdir() if root.exists() else ())
+        if p.name.startswith(f"{txn.BUCKET_COL}=")
+    }
+
+
+def _assert_dirs_hold_mapped_subdirs(t, *mans):
+    """Each bucket or overlay dir the manifests reference holds exactly
+    the ``_bucket=b`` subdirs of the buckets they map to it (for tables
+    whose every mapped bucket holds rows)."""
+    mapped: dict[str, set[int]] = {}
+    for man in mans:
+        for b, d in man["buckets"].items():
+            mapped.setdefault(d, set()).add(int(b))
+        for b, paths in man["overlays"].items():
+            for d in paths:
+                mapped.setdefault(d, set()).add(int(b))
+    for d, bs in mapped.items():
+        assert _bucket_subdirs(t, d) == bs, d
 
 
 def _feed_rows(df):
@@ -380,23 +418,42 @@ class TestBucketedCdc:
         # kept version's feed survives
         assert report["removed_change_feeds"] == 1
 
-    def test_compaction_consolidates_dirs_and_keeps_layout(
+    def test_compaction_repoints_dirty_buckets_and_keeps_layout(
         self, spark, tmp_path
     ):
+        """Compaction rewrites only the bucket holding the tombstone (an
+        overlay here); the updated bucket keeps its v3 dir and every
+        other bucket the seed dir. Vacuum then reclaims the overlay,
+        the change feed and the two seed-dir subdirs no kept version
+        maps, leaving each kept dir exactly its mapped subdirs."""
         t = str(tmp_path / "buck")
         self._apply(spark, t, [(i, f"v{i}", i, "I") for i in range(1, 41)])
+        bk = _buckets(spark, range(1, 41), 8)
+        k = next(i for i in range(2, 41) if bk[i] != bk[1])
         self._apply(spark, t, [(1, None, 100, "D")])
-        self._apply(spark, t, [(2, "v2b", 101, "U")])
-        txn.compact_cdc_tombstones(spark, t, min_live_seq=200)
+        self._apply(spark, t, [(k, "new", 101, "U")])
+        m3 = txn.latest_manifest(spark, t)
+        v = txn.compact_cdc_tombstones(spark, t, min_live_seq=200)
         man = txn.latest_manifest(spark, t)
-        assert "buckets" in man and len(set(man["buckets"].values())) == 1
+        (new_dir,) = set(man["buckets"].values()) - set(
+            m3["buckets"].values()
+        )
+        assert man["buckets"] == {
+            **m3["buckets"], str(bk[1]): new_dir
+        }
+        assert new_dir.startswith(f"data/v{v:010d}-")
+        assert _bucket_subdirs(t, new_dir) == {bk[1]}
+        assert man["overlays"] == {} and man["tombstone_buckets"] == []
         live = _rows(txn.read_cdc_table(spark, t))
-        assert 1 not in live and live[2] == ("v2b", 101) and len(live) == 39
+        assert 1 not in live and live[k] == ("new", 101) and len(live) == 39
         raw = txn.read_cdc_table(spark, t, include_tombstones=True)
         assert raw.filter("_deleted").count() == 0  # horizon passed
-        # now vacuum can actually reclaim the fragmented dirs
         report = txn.vacuum_txn(spark, t, keep_last=1)
-        assert report["removed_snapshots"] == 3
+        assert report["removed_snapshots"] == 1  # the overlay dir
+        assert report["removed_change_feeds"] == 1
+        assert report["removed_bucket_dirs"] == 2  # bk[1], bk[k] of v1
+        _assert_dirs_hold_mapped_subdirs(t, man)
+        assert _rows(txn.read_cdc_table(spark, t)) == live
 
     def test_layout_and_n_buckets_guards(self, spark, tmp_path):
         snap = str(tmp_path / "snap")
@@ -2127,6 +2184,219 @@ class TestMaintainCdcTable:
         self._apply(spark, t, [(1, "a", 1, "I")])
         rep = txn.maintain_cdc_table(spark, t, vacuum_keep_last=0)
         assert rep["vacuum"] is None
+
+
+class TestDirtyBucketCompaction:
+    """Tombstone compaction is O(dirty buckets): the manifest tracks the
+    buckets that may hold a tombstone (``tombstone_buckets``), and a
+    compaction rewrites only those and the overlay buckets, leaving
+    every other bucket in its dir; vacuum reclaims per bucket."""
+
+    NB = 16
+
+    def _seed(self, spark, t, **kw):
+        txn.apply_cdc_batch_bucketed(
+            spark.createDataFrame(
+                [(i, f"v{i}", 1, "I") for i in range(160)], CDC_SCHEMA
+            ),
+            t, n_buckets=self.NB, **kw,
+        )
+        return _buckets(spark, range(160), self.NB)
+
+    def _keys(self, bk, n, avoid=()):
+        """n keys in distinct buckets, none in a bucket of ``avoid``."""
+        out, used = [], {bk[a] for a in avoid}
+        for k in range(160):
+            if bk[k] not in used:
+                out.append(k)
+                used.add(bk[k])
+            if len(out) == n:
+                return out
+        raise AssertionError("not enough buckets")
+
+    def _raw(self, spark, t, version=None):
+        return sorted(txn.read_cdc_table(
+            spark, t, include_tombstones=True, version=version
+        ).collect())
+
+    def test_only_dirty_buckets_repointed(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        bk = self._seed(spark, t)
+        old, new = self._keys(bk, 2)
+        (up,) = self._keys(bk, 1, avoid=(old, new))
+        txn.apply_cdc_batch_bucketed(
+            spark.createDataFrame(
+                [(old, None, 50, "D"), (new, None, 150, "D"),
+                 (up, "u", 60, "U")],
+                CDC_SCHEMA,
+            ),
+            t, n_buckets=self.NB,
+        )
+        before = txn.latest_manifest(spark, t)
+        assert before["tombstone_buckets"] == sorted({bk[old], bk[new]})
+        live = sorted(txn.read_cdc_table(spark, t).collect())
+        v = txn.compact_cdc_tombstones(spark, t, min_live_seq=100)
+        man = txn.latest_manifest(spark, t)
+        moved = {
+            int(b) for b, d in man["buckets"].items()
+            if d != before["buckets"][b]
+        }
+        assert moved == {bk[old], bk[new]}
+        assert {man["buckets"][str(b)] for b in moved} == {
+            next(d for d in man["buckets"].values()
+                 if d.startswith(f"data/v{v:010d}-"))
+        }
+        assert sorted(txn.read_cdc_table(spark, t).collect()) == live
+        raw = txn.read_cdc_table(spark, t, include_tombstones=True)
+        assert {r.id for r in raw.filter("_deleted").collect()} == {new}
+        # the kept tombstone's bucket stays dirty; the next compaction
+        # past its horizon rewrites that bucket alone
+        assert man["tombstone_buckets"] == [bk[new]]
+        txn.compact_cdc_tombstones(spark, t, min_live_seq=2**62)
+        man2 = txn.latest_manifest(spark, t)
+        assert {
+            int(b) for b, d in man2["buckets"].items()
+            if d != man["buckets"][b]
+        } == {bk[new]}
+        assert man2["tombstone_buckets"] == []
+        raw = txn.read_cdc_table(spark, t, include_tombstones=True)
+        assert raw.filter("_deleted").count() == 0
+        assert sorted(txn.read_cdc_table(spark, t).collect()) == live
+
+    def test_overlay_buckets_folded(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        bk = self._seed(spark, t)
+        dels = self._keys(bk, 3)
+        for j, k in enumerate(dels):  # delete-only: one overlay each
+            _apply(spark, t, [(k, None, 10 + j, "D")], n_buckets=self.NB)
+        before = txn.latest_manifest(spark, t)
+        assert {int(b) for b in before["overlays"]} == {bk[k] for k in dels}
+        live = sorted(txn.read_cdc_table(spark, t).collect())
+        assert txn.maybe_compact_overlays(
+            spark, t, max_overlays_per_bucket=0
+        )
+        man = txn.latest_manifest(spark, t)
+        assert man["overlays"] == {}
+        assert {
+            int(b) for b, d in man["buckets"].items()
+            if d != before["buckets"][b]
+        } == {bk[k] for k in dels}
+        # min_live_seq 0 retires nothing: the tombstones now sit in base
+        assert man["tombstone_buckets"] == sorted(bk[k] for k in dels)
+        assert sorted(txn.read_cdc_table(spark, t).collect()) == live
+
+    def test_untracked_manifest_compacts_every_bucket(self, spark, tmp_path):
+        """A manifest without ``tombstone_buckets`` (a table written
+        before it was tracked) may hold a tombstone anywhere: the next
+        compaction rewrites every bucket, and tracks from then on."""
+        t = str(tmp_path / "t")
+        bk = self._seed(spark, t)
+        (k,) = self._keys(bk, 1)
+        _apply(spark, t, [(k, None, 5, "D"), (1000, "n", 5, "I")],
+               n_buckets=self.NB)
+        man = txn.latest_manifest(spark, t)
+        del man["tombstone_buckets"]
+        txn._write_bytes(
+            spark, f"{t}/_log/{txn._manifest_name(man['version'])}",
+            json.dumps(man, sort_keys=True).encode(),
+        )
+        # an apply onto an untracked table does not start a partial set
+        _apply(spark, t, [(k + 1, "x", 6, "U")], n_buckets=self.NB)
+        assert "tombstone_buckets" not in txn.latest_manifest(spark, t)
+        live = sorted(txn.read_cdc_table(spark, t).collect())
+        v = txn.compact_cdc_tombstones(spark, t, min_live_seq=2**62)
+        man = txn.latest_manifest(spark, t)
+        assert set(man["buckets"].values()) == {
+            next(iter(man["buckets"].values()))
+        }
+        assert man["buckets"]["0"].startswith(f"data/v{v:010d}-")
+        assert man["tombstone_buckets"] == []
+        assert sorted(txn.read_cdc_table(spark, t).collect()) == live
+        _apply(spark, t, [(k, None, 9, "D")], n_buckets=self.NB)
+        assert txn.latest_manifest(spark, t)["tombstone_buckets"] == [bk[k]]
+
+    def test_stats_table_filtered_read_after_compaction_and_vacuum(
+        self, spark, tmp_path
+    ):
+        from taar_gcp_etl_spark.layout import _residual
+
+        schema = "id long, val string, day long, seq long, op string"
+        t = str(tmp_path / "t")
+        rows = [(i, f"v{i}", i % 5, 1, "I") for i in range(160)]
+        txn.apply_cdc_batch_bucketed(
+            spark.createDataFrame(rows, schema), t, n_buckets=self.NB,
+            stats_cols=["day"], target_file_rows=4,
+        )
+        txn.apply_cdc_batch_bucketed(
+            spark.createDataFrame(
+                [(3, None, None, 2, "D"), (8, None, None, 2, "D"),
+                 (12, "x", 4, 2, "U"), (500, "n", 1, 2, "I")],
+                schema,
+            ),
+            t, n_buckets=self.NB,
+        )
+        txn.compact_cdc_tombstones(spark, t, min_live_seq=2**62)
+        txn.vacuum_txn(spark, t, keep_last=1)
+        man = txn.latest_manifest(spark, t)
+        assert set(man["file_stats"]) == set(man["buckets"].values())
+        for filters in ([("day", "<=", 1)], [("day", "=", 4)],
+                        [("day", "between", (2, 3))]):
+            got = sorted(
+                tuple(r) for r in txn.read_cdc_table(
+                    spark, t, filters=filters
+                ).collect()
+            )
+            want = sorted(
+                tuple(r) for r in txn.read_cdc_table(spark, t)
+                .filter(_residual(filters)).collect()
+            )
+            assert got == want and got, filters
+        assert 3 not in {r.id for r in txn.read_cdc_table(spark, t).collect()}
+
+    def test_rescale_tracks_the_new_bucket_count(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        bk = self._seed(spark, t)
+        dels = self._keys(bk, 3)
+        _apply(spark, t, [(k, None, 5, "D") for k in dels]
+               + [(999, "n", 5, "I")], n_buckets=self.NB)
+        txn.rescale_buckets(spark, t, 32)
+        man = txn.latest_manifest(spark, t)
+        bk32 = _buckets(spark, dels, 32)
+        assert man["tombstone_buckets"] == sorted({bk32[k] for k in dels})
+        txn.compact_cdc_tombstones(spark, t, min_live_seq=2**62)
+        man = txn.latest_manifest(spark, t)
+        assert man["tombstone_buckets"] == [] and man["n_buckets"] == 32
+        raw = txn.read_cdc_table(spark, t, include_tombstones=True)
+        assert raw.filter("_deleted").count() == 0
+
+    def test_vacuum_reclaims_per_bucket_and_keeps_time_travel(
+        self, spark, tmp_path
+    ):
+        t = str(tmp_path / "t")
+        bk = self._seed(spark, t)
+        bk.update(_buckets(spark, [999], self.NB))
+        dels = self._keys(bk, 2, avoid=(999,))
+        _apply(spark, t, [(k, None, 5, "D") for k in dels]
+               + [(999, "n", 5, "I")], n_buckets=self.NB)
+        prev = txn.latest_manifest(spark, t)
+        pre = self._raw(spark, t)
+        txn.compact_cdc_tombstones(spark, t, min_live_seq=2**62)
+        man = txn.latest_manifest(spark, t)
+        post = self._raw(spark, t)
+        assert post == [r for r in pre if not r._deleted]
+
+        # the seed dir's three subdirs the v2 apply repointed go; the
+        # v2 dir is still the previous version's
+        rep = txn.vacuum_txn(spark, t, keep_last=2)
+        assert rep["removed_bucket_dirs"] == 3
+        _assert_dirs_hold_mapped_subdirs(t, prev, man)
+        assert self._raw(spark, t, version=prev["version"]) == pre
+
+        # then the v2 dir's two subdirs the compaction repointed
+        rep = txn.vacuum_txn(spark, t, keep_last=1)
+        assert rep["removed_bucket_dirs"] == 2
+        _assert_dirs_hold_mapped_subdirs(t, man)
+        assert self._raw(spark, t) == post
 
 
 class TestJoinBucketed:
@@ -4110,36 +4380,32 @@ class TestManifestRead:
         assert {r.id: r.val for r in got} == {3: "c"}
 
     def test_pruned_read_skips_absent_bucket_dirs(self, spark, tmp_path):
-        """A full rewrite maps all 8 buckets to one dir holding at most
-        two of them: selecting every bucket returns exactly the two
-        rows, and a merge into a bucket with no subdir lands."""
+        """Retiring a bucket's only row maps that bucket to a rewrite dir
+        with no subdir for it: selecting every bucket returns exactly
+        the other row, and a merge into the empty bucket lands."""
         t = str(tmp_path / "t")
         self._two_rows(spark, t)
+        bk = _buckets(spark, range(1, 200), 8)
+        assert bk[1] != bk[2]
+        txn.apply_cdc_batch_bucketed(
+            spark.createDataFrame([(1, None, 2, "D")], CDC_SCHEMA),
+            t, n_buckets=8,
+        )
         txn.compact_cdc_tombstones(spark, t, 2**62)
         man = txn.latest_manifest(spark, t)
-        (d,) = set(man["buckets"].values())
-        assert len(man["buckets"]) == 8
-        present = {
-            int(p.name.split("=")[1])
-            for p in (tmp_path / "t" / d).iterdir()
-            if p.name.startswith("_bucket=")
-        }
-        assert 1 <= len(present) <= 2
+        d = man["buckets"][str(bk[1])]
+        assert set(man["buckets"]) == {str(bk[1]), str(bk[2])}
+        assert d != man["buckets"][str(bk[2])]
+        assert bk[1] not in _bucket_subdirs(t, d)
         got = txn.read_txn(spark, t, buckets=range(8)).collect()
-        assert {r.id: r.val for r in got} == {1: "a", 2: "b"}
+        assert {r.id: r.val for r in got} == {2: "b"}
 
-        k = next(
-            r.id
-            for r in spark.range(3, 200)
-            .select("id", txn._bucket_of("id", 8).alias("b"))
-            .collect()
-            if r.b not in present
-        )
+        k = next(i for i in range(3, 200) if bk[i] == bk[1])
         txn.merge_into(
             spark, t, spark.createDataFrame([(k, "k")], "id long, val string")
         )
         live = {r.id: r.val for r in txn.read_cdc_table(spark, t).collect()}
-        assert live == {1: "a", 2: "b", k: "k"}
+        assert live == {2: "b", k: "k"}
 
 
 class TestMergeJobBudget:
@@ -4155,6 +4421,7 @@ class TestMergeJobBudget:
 
     MERGE_JOBS = 10
     MAINTAIN_JOBS = 1
+    MAINTAIN_FILES = 6
 
     def _table(self, spark, t):
         txn.apply_cdc_batch_bucketed(
@@ -4237,16 +4504,49 @@ class TestMergeJobBudget:
         assert _feed_rows(df) == _feed_rows(_snapshot_diff(spark, t, v - 1))
 
     def test_maintenance_job_budget(self, spark, tmp_path):
+        """With no tombstone and no overlay, maintenance commits its
+        manifest alone: no Spark job, no data file. After a merge that
+        deletes a key it rewrites just that key's bucket in one job: one
+        parquet file, the write's _SUCCESS marker and the manifest, each
+        with its checksum file."""
         t = str(tmp_path / "t")
         self._table64(spark, t)
         self._merge(spark, t, [(1, "n1")])
-        rep, n = spark_jobs(spark, lambda: txn.maintain_cdc_table(
-            spark, t, tombstone_min_live_seq=2**62,
-        ))
-        assert n == self.MAINTAIN_JOBS, n
+        before = txn.latest_manifest(spark, t)
+        (rep, (files, _)), n = spark_jobs(spark, lambda: files_written(
+            t, lambda: txn.maintain_cdc_table(
+                spark, t, tombstone_min_live_seq=2**62,
+            )))
+        assert n == 0, n
         man = txn.latest_manifest(spark, t)
         assert rep["tombstone_version"] == man["version"]
+        assert man["buckets"] == before["buckets"]
         assert man["change_files"] == {"path": None, "preimage": True}
+        assert files == 2, files  # the manifest and its checksum
+
+        txn.merge_into(
+            spark, t,
+            spark.createDataFrame(
+                [(2, "x", True), (3, "n3", False)],
+                "id long, val string, is_del boolean",
+            ),
+            matched_delete_condition="is_del",
+        )
+        before = txn.latest_manifest(spark, t)
+        (rep, (files, _)), n = spark_jobs(spark, lambda: files_written(
+            t, lambda: txn.maintain_cdc_table(
+                spark, t, tombstone_min_live_seq=2**62,
+            )))
+        assert n == self.MAINTAIN_JOBS, n
+        assert files == self.MAINTAIN_FILES, files
+        man = txn.latest_manifest(spark, t)
+        assert rep["tombstone_version"] == man["version"]
+        b2 = str(_buckets(spark, [2], 64)[2])
+        assert man["buckets"] != before["buckets"]
+        assert {**man["buckets"], b2: before["buckets"][b2]} == (
+            before["buckets"]
+        )
+        assert 2 not in {r.id for r in txn.read_txn(spark, t).collect()}
 
     def test_feed_spans_maintenance_commits_of_either_shape(
         self, spark, tmp_path
