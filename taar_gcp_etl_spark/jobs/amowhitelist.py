@@ -4,18 +4,18 @@ Reference: taar_etl/taar_amowhitelist.py — one pass over the addon catalog
 feeding three accumulators (whitelist P5 / featured P6 / featured∩whitelist
 P7, `transform()` at :144-162) then three artifacts (:190-193).
 
-Spark-first shape (SURVEY.md §3.3): derive the three filtered views, tag
-each row with its artifact name and collect the union of the three in one
-Spark action, so their scans run in one job (no cache to build or
-release). The rows are split by tag on the driver, the empty-whitelist
-gate judges them, and the three map artifacts are published.
+Spark-first shape (SURVEY.md §3.3), the reference's one pass: a single
+scan of the catalog collects each row's JSON record with two predicate
+flags (whitelist, featured) in one Spark action (no cache to build or
+release). The three views are split on the driver — P5 is the whitelist
+flag, P6 the featured flag, P7 both — the empty-whitelist gate judges
+them, and the three map artifacts are published.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,15 +58,21 @@ def run(
     taar_etl/taar_amowhitelist.py:173-178). ``date`` is both the whitelist's
     as-of date and the snapshot stamp. The empty-whitelist gate (A5)
     guards emission: it runs before any file is written."""
-    views = transform(catalog, date)
-    rows = reduce(DataFrame.unionByName, [
-        df.select(F.lit(name).alias("artifact"),
-                  F.to_json(F.struct(*df.columns)).alias("record"))
-        for name, df in views.items()
-    ]).collect()
-    records = {name: [json.loads(r.record) for r in rows if r.artifact == name]
-               for name in views}
+    flagged = catalog.select(
+        F.to_json(F.struct(*catalog.columns)).alias("record"),
+        F.coalesce(whitelist_predicate(date), F.lit(False)).alias("w"),
+        F.coalesce(featured_predicate(), F.lit(False)).alias("f"),
+    )
+    rows = [
+        (json.loads(r.record), r.w, r.f)
+        for r in flagged.filter(F.col("w") | F.col("f")).collect()
+    ]
+    records = {
+        WHITELIST: [rec for rec, w, _ in rows if w],
+        FEATURED: [rec for rec, _, f in rows if f],
+        FEATURED_WHITELIST: [rec for rec, w, f in rows if w and f],
+    }
     require_non_empty(records[WHITELIST])
     for name, recs in records.items():
         write_json_records(recs, out_base, name, date=date, key_col="guid")
-    return views
+    return transform(catalog, date)

@@ -40,6 +40,15 @@ only the dirs it maps, so they always see a complete committed version
 (``read_txn(version=...)``). Each commit also records its change rows,
 so ``read_changes`` nets those files instead of diffing snapshots.
 
+Every read of the table's data files — ``read_txn``, the filtered
+``read_cdc_table``, ``merge_into``'s pruned absent-row pass and each
+bucket of ``join_bucketed`` — is one scan (``_scan_buckets``): ONE
+parquet relation over the selected buckets' ``_bucket=b`` leaf dirs
+(or, zone-map pruned, their kept files) and overlay leaf dirs, read
+with the manifest's schema and resolved by one latest-per-key window
+while overlays exist. Its plan has one file scan however many dirs own
+the buckets, and planning it runs no Spark job.
+
 Every CDC entry point (apply, ``merge_into``, the maintenance rewrites,
 ``read_changes``, ``join_bucketed``, ``sync_join_from_cdc``) takes this
 layout only. Plain snapshot manifests (a ``"snapshot"`` key: one dir per
@@ -213,102 +222,157 @@ def read_txn(
     the whole point.
 
     Handles both manifest shapes: plain (one snapshot dir per version,
-    layout.commit_clustered) and BUCKETED (the CDC table: the manifest
-    maps each hash bucket to the snapshot dir that currently owns it —
-    see apply_cdc_batch_bucketed). A bucketed
-    read takes its schema from the manifest, so planning it runs no
-    Spark job (no footer inference), and a dir written before an
-    additive schema evolution reads the new columns as null. That holds
-    for any bucket count: the session lists a dir's ``_bucket=b``
-    subdirs on the driver (session.get_spark), where Spark would start
-    a parallel listing job once a root holds more than 32 of them. For a
-    bucketed table, ``buckets`` restricts the read to those buckets'
-    ``_bucket=b`` partition directories, listed from their parent — the
-    read cost is O(selected buckets), not O(table); the maintenance
-    rewrites read their dirty buckets this way. A mapped bucket with no
-    subdir (a rewrite maps every bucket it covers, including the ones
-    left empty) holds no rows."""
+    layout.commit_clustered; one parquet read of that dir) and BUCKETED
+    (the CDC table: the manifest maps each hash bucket to the snapshot
+    dir that currently owns it — see apply_cdc_batch_bucketed). A
+    bucketed read is _scan_buckets: one parquet relation over the
+    selected buckets' ``_bucket=b`` leaf dirs, whatever the number of
+    dirs that own them, with the schema from the manifest, so planning
+    it runs no Spark job and a dir written before an additive schema
+    evolution reads the new columns as null. ``buckets`` restricts it to
+    those buckets — the read cost is O(selected buckets), not O(table);
+    the apply and the maintenance rewrites read their buckets this way.
+    The rows are the resolved keyed state: overlays folded in,
+    tombstones and ``_bucket`` kept (read_cdc_table hides them)."""
     if version is None:
         man = latest_manifest(spark, table_dir)
     else:
         man = read_manifest(spark, table_dir, version)
     if man is None:
         return None
-    table_dir = table_dir.rstrip("/")
     if "snapshot" in man:
-        return spark.read.parquet(f"{table_dir}/{man['snapshot']}")
+        return spark.read.parquet(f"{table_dir.rstrip('/')}/{man['snapshot']}")
+    mapped = {int(b) for b in man["buckets"]}
+    if buckets is not None:
+        mapped &= {int(b) for b in buckets}
+    if not mapped:
+        return None
+    out = _scan_buckets(spark, table_dir, man, sorted(mapped))
+    if out is None:
+        return spark.createDataFrame([], _ddl(man["schema"]))
+    return out
+
+
+def _scan_buckets(
+    spark: SparkSession,
+    table_dir: str,
+    man: dict,
+    buckets: list[int] | None = None,
+    prune: dict | None = None,
+    filters: list[tuple] | None = None,
+    one_partition: bool = False,
+) -> DataFrame | None:
+    """The one reader of a bucketed CDC table's data files: the resolved
+    keyed state of the selected ``buckets`` (None: every mapped bucket)
+    as ONE parquet relation — latest row per key, tombstones kept,
+    ``_bucket`` included, the manifest's column order. None when there
+    is nothing to read.
+
+    Paths: each selected bucket's ``_bucket=b`` leaf dir in the dir that
+    owns it (one listStatus per owning dir decides which exist: a
+    rewrite maps every bucket it covers, including the ones it left
+    empty), plus its overlay leaf dirs. With ``prune`` (a
+    _cdc_prune_plan: ``kept_paths`` and ``unstated_dirs``) a bucket's
+    base is its kept files instead, or its leaf dir when a dir without
+    stats owns it; a selection whose base is pruned away holds no live
+    row (overlays hold only tombstones) and reads as None. Reading
+    inside the leaf dirs makes the relation's size estimate the selected
+    buckets' bytes; the leaves carry no partition column, so ``_bucket``
+    is recomputed from the key (a common basePath across dirs is
+    rejected as conflicting directory structures). The schema is the
+    manifest's: planning runs no Spark job.
+
+    ``filters`` (layout.py predicates) ride on the scan as ``residual OR
+    _deleted``, so parquet skips row groups by them and a tombstone,
+    whose payload is null, still reaches overlay resolution. Dropping a
+    base row early can only promote a tombstone, which the live filter
+    drops: callers re-apply the residual to the live rows. Overlays
+    resolve through _latest_per_key, after a coalesce to one partition
+    with ``one_partition`` (join_bucketed's per-bucket branches then
+    plan no shuffle)."""
+    from taar_gcp_etl_spark.layout import _residual
+
+    table_dir = table_dir.rstrip("/")
     want = None if buckets is None else {int(b) for b in buckets}
     sel = {
-        int(b): d
-        for b, d in man["buckets"].items()
+        int(b): d for b, d in man["buckets"].items()
         if want is None or int(b) in want
     }
-    if not sel:
-        return None
-    from pyspark.sql.types import StructType
 
-    schema = StructType.fromDDL(_ddl(man["schema"]))
-
-    def scan(dir_buckets: dict[str, list[int]]) -> list[DataFrame]:
-        # one read per dir, pruned to its selected buckets by partition
-        # filter; a bucket selection also lists only their subdirs
-        parts = []
+    def leaves(dir_buckets: dict[str, list[int]]) -> list[str]:
+        out = []
         for d, bs in sorted(dir_buckets.items()):
+            if not bs:
+                continue
             root = f"{table_dir}/{d}"
-            paths = [root]
-            if want is not None:
-                have = _subdirs(spark, root)
-                paths = [
-                    f"{root}/{BUCKET_COL}={b}"
-                    for b in sorted(bs)
-                    if f"{BUCKET_COL}={b}" in have
-                ]
-            if paths:
-                parts.append(
-                    spark.read.schema(schema)
-                    .option("basePath", root).parquet(*paths)
-                    .filter(F.col(BUCKET_COL).isin(bs))
-                )
-        return parts
+            have = _subdirs(spark, root)
+            out += [
+                f"{root}/{BUCKET_COL}={b}" for b in sorted(bs)
+                if f"{BUCKET_COL}={b}" in have
+            ]
+        return out
 
-    by_dir: dict[str, list[int]] = {}
-    for b, d in sel.items():
-        by_dir.setdefault(d, []).append(b)
-    # merge-on-read: fold in delete overlays covering the selected
-    # buckets (see apply_cdc_batch_bucketed's delete-only fast path).
-    # The resolution window is the MoR read tax — paid only while
-    # overlays exist, and only over the selected buckets' rows; the
-    # next bucket rewrite or compaction folds the overlay in and the
-    # read plan goes back to a plain pruned scan.
-    overlay_dirs: dict[str, list[int]] = {}
-    for b_str, paths in (man.get("overlays") or {}).items():
-        if int(b_str) in sel:
-            for p in paths:
-                overlay_dirs.setdefault(p, []).append(int(b_str))
-    parts = scan(by_dir) + scan(overlay_dirs)
-    if not parts:
-        return spark.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if overlay_dirs:
-        from pyspark.sql import Window
+    whole: dict[str, list[int]] = {}
+    paths: list[str] = []
+    if prune is None:
+        for b, d in sel.items():
+            whole.setdefault(d, []).append(b)
+    else:
+        paths = [
+            p for p in prune["kept_paths"]
+            if int(p.split(f"/{BUCKET_COL}=", 1)[1].split("/", 1)[0]) in sel
+        ]
+        for d, bs in prune["unstated_dirs"].items():
+            whole[d] = [b for b in bs if b in sel]
+    paths += leaves(whole)
+    if prune is not None and not paths:
+        return None
+    overlays: dict[str, list[int]] = {}
+    for b, ds in (man.get("overlays") or {}).items():
+        if int(b) in sel:
+            for d in ds:
+                overlays.setdefault(d, []).append(int(b))
+    base = len(paths)
+    paths += leaves(overlays)
+    if not paths:
+        return None
+    df = spark.read.schema(
+        _ddl([f for f in man["schema"] if f[0] != BUCKET_COL])
+    ).parquet(*paths)
+    if filters:
+        df = df.filter(_residual(filters) | F.col(DELETED_COL))
+    if one_partition:
+        df = df.coalesce(1)
+    if len(paths) > base:
+        df = _latest_per_key(df, man)
+    return df.withColumn(
+        BUCKET_COL, _bucket_of(man["key_col"], man["n_buckets"])
+    ).select(*[n for n, _ in man["schema"]])
 
-        # tiebreaker mirrors the write path's strict '>' guard: an
-        # overlay tombstone whose seq EQUALS the stored row's must lose
-        # deterministically (asc on _deleted → the non-tombstone/base
-        # row sorts first on seq ties), not win per-read at random
-        w = Window.partitionBy(man["key_col"]).orderBy(
-            F.desc(man["seq_col"]), F.asc(DELETED_COL)
-        )
-        out = (
-            out.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    # the reader appends the partition column last: restore the
-    # manifest's column order
-    return out.select(*schema.names)
+
+def _latest_per_key(df: DataFrame, man: dict) -> DataFrame:
+    """Merge-on-read overlay resolution, the one window that does it:
+    the latest row per key by seq. The read tax is paid only while a
+    selected bucket has an overlay; the next rewrite of the bucket folds
+    its overlays in. The tiebreaker mirrors the write path's strict '>'
+    guard: an overlay tombstone whose seq EQUALS the stored row's loses
+    deterministically (asc on _deleted sorts the base row first)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(man["key_col"]).orderBy(
+        F.desc(man["seq_col"]), F.asc(DELETED_COL)
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _live_rows(df: DataFrame) -> DataFrame:
+    """Live rows of a resolved bucketed read: tombstones filtered, the
+    internal ``_deleted`` and ``_bucket`` columns hidden."""
+    return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
 
 
 class RenameManifestPublisher:
@@ -936,9 +1000,9 @@ def apply_cdc_batch_bucketed(
     payload columns, collected from just the dir each batch writes —
     O(touched buckets), never a table scan. Because CDC ingest is
     usually time-correlated, each commit's dir covers a narrow range of
-    e.g. the event-date column, so ``scan_cdc_pruned`` range predicates
-    skip old dirs wholesale — zone-map analytics directly over the
-    CDC-maintained fact table, no export hop. (Sound under
+    e.g. the event-date column, so ``read_cdc_table(filters=)`` range
+    predicates skip old dirs wholesale — zone-map analytics directly
+    over the CDC-maintained fact table, no export hop. (Sound under
     multi-versioning: each key's base row lives in exactly one live
     dir, and overlays — tombstones only — are always read.)
 
@@ -1236,45 +1300,45 @@ def read_cdc_table(
     hidden; pass include_tombstones=True for the raw keyed state, or
     ``version`` for time travel).
 
-    ``filters`` (VERDICT r9 #5 — the user-facing face of
-    scan_cdc_pruned's zone-map skipping): a layout.py predicate list
-    ``[(col, op, val), ...]`` (ops ``< <= > >= = between in``, ANDed).
-    On a table with manifest file stats the read plans over ONLY the
-    files whose per-file/slice envelopes overlap, pushes the residual
-    to the parquet reader (native row-group skipping inside kept
-    files), and re-applies it after overlay resolution — same result
-    as filtering the plain read, a fraction of the IO when the table
-    was ingested stats-clustered (apply batches with ``stats_cols=``).
-    Tables without stats apply the predicate as a plain pushed filter —
-    always correct, prunes at parquet row-group granularity only.
-    Incompatible with ``include_tombstones`` (a tombstone's payload is
-    null — filtering it by payload is meaningless)."""
-    if filters:
-        if include_tombstones:
-            raise ValueError(
-                "read_cdc_table: filters= cannot combine with "
-                "include_tombstones — tombstone payloads are null"
-            )
-        man = (
-            latest_manifest(spark, table_dir)
-            if version is None
-            else read_manifest(spark, table_dir, version)
+    ``filters`` (VERDICT r9 #5 — the user-facing zone-map read): a
+    layout.py predicate list ``[(col, op, val), ...]`` (ops ``< <= > >=
+    = between in``, ANDed), read through the same scan as every other
+    read (_scan_buckets). On a table with manifest file stats the scan
+    covers ONLY the files whose per-file/slice envelopes overlap
+    (_cdc_prune_plan; dirs written before the table adopted stats are
+    read whole); on any table the residual rides on the parquet reader
+    (native row-group skipping) and is re-applied to the live rows —
+    same result as filtering the plain read, a fraction of the IO when
+    the table was ingested stats-clustered (apply batches with
+    ``stats_cols=``). Planning runs no Spark job. Incompatible with
+    ``include_tombstones`` (a tombstone's payload is null — filtering it
+    by payload is meaningless)."""
+    if not filters:
+        df = read_txn(spark, table_dir, version=version)
+        return df if df is None or include_tombstones else _live_rows(df)
+    if include_tombstones:
+        raise ValueError(
+            "read_cdc_table: filters= cannot combine with "
+            "include_tombstones — tombstone payloads are null"
         )
-        if man is None:
-            return None
-        if "file_stats" in man:
-            return scan_cdc_pruned(
-                spark, table_dir, filters, version=version, man=man
-            )
-    df = read_txn(spark, table_dir, version=version)
-    if df is None or include_tombstones:
-        return df
-    out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
-    if filters:
-        from taar_gcp_etl_spark.layout import _residual
+    from taar_gcp_etl_spark.layout import _residual
 
-        out = out.filter(_residual(filters))
-    return out
+    man = (
+        latest_manifest(spark, table_dir)
+        if version is None
+        else read_manifest(spark, table_dir, version)
+    )
+    if man is None:
+        return None
+    prune = (
+        _cdc_prune_plan(man, table_dir.rstrip("/"), filters)
+        if "file_stats" in man
+        else None
+    )
+    df = _scan_buckets(spark, table_dir, man, prune=prune, filters=filters)
+    if df is None:
+        return _empty_live(spark, man)
+    return _live_rows(df).filter(_residual(filters))
 
 
 MERGE_BROADCAST_KEY_GATE = 4_000_000
@@ -1573,8 +1637,10 @@ def merge_into(
     val)`` tuples, ops ``< <= > >= = between in``, over target
     columns (no ``t_`` prefix; the layer adds it) — and the table
     carries zone maps (``stats_cols=``), the absent-row scan prunes to
-    files whose stat envelopes overlap some clause's conjunction, and
-    the matched-side probe gets its bucket pruning back. A daily
+    files whose stat envelopes overlap some clause's conjunction — the
+    table's one scan (_scan_buckets) over the union of the clauses'
+    kept files, overlays resolved as in any read — and the matched-side
+    probe gets its bucket pruning back. A daily
     snapshot-sync whose absentee clauses are date-bounded
     (``{"not_matched_by_source": "update", "condition":
     [("updated_at", "<", cutoff)], "set": ...}``) then reads only the
@@ -1923,9 +1989,9 @@ def _merge_into_impl(
     # conjunction — a row claimed by clause i satisfies i's whole
     # conjunction, so its file overlaps each of i's predicates and
     # survives in the per-clause kept set; the union over clauses is
-    # therefore a superset of every claimable row (same soundness
-    # argument as scan_cdc_pruned: skipping a file only removes rows no
-    # clause could touch). Metadata-only decision, gated on the
+    # therefore a superset of every claimable row (the soundness
+    # argument of read_cdc_table(filters=): skipping a file only removes
+    # rows no clause could touch). Metadata-only decision, gated on the
     # kept-fraction threshold _IVM_PRUNE_MAX_KEPT_FRACTION (a near-full
     # keep pays the many-small-reads scan without saving IO), falling
     # back to the honest O(table) read on pre-stats dirs.
@@ -2149,18 +2215,21 @@ def _merge_into_impl(
         # only (a tombstoned key has no row to update or delete), all
         # columns exposed as t_<name> (there is no source row, so
         # conditions and SET expressions read the target only)
+        nbs_src = raw_all
         if nbs_kept_paths is not None:
             # zone-map-pruned absent-row scan: only files whose stats
-            # overlap some clause's conjunction (resolution against
-            # overlays still applies — raw=True keeps tombstones and
-            # seq so the ~deleted filter and the seq stamp see the
-            # same state read_txn would show)
-            nbs_src = scan_cdc_pruned(
-                spark, table_dir, [], man=man,
-                kept_paths=nbs_kept_paths, raw=True,
+            # overlap some clause's conjunction, resolved against the
+            # overlays like any read (tombstones and seq kept, so the
+            # ~deleted filter and the seq stamp see the state read_txn
+            # shows); a fully pruned scan leaves no absent row
+            pruned = _scan_buckets(
+                spark, table_dir, man,
+                prune={"kept_paths": nbs_kept_paths, "unstated_dirs": {}},
             )
-        else:
-            nbs_src = raw_all
+            nbs_src = (
+                raw_all.filter(F.lit(False)) if pruned is None
+                else pruned.drop(BUCKET_COL)
+            )
         nbs = nbs_src.filter(~F.col(DELETED_COL)).join(
             F.broadcast(src_keys) if hint_small else src_keys,
             key_col, "left_anti",
@@ -2257,13 +2326,15 @@ def join_bucketed(
     (_bucket_of: pmod(xxhash64(key), n_buckets)), so equal keys land in
     equal bucket ids whenever n_buckets match — the join decomposes into
     n_buckets independent per-bucket joins with no cross-bucket matches
-    possible. Each per-bucket side reads its `_bucket=b/` partition
-    directories DIRECTLY (both the honest IO bound and the honest size
-    estimate — see live()) and is coalesced to ONE partition:
-    SinglePartition satisfies every clustered distribution, so
-    EnsureRequirements inserts NO Exchange — the sort-merge join sorts
-    locally inside the task and the big sides never touch the shuffle
-    service. The union of the n_buckets sub-joins runs one task per
+    possible. Each per-bucket side is the table's one scan
+    (_scan_buckets) of that bucket, coalesced to ONE partition before
+    its overlays resolve. SinglePartition satisfies every clustered
+    distribution while the relation's size estimate stays under
+    spark.sql.maxSinglePartitionBytes (128 MB default), and the scan
+    reads inside the `_bucket=b/` leaf dirs, so the estimate is the
+    bucket's own bytes: EnsureRequirements inserts NO Exchange — the
+    sort-merge join sorts locally inside the task and the big sides
+    never touch the shuffle service. The union of the n_buckets sub-joins runs one task per
     bucket, which is exactly the layout's design parallelism (buckets
     sized to a few GB at 100 TB; a 100 TB × 100 TB fact-fact merge
     moves ZERO bytes between executors vs ~200 TB through the shuffle
@@ -2282,9 +2353,12 @@ def join_bucketed(
     mid-plan cannot tear the bucket set. Tombstones are filtered and
     internal columns hidden (read_cdc_table semantics). Buckets with
     merge-on-read delete overlays resolve them inside the per-bucket
-    branch (a bucket-LOCAL window — still no cross-bucket traffic,
-    folded away by the next rewrite). Returns None when either table
-    has no committed version.
+    branch (a bucket-LOCAL window over the one partition — still no
+    cross-bucket traffic, folded away by the next rewrite). A bucket
+    larger than maxSinglePartitionBytes gets a bucket-LOCAL exchange
+    back (bounded by one bucket, never the table); raise the conf to
+    the bucket size to keep the zero-shuffle plan. Returns None when
+    either table has no committed version.
 
     Trade-off vs a plain join: the plan has O(n_buckets) branches and
     per-bucket parallelism is 1 task — right for the co-located
@@ -2293,19 +2367,15 @@ def join_bucketed(
 
     ``filters_left`` / ``filters_right`` (VERDICT r9 #5): layout.py
     predicate lists over each side's OWN column names (before the
-    rsuffix rename), applied with scan_cdc_pruned's discipline inside
-    every per-bucket branch — when the side's manifest carries file
-    stats, only overlapping base files are read (a bucket whose base
-    files are ALL pruned contributes no live rows, so its branch
-    collapses: for an inner join the whole per-bucket sub-join
-    disappears — "join this month's partitions of two 100 TB tables"
-    reads this month's files, not the tables); the residual rides on
-    the base scan (parquet row-group skipping) and re-applies after
-    merge-on-read overlay resolution. Sound for the same reason
-    scan_cdc_pruned is: overlays hold only tombstones, so dropping a
-    base row early can only promote a tombstone the live filter drops
-    anyway. Sides without stats apply the residual as a plain pushed
-    filter.
+    rsuffix rename), read_cdc_table(filters=) inside every per-bucket
+    branch — when the side's manifest carries file stats, only
+    overlapping base files are read (a bucket whose base files are ALL
+    pruned contributes no live rows, so its branch collapses: for an
+    inner join the whole per-bucket sub-join disappears — "join this
+    month's partitions of two 100 TB tables" reads this month's files,
+    not the tables); the residual rides on the scan (parquet row-group
+    skipping) and re-applies after merge-on-read overlay resolution.
+    Sides without stats apply the residual alone.
     """
     if how not in {
         "inner", "left", "left_outer", "right", "right_outer",
@@ -2364,131 +2434,30 @@ def join_bucketed(
 
     from taar_gcp_etl_spark.layout import _residual
 
-    def _prune_info(table_dir: str, man: dict, filters) -> dict | None:
-        """Per-side prune plan: kept base files grouped by bucket id
-        (None when the side has no zone maps — residual-only), plus the
-        pre-stats dirs that must be read wholesale."""
-        if not filters:
-            return None
-        info = {"filters": filters, "kept": None, "unstated": {}}
-        if "file_stats" in man:
-            plan = _cdc_prune_plan(man, table_dir.rstrip("/"), filters)
-            by_b: dict[int, list[str]] = {}
-            for p in plan["kept_paths"]:
-                seg = [
-                    s for s in p.split("/")
-                    if s.startswith(f"{BUCKET_COL}=")
-                ]
-                if seg:
-                    by_b.setdefault(
-                        int(seg[0].split("=", 1)[1]), []
-                    ).append(p)
-            info["kept"] = by_b
-            info["unstated"] = plan["unstated_dirs"]
-        return info
+    def side(table_dir: str, man: dict, filters):
+        """The live rows of one bucket of a side: _scan_buckets coalesced
+        to one partition before overlay resolution, None when nothing
+        is left to read."""
+        prune = (
+            _cdc_prune_plan(man, table_dir.rstrip("/"), filters)
+            if filters and "file_stats" in man
+            else None
+        )
 
-    prune_l = _prune_info(left_dir, man_l, filters_left)
-    prune_r = _prune_info(right_dir, man_r, filters_right)
-
-    _subdir_cache: dict[str, set] = {}
-
-    def _list_subdirs(parent: str) -> set:
-        if parent not in _subdir_cache:
-            _subdir_cache[parent] = _subdirs(spark, parent)
-        return _subdir_cache[parent]
-
-    def live(table_dir: str, man: dict, b: int, prune: dict | None):
-        """Live rows of ONE bucket, read from its `_bucket=b/` partition
-        directories DIRECTLY (not via a basePath scan + isin filter):
-        pointing the reader inside the partition dir makes the relation's
-        size estimate the bucket's actual bytes. That matters because
-        EnsureRequirements only lets SinglePartition satisfy the join's
-        distribution while the estimate stays under
-        spark.sql.maxSinglePartitionBytes (128 MB default) — a basePath
-        scan is credited the WHOLE dir (the hive filter prunes IO but
-        not the estimate), which re-inserted a per-bucket shuffle at
-        just 4M rows. Buckets genuinely larger than the conf degrade
-        gracefully: Spark re-adds a bucket-LOCAL exchange (bounded by
-        one bucket, never the table) — raise the conf to the bucket
-        size to keep the zero-shuffle plan, which is the same tuning a
-        native bucketed-table SMJ needs for one-task-per-bucket sorts.
-
-        With ``prune`` (a _prune_info dict) the BASE read follows
-        scan_cdc_pruned's discipline: zone-map-kept files only (a
-        fully-pruned bucket returns None — overlays hold only
-        tombstones, so no base rows means no live rows), residual on
-        the base scan, residual again after overlay resolution."""
-        table_dir_ = table_dir.rstrip("/")
-        d = man["buckets"].get(str(b))
-        if d is None:
-            return None
-        parts_b = []
-        # a mapped bucket can lack its subdir (e.g. compaction
-        # retired every row the bucket had) — empty, not an error;
-        # presence comes from ONE cached listStatus per snapshot
-        # dir, not n_buckets exists() round-trips (driver plan cost
-        # at high bucket counts / object storage latency)
-        base_path = f"{table_dir_}/{d}/{BUCKET_COL}={b}"
-        parent, leaf = base_path.rsplit("/", 1)
-        if leaf in _list_subdirs(parent):
-            if prune is not None and prune["kept"] is not None and not (
-                d in prune["unstated"] and b in prune["unstated"][d]
-            ):
-                kept = prune["kept"].get(b)
-                if kept:
-                    parts_b.append(
-                        spark.read.parquet(*kept).filter(
-                            _residual(prune["filters"])
-                        )
-                    )
-                # else: every base file of this bucket pruned — no
-                # live row can pass the filter; handled below
-            else:
-                base = spark.read.parquet(base_path)
-                if prune is not None:
-                    base = base.filter(_residual(prune["filters"]))
-                parts_b.append(base)
-        if prune is not None and not parts_b:
-            # pruned-empty (or absent) base: overlays carry only
-            # tombstones, so the bucket has no qualifying live rows —
-            # collapse the branch without reading anything
-            return None
-        for p in (man.get("overlays") or {}).get(str(b)) or []:
-            op_ = f"{table_dir_}/{p}/{BUCKET_COL}={b}"
-            parent, leaf = op_.rsplit("/", 1)
-            if leaf in _list_subdirs(parent):
-                parts_b.append(spark.read.parquet(op_))
-        if not parts_b:
-            return None
-        out = parts_b[0]
-        for q in parts_b[1:]:
-            out = out.unionByName(q, allowMissingColumns=True)
-        have = set(out.columns)
-        out = out.select(
-            *[
-                F.col(n) if n in have else F.lit(None).cast(t).alias(n)
-                for n, t in man["schema"]
-                if n != BUCKET_COL
-            ]
-        ).coalesce(1)
-        if len(parts_b) > 1:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(man["key_col"]).orderBy(
-                F.desc(man["seq_col"]), F.asc(DELETED_COL)
+        def live(b: int) -> DataFrame | None:
+            df = _scan_buckets(
+                spark, table_dir, man, [b], prune=prune, filters=filters,
+                one_partition=True,
             )
-            out = (
-                out.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        out = out.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-        if prune is not None:
-            # final residual after overlay resolution — base rows are
-            # pre-filtered, but re-applying is free (same pushed
-            # predicate) and keeps the invariant local to read
-            out = out.filter(_residual(prune["filters"]))
-        return out
+            if df is None:
+                return None
+            out = _live_rows(df)
+            return out.filter(_residual(filters)) if filters else out
+
+        return live
+
+    live_l = side(left_dir, man_l, filters_left)
+    live_r = side(right_dir, man_r, filters_right)
 
     def pair(l_b: DataFrame, r_b: DataFrame) -> DataFrame:
         r_b = r_b.withColumnsRenamed(ren)
@@ -2496,19 +2465,8 @@ def join_bucketed(
             return l_b.join(r_b, key_l, how)
         return l_b.join(r_b, l_b[key_l] == r_b[key_r_out], how)
 
-    # prefill the listing cache sequentially (one listStatus per unique
-    # snapshot/overlay dir — read-only during the threaded build below)
-    for td, man in ((left_dir, man_l), (right_dir, man_r)):
-        td_ = td.rstrip("/")
-        rels = set(man["buckets"].values())
-        for paths in (man.get("overlays") or {}).values():
-            rels.update(paths)
-        for rel in rels:
-            _list_subdirs(f"{td_}/{rel}")
-
     def build(b: int) -> DataFrame | None:
-        l_b = live(left_dir, man_l, b, prune_l)
-        r_b = live(right_dir, man_r, b, prune_r)
+        l_b, r_b = live_l(b), live_r(b)
         if l_b is None and r_b is None:
             return None
         if how == "inner" and (l_b is None or r_b is None):
@@ -2523,7 +2481,7 @@ def join_bucketed(
     # round-trips (~100 ms each); sequential it is O(n_buckets) driver
     # seconds — minutes at a real modulus — so build branches in a
     # thread pool (DataFrame construction on one SparkSession is
-    # thread-safe; the listing cache above is read-only here)
+    # thread-safe)
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(16, max(nb_l, 1))) as ex:
@@ -2578,13 +2536,19 @@ def _retire_tombstones(
     )
 
 
-def _dirty_buckets(man: dict) -> list[int]:
+def _dirty_buckets(man: dict, tombstones: bool = True) -> list[int]:
     """The buckets a tombstone compaction must rewrite: the manifest's
     sticky ``tombstone_buckets`` (absent on a table written before it
     was tracked: every bucket), every bucket with an overlay and, on a
     zone-mapped table, every bucket owned by a dir with no stats yet
-    (written before the table adopted ``stats_cols``)."""
-    dirty = set(man.get("tombstone_buckets", range(man["n_buckets"])))
+    (written before the table adopted ``stats_cols``). ``tombstones``
+    False leaves out the tombstone buckets: an overlay fold that retires
+    nothing has no reason to rewrite them."""
+    dirty = (
+        set(man.get("tombstone_buckets", range(man["n_buckets"])))
+        if tombstones
+        else set()
+    )
     dirty.update(int(b) for b in man.get("overlays") or {})
     if man.get("stats_cols"):
         stated = man.get("file_stats") or {}
@@ -2663,7 +2627,7 @@ def _clustered_for_write(
     """Bucket-local clustering for a bucketed-CDC rewrite (r7): when the
     table tracks zone maps, shuffle to one task per bucket and sort each
     bucket's rows by ``stats_cols`` before the partitionBy write. Two
-    effects, both load-bearing for zone-map pruning (scan_cdc_pruned):
+    effects, both load-bearing for zone-map pruning (_cdc_prune_plan):
 
     - per-FILE zone maps stay NARROW under churn: the r6 sf1 soak
       measured per-file day stats converging to the full range after 8
@@ -2729,8 +2693,10 @@ def _full_rewrite_manifest(
     bucket of the ``n_buckets``) repointed at ``snap_rel`` and every
     other mapping entry left as it was, overlays folded (a rewrite
     covers every bucket that has one), ``tombstone_buckets`` set to the
-    buckets where the rewrite kept a tombstone (``tombs``; the others
-    hold none), schema carried, the stats of every still-referenced dir
+    previous set minus the rewritten buckets plus those where the
+    rewrite kept a tombstone (``tombs``) — still a superset of the
+    buckets holding one; a manifest without the field stays untracked
+    (every bucket) unless every bucket was rewritten —, schema carried, the stats of every still-referenced dir
     kept plus the new dir's collected when the table tracks them, and an
     EMPTY change feed recorded in the manifest itself (``path`` None:
     live content is unchanged, so there is no file to write) so CDF
@@ -2755,8 +2721,15 @@ def _full_rewrite_manifest(
         "parent": man["version"],
         "schema": schema_fields,
         "change_files": {"path": None, "preimage": True},
-        "tombstone_buckets": sorted(tombs),
     }
+    kept = set(range(n_buckets)) - set(
+        range(n_buckets) if rewritten is None else rewritten
+    )
+    prev = man.get("tombstone_buckets")
+    if prev is not None or not kept:
+        manifest["tombstone_buckets"] = sorted(
+            set(prev or []) & kept | set(tombs)
+        )
     if man.get("stats_cols"):
         from taar_gcp_etl_spark.layout import collect_file_stats
 
@@ -3100,9 +3073,7 @@ def read_changes(
 
     def live(version: int, buckets: list[int]) -> DataFrame | None:
         df = read_txn(spark, table_dir, version=version, buckets=buckets)
-        if df is None:
-            return None
-        return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
+        return None if df is None else _live_rows(df)
 
     changed = changed_buckets(man_from, man_to)
     new = live(to_version, changed)
@@ -3162,7 +3133,6 @@ def sync_join_from_cdc(
     store_dir: str,
     how: str = "inner",
     rsuffix: str = "_r",
-    prune_probe: bool = True,
 ) -> int | None:
     """Incremental materialized JOIN-view maintenance: keep
     ``store_dir`` equal to ``live(left) JOIN live(right)`` on the two
@@ -3279,7 +3249,7 @@ def sync_join_from_cdc(
         join past it — VERDICT r9 #3, a churn burst must not OOM the
         driver)."""
         buckets = None
-        if keys is not None and prune_probe:
+        if keys is not None:
             nb = man["n_buckets"]
             buckets = [
                 r[0]
@@ -3290,7 +3260,7 @@ def sync_join_from_cdc(
         df = read_txn(spark, table_dir, version=version, buckets=buckets)
         if df is None:
             return _empty_live(spark, man)
-        out = df.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
+        out = _live_rows(df)
         if keys is not None:
             k = keys.withColumnRenamed("_k", key_col)
             out = out.join(
@@ -3424,9 +3394,13 @@ def _cdc_prune_plan(
     man: dict, table_dir: str, filters: list[tuple]
 ) -> dict:
     """Metadata-only prune plan for a bucketed-CDC zone-map scan:
-    {kept_paths, total_files, kept_files, total_rows, kept_rows}.
-    Per dir, only files of buckets the dir still OWNS are candidates
-    (a superseded bucket's file may linger in an old dir).
+    {kept_paths, total_files, kept_files, total_rows, kept_rows,
+    kept_file_rows, unstated_dirs}. _scan_buckets reads ``kept_paths``
+    and the leaf dirs of ``unstated_dirs`` (read_cdc_table(filters=),
+    join_bucketed's filters; merge_into's NBS pass unions the kept
+    paths of its clauses); cdc_prune_report shows the counts. Per dir,
+    only files of buckets the dir still OWNS are candidates (a
+    superseded bucket's file may linger in an old dir).
 
     Granularity (r7, honesty fixed r9 per ADVICE r8): when an entry
     carries per-slice stats (collect_file_stats row_groups=True — r8
@@ -3434,22 +3408,22 @@ def _cdc_prune_plan(
     groups), a file survives only if at least one slice overlaps every
     filter, and ``kept_rows`` counts just the overlapping slices.
     That is an OPTIMISTIC lower bound on IO, not a guarantee:
-    scan_cdc_pruned pushes the residual down to the parquet reader,
+    _scan_buckets pushes the residual down to the parquet reader,
     whose native row-group skipping is CORRELATED with the slice model
     (the bucket-local stats_cols sort gives both the same locality)
     but works at physical-group granularity — a rolled file is often
     ONE physical group, in which case the reader skips nothing inside
     kept files. ``kept_file_rows`` (all rows of kept files) is the
     matching pessimistic bound; cost gates should price between the
-    two. A slice missing stats for a
-    filtered column is kept conservatively; entries without slice
+    two. A slice missing stats for a filtered column is kept
+    conservatively; entries without slice
     stats count all their rows when the file-level envelope overlaps
     (making kept_rows == kept_file_rows there).
 
     ``unstated_dirs``: live dirs (still owning at least one bucket)
     written BEFORE the table adopted stats_cols have no file_stats
     entries at all — their contents are unknown to the planner, so
-    they must be read wholesale ({dir: [owned buckets]}). Dropping
+    they must be read whole ({dir: [owned buckets]}). Dropping
     them instead silently lost every pre-adoption row from the pruned
     scan (r7 review repro)."""
     from taar_gcp_etl_spark.layout import _from_jsonable, _overlaps
@@ -3515,15 +3489,6 @@ def _cdc_prune_plan(
     }
 
 
-def _cdc_kept_files(
-    man: dict, table_dir: str, filters: list[tuple]
-) -> tuple[list[str], int]:
-    """(kept absolute paths, total candidate files) — thin wrapper over
-    _cdc_prune_plan for callers that only need the file list."""
-    plan = _cdc_prune_plan(man, table_dir, filters)
-    return plan["kept_paths"], plan["total_files"]
-
-
 def cdc_prune_report(
     spark: SparkSession,
     table_dir: str,
@@ -3541,145 +3506,6 @@ def cdc_prune_report(
         raise ValueError(f"{table_dir} has no CDC zone maps")
     plan = _cdc_prune_plan(man, table_dir.rstrip("/"), filters)
     return {k: v for k, v in plan.items() if k != "kept_paths"}
-
-
-def scan_cdc_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    filters: list[tuple],
-    version: int | None = None,
-    kept_paths: list[str] | None = None,
-    man: dict | None = None,
-    raw: bool = False,
-) -> DataFrame | None:
-    """Zone-map-pruned analytics scan over a BUCKETED CDC table: skip
-    base files whose per-file stats are disjoint from ``filters``
-    (layout.py predicate language), then resolve merge-on-read overlays
-    and tombstones, then re-apply the filters as a residual — live rows
-    only, internal columns hidden.
-
-    Soundness under multi-versioning: a key's base row lives in exactly
-    ONE live dir (buckets have single owners; within a dir the merge
-    kept one row per key), overlays hold only tombstones and are ALWAYS
-    read, and the residual applies after resolution — so skipping a
-    base file only ever removes rows the final filter would drop
-    anyway. Per-dir, only files of buckets the dir still OWNS are
-    candidates (a superseded bucket's file may linger in an old dir).
-
-    Returns None for an empty selection. ``kept_paths`` lets a caller
-    that already ran the metadata pass (_cdc_prune_plan — e.g.
-    merge_into's NBS prune) hand the result over instead of recomputing
-    it — such a caller must have verified there are no unstated
-    (pre-stats) dirs, since the plan that produced the list owns that
-    knowledge.
-    ``raw=True`` returns the RESOLVED keyed state (latest row per key,
-    overlay tombstones applied) with ``DELETED_COL`` and the seq column
-    still visible and NO residual applied — the merge_into NBS pass
-    reads this shape (round 11).
-    Cost: metadata-only planning
-    over O(live files), then a scan of only the intersecting files —
-    the time-correlated-ingest case (each commit's dir covers a narrow
-    date range) skips old dirs wholesale."""
-    from taar_gcp_etl_spark.layout import _from_jsonable, _overlaps, _residual
-
-    if man is None:
-        # ``man`` lets a caller that already resolved the manifest
-        # (read_cdc_table's routing check) hand it over — one manifest
-        # round-trip per filtered read, and the routing decision and
-        # the scan are guaranteed the same version (review r10)
-        man = (
-            latest_manifest(spark, table_dir)
-            if version is None
-            else read_manifest(spark, table_dir, version)
-        )
-    if man is None:
-        return None
-    if "buckets" not in man or "file_stats" not in man:
-        raise ValueError(
-            f"{table_dir} is not a bucketed CDC table with zone maps "
-            "(apply batches with stats_cols= first)"
-        )
-    table_dir = table_dir.rstrip("/")
-    unstated: dict[str, list[int]] = {}
-    if kept_paths is None:
-        plan = _cdc_prune_plan(man, table_dir, filters)
-        kept_paths = plan["kept_paths"]
-        # dirs written before stats adoption are unknown to the
-        # planner: read them WHOLESALE (their owned buckets only) or
-        # their rows silently vanish from the pruned scan
-        unstated = plan["unstated_dirs"]
-
-    key_col = man["key_col"]
-    seq_col = man["seq_col"]
-    base = None
-    if kept_paths:
-        # basePath keeps the _bucket partition column when reading
-        # individual files under the hive layout
-        by_dir: dict[str, list[str]] = {}
-        for p in kept_paths:
-            d = p.split("/" + BUCKET_COL + "=", 1)[0]
-            by_dir.setdefault(d, []).append(p)
-        for d, paths in sorted(by_dir.items()):
-            part = spark.read.option("basePath", d).parquet(*paths)
-            base = (
-                part
-                if base is None
-                else base.unionByName(part, allowMissingColumns=True)
-            )
-        # push the residual onto the BASE scan, ahead of overlay
-        # resolution: Spark forwards it to the parquet reader, whose
-        # native row-group stats skip non-overlapping groups inside
-        # kept files (bucket-locally sorted rewrites make those groups
-        # narrow — the sub-file half of the prune). Sound for the same
-        # reason file skipping is: a base row failing the filter would
-        # be dropped by the final residual anyway, and removing it
-        # early can only promote an overlay TOMBSTONE to latest-per-
-        # key, which the ~deleted filter then drops — same output.
-        base = base.filter(_residual(filters))
-    for d, bs in sorted(unstated.items()):
-        whole = (
-            spark.read.parquet(f"{table_dir}/{d}")
-            .filter(F.col(BUCKET_COL).isin(bs))
-            .filter(_residual(filters))
-        )
-        base = whole if base is None else base.unionByName(
-            whole, allowMissingColumns=True
-        )
-    out = base
-    # overlays: always read in full for correctness (tombstones only)
-    overlay_dirs = sorted(
-        {p for paths in (man.get("overlays") or {}).values() for p in paths}
-    )
-    for d in overlay_dirs:
-        od = spark.read.parquet(f"{table_dir}/{d}")
-        out = od if out is None else out.unionByName(
-            od, allowMissingColumns=True
-        )
-    if out is None:
-        # every file pruned: empty result with the manifest's schema
-        # (the dirs may hold no file to infer one from)
-        if not man["buckets"]:
-            return None
-        from pyspark.sql.types import StructType
-
-        out = spark.createDataFrame(
-            [], StructType.fromDDL(_ddl(man["schema"]))
-        )
-    if overlay_dirs:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(key_col).orderBy(
-            F.desc(seq_col), F.asc(DELETED_COL)
-        )
-        out = (
-            out.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    if raw:
-        return out.drop(BUCKET_COL)
-    out = out.filter(~F.col(DELETED_COL)).drop(DELETED_COL, BUCKET_COL)
-    return out.filter(_residual(filters))
 
 
 def maintain_cdc_table(
@@ -3710,9 +3536,11 @@ def maintain_cdc_table(
 
     The due steps 1-3 run as ONE rewrite and one commit. Steps 1-2 are
     the same compaction, O(dirty buckets): it rewrites only the buckets
-    that hold a tombstone or an overlay and leaves every other bucket in
-    its dir (so a table can come to own up to ``n_buckets`` dirs; the
-    vacuum reclaims the repointed buckets' subdirs). Step 3 re-hashes
+    that hold an overlay, plus with a horizon those that may hold a
+    tombstone, and leaves every other bucket in its dir (so a table can
+    come to own up to ``n_buckets`` dirs, which reads do not pay for:
+    they scan leaf dirs as one relation; the vacuum reclaims the
+    repointed buckets' subdirs). Step 3 re-hashes
     the whole table, folding the overlays in and retiring the
     tombstones below the horizon as it goes. The table is rewritten at
     most once per pass.
@@ -3776,14 +3604,20 @@ def maybe_compact_overlays(
     """Fold merge-on-read overlays back into base files once any bucket
     has accumulated more than ``max_overlays_per_bucket`` of them — the
     standard MoR maintenance trigger (every stacked overlay adds a scan
-    leg and keeps the read-side latest-per-key window alive). Reuses
-    compact_cdc_tombstones as the rewrite, so tombstones below
-    ``min_live_seq`` retire in the same pass (0 retires nothing).
-    Returns the committed version, or None if pressure is under the
-    threshold. Call it from the foreachBatch writer after the apply —
-    cost is one rewrite of the buckets with an overlay or a tombstone
-    (not the table), amortized over the delete batches that stacked
-    the overlays."""
+    leg and keeps the read-side latest-per-key window alive). The
+    rewrite is compact_cdc_tombstones', so tombstones below
+    ``min_live_seq`` retire in the same pass; with 0, which retires
+    nothing, it rewrites only the overlay buckets (and, on a zone-mapped
+    table, the buckets of dirs without stats), not the tombstone
+    buckets. Returns the committed version, or None if pressure is
+    under the threshold. Call it from the foreachBatch writer after the
+    apply — cost is one rewrite of the dirty buckets (not the table),
+    amortized over the delete batches that stacked the overlays."""
     if overlay_pressure(spark, table_dir) <= max_overlays_per_bucket:
         return None
-    return compact_cdc_tombstones(spark, table_dir, min_live_seq)
+    return _full_rewrite(
+        spark,
+        table_dir,
+        lambda cur, man: _retire_tombstones(cur, min_live_seq, man["seq_col"]),
+        dirty=lambda man: _dirty_buckets(man, tombstones=bool(min_live_seq)),
+    )

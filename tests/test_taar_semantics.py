@@ -276,6 +276,32 @@ class TestGatesAndArtifacts:
         )
         assert n == 1
 
+    def test_amowhitelist_scans_the_catalog_once(
+        self, spark, catalog, tmp_path, monkeypatch
+    ):
+        """The reference's one pass: the collect over a parquet catalog
+        plans one scan of it, whose flags split the three views."""
+        path = str(tmp_path / "catalog.parquet")
+        catalog.write.parquet(path)
+        cat = spark.read.parquet(path)
+        plans = []
+        orig = type(cat).collect
+
+        def spy(df):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return orig(df)
+
+        monkeypatch.setattr(type(cat), "collect", spy)
+        amowhitelist.run(cat, str(tmp_path / "out"), AS_OF)
+        monkeypatch.undo()
+        assert len(plans) == 1
+        assert plans[0].count("FileScan parquet") == 1, plans[0]
+        obj = json.loads(bz2.decompress(
+            (tmp_path / "out" / "latest"
+             / f"{amowhitelist.FEATURED_WHITELIST}.json.bz2").read_bytes()
+        ))
+        assert sorted(obj) == ["featured@a"]
+
     def test_update_whitelist_job_budget(self, spark, tmp_path):
         """One collect serves the short-list gate, the catalog check and
         the artifact."""

@@ -349,19 +349,16 @@ class TestBucketedCdc:
         assert len(set(m2["buckets"].values())) == 2  # old dir + new dir
 
     def test_bucket_read_prunes_partitions(self, spark, tmp_path):
-        """The bucket restriction must reach the scan as a PARTITION
-        filter (directory pruning), not a post-scan row filter —
-        inputFiles() can't show this (it lists the base relation), the
-        physical plan can."""
+        """A bucket selection reads only that bucket's ``_bucket=b``
+        leaf dirs: every input file lies under a selected bucket's dir,
+        and there are fewer of them than a full read has."""
         t = str(tmp_path / "buck")
         self._apply(spark, t, [(i, f"v{i}", i, "I") for i in range(1, 41)])
         df = txn.read_txn(spark, t, buckets=[0])
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan
-        import re
-
-        assert re.search(r"PartitionFilters: \[[^\]]*_bucket", plan), plan
         full = txn.read_txn(spark, t)
+        files = df.inputFiles()
+        assert files and all(f"/{txn.BUCKET_COL}=0/" in f for f in files)
+        assert len(files) < len(full.inputFiles())
         assert df.count() == full.filter(F.col("_bucket") == 0).count()
         assert 0 < df.count() < full.count()
 
@@ -1168,19 +1165,16 @@ class TestBucketGranularCdf:
     def test_diff_plan_prunes_to_changed_bucket_partitions(
         self, spark, tmp_path
     ):
-        import re
-
         t = str(tmp_path / "bcdf3")
         self._build(spark, t)
-        plan = (
-            txn.read_changes(spark, t, 2, 3)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
+        (b,) = txn.changed_buckets(
+            txn.read_manifest(spark, t, 2), txn.read_manifest(spark, t, 3)
         )
-        # both sides of the diff read through bucket-partition filters —
-        # the read is O(changed buckets), never a table scan
-        assert re.search(r"PartitionFilters: \[[^\]]*_bucket", plan), plan
+        # both sides of the diff read only the changed bucket's leaf
+        # dirs — the read is O(changed buckets), never a table scan
+        files = txn.read_changes(spark, t, 2, 3).inputFiles()
+        assert files and all(f"/{txn.BUCKET_COL}={b}/" in f for f in files)
+        assert len(files) < len(txn.read_txn(spark, t).inputFiles())
 
     def test_cdf_mode_emits_preimages_and_delete_payloads(
         self, spark, tmp_path
@@ -1503,7 +1497,7 @@ class TestCdcZoneMaps:
         )
 
     def _got(self, spark, t, filters):
-        df = txn.scan_cdc_pruned(spark, t, filters)
+        df = txn.read_cdc_table(spark, t, filters=filters)
         return sorted(tuple(r) for r in df.collect())
 
     def test_day_predicate_prunes_old_dirs_and_matches(self, spark, tmp_path):
@@ -1550,7 +1544,7 @@ class TestCdcZoneMaps:
     def test_empty_prune_returns_empty_with_schema(self, spark, tmp_path):
         t = str(tmp_path / "zm-empty")
         self._fixture(spark, t)
-        df = txn.scan_cdc_pruned(spark, t, [("day", ">", 100)])
+        df = txn.read_cdc_table(spark, t, filters=[("day", ">", 100)])
         assert df.count() == 0
         assert "val" in df.columns and "day" in df.columns
 
@@ -1589,7 +1583,9 @@ class TestCdcZoneMaps:
         for filters in ([("day", ">=", 1)], [("day", "=", 1)]):
             got = sorted(
                 tuple(r)
-                for r in txn.scan_cdc_pruned(spark, t, filters).collect()
+                for r in txn.read_cdc_table(
+                    spark, t, filters=filters
+                ).collect()
             )
             expect = sorted(
                 tuple(r)
@@ -1672,8 +1668,8 @@ class TestClusteredRewritePruning:
 
         got = sorted(
             tuple(r)
-            for r in txn.scan_cdc_pruned(
-                spark, t, [("day", "=", 2)]
+            for r in txn.read_cdc_table(
+                spark, t, filters=[("day", "=", 2)]
             ).collect()
         )
         expect = sorted(
@@ -1942,8 +1938,8 @@ class TestClusteredRewritePruning:
             spark, t, [("ts", ">=", dt.datetime(2024, 1, 4))]
         )
         assert 0 < rep["kept_rows"] < rep["total_rows"], rep
-        got = txn.scan_cdc_pruned(
-            spark, t, [("ts", ">=", dt.datetime(2024, 1, 4))]
+        got = txn.read_cdc_table(
+            spark, t, filters=[("ts", ">=", dt.datetime(2024, 1, 4))]
         ).count()
         assert got == 32  # exactly the last day's rows
 
@@ -1955,7 +1951,7 @@ class TestClusteredRewritePruning:
 
         t = str(tmp_path / "clus-push")
         self._seed_and_churn(spark, t, target_file_rows=16)
-        df = txn.scan_cdc_pruned(spark, t, [("day", "=", 2)])
+        df = txn.read_cdc_table(spark, t, filters=[("day", "=", 2)])
         assert has_pushed_filter(df, "day")
 
 
@@ -2285,6 +2281,48 @@ class TestDirtyBucketCompaction:
         assert man["tombstone_buckets"] == sorted(bk[k] for k in dels)
         assert sorted(txn.read_cdc_table(spark, t).collect()) == live
 
+    def test_overlay_fold_leaves_tombstone_buckets(self, spark, tmp_path):
+        """Folding an overlay retires nothing, so it rewrites the
+        overlay's bucket alone; the buckets holding a base tombstone
+        stay tracked and the next compaction past the horizon retires
+        them."""
+        t = str(tmp_path / "t")
+        bk = self._seed(spark, t)
+        k2, k10, k11, k13 = (
+            next(k for k in range(160) if bk[k] == b) for b in (2, 10, 11, 13)
+        )
+        up = next(k for k in range(160) if bk[k] not in (2, 10, 11, 13))
+        _apply(spark, t, [(k2, None, 5, "D"), (k11, None, 5, "D"),
+                          (k13, None, 5, "D"), (up, "u", 5, "U")],
+               n_buckets=self.NB)
+        _apply(spark, t, [(k10, None, 6, "D")], n_buckets=self.NB)
+        before = txn.latest_manifest(spark, t)
+        assert before["tombstone_buckets"] == [2, 10, 11, 13]
+        assert set(before["overlays"]) == {"10"}
+        live = sorted(txn.read_cdc_table(spark, t).collect())
+        rep = txn.maintain_cdc_table(
+            spark, t, max_overlays_per_bucket=0, vacuum_keep_last=0
+        )
+        man = txn.latest_manifest(spark, t)
+        assert rep["compacted_version"] == man["version"]
+        assert {
+            int(b) for b, d in man["buckets"].items()
+            if d != before["buckets"][b]
+        } == {10}
+        assert man["overlays"] == {}
+        assert man["tombstone_buckets"] == [2, 10, 11, 13]
+        assert sorted(txn.read_cdc_table(spark, t).collect()) == live
+        txn.compact_cdc_tombstones(spark, t, 2**62)
+        man2 = txn.latest_manifest(spark, t)
+        assert {
+            int(b) for b, d in man2["buckets"].items()
+            if d != man["buckets"][b]
+        } == {2, 10, 11, 13}
+        assert man2["tombstone_buckets"] == []
+        raw = txn.read_cdc_table(spark, t, include_tombstones=True)
+        assert raw.filter("_deleted").count() == 0
+        assert sorted(txn.read_cdc_table(spark, t).collect()) == live
+
     def test_untracked_manifest_compacts_every_bucket(self, spark, tmp_path):
         """A manifest without ``tombstone_buckets`` (a table written
         before it was tracked) may hold a tombstone anywhere: the next
@@ -2450,6 +2488,15 @@ class TestJoinBucketed:
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan
         assert "Exchange rangepartitioning" not in plan
+        # a delete overlay on the left: its bucket resolves with a window
+        # over the one coalesced partition, still no exchange
+        self._mk(spark, left, [(7, None, 100, "D")])
+        assert txn.latest_manifest(spark, left)["overlays"]
+        got = txn.join_bucketed(spark, left, right)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning" not in plan
+        ids = {r.id for r in got.collect()}
+        assert 7 not in ids and len(ids) == 39
         plain = self._plain_equal(spark, left, right, "inner")
         # disable broadcast so the contrast join actually shuffles
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -3989,14 +4036,14 @@ class TestNbsZoneMapPrune:
         structured form), and NOT taken for non-parseable strings or
         stats-less tables."""
         calls = []
-        orig = txn.scan_cdc_pruned
+        orig = txn._scan_buckets
 
         def spy(*a, **kw):
-            if kw.get("raw"):
-                calls.append(kw.get("kept_paths"))
+            if kw.get("prune") is not None:
+                calls.append(kw["prune"]["kept_paths"])
             return orig(*a, **kw)
 
-        monkeypatch.setattr(txn, "scan_cdc_pruned", spy)
+        monkeypatch.setattr(txn, "_scan_buckets", spy)
         t = str(tmp_path / "t")
         self._seed(spark, t)
         man = txn.latest_manifest(spark, t)
@@ -4406,6 +4453,77 @@ class TestManifestRead:
         )
         live = {r.id: r.val for r in txn.read_cdc_table(spark, t).collect()}
         assert live == {2: "b", k: "k"}
+
+
+class TestBucketScan:
+    """Every read of a bucketed table is one parquet relation over the
+    selected buckets' leaf dirs (_scan_buckets), whatever the number of
+    dirs that own them, planned from the manifest without a Spark
+    job."""
+
+    NB = 16
+
+    def test_many_dir_full_read_is_one_scan(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        _apply(spark, t, [(i, f"v{i}", 1, "I") for i in range(160)],
+               n_buckets=self.NB)
+        bk = _buckets(spark, range(160), self.NB)
+        for b in range(8):  # each apply repoints one bucket to a new dir
+            k = next(k for k in range(160) if bk[k] == b)
+            _apply(spark, t, [(k, f"u{k}", 2, "U")], n_buckets=self.NB)
+        man = txn.latest_manifest(spark, t)
+        owned: dict[str, list[int]] = {}
+        for b, d in man["buckets"].items():
+            owned.setdefault(d, []).append(int(b))
+        assert len(owned) >= 8
+
+        def plan():
+            df = txn.read_txn(spark, t)
+            return df, df._jdf.queryExecution().executedPlan().toString()
+
+        (df, p), n = spark_jobs(spark, plan)
+        assert n == 0, n
+        assert p.count("FileScan parquet") == 1, p
+        per_dir = [
+            spark.read.option("basePath", f"{t}/{d}")
+            .parquet(f"{t}/{d}")
+            .filter(F.col(txn.BUCKET_COL).isin(bs))
+            .select(*df.columns)
+            for d, bs in owned.items()
+        ]
+        union = per_dir[0]
+        for part in per_dir[1:]:
+            union = union.unionByName(part)
+        assert sorted(df.collect()) == sorted(union.collect())
+        assert df.count() == 160
+
+    def test_filtered_zone_map_read_plans_without_job(self, spark, tmp_path):
+        schema = "id long, val string, day long, seq long, op string"
+        t = str(tmp_path / "t")
+        for day in range(3):
+            txn.apply_cdc_batch_bucketed(
+                spark.createDataFrame(
+                    [(day * 50 + i, f"v{i}", day, day + 1, "I")
+                     for i in range(50)],
+                    schema,
+                ),
+                t, n_buckets=self.NB, stats_cols=["day"],
+            )
+        txn.apply_cdc_batch_bucketed(
+            spark.createDataFrame([(51, None, None, 9, "D")], schema),
+            t, n_buckets=self.NB,
+        )
+        filters = [("day", ">=", 1)]
+        df, n = spark_jobs(
+            spark, lambda: txn.read_cdc_table(spark, t, filters=filters)
+        )
+        assert n == 0, n
+        want = sorted(
+            tuple(r) for r in txn.read_cdc_table(spark, t).collect()
+            if r.day >= 1
+        )
+        assert sorted(tuple(r) for r in df.collect()) == want
+        assert len(want) == 99
 
 
 class TestMergeJobBudget:
